@@ -2,10 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session recipe shared by every driver-contract main
-  * (Verify / Bench / ScaleCurve / TimeOne), so a config change — an ANSI
-  * pin, the nanos normalization — can never skew one tool against the
-  * others by being applied to two of three builders.
+/** The one local session recipe, shared by every main (Verify, Bench,
+  * ScaleCurve, GenScale, PlanDump, CcBench, TimeOne), the benchmark
+  * harness and the test harness (SparkSpec), so a config change — an
+  * ANSI pin, the nanos normalization — can never skew one tool against
+  * the others. It is also the only place graft's SQL functions,
+  * optimizer rules and top-k strategy are installed
+  * (GraftExtensions): every session has all of them from its first
+  * query, so no plan depends on which query ran first.
   */
 object GraftSession {
   def build(cpus: String, adaptive: Boolean = true): SparkSession = {
@@ -30,6 +34,7 @@ object GraftSession {
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.adaptive.enabled", adaptive.toString)
       .getOrCreate()
+    graft.functions.GraftExtensions.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

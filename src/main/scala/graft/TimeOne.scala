@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.range(100000).selectExpr("sum(id)").collect()
     for (name <- args) {
       val fn = SparkEntry.queries(name)

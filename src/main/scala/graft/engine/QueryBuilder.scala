@@ -191,7 +191,6 @@ object QueryBuilder {
       // native hex60 (one codegen'd byte loop): this predicate runs once
       // per source row — the composed 15-term form costs whole seconds
       // at sf0.1. Identical values (Hex60Spec), so oracles are unchanged
-      graft.functions.GraftExtensions.install(spark)
       df = df.filter(
         call_function("graft_hex60", md5(concat(lit(sp.salt + ":"),
           col(sp.column).cast("string")).cast("binary"))) % 100 < sp.percent)

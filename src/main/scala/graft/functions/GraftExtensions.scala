@@ -1,234 +1,96 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.functions.{call_function, lit}
 
-/** SparkSessionExtensions hook registering graft's native expressions so
-  * they are usable from SQL text as well as the Column API. Activate with
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * or programmatically via `GraftExtensions.install(spark)` on a live
-  * session.
+/** graft's Catalyst extensions: the native SQL functions below, the
+  * SimplifyJsToNumber and RewriteTopKWindow optimizer rules and the
+  * TopKPerKeyStrategy planner strategy. `GraftSession.build` installs
+  * them once on every session it builds, so a plan never depends on
+  * which query ran first. The rules go through
+  * `spark.experimental.extraOptimizations`, i.e. Spark's "User Provided
+  * Optimizers" batch.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.jsToNumberDescriptor)
-    ext.injectFunction(GraftExtensions.hex60Descriptor)
-    ext.injectFunction(GraftExtensions.hilbertDescriptor)
-    ext.injectFunction(GraftExtensions.kmvDescriptor)
-    ext.injectFunction(GraftExtensions.kllSketchDescriptor)
-    ext.injectFunction(GraftExtensions.kllMergeDescriptor)
-    ext.injectFunction(GraftExtensions.kllQuantileDescriptor)
-    ext.injectFunction(GraftExtensions.mgSketchDescriptor)
-    ext.injectFunction(GraftExtensions.mgMergeDescriptor)
-    ext.injectFunction(GraftExtensions.mgEstimateDescriptor)
-    ext.injectFunction(GraftExtensions.kmvSketchDescriptor)
-    ext.injectFunction(GraftExtensions.kmvMergeDescriptor)
-    ext.injectFunction(GraftExtensions.kmvEstimateDescriptor)
-    ext.injectFunction(GraftExtensions.lvecSumDescriptor)
-    ext.injectOptimizerRule(_ => SimplifyJsToNumber)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteTopKWindow)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-  }
-}
-
 object GraftExtensions {
-  private[functions] val jsToNumberDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("js_to_number"),
-    new ExpressionInfo(classOf[JsToNumber].getName, "js_to_number"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "js_to_number takes exactly 1 argument")
-      JsToNumber(children.head)
-    }
-  )
 
-  private[functions] val hex60Descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hex60"),
-    new ExpressionInfo(classOf[Hex60].getName, "graft_hex60"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_hex60 takes exactly 1 argument")
-      Hex60(children.head)
-    }
-  )
-
-  private[functions] val hilbertDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hilbert"),
-    new ExpressionInfo(classOf[HilbertIndex].getName, "graft_hilbert"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_hilbert takes (x BIGINT, y BIGINT, bits INT)")
-      HilbertIndex(children(0), children(1), children(2))
-    }
-  )
-
-  private[functions] val kmvDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_distinct"),
-    new ExpressionInfo(classOf[KmvDistinct].getName, "graft_kmv_distinct"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kmv_distinct takes (hash BIGINT, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv_distinct k must be an integer literal, got $other")
-      }
-      KmvDistinct(children.head, k)
-    }
-  )
-
-  private[functions] val kllSketchDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kll_sketch"),
-    new ExpressionInfo(classOf[KllSketchAgg].getName, "graft_kll_sketch"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kll_sketch takes (v BIGINT, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_kll_sketch k must be an integer literal, got $other")
-      }
-      KllSketchAgg(children.head, k)
-    }
-  )
-
-  private[functions] val kllMergeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kll_merge"),
-    new ExpressionInfo(classOf[KllMergeAgg].getName, "graft_kll_merge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_kll_merge takes (sketch BINARY)")
-      KllMergeAgg(children.head)
-    }
-  )
-
-  private[functions] val kllQuantileDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kll_quantile"),
-    new ExpressionInfo(classOf[KllQuantile].getName, "graft_kll_quantile"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kll_quantile takes (sketch BINARY, q_ppm BIGINT)")
-      KllQuantile(children(0), children(1))
-    }
-  )
-
-  private[functions] val mgSketchDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_mg_sketch"),
-    new ExpressionInfo(classOf[MgSketchAgg].getName, "graft_mg_sketch"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_mg_sketch takes (item STRING, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_mg_sketch k must be an integer literal, got $other")
-      }
-      MgSketchAgg(children.head, k)
-    }
-  )
-
-  private[functions] val mgMergeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_mg_merge"),
-    new ExpressionInfo(classOf[MgMergeAgg].getName, "graft_mg_merge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_mg_merge takes (sk BINARY)")
-      MgMergeAgg(children.head)
-    }
-  )
-
-  private[functions] val mgEstimateDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_mg_estimate"),
-    new ExpressionInfo(classOf[MgEstimate].getName, "graft_mg_estimate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_mg_estimate takes (sk BINARY, item STRING)")
-      MgEstimate(children(0), children(1))
-    }
-  )
-
-  private[functions] val kmvSketchDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_sketch"),
-    new ExpressionInfo(classOf[KmvSketchAgg].getName, "graft_kmv_sketch"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kmv_sketch takes (hash BIGINT, k INT literal)")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv_sketch k must be an integer literal, got $other")
-      }
-      KmvSketchAgg(children.head, k)
-    }
-  )
-
-  private[functions] val kmvMergeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_merge"),
-    new ExpressionInfo(classOf[KmvMergeAgg].getName, "graft_kmv_merge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_kmv_merge takes (sk BINARY)")
-      KmvMergeAgg(children.head)
-    }
-  )
-
-  private[functions] val kmvEstimateDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_estimate"),
-    new ExpressionInfo(classOf[KmvEstimate].getName, "graft_kmv_estimate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_kmv_estimate takes (sk BINARY)")
-      KmvEstimate(children.head)
-    }
-  )
-
-  private[functions] val lvecSumDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_lvecsum"),
-    new ExpressionInfo(classOf[LongVecSumAgg].getName, "graft_lvecsum"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_lvecsum takes (v ARRAY<BIGINT>)")
-      LongVecSumAgg(children.head)
-    }
-  )
-
-  /** Register on an already-built session (the extensions config only
-    * applies at session construction).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(jsToNumberDescriptor, hex60Descriptor, hilbertDescriptor, kmvDescriptor,
-      kllSketchDescriptor, kllMergeDescriptor, kllQuantileDescriptor,
-      mgSketchDescriptor, mgMergeDescriptor, mgEstimateDescriptor,
-      kmvSketchDescriptor, kmvMergeDescriptor, kmvEstimateDescriptor,
-      lvecSumDescriptor
-    ).foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(SimplifyJsToNumber))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SimplifyJsToNumber
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteTopKWindow))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteTopKWindow
-    graft.plans.TopKPerKey.install(spark) // rewritten plans need the strategy
+  /** `k` argument of the sketch functions: an integer literal. */
+  private def intLiteral(fn: String, e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case Literal(v: Long, _) => v.toInt
+    case other => throw new IllegalArgumentException(
+      s"$fn k must be an integer literal, got $other")
   }
 
-  /** Column-API entry point (session must have the function installed). */
-  def js_to_number(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("js_to_number", c)
+  /** (SQL name, expression class, arity, usage message on a wrong arity,
+    * builder over arity-checked arguments).
+    */
+  private val functions: Seq[(String, Class[_ <: Expression], Int, String, Seq[Expression] => Expression)] = Seq(
+    ("js_to_number", classOf[JsToNumber], 1,
+      "js_to_number takes exactly 1 argument", c => JsToNumber(c(0))),
+    ("graft_hex60", classOf[Hex60], 1,
+      "graft_hex60 takes exactly 1 argument", c => Hex60(c(0))),
+    ("graft_hilbert", classOf[HilbertIndex], 3,
+      "graft_hilbert takes (x BIGINT, y BIGINT, bits INT)", c => HilbertIndex(c(0), c(1), c(2))),
+    ("graft_kmv_distinct", classOf[KmvDistinct], 2,
+      "graft_kmv_distinct takes (hash BIGINT, k INT literal)",
+      c => KmvDistinct(c(0), intLiteral("graft_kmv_distinct", c(1)))),
+    ("graft_kll_sketch", classOf[KllSketchAgg], 2,
+      "graft_kll_sketch takes (v BIGINT, k INT literal)",
+      c => KllSketchAgg(c(0), intLiteral("graft_kll_sketch", c(1)))),
+    ("graft_kll_merge", classOf[KllMergeAgg], 1,
+      "graft_kll_merge takes (sketch BINARY)", c => KllMergeAgg(c(0))),
+    ("graft_kll_quantile", classOf[KllQuantile], 2,
+      "graft_kll_quantile takes (sketch BINARY, q_ppm BIGINT)", c => KllQuantile(c(0), c(1))),
+    ("graft_mg_sketch", classOf[MgSketchAgg], 2,
+      "graft_mg_sketch takes (item STRING, k INT literal)",
+      c => MgSketchAgg(c(0), intLiteral("graft_mg_sketch", c(1)))),
+    ("graft_mg_merge", classOf[MgMergeAgg], 1,
+      "graft_mg_merge takes (sk BINARY)", c => MgMergeAgg(c(0))),
+    ("graft_mg_estimate", classOf[MgEstimate], 2,
+      "graft_mg_estimate takes (sk BINARY, item STRING)", c => MgEstimate(c(0), c(1))),
+    ("graft_kmv_sketch", classOf[KmvSketchAgg], 2,
+      "graft_kmv_sketch takes (hash BIGINT, k INT literal)",
+      c => KmvSketchAgg(c(0), intLiteral("graft_kmv_sketch", c(1)))),
+    ("graft_kmv_merge", classOf[KmvMergeAgg], 1,
+      "graft_kmv_merge takes (sk BINARY)", c => KmvMergeAgg(c(0))),
+    ("graft_kmv_estimate", classOf[KmvEstimate], 1,
+      "graft_kmv_estimate takes (sk BINARY)", c => KmvEstimate(c(0))),
+    ("graft_lvecsum", classOf[LongVecSumAgg], 1,
+      "graft_lvecsum takes (v ARRAY<BIGINT>)", c => LongVecSumAgg(c(0)))
+  )
 
-  /** Column-API entry point for the native hex60 (install first). */
-  def graft_hex60(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("graft_hex60", c)
+  /** Register the functions, rules (SimplifyJsToNumber, then
+    * RewriteTopKWindow) and strategy on `spark`. Called by
+    * `GraftSession.build` only; idempotent, since `getOrCreate` can hand
+    * it an already-installed session.
+    */
+  def install(spark: SparkSession): Unit = {
+    functions.foreach { case (name, cls, arity, usage, build) =>
+      spark.sessionState.functionRegistry.registerFunction(
+        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.size == arity, usage)
+          build(children)
+        })
+    }
+    val exp = spark.experimental
+    Seq(SimplifyJsToNumber, graft.plans.RewriteTopKWindow).foreach { rule =>
+      if (!exp.extraOptimizations.contains(rule))
+        exp.extraOptimizations = exp.extraOptimizations :+ rule
+    }
+    if (!exp.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
+      exp.extraStrategies = exp.extraStrategies :+ graft.plans.TopKPerKeyStrategy
+  }
 
-  /** Column-API entry point for the native Hilbert index (install first). */
-  def graft_hilbert(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
-                    bits: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("graft_hilbert", x, y,
-      org.apache.spark.sql.functions.lit(bits))
+  /** Column-API entry point for the native JS Number() coercion. */
+  def js_to_number(c: Column): Column = call_function("js_to_number", c)
+
+  /** Column-API entry point for the native hex60. */
+  def graft_hex60(c: Column): Column = call_function("graft_hex60", c)
+
+  /** Column-API entry point for the native Hilbert index. */
+  def graft_hilbert(x: Column, y: Column, bits: Int): Column =
+    call_function("graft_hilbert", x, y, lit(bits))
 }

@@ -54,23 +54,14 @@ object Dedup {
 
   /** Parse the first 15 hex digits of an md5 into a 60-bit non-negative
     * long — pure integer/string ops that evaluate identically on Spark
-    * and DuckDB (no engine-specific hex parsing).
+    * and DuckDB (no engine-specific hex parsing). The per-shingle hot
+    * paths call its native twin `graft_hex60` (functions/Hex60.scala, one
+    * 15-byte codegen loop); identical output, so oracles are unchanged.
     */
   def hex60(h: Column): Column =
     (0 until 15).map { d =>
       (hexDigitAt(h, d + 1).cast("long") * lit(1L << (4 * (14 - d))))
     }.reduce(_ + _)
-
-  /** Native-expression twin of [[hex60]] (functions/Hex60.scala — one
-    * 15-byte loop in codegen instead of 15 substring+instr terms). Used
-    * on the per-shingle hot paths, where this expression runs O(corpus
-    * tokens) times; identical output, so oracles are unchanged. Needs a
-    * session to register the function, hence the DataFrame-scoped form.
-    */
-  private def hex60Native(df: DataFrame, c: Column): Column = {
-    graft.functions.GraftExtensions.install(df.sparkSession)
-    call_function("graft_hex60", c)
-  }
 
   /** Mersenne-prime modulus for the affine re-hash family. */
   val minhashMod = 2147483647L
@@ -88,7 +79,7 @@ object Dedup {
     // accept either raw shingle strings or pre-hashed 60-bit ids
     val baseHash =
       if (sh.schema("sh").dataType == org.apache.spark.sql.types.LongType) col("sh")
-      else hex60Native(sh, md5s(col("sh")))
+      else call_function("graft_hex60", md5s(col("sh")))
     val based = sh.withColumn("h0", baseHash % minhashMod)
     val minAggs = (0 until numSeeds).map { s =>
       min((col("h0") * (2 * s + 1) + s) % minhashMod).as(s"mh$s")
@@ -153,7 +144,7 @@ object Dedup {
   def hashedShingleTable(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 3): DataFrame =
     shingleTable(docs, idCol, textCol, k)
-      .select(col("doc_id"), hex60Native(docs, md5s(col("sh"))).as("sh"))
+      .select(col("doc_id"), call_function("graft_hex60", md5s(col("sh"))).as("sh"))
 
   def minhashDedup(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.5, k: Int = 3,
@@ -201,7 +192,7 @@ object Dedup {
     */
   def simhash(docs: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
     val sh = shingleTable(docs, idCol, textCol, k)
-      .withColumn("hl", hex60Native(docs, md5s(col("sh"))))
+      .withColumn("hl", call_function("graft_hex60", md5s(col("sh"))))
     val packed = (0 until simhashBits / 4).map { m =>
       val lanes = (0 until 4).map { j =>
         shiftright(col("hl"), 4 * m + j).bitwiseAND(1) * lit(1L << (16 * j))
@@ -501,7 +492,7 @@ object Dedup {
     // join/shuffle on a 60-bit integer shingle id, not the shingle string:
     // same Jaccard (collisions at 2^-60), much smaller shuffle payload
     val sh = shingleTable(docs, idCol, textCol, k)
-      .select(col("doc_id"), hex60Native(docs, md5s(col("sh"))).as("sh"))
+      .select(col("doc_id"), call_function("graft_hex60", md5s(col("sh"))).as("sh"))
     val rare = sh.groupBy("sh").agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
     // both self-join branches + sizes read this — materialize once
     val shF = sh.join(rare.select("sh"), "sh").scopedPersist()
@@ -582,7 +573,7 @@ object Dedup {
           i => concat_ws(" ", slice(ws, i, lit(k))))))
       .withColumnRenamed("col", "gram")
     val hashed = grams.select(col("doc_id"), col("pos"),
-      hex60Native(grams, md5s(col("gram"))).as("h"))
+      call_function("graft_hex60", md5s(col("gram"))).as("h"))
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos").rowsBetween(-(w - 1), 0)
     hashed

@@ -107,16 +107,6 @@ object Layout {
       s"hfinal AS (SELECT $kept, CAST(d$bits AS BIGINT) AS h FROM h$bits)").mkString(",\n")
   }
 
-  /** Write `df` Hilbert-clustered on (aCol, bCol) — same recipe as
-    * [[writeZOrdered]] with the better curve. */
-  def writeHilbertOrdered(df: DataFrame, aCol: String, bCol: String,
-                          path: String, numFiles: Int, bits: Int = 6): Unit =
-    df.withColumn("__h", hilbert2(col(aCol), col(bCol), bits))
-      .repartitionByRange(numFiles, col("__h"))
-      .sortWithinPartitions(col("__h"))
-      .drop("__h")
-      .write.mode("overwrite").parquet(path)
-
   /** Small-file compaction (the OPTIMIZE maintenance op): rewrite a
     * parquet directory into ~`targetFileBytes`-sized files, preserving
     * rows exactly. Streaming sinks and incremental syncs accrete tiny

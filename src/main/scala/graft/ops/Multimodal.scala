@@ -916,12 +916,6 @@ object Multimodal {
     docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
       val ntrks = 1 + (id % 3).toInt
       val out = new java.io.ByteArrayOutputStream()
-      def vlq(x: Long): Unit = {
-        var shift = 49
-        while (shift > 0 && ((x >> shift) & 0x7f) == 0) shift -= 7
-        while (shift > 0) { out.write((((x >> shift) & 0x7f) | 0x80).toInt); shift -= 7 }
-        out.write((x & 0x7f).toInt)
-      }
       out.write("MThd".getBytes("US-ASCII"))
       Seq(0, 0, 0, 6, 0, 1, 0, ntrks, 1, 0xe0).foreach(out.write) // div 480
       var t = 0

@@ -228,10 +228,6 @@ object QClassifier {
       }.toMap
     })
 
-  /** Model trained on the seed docs OUTSIDE `fold` (of `k`). */
-  def foldModel(docs: DataFrame, dir: String, k: Int, fold: Int): (Map[Long, Long], Long) =
-    foldModelsAll(docs, dir, k)(fold)
-
   /** Score a documents relation with an explicit weight vector: one
     * 33-row broadcast join + one doc-keyed partial agg — no full
     * shuffle, the one-pass 100 TB scoring shape.

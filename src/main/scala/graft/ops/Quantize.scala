@@ -182,7 +182,6 @@ object Quantize {
     * bit-identical to the explode/groupBy spelling on any partitioning.
     */
   def momentTriples(vecsQ: DataFrame, dims: Int): DataFrame = {
-    graft.functions.GraftExtensions.install(vecsQ.sparkSession)
     val flatLen = dims * (dims + 1) / 2
     val rowArr = expr(
       """concat(

@@ -337,8 +337,9 @@ object UlmTokenizer {
 
   /** (v, cb) lookup relation computed ON THE DRIVER via [[costCbLocal]]
     * (= [[costStages]] with c = 1, kk via bit length — identical int64
-    * ops for v ≥ 1) over the collected distinct values of `vals`'s first
-    * column. For call sites whose cb input is a tiny DISTINCT-VALUE set
+    * ops for v ≥ 1) over the collected distinct non-NULL values of
+    * `vals`'s first column. For call sites whose cb input is a tiny
+    * DISTINCT-VALUE set
     * (distinct census counts / group sizes — vocabulary-scale at most,
     * Heaps-bounded like the trainer censuses; [[CorpusOps.collectBounded]]
     * fails loudly past the cap), this replaces the 16-stage withColumn
@@ -350,8 +351,10 @@ object UlmTokenizer {
     */
   def cbTableLocal(vals: DataFrame, what: String): DataFrame = {
     val spark = vals.sparkSession
+    // one (v, cb) row per distinct non-NULL value — the rows an equi-join
+    // against the staged cost chain keeps
     val rows = CorpusOps.collectBounded(vals, what)
-      .map(r => r.getLong(0))
+      .filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
     require(rows.forall(_ >= 0L), s"$what: cb input values must be >= 0")
     // v = 0 replays the staged chain exactly: _q = 0, kk = length(bin(0))
     // − 1 = 0, _m0 = 0, every square stays 0 ⇒ cb = 64 div 128 = 0

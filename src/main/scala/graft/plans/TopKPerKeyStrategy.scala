@@ -1,14 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Planner strategy: TopKPerKeyPlan → partial exec → (exchange inserted
-  * by required distribution) → final exec. Installed per session via
-  * `spark.experimental.extraStrategies` (public API; also injectable
-  * through SparkSessionExtensions.injectPlannerStrategy at session build).
+  * by required distribution) → final exec. `GraftSession.build` adds it
+  * to `spark.experimental.extraStrategies` (with graft's functions and
+  * rules, see GraftExtensions) on every session it builds.
   */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -22,11 +22,6 @@ object TopKPerKeyStrategy extends SparkStrategy {
 /** User-facing builder. */
 object TopKPerKey {
 
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-
   /** Top `k` rows per `keyCols` group, ranked by `sorts` (field →
     * ascending?). Pass a key-complete sort so ties can't make the kept
     * set nondeterministic. Emits the selected rows with the child's
@@ -36,7 +31,6 @@ object TopKPerKey {
   def topKPerKey(df: DataFrame, keyCols: Seq[String],
                  sorts: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String) = analyzed.output.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(

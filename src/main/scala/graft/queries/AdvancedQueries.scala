@@ -100,7 +100,6 @@ object AdvancedQueries {
     // resolution here and 16-bit in HilbertSpec cost nothing. Equivalence
     // with the composed form is pinned in HilbertSpec
     "q_hilbert" -> ((s: SparkSession, d: String) => {
-      graft.functions.GraftExtensions.install(s)
       val hx = pmod(col("c_nationkey").cast("long"), lit(256L))
       val hy = pmod(floor(col("c_acctbal")).cast("long"), lit(256L))
       scan(s, d, "customer")

@@ -201,7 +201,6 @@ object SqlFunctionQueries {
     // native Catalyst expression (codegen) — same JS semantics as the
     // regexp composition in q_t_tonumber, via the SQL-registered function
     "q_expr_tonumber" -> ((s: SparkSession, d: String) => {
-      graft.functions.GraftExtensions.install(s)
       scan(s, d, "customer")
         .withColumn("bal_str", col("c_acctbal").cast("string"))
         .select(col("c_custkey"),
@@ -234,7 +233,6 @@ object SqlFunctionQueries {
     // integer-only estimate arithmetic, so DuckDB replays the k smallest
     // 60-bit hashes per group and hash-matches the ESTIMATE itself
     "q_agg_kmv" -> ((s: SparkSession, d: String) => {
-      graft.functions.GraftExtensions.install(s)
       scan(s, d, "orders")
         .withColumn("hv", graft.ops.Dedup.hex60(
           md5(concat(lit("kmv:"), col("o_custkey").cast("string")).cast("binary"))))
@@ -257,7 +255,6 @@ object SqlFunctionQueries {
     // arithmetic bit-exactly (k=64 here vs the one-shot cell's 32, so
     // the matrix also probes a second accuracy point)
     "q_agg_kmv_grouped" -> ((s: SparkSession, d: String) => {
-      graft.functions.GraftExtensions.install(s)
       val hashed = scan(s, d, "orders")
         .withColumn("hv", graft.ops.Dedup.hex60(
           md5(concat(lit("kmv:"), col("o_custkey").cast("string")).cast("binary"))))
@@ -371,7 +368,6 @@ object SqlFunctionQueries {
     // 20-row quantile side
     "q_agg_kll" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftExtensions.install(s)
       val o = scan(s, d, "orders").select(col("o_orderpriority").as("pr"),
         floor(col("o_totalprice") * 100).cast("long").as("v"))
       val census = o.groupBy(col("pr"), col("v")).agg(count(lit(1)).as("c"))
@@ -424,7 +420,6 @@ object SqlFunctionQueries {
     // interval, layout-invariant by construction
     "q_agg_kll_grouped" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftExtensions.install(s)
       val docs = scan(s, d, "documents").select(col("lang"), col("source"),
         col("doc_id"), size(split(trim(col("text")), "\\s+")).cast("long").as("v"))
       val census = docs.groupBy(col("lang"), col("source"), col("v"))
@@ -767,7 +762,6 @@ object SqlFunctionQueries {
     // decrement/eviction pressure, the regime that distinguishes MG
     // from a plain hash map
     "q_agg_mg" -> ((s: SparkSession, d: String) => {
-      graft.functions.GraftExtensions.install(s)
       val K = 8
       val toks = scan(s, d, "documents")
         .select(col("doc_id"),
@@ -796,7 +790,6 @@ object SqlFunctionQueries {
     // theorem booleans against each group's exact top-5. Mirrors
     // q_agg_kll_grouped's sketch-per-group contract
     "q_agg_mg_grouped" -> ((s: SparkSession, d: String) => {
-      graft.functions.GraftExtensions.install(s)
       val K = 8
       val toks = scan(s, d, "documents")
         .select(col("doc_id"), col("lang"),

@@ -579,7 +579,6 @@ object StreamQueries {
     "q_stream_kll" -> ((s: SparkSession, d: String) => {
       import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftExtensions.install(s)
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
       val suffix = Integer.toHexString(d.hashCode)
       val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
@@ -641,7 +640,6 @@ object StreamQueries {
     // (q_agg_mg's census replay) is shared VERBATIM
     "q_stream_mg" -> ((s: SparkSession, d: String) => {
       import org.apache.hadoop.fs.Path
-      graft.functions.GraftExtensions.install(s)
       val K = 8
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
       val suffix = Integer.toHexString(d.hashCode)
@@ -683,7 +681,6 @@ object StreamQueries {
     // replay is the oracle VERBATIM
     "q_stream_mg_grouped" -> ((s: SparkSession, d: String) => {
       import org.apache.hadoop.fs.Path
-      graft.functions.GraftExtensions.install(s)
       val K = 8
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
       val suffix = Integer.toHexString(d.hashCode)
@@ -1217,7 +1214,6 @@ object StreamQueries {
     // oracle's k-th-smallest replay, not tolerance-matched
     "q_stream_kmv" -> ((s: SparkSession, d: String) => {
       import org.apache.hadoop.fs.Path
-      graft.functions.GraftExtensions.install(s)
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
       val suffix = Integer.toHexString(d.hashCode)
       val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
@@ -1255,7 +1251,6 @@ object StreamQueries {
     "q_stream_kll_grouped" -> ((s: SparkSession, d: String) => {
       import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftExtensions.install(s)
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
       val suffix = Integer.toHexString(d.hashCode)
       val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"

@@ -12,7 +12,6 @@ import graft.ops.Dedup
 class Hex60Spec extends SparkSpec {
 
   test("native graft_hex60 equals the substring/instr composition on md5 output") {
-    GraftExtensions.install(spark)
     val df = spark.range(0, 5000)
       .withColumn("h", md5(concat(lit("hex60:"), col("id").cast("string")).cast("binary")))
       .withColumn("composed", Dedup.hex60(col("h")))
@@ -24,7 +23,6 @@ class Hex60Spec extends SparkSpec {
   }
 
   test("graft_hex60 matches on short / malformed input (instr-miss arithmetic)") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     // non-hex chars and strings shorter than 15 follow the composition's
     // (instr - 1) = -1 digit value
@@ -36,7 +34,6 @@ class Hex60Spec extends SparkSpec {
   }
 
   test("graft_hex60 participates in whole-stage codegen") {
-    GraftExtensions.install(spark)
     val df = spark.range(0, 10)
       .select(GraftExtensions.graft_hex60(
         md5(col("id").cast("string").cast("binary"))).as("v"))

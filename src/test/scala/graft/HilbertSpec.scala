@@ -41,7 +41,6 @@ class HilbertSpec extends SparkSpec {
   }
 
   test("native graft_hilbert expression: equals composed/local at full 16-bit resolution") {
-    graft.functions.GraftExtensions.install(spark)
     // composed-Column form is infeasible at 16 bits (tree grows ~5×/level);
     // the native loop isn't — check it against the driver twin on a
     // deterministic point cloud, plus the full 4-bit grid vs the composed form

@@ -10,8 +10,6 @@ import graft.functions.GraftExtensions
 class JsToNumberSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = { super.beforeAll(); GraftExtensions.install(spark) }
-
   private val vectors = Seq(
     "260" -> 260.0, "12abc" -> 12.0, "abc" -> 0.0, "" -> 0.0,
     "  3.5e2xyz" -> 350.0, "-4.25" -> -4.25, "0" -> 0.0, "NaNish" -> 0.0,

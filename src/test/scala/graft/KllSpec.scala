@@ -121,7 +121,6 @@ class KllSpec extends SparkSpec {
 
   test("grouped two-phase: per-shard partials merged per group match per-group exact ranks") {
     import spark.implicits._
-    graft.functions.GraftExtensions.install(spark)
     // 3 groups with DIFFERENT distributions; 8 shards per group — the
     // q_agg_kll_grouped deployment shape (partials per input split)
     val rows = for (g <- 0 until 3; i <- 0L until 6000L)
@@ -153,7 +152,6 @@ class KllSpec extends SparkSpec {
 
   test("SQL surface: sketch → merge → quantile over a real DataFrame") {
     import spark.implicits._
-    graft.functions.GraftExtensions.install(spark)
     val df = (0L until 10000L).toDF("v")
     df.createOrReplaceTempView("kll_vals")
     // two-phase: per-bucket sketches, then merge — the deployment shape

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftExtensions
 
 /** Pins the KMV sketch aggregate's determinism contract: the result is a
   * pure function of the input's distinct SET — invariant under partition
@@ -15,7 +14,6 @@ class KmvDistinctSpec extends SparkSpec {
     call_function("graft_kmv_distinct", c, lit(k))
 
   private def hashed(n: Int, tag: String) = {
-    GraftExtensions.install(spark)
     (1 to n).map(i => s"$tag:$i").toDF("s")
       .select(graft.ops.Dedup.hex60(md5(col("s").cast("binary"))).as("hv"))
   }
@@ -44,7 +42,6 @@ class KmvDistinctSpec extends SparkSpec {
   }
 
   test("nulls are ignored; all-null input evaluates to 0") {
-    GraftExtensions.install(spark)
     val withNulls = Seq[(java.lang.Long, Int)]((1L, 0), (2L, 0), (null, 0), (null, 0))
       .toDF("hv", "g")
     assert(withNulls.agg(kmv(col("hv"), 8)).head.getLong(0) == 2L)
@@ -52,7 +49,6 @@ class KmvDistinctSpec extends SparkSpec {
   }
 
   test("grouped sketch agrees with per-group single-partition recompute") {
-    GraftExtensions.install(spark)
     val df = (1 to 4000).map(i => (i % 7, s"g:${i % 7}:${i / 7}")).toDF("g", "s")
       .select(col("g"), graft.ops.Dedup.hex60(md5(col("s").cast("binary"))).as("hv"))
     val grouped = df.repartition(13).groupBy("g").agg(kmv(col("hv"), 32).as("e"))
@@ -67,7 +63,6 @@ class KmvDistinctSpec extends SparkSpec {
   // ---- two-phase surface (sketch -> BINARY partials -> merge -> estimate)
 
   test("two-phase sketch/merge/estimate equals the one-shot aggregate under any sharding") {
-    GraftExtensions.install(spark)
     val df = (1 to 5000).map(i => (i % 11, s"tp:${i % 900}")).toDF("shard", "s")
       .select(col("shard"), graft.ops.Dedup.hex60(md5(col("s").cast("binary"))).as("hv"))
     val oneShot = df.agg(kmv(col("hv"), 64)).head.getLong(0)

@@ -103,7 +103,6 @@ class MgSpec extends SparkSpec {
 
   test("SQL surface: two-phase sketch -> merge -> estimate over a DataFrame") {
     import spark.implicits._
-    graft.functions.GraftExtensions.install(spark)
     val data = zipf(30, 3000)
     data.zipWithIndex.map { case (w, i) => (i % 8, w) }
       .toDF("shard", "w").createOrReplaceTempView("mg_vals")

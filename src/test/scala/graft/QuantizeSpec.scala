@@ -104,7 +104,6 @@ class QuantizeSpec extends SparkSpec {
   }
 
   test("graft_lvecsum: null elements and non-bigint arrays fail loudly (ADVICE r17)") {
-    graft.functions.GraftExtensions.install(spark)
     val nullElem = Seq(Tuple1(Seq(Some(1L), None))).toDF("r")
     val e1 = intercept[Exception] {
       nullElem.agg(call_function("graft_lvecsum", col("r"))).collect()

@@ -74,7 +74,6 @@ class TopKPerKeySpec extends SparkSpec {
 
   test("RewriteTopKWindow: window+filter+drop(rn) pattern auto-rewrites to TopKPerKey") {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftExtensions.install(spark)
     val w = Window.partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id").asc)
     // expected BEFORE triggering the rewrite pattern: keep rn in the
     // output (rule must NOT fire), drop it driver-side
@@ -99,7 +98,6 @@ class TopKPerKeySpec extends SparkSpec {
 
   test("RewriteTopKWindow leaves rank() (tie-admitting) windows alone") {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftExtensions.install(spark)
     val w = Window.partitionBy(col("user_id")).orderBy(col("value").desc)
     val df = events.withColumn("rk", rank().over(w)).filter(col("rk") <= 2).drop("rk")
     assert(unwrap(df.queryExecution.executedPlan)

@@ -72,6 +72,14 @@ class UlmSpec extends SparkSpec {
     }
   }
 
+  test("cbTableLocal: one (v, cb) row per distinct non-NULL value") {
+    val vals = Seq[java.lang.Long](8L, null, 8L, 0L, 100L).toDF("v")
+    val got = UlmTokenizer.cbTableLocal(vals, "UlmSpec cb values")
+      .as[(Long, Long)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((0L, 0L), (8L, UlmTokenizer.costCbLocal(8L, 1L)),
+      (100L, UlmTokenizer.costCbLocal(100L, 1L))), s"got $got")
+  }
+
   test("training is deterministic and every corpus word round-trips") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
