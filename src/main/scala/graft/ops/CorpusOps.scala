@@ -979,71 +979,39 @@ object CorpusOps {
     * iterated-op discipline). The packed position doc_id·2^20 + pos
     * requires docs under 2^20 tokens — asserted.
     */
-  /** Shared doubling core for the suffix tier: token stream, doc
-    * lengths, per-level duplicated-start relations, and the final
-    * class table (doc_id, pos, gp, cls, cnt) at window length minRun.
-    */
   /** Session memo for the doubling result — q_text_suffix_dedup and
     * q_text_suffix_rm share one doubling per corpus instead of paying
     * the log-round build twice; the checkpointed relations are
     * token-stream-sized. Deterministic: the classes are a pure function
-    * of the input.
-    *
-    * Bounded to ONE entry, keyed by (SparkSession identity, analyzed
-    * semanticHash, cols, minRun): a new corpus (or a new session — a
-    * hash collision across sessions would otherwise hand back
-    * DataFrames bound to a stopped session) replaces the old one, and
-    * replacement UNPERSISTS the evicted entry's relations — both the
-    * scopedPersist'd token/length tables (plan-cache unpersist) and
-    * every round's localCheckpoint RDD (LogicalRDD-level unpersist;
-    * `clearCache()` never frees those), so multi-dir sessions
-    * (ScaleCurve) don't accumulate token-stream-sized blocks for the
-    * JVM lifetime. */
+    * of the input. Keyed by (analyzed semanticHash, cols, minRun) under
+    * the session; holds [[SessionMemo.Capacity]] corpora, so ScaleCurve's
+    * small and large dirs each keep their doubling across timings. */
   private type SuffixEntry = (DataFrame, DataFrame, Seq[(Long, DataFrame)], DataFrame)
-  private var suffixMemo: Option[((org.apache.spark.sql.SparkSession, Int, String, String, Int), SuffixEntry)] = None
-  // harness storage clears destroy the memoized checkpoint blocks — drop
-  // the entry so the next access rebuilds (see CacheScope.StorageMemos)
-  StorageMemos.register(() => synchronized {
-    suffixMemo.foreach { case (_, v) => releaseSuffixEntry(v) }
-    suffixMemo = None
-  })
+  private val suffixDoublings =
+    new SessionMemo[(Int, String, String, Int), SuffixEntry](releaseSuffixEntry)
 
-  /** Free an evicted entry: unpersist the cached tables, then walk every
-    * stored plan for LogicalRDD nodes (the localCheckpoint anchors) and
-    * unpersist their RDDs. Never throws — eviction is best-effort. */
+  /** Free an evicted entry: unpersist the cached token/length tables,
+    * then every round's localCheckpoint RDD. */
   private def releaseSuffixEntry(v: SuffixEntry): Unit = {
     val (toks, lens, contribs, t) = v
     try toks.unpersist() catch { case _: Throwable => () }
     try lens.unpersist() catch { case _: Throwable => () }
-    (contribs.map(_._2) :+ t).foreach { df =>
-      try df.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
-        case _ => ()
-      } catch { case _: Throwable => () }
-    }
+    (contribs.map(_._2) :+ t).foreach(SessionMemo.releaseCheckpoints)
   }
 
   private def suffixDoubling(docs: DataFrame, idCol: String, textCol: String,
-      minRun: Int): (DataFrame, DataFrame, Seq[(Long, DataFrame)], DataFrame) =
-    synchronized {
-      // session carried by REFERENCE (ADVICE r15: identityHashCode can be
-      // reused after a stopped session is GC'd); the tuple's equality on
-      // the session slot is reference equality since SparkSession doesn't
-      // override equals
-      val key = (docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash(), idCol, textCol, minRun)
-      suffixMemo match {
-        case Some((k, v)) if k == key => v
-        case prev =>
-          val built = suffixDoublingBuild(docs, idCol, textCol, minRun)
-          prev.foreach { case (_, v) => releaseSuffixEntry(v) }
-          suffixMemo = Some(key -> built)
-          built
-      }
+      minRun: Int): SuffixEntry =
+    suffixDoublings(docs.sparkSession,
+        (docs.queryExecution.analyzed.semanticHash(), idCol, textCol, minRun)) {
+      suffixDoublingBuild(docs, idCol, textCol, minRun)
     }
 
+  /** Shared doubling core for the suffix tier: token stream, doc
+    * lengths, per-level duplicated-start relations, and the final
+    * class table (doc_id, pos, gp, cls, cnt) at window length minRun.
+    */
   private def suffixDoublingBuild(docs: DataFrame, idCol: String, textCol: String,
-      minRun: Int): (DataFrame, DataFrame, Seq[(Long, DataFrame)], DataFrame) = {
+      minRun: Int): SuffixEntry = {
     require(minRun >= 2 && (minRun & (minRun - 1)) == 0,
       s"suffix doubling: minRun must be a power of two >= 2, got $minRun")
     val toks = docs.select(col(idCol).cast("long").as("doc_id"),

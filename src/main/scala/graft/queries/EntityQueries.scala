@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamOps.StagedWrite
 import graft.engine.QueryBuilder.scan
-import graft.ops.EntityResolution
+import graft.ops.{EntityResolution, SessionMemo}
 
 /** Entity-resolution (record linkage) tier over the customer table — the
   * canonical post-load job for the reference's CRM-facing adapters
@@ -33,52 +33,14 @@ object EntityQueries {
 
   /** The ER family's shared hot subplan — blocked self-join +
     * levenshtein scoring — memoized as a localCheckpoint'd relation per
-    * (session, dataset dir), the `trainCache`/`modelCache` convention:
-    * six registry entries consume it (candidates/scorehist read it
-    * whole; matches/clusters/golden/eval filter it at the threshold),
-    * and before this memo each rebuilt it from scratch (`q_er_golden`
-    * was r12's one 100× scale flag). Candidate volume is O(n_records)
-    * by blocking construction, so the checkpoint is pair-scale.
-    * Bounded to TWO entries (LRU): ScaleCurve interleaves a small and a
-    * large dir per query, so capacity 1 would thrash a rebuild per
-    * timing; eviction unpersists the evicted checkpoint RDDs
-    * (clearCache can't free RDD-level persists — the suffixMemo
-    * lesson). */
-  // Session-REFERENCE key (SparkSession doesn't override equals): the
-  // identityHashCode key could collide after a stopped session was GC'd
-  // and its hash reused (ADVICE r15; same fix as GraphQueries' memos).
-  private val candMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), DataFrame]
-  // harness storage clears destroy the memo's checkpoint blocks — drop
-  // the handles so the next access rebuilds (see CacheScope.StorageMemos)
-  graft.ops.StorageMemos.register(() => synchronized {
-    candMemo.values.foreach { v =>
-      try v.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
-        case _ => ()
-      } catch { case _: Throwable => () }
-    }
-    candMemo.clear()
-  })
-  private def sharedCandidates(s: SparkSession, d: String): DataFrame = synchronized {
-    val key = (s, d)
-    candMemo.remove(key) match {
-      case Some(v) => candMemo.put(key, v); v // re-insert = mark most-recent
-      case None =>
-        val (recs, len) = records(s, d)
-        val built = candidates(recs, len).localCheckpoint()
-        if (candMemo.size >= GraphQueries.MemoCapacity) {
-          val oldest = candMemo.head._1
-          candMemo.remove(oldest).foreach { v =>
-            try v.queryExecution.analyzed.foreach {
-              case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
-              case _ => ()
-            } catch { case _: Throwable => () }
-          }
-        }
-        candMemo.put(key, built)
-        built
-    }
+    * (session, dataset dir): six registry entries consume it
+    * (candidates/scorehist read it whole; matches/clusters/golden/eval
+    * filter it at the threshold). Candidate volume is O(n_records) by
+    * blocking construction, so the checkpoint is pair-scale. */
+  private val candMemo = new SessionMemo[String, DataFrame](SessionMemo.releaseCheckpoints)
+  private def sharedCandidates(s: SparkSession, d: String): DataFrame = candMemo(s, d) {
+    val (recs, len) = records(s, d)
+    candidates(recs, len).localCheckpoint()
   }
 
   /** Letter→soundex-digit map shared by engine and oracle: classic

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.QueryBuilder.scan
-import graft.ops.Graph
+import graft.ops.{Graph, SessionMemo}
 
 /** Graph-operator tier over edge tables derived from the star schema:
   * a supplier co-supply graph (the top 10% of supplier pairs by shared
@@ -28,109 +28,48 @@ object GraphQueries {
   private val PrIters = 3
 
   /** The graph family's SHARED SUBPLANS, memoized as localCheckpoint'd
-    * relations per (session, dataset dir) — the ER shared-candidates
-    * convention (EntityQueries.candMemo, −54% family time in r13),
-    * applied to the prefix ~12 graph entries used to rebuild per call:
+    * relations per (session, dataset dir) so the ~12 graph entries that
+    * start from them stop rebuilding them per call:
     *
     *  - `edges`: the co-supply edge list (s1 < s2) under the data-driven
     *    top-10% support floor. Hot-group cap 100000: far above TPC-H's
     *    suppliers-per-part (~10) at any SF, so the DuckDB oracle (no
     *    cap) stays equivalent while a pathological group can never
     *    square the join. The floor is the census rank
-    *    (Graph.sharedFloorTop) — the r1–r9 absolute floor (145 shared
-    *    parts) emptied the graph at sf≥0.1, so the family's scale
-    *    records measured empty results; the census floor keeps edge
-    *    density scale-stable. Building it runs the per-part self-join
-    *    plus the floor collect ONCE per (session, dir) instead of once
-    *    per query.
+    *    (Graph.sharedFloorTop), which keeps edge density scale-stable.
     *  - `symDeg`: Graph.symWithDeg(edges) — both-direction edges with
     *    in-row endpoint degrees; degree census, orientation,
     *    assortativity moments and rich-club sums are single-pass reads.
     *
-    * Both relations are pair-scale (top-permille of the pair census —
-    * edge-sized, never input-sized), so the checkpoint footprint is
-    * metadata next to the lineitem scan it replaces. Capacity-2 LRU:
-    * ScaleCurve interleaves a small and a large dir per query, so
-    * capacity 1 would thrash a rebuild per timing. Eviction and harness
-    * storage clears unpersist the checkpoint RDDs (clearCache can't
-    * free RDD-level persists; a cleared checkpoint's DataFrame must
-    * never be handed out again — StorageMemos contract).
+    * Both relations are pair-scale (top-permille of the pair census), so
+    * the checkpoint footprint is metadata next to the lineitem scan it
+    * replaces.
     */
   private final case class SharedGraph(edges: DataFrame, symDeg: DataFrame)
-  // Keyed on the SESSION REFERENCE itself (SparkSession doesn't override
-  // equals, so tuple equality is reference equality) — the previous
-  // identityHashCode key could collide after a stopped session was GC'd
-  // and its hash reused, handing out checkpointed DataFrames bound to a
-  // dead session (ADVICE r15). The strong ref pins at most MemoCapacity
-  // stopped sessions, which is the same order as the DataFrames the memo
-  // already holds.
-  //
-  // MemoCapacity invariant (ADVICE r15): eviction unpersists the
-  // localCheckpoint RDDs, so any caller still holding an evicted entry's
-  // DataFrame fails its next action with CHECKPOINT_RDD_BLOCK_ID_NOT_
-  // FOUND. Capacity must therefore be ≥ the number of (session, dir)
-  // pairs LIVE AT ONCE in any harness: Bench/Verify use 1, ScaleCurve
-  // interleaves 2 (small + large per query). A future ≥3-tier sweep MUST
-  // raise GRAFT_MEMO_CAPACITY rather than silently thrash/break.
-  private[queries] val MemoCapacity =
-    math.max(2, sys.env.getOrElse("GRAFT_MEMO_CAPACITY", "2").toInt)
-  private val graphMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), SharedGraph]
+  private val graphMemo = new SessionMemo[String, SharedGraph](
+    g => Seq(g.edges, g.symDeg).foreach(SessionMemo.releaseCheckpoints))
   /** customer↔supplier DISTINCT purchase pairs (c, s) — the second
     * shared prefix (pagerank/ppr/hits all start here: the orders ⋈
     * lineitem join + distinct is their expensive stage). */
-  private val bipMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), DataFrame]
-  private def releaseChk(v: DataFrame): Unit =
-    try v.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
-      case _ => ()
-    } catch { case _: Throwable => () }
-  graft.ops.StorageMemos.register(() => synchronized {
-    graphMemo.values.foreach { v => releaseChk(v.edges); releaseChk(v.symDeg) }
-    graphMemo.clear()
-    bipMemo.values.foreach(releaseChk)
-    bipMemo.clear()
-  })
+  private val bipMemo = new SessionMemo[String, DataFrame](SessionMemo.releaseCheckpoints)
 
-  private def shared(s: SparkSession, d: String): SharedGraph = synchronized {
-    val key = (s, d)
-    graphMemo.remove(key) match {
-      case Some(v) => graphMemo.put(key, v); v // re-insert = mark most-recent
-      case None =>
-        val edges = Graph.topSharedPairs(scan(s, d, "lineitem"),
-            "l_partkey", "l_suppkey", keepPermille = 100, maxGroupSize = 100000)
-          .select(col("s1"), col("s2"))
-          .localCheckpoint()
-        val built = SharedGraph(edges, Graph.symWithDeg(edges).localCheckpoint())
-        if (graphMemo.size >= MemoCapacity) {
-          graphMemo.remove(graphMemo.head._1).foreach { v =>
-            releaseChk(v.edges); releaseChk(v.symDeg)
-          }
-        }
-        graphMemo.put(key, built)
-        built
-    }
+  private def shared(s: SparkSession, d: String): SharedGraph = graphMemo(s, d) {
+    val edges = Graph.topSharedPairs(scan(s, d, "lineitem"),
+        "l_partkey", "l_suppkey", keepPermille = 100, maxGroupSize = 100000)
+      .select(col("s1"), col("s2"))
+      .localCheckpoint()
+    SharedGraph(edges, Graph.symWithDeg(edges).localCheckpoint())
   }
 
   /** Memoized co-supply edge list (s1 < s2). */
   private def coSupply(s: SparkSession, d: String): DataFrame = shared(s, d).edges
 
-  private def bipartite(s: SparkSession, d: String): DataFrame = synchronized {
-    val key = (s, d)
-    bipMemo.remove(key) match {
-      case Some(v) => bipMemo.put(key, v); v
-      case None =>
-        val o = scan(s, d, "orders")
-        val l = scan(s, d, "lineitem")
-        val built = o.join(l, o("o_orderkey") === l("l_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_suppkey").as("s")).distinct()
-          .localCheckpoint()
-        if (bipMemo.size >= MemoCapacity)
-          bipMemo.remove(bipMemo.head._1).foreach(releaseChk)
-        bipMemo.put(key, built)
-        built
-    }
+  private def bipartite(s: SparkSession, d: String): DataFrame = bipMemo(s, d) {
+    val o = scan(s, d, "orders")
+    val l = scan(s, d, "lineitem")
+    o.join(l, o("o_orderkey") === l("l_orderkey"))
+      .select(col("o_custkey").as("c"), col("l_suppkey").as("s")).distinct()
+      .localCheckpoint()
   }
 
   /** customer↔supplier bipartite, both directions; supplier ids offset so

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -102,11 +103,15 @@ object StreamOps {
     * serialized per path via ConcurrentHashMap.compute (atomic per key
     * — TrieMap.getOrElseUpdate could evaluate the by-name write twice
     * under concurrent first calls, racing two overwrite writes into the
-    * same dir). */
+    * same dir). A rewrite of an already-staged path is logged to
+    * stderr. */
   private val stagedOnce = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def stageOnce(path: String, fingerprint: String = "")(write: => Unit): String = {
     stagedOnce.compute(path, (_: String, prev: String) => {
-      if (prev == null || prev != fingerprint) write
+      if (prev != fingerprint) {
+        if (prev != null) System.err.println(s"[stage] rewriting $path: fingerprint changed")
+        write
+      }
       fingerprint
     })
     path
@@ -114,14 +119,15 @@ object StreamOps {
 
   /** Metadata-scale content fingerprint of a DataFrame's source files
     * (path, size, mtime per input file). Empty string when the inputs
-    * aren't stat-able local files — staging then degrades to plain
-    * once-per-JVM. */
+    * aren't stat-able — staging then degrades to plain once-per-JVM. */
   private def sourceFingerprint(df: DataFrame): String =
     try {
       val h = java.security.MessageDigest.getInstance("MD5")
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
       df.inputFiles.sorted.foreach { f =>
-        val p = java.nio.file.Paths.get(new java.net.URI(f).getPath)
-        h.update(s"$f:${java.nio.file.Files.size(p)}:${java.nio.file.Files.getLastModifiedTime(p).toMillis}\n"
+        val p = new Path(f)
+        val st = p.getFileSystem(conf).getFileStatus(p)
+        h.update(s"$f:${st.getLen}:${st.getModificationTime}\n"
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
       h.digest().map("%02x".format(_)).mkString
@@ -173,13 +179,10 @@ object StreamOps {
     * IS what is being exercised.
     */
   def boundedSliceFiles(stage: String): Seq[String] = {
-    val dir = java.nio.file.Paths.get(stage)
-    val ls = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      ls.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toList.sorted
-    } finally ls.close()
+    val dir = new Path(stage)
+    dir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+      .listStatus(dir).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet")).toList.sorted
   }
 
   /** Run `body` once per staged slice (see [[boundedSliceFiles]]) under
