@@ -1,8 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 import Multimodal.MediaRow
 
 /** Model-artifact format walkers — the shipping formats of the ML side
@@ -29,8 +26,9 @@ import Multimodal.MediaRow
   * oracle that never parses a byte), the decoders are REAL byte-level
   * parsers whose validation paths (magic, framing, offset tiling,
   * alignment, CRC) run on every row and fail LOUDLY on corruption, and
-  * the pipeline shape is one narrow mapPartitions — no shuffle, no
-  * driver round-trip, payloads stay columnar binary at 100 TB.
+  * both plug into [[Multimodal.decode]] / [[Multimodal.fixtures]] —
+  * one narrow mapPartitions, no shuffle, no driver round-trip,
+  * payloads stay columnar binary at 100 TB.
   */
 object ModelFormats {
 
@@ -243,13 +241,6 @@ object ModelFormats {
       dataLen, maxB, metaFormat, dSum)
   }
 
-  /** safetensors pipeline — same narrow mapPartitions seam. */
-  def extractSafetensorsStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeSafetensors).toDF()
-  }
-
   /** Deterministic safetensors fixture per id: T = 2 + id%4 tensors;
     * tensor i is F32 (i even) or I8 (i odd) with shape
     * [1 + (id+i)%5, 1 + (id+3i)%7], contiguous offsets in index order,
@@ -258,36 +249,32 @@ object ModelFormats {
     * 8-aligned (the official writer's convention — exercises the
     * parser's trailing-whitespace path on every row).
     */
-  def syntheticSafetensors(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val t = 2 + (id % 4).toInt
-      val dims = (0 until t).map { i =>
-        (1 + ((id + i) % 5).toInt, 1 + ((id + 3 * i) % 7).toInt)
-      }
-      val sizes = dims.zipWithIndex.map { case ((r, c), i) =>
-        r.toLong * c * (if (i % 2 == 0) 4 else 1)
-      }
-      val begins = sizes.scanLeft(0L)(_ + _)
-      val entries = (0 until t).map { i =>
-        val (r, c) = dims(i)
-        val dt = if (i % 2 == 0) "F32" else "I8"
-        f""""t$i%02d":{"dtype":"$dt","shape":[$r,$c],"data_offsets":[${begins(i)},${begins(i + 1)}]}"""
-      }
-      val json = s"""{"__metadata__":{"format":"graft"},${entries.mkString(",")}}"""
-      val pad = (8 - (json.length % 8)) % 8
-      val header = json + (" " * pad)
-      val out = new java.io.ByteArrayOutputStream()
-      var k = 0
-      while (k < 8) { out.write(((header.length.toLong >> (8 * k)) & 0xff).toInt); k += 1 }
-      out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      (0 until t).foreach { i =>
-        var j = 0L
-        while (j < sizes(i)) { out.write(((id + 11 * i + j) % 256).toInt); j += 1 }
-      }
-      MediaRow(id, "application/x-safetensors", out.toByteArray)
-    }.toDF()
+  def syntheticSafetensors(id: Long): MediaRow = {
+    val t = 2 + (id % 4).toInt
+    val dims = (0 until t).map { i =>
+      (1 + ((id + i) % 5).toInt, 1 + ((id + 3 * i) % 7).toInt)
+    }
+    val sizes = dims.zipWithIndex.map { case ((r, c), i) =>
+      r.toLong * c * (if (i % 2 == 0) 4 else 1)
+    }
+    val begins = sizes.scanLeft(0L)(_ + _)
+    val entries = (0 until t).map { i =>
+      val (r, c) = dims(i)
+      val dt = if (i % 2 == 0) "F32" else "I8"
+      f""""t$i%02d":{"dtype":"$dt","shape":[$r,$c],"data_offsets":[${begins(i)},${begins(i + 1)}]}"""
+    }
+    val json = s"""{"__metadata__":{"format":"graft"},${entries.mkString(",")}}"""
+    val pad = (8 - (json.length % 8)) % 8
+    val header = json + (" " * pad)
+    val out = new java.io.ByteArrayOutputStream()
+    var k = 0
+    while (k < 8) { out.write(((header.length.toLong >> (8 * k)) & 0xff).toInt); k += 1 }
+    out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (0 until t).foreach { i =>
+      var j = 0L
+      while (j < sizes(i)) { out.write(((id + 11 * i + j) % 256).toInt); j += 1 }
+    }
+    MediaRow(id, "application/x-safetensors", out.toByteArray)
   }
 
   // =================================================================
@@ -363,19 +350,6 @@ object ModelFormats {
       if (dims.length > 1) dims(1) else 1L, nElems, esize, fortran, hlen, sum)
   }
 
-  /** NPY pipeline — same narrow mapPartitions seam. */
-  def extractNpyStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeNpy).toDF()
-  }
-
-  /** Deterministic NPY fixture per id: `<i4` C-order matrix of shape
-    * (1 + id%6, 1 + id%9), element j (row-major) =
-    * ((id·7 + j) mod 1000) − 500, header space-padded to the constant
-    * length 118 (10 + 118 = 128, 64-aligned — single-digit dims keep
-    * the dict text constant-width).
-    */
   /** One `<i4` C-order NPY file: shape (r, c), element j (row-major) =
     * (vSeed + j) mod 1000 − 500, constant 118-byte padded header.
     * Shared by the standalone NPY fixture and the NPZ archive members.
@@ -402,13 +376,15 @@ object ModelFormats {
     out.toByteArray
   }
 
-  def syntheticNpy(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      MediaRow(id, "application/x-npy",
-        npyBytes(1 + (id % 6).toInt, 1 + (id % 9).toInt, id * 7))
-    }.toDF()
+  /** Deterministic NPY fixture per id: `<i4` C-order matrix of shape
+    * (1 + id%6, 1 + id%9), element j (row-major) =
+    * ((id·7 + j) mod 1000) − 500, header space-padded to the constant
+    * length 118 (10 + 118 = 128, 64-aligned — single-digit dims keep
+    * the dict text constant-width).
+    */
+  def syntheticNpy(id: Long): MediaRow = {
+    MediaRow(id, "application/x-npy",
+      npyBytes(1 + (id % 6).toInt, 1 + (id % 9).toInt, id * 7))
   }
 
   /** Deterministic NPZ fixture per id: a real ZIP archive of
@@ -416,19 +392,15 @@ object ModelFormats {
     * (1 + (id+k)%6, 1 + (id+k)%9) with element seed id·7 + 11k, STORED
     * for even k, raw-DEFLATED for odd (both zip paths run per archive).
     */
-  def syntheticNpz(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val n = 2 + (id % 3).toInt
-      val entries = (0 until n).map { k =>
-        (s"arr_$k.npy",
-          npyBytes(1 + ((id + k) % 6).toInt, 1 + ((id + k) % 9).toInt,
-            id * 7 + 11 * k),
-          k % 2 == 0)
-      }
-      MediaRow(id, "application/x-npz", Multimodal.zipArchive(entries))
-    }.toDF()
+  def syntheticNpz(id: Long): MediaRow = {
+    val n = 2 + (id % 3).toInt
+    val entries = (0 until n).map { k =>
+      (s"arr_$k.npy",
+        npyBytes(1 + ((id + k) % 6).toInt, 1 + ((id + k) % 9).toInt,
+          id * 7 + 11 * k),
+        k % 2 == 0)
+    }
+    MediaRow(id, "application/x-npz", Multimodal.zipArchive(entries))
   }
 
   // =================================================================
@@ -557,13 +529,6 @@ object ModelFormats {
       layerCount, ctxLen, arrSum, params, dataBytes, padBytes, dSum)
   }
 
-  /** GGUF pipeline — same narrow mapPartitions seam. */
-  def extractGgufStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeGguf).toDF()
-  }
-
   /** Deterministic GGUF v3 fixture per id: K = 2 + id%3 KVs
     * (architecture string; layer_count u32 = 1 + id%7; when K ≥ 3
     * context_length u64 = 128 + id%512; when K = 4 an i32 array of
@@ -572,63 +537,59 @@ object ModelFormats {
     * 32-aligned offsets, data byte j = (id + 13i + j) mod 256,
     * zero-padded gaps.
     */
-  def syntheticGguf(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val out = new java.io.ByteArrayOutputStream()
-      def wU32(v: Long): Unit = {
-        var k = 0
-        while (k < 4) { out.write(((v >> (8 * k)) & 0xff).toInt); k += 1 }
+  def syntheticGguf(id: Long): MediaRow = {
+    val out = new java.io.ByteArrayOutputStream()
+    def wU32(v: Long): Unit = {
+      var k = 0
+      while (k < 4) { out.write(((v >> (8 * k)) & 0xff).toInt); k += 1 }
+    }
+    def wU64(v: Long): Unit = {
+      var k = 0
+      while (k < 8) { out.write(((v >> (8 * k)) & 0xff).toInt); k += 1 }
+    }
+    def wStr(s: String): Unit = {
+      val bs = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      wU64(bs.length.toLong); out.write(bs)
+    }
+    val t = 1 + (id % 4).toInt
+    val kvs = 2 + (id % 3).toInt
+    out.write("GGUF".getBytes("US-ASCII"))
+    wU32(3L)
+    wU64(t.toLong)
+    wU64(kvs.toLong)
+    wStr("general.architecture"); wU32(8L); wStr("graft")
+    wStr("graft.layer_count"); wU32(4L); wU32(1L + id % 7)
+    if (kvs >= 3) { wStr("graft.context_length"); wU32(10L); wU64(128L + id % 512) }
+    if (kvs >= 4) {
+      wStr("graft.scores"); wU32(9L); wU32(5L)
+      val m = 2 + (id % 3).toInt
+      wU64(m.toLong)
+      (0 until m).foreach(j => wU32((id + j) % 100))
+    }
+    val dims = (0 until t).map { i =>
+      (1L + (id + i) % 5, 1L + (id + 3 * i) % 7)
+    }
+    val sizes = dims.zipWithIndex.map { case ((r, c), i) =>
+      r * c * (if (i % 2 == 0) 4L else 2L)
+    }
+    var off = 0L
+    (0 until t).foreach { i =>
+      wStr(s"blk.$i.w")
+      wU32(2L); wU64(dims(i)._1); wU64(dims(i)._2)
+      wU32(if (i % 2 == 0) 0L else 1L)
+      wU64(off)
+      off += align32(sizes(i))
+    }
+    while (out.size % GgufAlign != 0) out.write(0) // head pad to alignment
+    (0 until t).foreach { i =>
+      var j = 0L
+      while (j < sizes(i)) { out.write(((id + 13 * i + j) % 256).toInt); j += 1 }
+      if (i < t - 1) {
+        var p = sizes(i)
+        while (p < align32(sizes(i))) { out.write(0); p += 1 }
       }
-      def wU64(v: Long): Unit = {
-        var k = 0
-        while (k < 8) { out.write(((v >> (8 * k)) & 0xff).toInt); k += 1 }
-      }
-      def wStr(s: String): Unit = {
-        val bs = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        wU64(bs.length.toLong); out.write(bs)
-      }
-      val t = 1 + (id % 4).toInt
-      val kvs = 2 + (id % 3).toInt
-      out.write("GGUF".getBytes("US-ASCII"))
-      wU32(3L)
-      wU64(t.toLong)
-      wU64(kvs.toLong)
-      wStr("general.architecture"); wU32(8L); wStr("graft")
-      wStr("graft.layer_count"); wU32(4L); wU32(1L + id % 7)
-      if (kvs >= 3) { wStr("graft.context_length"); wU32(10L); wU64(128L + id % 512) }
-      if (kvs >= 4) {
-        wStr("graft.scores"); wU32(9L); wU32(5L)
-        val m = 2 + (id % 3).toInt
-        wU64(m.toLong)
-        (0 until m).foreach(j => wU32((id + j) % 100))
-      }
-      val dims = (0 until t).map { i =>
-        (1L + (id + i) % 5, 1L + (id + 3 * i) % 7)
-      }
-      val sizes = dims.zipWithIndex.map { case ((r, c), i) =>
-        r * c * (if (i % 2 == 0) 4L else 2L)
-      }
-      var off = 0L
-      (0 until t).foreach { i =>
-        wStr(s"blk.$i.w")
-        wU32(2L); wU64(dims(i)._1); wU64(dims(i)._2)
-        wU32(if (i % 2 == 0) 0L else 1L)
-        wU64(off)
-        off += align32(sizes(i))
-      }
-      while (out.size % GgufAlign != 0) out.write(0) // head pad to alignment
-      (0 until t).foreach { i =>
-        var j = 0L
-        while (j < sizes(i)) { out.write(((id + 13 * i + j) % 256).toInt); j += 1 }
-        if (i < t - 1) {
-          var p = sizes(i)
-          while (p < align32(sizes(i))) { out.write(0); p += 1 }
-        }
-      }
-      MediaRow(id, "application/x-gguf", out.toByteArray)
-    }.toDF()
+    }
+    MediaRow(id, "application/x-gguf", out.toByteArray)
   }
 
   // =================================================================
@@ -817,13 +778,6 @@ object ModelFormats {
     TfExampleStats(r.media_id, nRec, nEnt, nBv, nIv, nFv, blSum, bSum, iSum, f2Sum)
   }
 
-  /** tf.Example pipeline — same narrow mapPartitions seam. */
-  def extractTfExampleStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeTfExample).toDF()
-  }
-
   /** Deterministic tf.Example fixture per id: n = 1 + id%3 framed
     * records; record k carries features "label" (packed int64_list
     * [(id+k)%10, 300+(id+k)%200] — the second value exercises
@@ -832,66 +786,62 @@ object ModelFormats {
     * float_list of m = 2+(id+k)%3 half-integers (id+k)%7 + j/2). Real
     * masked-CRC32C framing, real proto encoding.
     */
-  def syntheticTfExample(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      def varintBytes(v: Long): Array[Byte] = {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        var x = v
-        while ((x & ~0x7fL) != 0) { buf += ((x & 0x7f) | 0x80).toByte; x >>>= 7 }
-        buf += (x & 0x7f).toByte
-        buf.toArray
+  def syntheticTfExample(id: Long): MediaRow = {
+    def varintBytes(v: Long): Array[Byte] = {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
+      var x = v
+      while ((x & ~0x7fL) != 0) { buf += ((x & 0x7f) | 0x80).toByte; x >>>= 7 }
+      buf += (x & 0x7f).toByte
+      buf.toArray
+    }
+    def lenDelim(field: Int, body: Array[Byte]): Array[Byte] =
+      varintBytes((field << 3) | 2L) ++ varintBytes(body.length.toLong) ++ body
+
+    val n = 1 + (id % 3).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    (0 until n).foreach { k =>
+      // Int64List{value: [v1, v2]} packed
+      val ints = varintBytes((id + k) % 10) ++ varintBytes(300 + (id + k) % 200)
+      val int64List = lenDelim(1, ints)
+      val labelFeature = lenDelim(3, int64List)
+      // BytesList{value: [text]}
+      val l = 5 + ((id + k) % 20).toInt
+      val text = Array.tabulate(l)(j => (97 + ((id + k + j) % 26)).toByte)
+      val bytesList = lenDelim(1, text)
+      val textFeature = lenDelim(1, bytesList)
+      // FloatList{value: [...]} packed
+      val m = 2 + ((id + k) % 3).toInt
+      val floats = new java.io.ByteArrayOutputStream()
+      (0 until m).foreach { j =>
+        val bits = java.lang.Float.floatToIntBits(((id + k) % 7).toFloat + 0.5f * j)
+        floats.write(bits & 0xff); floats.write((bits >> 8) & 0xff)
+        floats.write((bits >> 16) & 0xff); floats.write((bits >> 24) & 0xff)
       }
-      def lenDelim(field: Int, body: Array[Byte]): Array[Byte] =
-        varintBytes((field << 3) | 2L) ++ varintBytes(body.length.toLong) ++ body
+      val floatList = lenDelim(1, floats.toByteArray)
+      val wFeature = lenDelim(2, floatList)
 
-      val n = 1 + (id % 3).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      (0 until n).foreach { k =>
-        // Int64List{value: [v1, v2]} packed
-        val ints = varintBytes((id + k) % 10) ++ varintBytes(300 + (id + k) % 200)
-        val int64List = lenDelim(1, ints)
-        val labelFeature = lenDelim(3, int64List)
-        // BytesList{value: [text]}
-        val l = 5 + ((id + k) % 20).toInt
-        val text = Array.tabulate(l)(j => (97 + ((id + k + j) % 26)).toByte)
-        val bytesList = lenDelim(1, text)
-        val textFeature = lenDelim(1, bytesList)
-        // FloatList{value: [...]} packed
-        val m = 2 + ((id + k) % 3).toInt
-        val floats = new java.io.ByteArrayOutputStream()
-        (0 until m).foreach { j =>
-          val bits = java.lang.Float.floatToIntBits(((id + k) % 7).toFloat + 0.5f * j)
-          floats.write(bits & 0xff); floats.write((bits >> 8) & 0xff)
-          floats.write((bits >> 16) & 0xff); floats.write((bits >> 24) & 0xff)
-        }
-        val floatList = lenDelim(1, floats.toByteArray)
-        val wFeature = lenDelim(2, floatList)
-
-        // map entry = Features.feature[k] = {1: key string, 2: Feature}
-        def entry(key: String, feature: Array[Byte]): Array[Byte] = {
-          val body = lenDelim(1, key.getBytes("US-ASCII")) ++ lenDelim(2, feature)
-          lenDelim(1, body)
-        }
-        val features = entry("label", labelFeature) ++
-          entry("text", textFeature) ++ entry("w", wFeature)
-        val example = lenDelim(1, features)
-
-        // TFRecord frame with real masked CRCs
-        val hdr = new Array[Byte](8)
-        var q = 0
-        while (q < 8) { hdr(q) = ((example.length.toLong >> (8 * q)) & 0xff).toByte; q += 1 }
-        out.write(hdr)
-        val lc = Multimodal.maskedCrc(hdr, 0, 8)
-        out.write(lc & 0xff); out.write((lc >>> 8) & 0xff)
-        out.write((lc >>> 16) & 0xff); out.write((lc >>> 24) & 0xff)
-        out.write(example)
-        val pc = Multimodal.maskedCrc(example, 0, example.length)
-        out.write(pc & 0xff); out.write((pc >>> 8) & 0xff)
-        out.write((pc >>> 16) & 0xff); out.write((pc >>> 24) & 0xff)
+      // map entry = Features.feature[k] = {1: key string, 2: Feature}
+      def entry(key: String, feature: Array[Byte]): Array[Byte] = {
+        val body = lenDelim(1, key.getBytes("US-ASCII")) ++ lenDelim(2, feature)
+        lenDelim(1, body)
       }
-      MediaRow(id, "application/x-tfexample", out.toByteArray)
-    }.toDF()
+      val features = entry("label", labelFeature) ++
+        entry("text", textFeature) ++ entry("w", wFeature)
+      val example = lenDelim(1, features)
+
+      // TFRecord frame with real masked CRCs
+      val hdr = new Array[Byte](8)
+      var q = 0
+      while (q < 8) { hdr(q) = ((example.length.toLong >> (8 * q)) & 0xff).toByte; q += 1 }
+      out.write(hdr)
+      val lc = Multimodal.maskedCrc(hdr, 0, 8)
+      out.write(lc & 0xff); out.write((lc >>> 8) & 0xff)
+      out.write((lc >>> 16) & 0xff); out.write((lc >>> 24) & 0xff)
+      out.write(example)
+      val pc = Multimodal.maskedCrc(example, 0, example.length)
+      out.write(pc & 0xff); out.write((pc >>> 8) & 0xff)
+      out.write((pc >>> 16) & 0xff); out.write((pc >>> 24) & 0xff)
+    }
+    MediaRow(id, "application/x-tfexample", out.toByteArray)
   }
 }

@@ -1,22 +1,29 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media as opaque binary payloads with
   * typed metadata, decode/feature-extract as partition-wise typed
   * pipelines, frame sampling as in-plan binary slicing.
   *
-  * Two decode tiers: [[decodePpm]] is a REAL byte-level decoder for the
-  * P6 PPM format (header parse incl. comments + exact channel sums) —
-  * the honest end-to-end proof of the decode seam; [[decodeStub]] stands
-  * in for codecs this container can't ship (JPEG/PNG/audio), deriving
-  * deterministic pseudo-features from the bytes so the Spark-side
-  * contract — schema, Encoders, partition batching, feature shape — is
-  * real and oracle-testable, and swapping in a JNI/library decoder
-  * changes one function. At 100 TB the payloads
-  * stay columnar binary (parquet/ORC binary columns read lazily), decode
-  * runs data-local per partition, and nothing round-trips the driver.
+  * Every codec plugs into ONE decode seam: a decoder is a pure
+  * `Iterator[MediaRow] => Iterator[T]` (per-partition state such as
+  * [[decodeStub]]'s digest lives inside it), a fixture is a pure
+  * `Long => MediaRow` whose stats are analytic formulas of the id, and
+  * [[decode]] / [[fixtures]] are the only places either meets a
+  * DataFrame — so a decoder is unit-testable without Spark, and
+  * swapping in a JNI/library decoder changes one function.
+  * [[decodePpm]] is a REAL byte-level decoder (header parse incl.
+  * comments + exact channel sums); [[decodeStub]] stands in for codecs
+  * this container can't ship, deriving deterministic pseudo-features
+  * from the bytes. The container formats (TAR, ZIP, WARC) each have
+  * one validating walk; their stats and member/payload decoders are
+  * projections of it. At 100 TB the payloads stay columnar binary
+  * (parquet/ORC binary columns read lazily), decode runs data-local
+  * per partition, and nothing round-trips the driver.
   */
 object Multimodal {
 
@@ -25,6 +32,25 @@ object Multimodal {
     * adapters/s3/src/index.ts:156-178).
     */
   final case class MediaRow(media_id: Long, mime: String, payload: Array[Byte])
+
+  /** The decode seam: DataFrame of [[MediaRow]]s → typed partition-wise
+    * decode → DataFrame. One narrow stage, no shuffle.
+    */
+  def decode[T <: Product : TypeTag](media: DataFrame)(
+      decoder: Iterator[MediaRow] => Iterator[T]): DataFrame = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.as[MediaRow].mapPartitions(decoder).toDF()
+  }
+
+  /** One fixture row per id in `docs.idCol` — the DataFrame side of the
+    * pure `Long => MediaRow` fixture generators.
+    */
+  def fixtures(docs: DataFrame, idCol: String)(f: Long => MediaRow): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col(idCol).cast("long").as("id")).as[Long].map(f).toDF()
+  }
 
   /** Extracted features. `embedding` stands in for a model output. */
   final case class MediaFeatures(media_id: Long, mime: String, n_bytes: Long,
@@ -54,15 +80,6 @@ object Multimodal {
       val emb = (0 until 8).map(i => ((digest(i) & 0xff) / 255.0)).toArray
       MediaFeatures(r.media_id, r.mime, r.payload.length.toLong, hex, emb)
     }
-  }
-
-  /** The decode pipeline: DataFrame → typed partition-wise decode →
-    * DataFrame. One narrow stage, no shuffle.
-    */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeStub).toDF()
   }
 
   /** Parsed image: dimensions + exact per-channel byte sums (integer —
@@ -95,15 +112,6 @@ object Multimodal {
     ImageStats(r.media_id, w, h, mv, n, rs, gs, bs)
   }
 
-  /** Image-stats pipeline over PPM payloads — same narrow no-shuffle
-    * mapPartitions shape as [[extractFeatures]], real decode.
-    */
-  def extractImageStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodePpm).toDF()
-  }
-
   /** Deterministic P6 fixture per id: w = 1 + id%8, h = 1 + id%5,
     * maxval 255, raster byte j = (id·31 + j) mod 256 — an analytic
     * formula a SQL oracle reproduces without any binary parsing, so the
@@ -111,16 +119,12 @@ object Multimodal {
     * (A `# synthetic` comment line exercises the header's comment path
     * on every row.)
     */
-  def syntheticPpm(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val w = 1 + (id % 8).toInt
-      val h = 1 + (id % 5).toInt
-      val header = s"P6\n# synthetic\n$w $h\n255\n".getBytes("US-ASCII")
-      val px = Array.tabulate(w * h * 3)(j => ((id * 31 + j) % 256).toByte)
-      MediaRow(id, "image/x-portable-pixmap", header ++ px)
-    }.toDF()
+  def syntheticPpm(id: Long): MediaRow = {
+    val w = 1 + (id % 8).toInt
+    val h = 1 + (id % 5).toInt
+    val header = s"P6\n# synthetic\n$w $h\n255\n".getBytes("US-ASCII")
+    val px = Array.tabulate(w * h * 3)(j => ((id * 31 + j) % 256).toByte)
+    MediaRow(id, "image/x-portable-pixmap", header ++ px)
   }
 
   /** Parsed audio: format fields + exact per-channel sample sums
@@ -193,40 +197,27 @@ object Multimodal {
     * sits between `fmt ` and `data` to exercise the skip path on every
     * row.
     */
-  def syntheticWav(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val nCh = 1 + (id % 2).toInt
-      val rate = 8000 + (id % 4).toInt * 1000
-      val frames = 4 + (id % 16).toInt
-      val nSamp = frames * nCh
-      val dataSz = nSamp * 2
-      val bb = java.nio.ByteBuffer.allocate(12 + 24 + 14 + 8 + dataSz)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(4 + 24 + 14 + 8 + dataSz)
-        .put("WAVE".getBytes("US-ASCII"))
-      bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-        .putShort(1).putShort(nCh.toShort).putInt(rate)
-        .putInt(rate * nCh * 2).putShort((nCh * 2).toShort).putShort(16)
-      bb.put("LIST".getBytes("US-ASCII")).putInt(6)
-        .put("junk!".getBytes("US-ASCII")).put(0.toByte) // even size: no pad byte
-      bb.put("data".getBytes("US-ASCII")).putInt(dataSz)
-      var j = 0
-      while (j < nSamp) {
-        bb.putShort((((id * 37 + j * 13) % 4001) - 2000).toShort); j += 1
-      }
-      MediaRow(id, "audio/wav", bb.array())
-    }.toDF()
-  }
-
-  /** Audio-stats pipeline over WAV payloads — the same narrow
-    * no-shuffle mapPartitions shape as [[extractImageStats]].
-    */
-  def extractWavStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeWav).toDF()
+  def syntheticWav(id: Long): MediaRow = {
+    val nCh = 1 + (id % 2).toInt
+    val rate = 8000 + (id % 4).toInt * 1000
+    val frames = 4 + (id % 16).toInt
+    val nSamp = frames * nCh
+    val dataSz = nSamp * 2
+    val bb = java.nio.ByteBuffer.allocate(12 + 24 + 14 + 8 + dataSz)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(4 + 24 + 14 + 8 + dataSz)
+      .put("WAVE".getBytes("US-ASCII"))
+    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1).putShort(nCh.toShort).putInt(rate)
+      .putInt(rate * nCh * 2).putShort((nCh * 2).toShort).putShort(16)
+    bb.put("LIST".getBytes("US-ASCII")).putInt(6)
+      .put("junk!".getBytes("US-ASCII")).put(0.toByte) // even size: no pad byte
+    bb.put("data".getBytes("US-ASCII")).putInt(dataSz)
+    var j = 0
+    while (j < nSamp) {
+      bb.putShort((((id * 37 + j * 13) % 4001) - 2000).toShort); j += 1
+    }
+    MediaRow(id, "audio/wav", bb.array())
   }
 
   /** Parsed BMP: dimensions + exact per-channel sums + the TOP image
@@ -285,15 +276,6 @@ object Multimodal {
       fr += 1
     }
     BmpStats(r.media_id, w, h, rs, gs, bs, row0)
-  }
-
-  /** BMP-stats pipeline — same narrow no-shuffle mapPartitions shape
-    * as [[extractImageStats]].
-    */
-  def extractBmpStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeBmp).toDF()
   }
 
   /** Parsed QOI: dimensions + exact channel sums + the position-
@@ -379,15 +361,6 @@ object Multimodal {
     QoiStats(r.media_id, w, h, rs, gs, bs, ws)
   }
 
-  /** QOI-stats pipeline — same narrow no-shuffle mapPartitions shape
-    * as [[extractImageStats]].
-    */
-  def extractQoiStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeQoi).toDF()
-  }
-
   /** Deterministic QOI fixture per id, written by a REAL greedy QOI
     * encoder (run → index → diff → luma → rgb op choice, maintaining
     * the 64-entry color index per spec — so the fixture stream mixes
@@ -400,60 +373,56 @@ object Multimodal {
     * small AND large deltas, so DIFF/LUMA/RGB all appear. The oracle
     * recomputes all stats from the formula WITHOUT parsing a byte.
     */
-  def syntheticQoi(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val w = 1 + (id % 6).toInt
-      val h = 1 + (id % 5).toInt
-      val n = w * h
-      val out = new java.io.ByteArrayOutputStream()
-      def be32(v: Int): Unit = {
-        out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-        out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-      }
-      out.write('q'); out.write('o'); out.write('i'); out.write('f')
-      be32(w); be32(h); out.write(3); out.write(0)
-      val index = Array.fill(64)(0)
-      var (pr, pg, pb) = (0, 0, 0); val pa = 255
-      var run = 0
-      def flushRun(): Unit = if (run > 0) { out.write(0xc0 | (run - 1)); run = 0 }
-      var p = 0
-      while (p < n) {
-        val q = p - (if (p % 7 == 6) 1 else 0)
-        val cr = ((id * 17 + 7L * q * q) % 256).toInt
-        val cg = ((id * 23 + 3L * q) % 256).toInt
-        val cb = ((id * 31 + (5L * q * q + q) % 97) % 256).toInt
-        if (cr == pr && cg == pg && cb == pb) {
-          run += 1
-          if (run == 62) flushRun()
+  def syntheticQoi(id: Long): MediaRow = {
+    val w = 1 + (id % 6).toInt
+    val h = 1 + (id % 5).toInt
+    val n = w * h
+    val out = new java.io.ByteArrayOutputStream()
+    def be32(v: Int): Unit = {
+      out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
+      out.write((v >>> 8) & 0xff); out.write(v & 0xff)
+    }
+    out.write('q'); out.write('o'); out.write('i'); out.write('f')
+    be32(w); be32(h); out.write(3); out.write(0)
+    val index = Array.fill(64)(0)
+    var (pr, pg, pb) = (0, 0, 0); val pa = 255
+    var run = 0
+    def flushRun(): Unit = if (run > 0) { out.write(0xc0 | (run - 1)); run = 0 }
+    var p = 0
+    while (p < n) {
+      val q = p - (if (p % 7 == 6) 1 else 0)
+      val cr = ((id * 17 + 7L * q * q) % 256).toInt
+      val cg = ((id * 23 + 3L * q) % 256).toInt
+      val cb = ((id * 31 + (5L * q * q + q) % 97) % 256).toInt
+      if (cr == pr && cg == pg && cb == pb) {
+        run += 1
+        if (run == 62) flushRun()
+      } else {
+        flushRun()
+        val slot = (3 * cr + 5 * cg + 7 * cb + 11 * pa) % 64
+        val packed = (pa << 24) | (cr << 16) | (cg << 8) | cb
+        val dr = ((cr - pr + 128) & 0xff) - 128
+        val dg = ((cg - pg + 128) & 0xff) - 128
+        val db = ((cb - pb + 128) & 0xff) - 128
+        if (index(slot) == packed) out.write(slot)
+        else if (dr >= -2 && dr <= 1 && dg >= -2 && dg <= 1 && db >= -2 && db <= 1)
+          out.write(0x40 | ((dr + 2) << 4) | ((dg + 2) << 2) | (db + 2))
+        else if (dg >= -32 && dg <= 31 && (dr - dg) >= -8 && (dr - dg) <= 7
+            && (db - dg) >= -8 && (db - dg) <= 7) {
+          out.write(0x80 | (dg + 32))
+          out.write(((dr - dg + 8) << 4) | (db - dg + 8))
         } else {
-          flushRun()
-          val slot = (3 * cr + 5 * cg + 7 * cb + 11 * pa) % 64
-          val packed = (pa << 24) | (cr << 16) | (cg << 8) | cb
-          val dr = ((cr - pr + 128) & 0xff) - 128
-          val dg = ((cg - pg + 128) & 0xff) - 128
-          val db = ((cb - pb + 128) & 0xff) - 128
-          if (index(slot) == packed) out.write(slot)
-          else if (dr >= -2 && dr <= 1 && dg >= -2 && dg <= 1 && db >= -2 && db <= 1)
-            out.write(0x40 | ((dr + 2) << 4) | ((dg + 2) << 2) | (db + 2))
-          else if (dg >= -32 && dg <= 31 && (dr - dg) >= -8 && (dr - dg) <= 7
-              && (db - dg) >= -8 && (db - dg) <= 7) {
-            out.write(0x80 | (dg + 32))
-            out.write(((dr - dg + 8) << 4) | (db - dg + 8))
-          } else {
-            out.write(0xfe); out.write(cr); out.write(cg); out.write(cb)
-          }
-          pr = cr; pg = cg; pb = cb
+          out.write(0xfe); out.write(cr); out.write(cg); out.write(cb)
         }
-        index((3 * pr + 5 * pg + 7 * pb + 11 * pa) % 64) =
-          (pa << 24) | (pr << 16) | (pg << 8) | pb
-        p += 1
+        pr = cr; pg = cg; pb = cb
       }
-      flushRun()
-      (0 until 7).foreach(_ => out.write(0)); out.write(1)
-      MediaRow(id, "image/qoi", out.toByteArray)
-    }.toDF()
+      index((3 * pr + 5 * pg + 7 * pb + 11 * pa) % 64) =
+        (pa << 24) | (pr << 16) | (pg << 8) | pb
+      p += 1
+    }
+    flushRun()
+    (0 until 7).foreach(_ => out.write(0)); out.write(1)
+    MediaRow(id, "image/qoi", out.toByteArray)
   }
 
   /** CRC32C (Castagnoli, reflected poly 0x82f63b78) — the checksum the
@@ -530,15 +499,6 @@ object Multimodal {
     TfRecordStats(r.media_id, nRec, totLen, pSum, wSum)
   }
 
-  /** TFRecord-stats pipeline — same narrow no-shuffle mapPartitions
-    * shape as [[extractImageStats]].
-    */
-  def extractTfRecordStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeTfRecord).toDF()
-  }
-
   /** Deterministic TFRecord fixture per id: n = 1 + id%4 records,
     * record r carries length L = 5 + (id + r)%11 and payload byte j =
     * (id·13 + r·7 + j) mod 256 — analytic, so the oracle recomputes
@@ -546,31 +506,27 @@ object Multimodal {
     * and are written with the real masked-CRC32C, so the decoder's
     * verification path runs on every record.
     */
-  def syntheticTfRecord(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val n = 1 + (id % 4).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      var r = 0
-      while (r < n) {
-        val len = 5 + ((id + r) % 11).toInt
-        val payload = Array.tabulate(len)(j => ((id * 13 + r * 7 + j) % 256).toByte)
-        val hdr = new Array[Byte](8)
-        var k = 0
-        while (k < 8) { hdr(k) = ((len.toLong >> (8 * k)) & 0xff).toByte; k += 1 }
-        out.write(hdr)
-        val lc = maskedCrc(hdr, 0, 8)
-        out.write(lc & 0xff); out.write((lc >>> 8) & 0xff)
-        out.write((lc >>> 16) & 0xff); out.write((lc >>> 24) & 0xff)
-        out.write(payload)
-        val pc = maskedCrc(payload, 0, len)
-        out.write(pc & 0xff); out.write((pc >>> 8) & 0xff)
-        out.write((pc >>> 16) & 0xff); out.write((pc >>> 24) & 0xff)
-        r += 1
-      }
-      MediaRow(id, "application/x-tfrecord", out.toByteArray)
-    }.toDF()
+  def syntheticTfRecord(id: Long): MediaRow = {
+    val n = 1 + (id % 4).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    var r = 0
+    while (r < n) {
+      val len = 5 + ((id + r) % 11).toInt
+      val payload = Array.tabulate(len)(j => ((id * 13 + r * 7 + j) % 256).toByte)
+      val hdr = new Array[Byte](8)
+      var k = 0
+      while (k < 8) { hdr(k) = ((len.toLong >> (8 * k)) & 0xff).toByte; k += 1 }
+      out.write(hdr)
+      val lc = maskedCrc(hdr, 0, 8)
+      out.write(lc & 0xff); out.write((lc >>> 8) & 0xff)
+      out.write((lc >>> 16) & 0xff); out.write((lc >>> 24) & 0xff)
+      out.write(payload)
+      val pc = maskedCrc(payload, 0, len)
+      out.write(pc & 0xff); out.write((pc >>> 8) & 0xff)
+      out.write((pc >>> 16) & 0xff); out.write((pc >>> 24) & 0xff)
+      r += 1
+    }
+    MediaRow(id, "application/x-tfrecord", out.toByteArray)
   }
 
   /** Parsed P4 bitmap: dimensions, black-pixel census, top-row black
@@ -639,46 +595,33 @@ object Multimodal {
     (w, h, i)
   }
 
-  /** PBM-stats pipeline — same narrow no-shuffle mapPartitions shape
-    * as [[extractImageStats]].
-    */
-  def extractPbmStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodePbm).toDF()
-  }
-
   /** Deterministic P4 fixture per id: w = 1 + id%13 (rarely
     * byte-aligned, so every row ends in partial-byte padding), h = 1 +
     * id%4, pixel (x, y) black iff (id + 3x + 7y) mod 5 = 0. Padding
     * bits are written as 1s — don't-care per spec, poison for a sloppy
     * decoder. The oracle recomputes the census from the formula.
     */
-  def syntheticPbm(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val w = 1 + (id % 13).toInt
-      val h = 1 + (id % 4).toInt
-      val rowBytes = (w + 7) / 8
-      val header = s"P4\n# packed\n$w $h\n".getBytes("US-ASCII")
-      val raster = new Array[Byte](rowBytes * h)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < rowBytes * 8) {
-          val bit =
-            if (x >= w) 1 // poison padding
-            else if ((id + 3 * x + 7 * y) % 5 == 0) 1 else 0
-          if (bit == 1)
-            raster(y * rowBytes + (x >> 3)) =
-              (raster(y * rowBytes + (x >> 3)) | (1 << (7 - (x & 7)))).toByte
-          x += 1
-        }
-        y += 1
+  def syntheticPbm(id: Long): MediaRow = {
+    val w = 1 + (id % 13).toInt
+    val h = 1 + (id % 4).toInt
+    val rowBytes = (w + 7) / 8
+    val header = s"P4\n# packed\n$w $h\n".getBytes("US-ASCII")
+    val raster = new Array[Byte](rowBytes * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < rowBytes * 8) {
+        val bit =
+          if (x >= w) 1 // poison padding
+          else if ((id + 3 * x + 7 * y) % 5 == 0) 1 else 0
+        if (bit == 1)
+          raster(y * rowBytes + (x >> 3)) =
+            (raster(y * rowBytes + (x >> 3)) | (1 << (7 - (x & 7)))).toByte
+        x += 1
       }
-      MediaRow(id, "image/x-portable-bitmap", header ++ raster)
-    }.toDF()
+      y += 1
+    }
+    MediaRow(id, "image/x-portable-bitmap", header ++ raster)
   }
 
   /** Parsed Standard MIDI File: track/note counts, total delta-time
@@ -758,22 +701,6 @@ object Multimodal {
     MidiStats(r.media_id, ntrks.toLong, nNotes, ticks, keySum, velSum)
   }
 
-  /** MIDI-stats pipeline — same narrow no-shuffle mapPartitions shape
-    * as [[extractImageStats]].
-    */
-  def extractMidiStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeMidi).toDF()
-  }
-
-  /** Deterministic MIDI fixture per id: 1 + id%3 tracks, track t holds
-    * 3 + (id+t)%6 notes; note i fires after delta (id·3 + t·5 + i·7)
-    * mod 300 (values ≥ 128 force multi-byte VLQs on most rows) at key
-    * (id + 2t + 11i) mod 128, velocity 1 + (id+i) mod 127, released
-    * after (i·13 + t) mod 200 more ticks. Analytic — the oracle sums
-    * ticks/keys/velocities straight from these formulas.
-    */
   /** Fixture bitrate menu (kbps) indexed by 1 + (id+f) % 13 → element
     * b−1 — the GENERATION formula, shared between [[syntheticMp3]] and
     * the DuckDB oracle ([[sqlMp3Kbps]]). The DECODER never sees this:
@@ -858,99 +785,92 @@ object Multimodal {
     Mp3Stats(r.media_id, nFrames, id3Size, b.length.toLong, kbpsSum, durUs)
   }
 
-  def extractMp3Stats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeMp3).toDF()
-  }
-
   /** ID3v2.3 tag (syncsafe size, sync-free padding body) + 3..8 real
     * MPEG-1 Layer III frames with deterministic bitrate/samplerate/
     * padding drawn from the id — every frame length derives from the
     * header exactly as the standard prescribes, so the walker's table
     * lookups are exercised on every row. */
-  def syntheticMp3(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val nf = 3 + (id % 6).toInt
-      val tagBody = 10 + (id % 50).toInt
-      val srTab = Array(44100, 48000, 32000)
-      val frames = (0 until nf).map { f =>
-        val kbps = Mp3FixtureKbps((((id + f) % 13)).toInt)
-        val sr = srTab(((id + f) % 3).toInt)
-        val pad = ((id + f) % 2).toInt
-        val bIdx = ((id + f) % 13).toInt + 1
-        val sIdx = ((id + f) % 3).toInt
-        (bIdx, sIdx, pad, 144 * kbps * 1000 / sr + pad)
-      }
-      val total = 10 + tagBody + frames.map(_._4).sum
-      val b = new Array[Byte](total)
-      b(0) = 'I'; b(1) = 'D'; b(2) = '3'; b(3) = 3; b(4) = 0; b(5) = 0
-      b(6) = ((tagBody >> 21) & 0x7f).toByte
-      b(7) = ((tagBody >> 14) & 0x7f).toByte
-      b(8) = ((tagBody >> 7) & 0x7f).toByte
-      b(9) = (tagBody & 0x7f).toByte
-      var j = 0
-      while (j < tagBody) { b(10 + j) = ((id + j) % 128).toByte; j += 1 }
-      var off = 10 + tagBody
-      var f = 0
-      while (f < nf) {
-        val (bIdx, sIdx, pad, flen) = frames(f)
-        b(off) = 0xff.toByte
-        b(off + 1) = 0xfb.toByte // MPEG-1, Layer III, no CRC
-        b(off + 2) = ((bIdx << 4) | (sIdx << 2) | (pad << 1)).toByte
-        b(off + 3) = ((((id + f) % 4) << 6)).toByte
-        var k = 4
-        while (k < flen) { b(off + k) = ((id + f + k) % 255).toByte; k += 1 }
-        off += flen
-        f += 1
-      }
-      MediaRow(id, "audio/mpeg", b)
-    }.toDF()
+  def syntheticMp3(id: Long): MediaRow = {
+    val nf = 3 + (id % 6).toInt
+    val tagBody = 10 + (id % 50).toInt
+    val srTab = Array(44100, 48000, 32000)
+    val frames = (0 until nf).map { f =>
+      val kbps = Mp3FixtureKbps((((id + f) % 13)).toInt)
+      val sr = srTab(((id + f) % 3).toInt)
+      val pad = ((id + f) % 2).toInt
+      val bIdx = ((id + f) % 13).toInt + 1
+      val sIdx = ((id + f) % 3).toInt
+      (bIdx, sIdx, pad, 144 * kbps * 1000 / sr + pad)
+    }
+    val total = 10 + tagBody + frames.map(_._4).sum
+    val b = new Array[Byte](total)
+    b(0) = 'I'; b(1) = 'D'; b(2) = '3'; b(3) = 3; b(4) = 0; b(5) = 0
+    b(6) = ((tagBody >> 21) & 0x7f).toByte
+    b(7) = ((tagBody >> 14) & 0x7f).toByte
+    b(8) = ((tagBody >> 7) & 0x7f).toByte
+    b(9) = (tagBody & 0x7f).toByte
+    var j = 0
+    while (j < tagBody) { b(10 + j) = ((id + j) % 128).toByte; j += 1 }
+    var off = 10 + tagBody
+    var f = 0
+    while (f < nf) {
+      val (bIdx, sIdx, pad, flen) = frames(f)
+      b(off) = 0xff.toByte
+      b(off + 1) = 0xfb.toByte // MPEG-1, Layer III, no CRC
+      b(off + 2) = ((bIdx << 4) | (sIdx << 2) | (pad << 1)).toByte
+      b(off + 3) = ((((id + f) % 4) << 6)).toByte
+      var k = 4
+      while (k < flen) { b(off + k) = ((id + f + k) % 255).toByte; k += 1 }
+      off += flen
+      f += 1
+    }
+    MediaRow(id, "audio/mpeg", b)
   }
 
-  def syntheticMidi(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val ntrks = 1 + (id % 3).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      out.write("MThd".getBytes("US-ASCII"))
-      Seq(0, 0, 0, 6, 0, 1, 0, ntrks, 1, 0xe0).foreach(out.write) // div 480
-      var t = 0
-      while (t < ntrks) {
-        val track = new java.io.ByteArrayOutputStream()
-        val saved = out
-        val nNotes = 3 + ((id + t) % 6).toInt
-        // write track body into a side buffer to learn its length
-        val bodyOut = track
-        def vlqB(x: Long): Unit = {
-          var shift = 49
-          while (shift > 0 && ((x >> shift) & 0x7f) == 0) shift -= 7
-          while (shift > 0) { bodyOut.write((((x >> shift) & 0x7f) | 0x80).toInt); shift -= 7 }
-          bodyOut.write((x & 0x7f).toInt)
-        }
-        var i2 = 0
-        while (i2 < nNotes) {
-          vlqB((id * 3 + t * 5 + i2 * 7) % 300)
-          bodyOut.write(0x90); bodyOut.write(((id + 2 * t + 11 * i2) % 128).toInt)
-          bodyOut.write((1 + (id + i2) % 127).toInt)
-          vlqB((i2 * 13 + t) % 200)
-          bodyOut.write(0x80); bodyOut.write(((id + 2 * t + 11 * i2) % 128).toInt)
-          bodyOut.write(64)
-          i2 += 1
-        }
-        vlqB(0L); bodyOut.write(0xff); bodyOut.write(0x2f); bodyOut.write(0x00)
-        val body = track.toByteArray
-        saved.write("MTrk".getBytes("US-ASCII"))
-        saved.write((body.length >>> 24) & 0xff); saved.write((body.length >>> 16) & 0xff)
-        saved.write((body.length >>> 8) & 0xff); saved.write(body.length & 0xff)
-        saved.write(body)
-        t += 1
+  /** Deterministic MIDI fixture per id: 1 + id%3 tracks, track t holds
+    * 3 + (id+t)%6 notes; note i fires after delta (id·3 + t·5 + i·7)
+    * mod 300 (values ≥ 128 force multi-byte VLQs on most rows) at key
+    * (id + 2t + 11i) mod 128, velocity 1 + (id+i) mod 127, released
+    * after (i·13 + t) mod 200 more ticks. Analytic — the oracle sums
+    * ticks/keys/velocities straight from these formulas.
+    */
+  def syntheticMidi(id: Long): MediaRow = {
+    val ntrks = 1 + (id % 3).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    out.write("MThd".getBytes("US-ASCII"))
+    Seq(0, 0, 0, 6, 0, 1, 0, ntrks, 1, 0xe0).foreach(out.write) // div 480
+    var t = 0
+    while (t < ntrks) {
+      val track = new java.io.ByteArrayOutputStream()
+      val saved = out
+      val nNotes = 3 + ((id + t) % 6).toInt
+      // write track body into a side buffer to learn its length
+      val bodyOut = track
+      def vlqB(x: Long): Unit = {
+        var shift = 49
+        while (shift > 0 && ((x >> shift) & 0x7f) == 0) shift -= 7
+        while (shift > 0) { bodyOut.write((((x >> shift) & 0x7f) | 0x80).toInt); shift -= 7 }
+        bodyOut.write((x & 0x7f).toInt)
       }
-      MediaRow(id, "audio/midi", out.toByteArray)
-    }.toDF()
+      var i2 = 0
+      while (i2 < nNotes) {
+        vlqB((id * 3 + t * 5 + i2 * 7) % 300)
+        bodyOut.write(0x90); bodyOut.write(((id + 2 * t + 11 * i2) % 128).toInt)
+        bodyOut.write((1 + (id + i2) % 127).toInt)
+        vlqB((i2 * 13 + t) % 200)
+        bodyOut.write(0x80); bodyOut.write(((id + 2 * t + 11 * i2) % 128).toInt)
+        bodyOut.write(64)
+        i2 += 1
+      }
+      vlqB(0L); bodyOut.write(0xff); bodyOut.write(0x2f); bodyOut.write(0x00)
+      val body = track.toByteArray
+      saved.write("MTrk".getBytes("US-ASCII"))
+      saved.write((body.length >>> 24) & 0xff); saved.write((body.length >>> 16) & 0xff)
+      saved.write((body.length >>> 8) & 0xff); saved.write(body.length & 0xff)
+      saved.write(body)
+      t += 1
+    }
+    MediaRow(id, "audio/midi", out.toByteArray)
   }
 
   /** Parsed OBJ mesh: vertex/face/edge counts, the Euler
@@ -1007,15 +927,6 @@ object Multimodal {
       nv - edges.size + nf, sx, sy, sz)
   }
 
-  /** OBJ-stats pipeline — same narrow no-shuffle mapPartitions shape
-    * as [[extractImageStats]].
-    */
-  def extractObjStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeObj).toDF()
-  }
-
   /** Deterministic OBJ fixture per id: a TRIANGLE FAN over n = 4 +
     * id%6 vertices — vertex i (0-based) at integer coordinates
     * x = (id·7 + 3i) mod 997, y = (id·11 + 5i) mod 983, z = (id·13 +
@@ -1023,26 +934,22 @@ object Multimodal {
     * Euler = 1 — the oracle computes every output WITHOUT parsing a
     * line. A comment line and one `vn` record exercise the skip paths.
     */
-  def syntheticObj(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val n = 4 + (id % 6).toInt
-      val sb = new StringBuilder
-      sb.append(s"# synthetic fan mesh $id\n")
-      var i = 0
-      while (i < n) {
-        sb.append(s"v ${(id * 7 + 3 * i) % 997} ${(id * 11 + 5 * i) % 983} ${(id * 13 + 7 * i) % 971}\n")
-        i += 1
-      }
-      sb.append("vn 0 0 1\n") // skipped record class
-      var k = 2
-      while (k < n) {
-        sb.append(s"f 1 $k ${k + 1}\n")
-        k += 1
-      }
-      MediaRow(id, "model/obj", sb.toString.getBytes("US-ASCII"))
-    }.toDF()
+  def syntheticObj(id: Long): MediaRow = {
+    val n = 4 + (id % 6).toInt
+    val sb = new StringBuilder
+    sb.append(s"# synthetic fan mesh $id\n")
+    var i = 0
+    while (i < n) {
+      sb.append(s"v ${(id * 7 + 3 * i) % 997} ${(id * 11 + 5 * i) % 983} ${(id * 13 + 7 * i) % 971}\n")
+      i += 1
+    }
+    sb.append("vn 0 0 1\n") // skipped record class
+    var k = 2
+    while (k < n) {
+      sb.append(s"f 1 $k ${k + 1}\n")
+      k += 1
+    }
+    MediaRow(id, "model/obj", sb.toString.getBytes("US-ASCII"))
   }
 
   /** Parsed µ-law stream: sample count, exact decoded-sample sum, and
@@ -1099,38 +1006,25 @@ object Multimodal {
     UlawStats(r.media_id, n.toLong, ds, ws)
   }
 
-  /** µ-law-stats pipeline — same narrow no-shuffle mapPartitions shape
-    * as [[extractImageStats]].
-    */
-  def extractUlawStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeUlaw).toDF()
-  }
-
   /** Deterministic µ-law fixture per id: n = 6 + id%12 samples, sample
     * j = ((id·37 + j·13) mod 16001) − 8000, companded by the REAL
     * encoder above — the oracle reproduces expand(compress(s)) from
     * the analytic formula with pure CASE/integer arithmetic (the
     * companding curve is closed-form), never parsing a byte.
     */
-  def syntheticUlaw(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val n = 6 + (id % 12).toInt
-      val out = new Array[Byte](8 + n)
-      out(0) = 'U'; out(1) = 'L'; out(2) = 'A'; out(3) = 'W'
-      out(4) = (n & 0xff).toByte; out(5) = ((n >> 8) & 0xff).toByte
-      out(6) = ((n >> 16) & 0xff).toByte; out(7) = ((n >> 24) & 0xff).toByte
-      var j = 0
-      while (j < n) {
-        val s = (((id * 37 + j * 13) % 16001) - 8000).toInt
-        out(8 + j) = ulawEncode(s).toByte
-        j += 1
-      }
-      MediaRow(id, "audio/basic", out)
-    }.toDF()
+  def syntheticUlaw(id: Long): MediaRow = {
+    val n = 6 + (id % 12).toInt
+    val out = new Array[Byte](8 + n)
+    out(0) = 'U'; out(1) = 'L'; out(2) = 'A'; out(3) = 'W'
+    out(4) = (n & 0xff).toByte; out(5) = ((n >> 8) & 0xff).toByte
+    out(6) = ((n >> 16) & 0xff).toByte; out(7) = ((n >> 24) & 0xff).toByte
+    var j = 0
+    while (j < n) {
+      val s = (((id * 37 + j * 13) % 16001) - 8000).toInt
+      out(8 + j) = ulawEncode(s).toByte
+      j += 1
+    }
+    MediaRow(id, "audio/basic", out)
   }
 
   /** Deterministic 24-bit BMP fixture per id: w = 1 + id%7 (strides
@@ -1142,38 +1036,34 @@ object Multimodal {
     * the row-order and the stride-skip paths are exercised on every
     * row.
     */
-  def syntheticBmp(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val w = 1 + (id % 7).toInt
-      val h = 1 + (id % 4).toInt
-      val rowSize = (3 * w + 3) & ~3
-      val fileSize = 54 + rowSize * h
-      val bb = java.nio.ByteBuffer.allocate(fileSize)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put('B'.toByte).put('M'.toByte).putInt(fileSize)
-        .putShort(0).putShort(0).putInt(54)
-      bb.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-        .putInt(0).putInt(rowSize * h).putInt(2835).putInt(2835)
-        .putInt(0).putInt(0)
-      var fr = 0
-      while (fr < h) {
-        val y = h - 1 - fr
-        var x = 0
-        while (x < w) {
-          val p = y * w + x
-          bb.put(((id * 29 + 3 * p) % 256).toByte)
-            .put(((id * 29 + 3 * p + 1) % 256).toByte)
-            .put(((id * 29 + 3 * p + 2) % 256).toByte)
-          x += 1
-        }
-        var pad = 3 * w
-        while (pad < rowSize) { bb.put(0x55.toByte); pad += 1 }
-        fr += 1
+  def syntheticBmp(id: Long): MediaRow = {
+    val w = 1 + (id % 7).toInt
+    val h = 1 + (id % 4).toInt
+    val rowSize = (3 * w + 3) & ~3
+    val fileSize = 54 + rowSize * h
+    val bb = java.nio.ByteBuffer.allocate(fileSize)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put('B'.toByte).put('M'.toByte).putInt(fileSize)
+      .putShort(0).putShort(0).putInt(54)
+    bb.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
+      .putInt(0).putInt(rowSize * h).putInt(2835).putInt(2835)
+      .putInt(0).putInt(0)
+    var fr = 0
+    while (fr < h) {
+      val y = h - 1 - fr
+      var x = 0
+      while (x < w) {
+        val p = y * w + x
+        bb.put(((id * 29 + 3 * p) % 256).toByte)
+          .put(((id * 29 + 3 * p + 1) % 256).toByte)
+          .put(((id * 29 + 3 * p + 2) % 256).toByte)
+        x += 1
       }
-      MediaRow(id, "image/bmp", bb.array())
-    }.toDF()
+      var pad = 3 * w
+      while (pad < rowSize) { bb.put(0x55.toByte); pad += 1 }
+      fr += 1
+    }
+    MediaRow(id, "image/bmp", bb.array())
   }
 
   /** Audio perceptual fingerprint: 60-bit sign-of-energy-delta hash
@@ -1257,13 +1147,6 @@ object Multimodal {
     WavAfp(r.media_id, nSamp, afpHash(energies))
   }
 
-  /** Fingerprint pipeline — same narrow mapPartitions seam. */
-  def extractWavAfp(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeWavAfp).toDF()
-  }
-
   /** FNV-1a over a byte slice, masked non-negative — the content-digest
     * BLOCK KEY for the perceptual pair tiers. Any 64-bit digest works:
     * the band never appears in an output, only equality matters, and
@@ -1297,13 +1180,6 @@ object Multimodal {
     var s = 0
     while (s < 11) { eb.putLong(energies(s)); s += 1 }
     WavAfpB(r.media_id, nSamp, afpHash(energies), fnv1a(eb.array(), 0, 11 * 8))
-  }
-
-  /** Banded fingerprint pipeline — feeds [[afpPairs]]. */
-  def extractWavAfpBanded(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeWavAfpBanded).toDF()
   }
 
   /** Deterministic mono-WAV fixture WITH PLANTED NEAR-DUPS (the audio
@@ -1343,23 +1219,6 @@ object Multimodal {
       rows
     }.toDF()
   }
-
-  /** Audio near-dup candidate pairs — identical contract to
-    * [[phashPairs]]: block on (n_samples, prefix-energy content band —
-    * [[extractWavAfpBanded]]) composed into the 15-bit-chunk pigeonhole
-    * join, exact Hamming ≤ `maxHamming` verify. The band is mirrored
-    * DEFINITIONALLY in the oracle as equality of the eleven prefix
-    * segment energies (digest equality ⟺ energy-vector equality at
-    * 2⁻⁶⁴ odds). r16: the old fixed afp%1024 band space went quadratic
-    * once the corpus outgrew its ≈262k blocks; the content band's
-    * cardinality tracks the corpus, keeping candidates linear.
-    */
-  def afpPairs(afps: DataFrame, maxHamming: Int = 3): DataFrame =
-    Dedup.simhashPairs(
-      afps.select(col("media_id").as("doc_id"), col("n_samples"),
-        col("band"), col("afp").as("simhash")),
-      maxHamming, blockCols = Seq("n_samples", "band"))
-      .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"), col("hamming"))
 
   /** Parsed JPEG header facts (metadata-only decode — dimensions come
     * from the SOF segment without touching entropy-coded data, the way
@@ -1414,42 +1273,29 @@ object Multimodal {
     * 2 + id%2. Analytic, so the oracle recomputes every output WITHOUT
     * parsing a byte.
     */
-  def syntheticJpeg(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val h = 16 + (id % 240).toInt
-      val w = 32 + (id % 200).toInt
-      val nc = if (id % 2 == 0) 3 else 1
-      val sof = if (id % 3 == 0) 0xc2 else 0xc0
-      val m = 1 + (id % 9).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      def u8(v: Int): Unit = out.write(v & 0xff)
-      def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-      u8(0xff); u8(0xd8)                        // SOI
-      u8(0xff); u8(0xe0); u16(16)               // APP0 JFIF
-      out.write("JFIF".getBytes("US-ASCII")); u8(0)
-      u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
-      u8(0xff); u8(0xfe); u16(2 + m)            // COM, variable length
-      (0 until m).foreach(j => u8('a' + ((id + j) % 26).toInt))
-      if (id % 2 == 1) {                        // second COM for odd ids
-        u8(0xff); u8(0xfe); u16(3); u8('z')
-      }
-      u8(0xff); u8(sof); u16(8 + 3 * nc)        // SOF0/SOF2
-      u8(8); u16(h); u16(w); u8(nc)
-      (0 until nc).foreach { c => u8(c + 1); u8(0x11); u8(0) }
-      u8(0xff); u8(0xd9)                        // EOI
-      MediaRow(id, "image/jpeg", out.toByteArray)
-    }.toDF()
-  }
-
-  /** JPEG-dimension pipeline — same narrow no-shuffle mapPartitions
-    * shape as [[extractImageStats]] / [[extractWavStats]].
-    */
-  def extractJpegDims(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeJpegHeader).toDF()
+  def syntheticJpeg(id: Long): MediaRow = {
+    val h = 16 + (id % 240).toInt
+    val w = 32 + (id % 200).toInt
+    val nc = if (id % 2 == 0) 3 else 1
+    val sof = if (id % 3 == 0) 0xc2 else 0xc0
+    val m = 1 + (id % 9).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    def u8(v: Int): Unit = out.write(v & 0xff)
+    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
+    u8(0xff); u8(0xd8)                        // SOI
+    u8(0xff); u8(0xe0); u16(16)               // APP0 JFIF
+    out.write("JFIF".getBytes("US-ASCII")); u8(0)
+    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
+    u8(0xff); u8(0xfe); u16(2 + m)            // COM, variable length
+    (0 until m).foreach(j => u8('a' + ((id + j) % 26).toInt))
+    if (id % 2 == 1) {                        // second COM for odd ids
+      u8(0xff); u8(0xfe); u16(3); u8('z')
+    }
+    u8(0xff); u8(sof); u16(8 + 3 * nc)        // SOF0/SOF2
+    u8(8); u16(h); u16(w); u8(nc)
+    (0 until nc).foreach { c => u8(c + 1); u8(0x11); u8(0) }
+    u8(0xff); u8(0xd9)                        // EOI
+    MediaRow(id, "image/jpeg", out.toByteArray)
   }
 
   /** Perceptual fingerprint of a decoded raster: 60-bit difference hash
@@ -1498,8 +1344,12 @@ object Multimodal {
     * contract and narrow mapPartitions seam as [[decodePpm]].
     */
   def decodePpmPhash(rows: Iterator[MediaRow]): Iterator[PpmPhash] = rows.map { r =>
-    val b = r.payload
-    val (w, h, _, off) = parsePpmHeader(b, r.media_id)
+    val (w, h, _, off) = parsePpmHeader(r.payload, r.media_id)
+    PpmPhash(r.media_id, w, h, dHash(r.payload, w, h, off))
+  }
+
+  /** The 60-bit dHash of the P6 raster at `off` (see [[PpmPhash]]). */
+  private def dHash(b: Array[Byte], w: Int, h: Int, off: Int): Long = {
     def gray(x: Int, y: Int): Int = {
       val j = off + 3 * (y * w + x)
       (b(j) & 0xff) + (b(j + 1) & 0xff) + (b(j + 2) & 0xff)
@@ -1516,16 +1366,7 @@ object Multimodal {
       }
       rr += 1
     }
-    PpmPhash(r.media_id, w, h, hash)
-  }
-
-  /** Perceptual-hash pipeline — the same narrow no-shuffle
-    * mapPartitions shape as [[extractImageStats]].
-    */
-  def extractPpmPhash(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodePpmPhash).toDF()
+    hash
   }
 
   final case class PpmPhashB(media_id: Long, width: Int, height: Int,
@@ -1547,30 +1388,7 @@ object Multimodal {
   def decodePpmPhashBanded(rows: Iterator[MediaRow]): Iterator[PpmPhashB] = rows.map { r =>
     val b = r.payload
     val (w, h, _, off) = parsePpmHeader(b, r.media_id)
-    def gray(x: Int, y: Int): Int = {
-      val j = off + 3 * (y * w + x)
-      (b(j) & 0xff) + (b(j + 1) & 0xff) + (b(j + 2) & 0xff)
-    }
-    var hash = 0L
-    var rr = 0
-    while (rr < 6) {
-      val y = rr * h / 6
-      var c = 0
-      while (c < 10) {
-        if (gray((c + 1) * w / 11, y) > gray(c * w / 11, y))
-          hash |= 1L << (rr * 10 + c)
-        c += 1
-      }
-      rr += 1
-    }
-    PpmPhashB(r.media_id, w, h, hash, fnv1a(b, off, off + 3 * w))
-  }
-
-  /** Banded perceptual-hash pipeline — feeds [[phashPairs]]. */
-  def extractPpmPhashBanded(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodePpmPhashBanded).toDF()
+    PpmPhashB(r.media_id, w, h, dHash(b, w, h, off), fnv1a(b, off, off + 3 * w))
   }
 
   /** Deterministic P6 fixture WITH PLANTED NEAR-DUPS for the perceptual
@@ -1614,25 +1432,30 @@ object Multimodal {
     }.toDF()
   }
 
-  /** Image NEAR-DUP candidate pairs over perceptual hashes: block on
-    * (width, height, row-0 CONTENT band — [[extractPpmPhashBanded]])
-    * composed into [[Dedup.simhashPairs]]' 15-bit chunk pigeonhole
-    * join, verify exact Hamming ≤ `maxHamming`. The band key is the
-    * documented web-scale pre-partition (SCALE.md / simhashPairs
-    * blockCols): same-looking images agree on dimensions and the top
-    * sampled row, and candidates only form within a block — the
-    * Σ(N_block²)/2^15 bound instead of N²/2^15, with block cardinality
-    * growing WITH the corpus (r16: the old low-10-hash-bit band's
-    * fixed 2¹⁰ space went quadratic at the second decade). Semantics
-    * shrink accordingly (a pair differing anywhere in row 0 is by
-    * definition not a candidate), mirrored definitionally in the
-    * oracle (row-0 equality = the fixture's (width, id low-20) pair).
+  /** Media NEAR-DUP candidate pairs over 60-bit perceptual hashes
+    * (`hashCol`): block on `blockCols` composed into
+    * [[Dedup.simhashPairs]]' 15-bit chunk pigeonhole join, verify exact
+    * Hamming ≤ `maxHamming`. The block key is the documented web-scale
+    * pre-partition (SCALE.md / simhashPairs blockCols): candidates only
+    * form within a block — the Σ(N_block²)/2^15 bound instead of
+    * N²/2^15, with block cardinality growing WITH the corpus (r16: the
+    * old fixed band spaces — the low 10 phash bits, afp%1024 — went
+    * quadratic once the corpus outgrew them). Semantics shrink
+    * accordingly, mirrored definitionally in the oracles:
+    *  - images, `phash` from [[decodePpmPhashBanded]] blocked on
+    *    (width, height, band): same-looking images agree on dimensions
+    *    and the top sampled row (row-0 equality = the fixture's (width,
+    *    id low-20) pair);
+    *  - audio, `afp` from [[decodeWavAfpBanded]] blocked on (n_samples,
+    *    band): band equality ⟺ equality of the eleven prefix segment
+    *    energies (at 2⁻⁶⁴ odds).
     */
-  def phashPairs(phashes: DataFrame, maxHamming: Int = 3): DataFrame =
+  def nearDupPairs(hashes: DataFrame, hashCol: String, blockCols: Seq[String],
+                   maxHamming: Int = 3): DataFrame =
     Dedup.simhashPairs(
-      phashes.select(col("media_id").as("doc_id"), col("width"), col("height"),
-        col("band"), col("phash").as("simhash")),
-      maxHamming, blockCols = Seq("width", "height", "band"))
+      hashes.select((col("media_id").as("doc_id") +: blockCols.map(col)) :+
+        col(hashCol).as("simhash"): _*),
+      maxHamming, blockCols)
       .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"), col("hamming"))
 
   /** Parsed GIF container facts (metadata-only frame census — frame
@@ -1709,13 +1532,6 @@ object Multimodal {
     GifStats(r.media_id, w, h, frames, delay, exts)
   }
 
-  /** GIF pipeline — same narrow mapPartitions seam. */
-  def extractGifStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeGif).toDF()
-  }
-
   /** Deterministic GIF89a fixture per id: w = 10 + id%50, h = 5 +
     * id%30, frames = 1 + id%5 each preceded by a GCE with delay
     * 2 + (id+f)%10 cs; a global color table (2^(1 + id%3) entries) when
@@ -1725,45 +1541,41 @@ object Multimodal {
     * parser must skip without decoding. Analytic, so the oracle
     * recomputes every output WITHOUT parsing a byte.
     */
-  def syntheticGif(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val w = 10 + (id % 50).toInt
-      val h = 5 + (id % 30).toInt
-      val frames = 1 + (id % 5).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      def u8(v: Int): Unit = out.write(v & 0xff)
-      def u16(v: Int): Unit = { u8(v); u8(v >> 8) } // little-endian
-      out.write("GIF89a".getBytes("US-ASCII"))
-      u16(w); u16(h)
-      val gctBits = (id % 3).toInt // GCT size field when present
-      u8(if (id % 2 == 0) 0x80 | gctBits else 0x00)
-      u8(0); u8(0) // bg color, aspect
-      if (id % 2 == 0) (0 until 3 * (1 << (gctBits + 1)))
-        .foreach(j => u8(((id + j) % 256).toInt))
-      if (id % 3 == 0) { // comment extension, two sub-blocks
-        u8(0x21); u8(0xfe)
-        u8(3); u8('h'); u8('i'); u8('!')
-        u8(1); u8('.')
-        u8(0)
-      }
-      (0 until frames).foreach { f =>
-        u8(0x21); u8(0xf9); u8(4) // GCE
-        u8(0); u16(2 + ((id + f) % 10).toInt); u8(0); u8(0)
-        u8(0x2c) // image descriptor
-        u16(0); u16(0); u16(w); u16(h)
-        val lct = id % 5 == 0
-        u8(if (lct) 0x80 else 0x00) // LCT size field 0 -> 2 entries
-        if (lct) (0 until 6).foreach(j => u8(((id * 7 + j) % 256).toInt))
-        u8(2) // LZW min code size
-        val dlen = 1 + ((id + f) % 7).toInt
-        u8(dlen); (0 until dlen).foreach(j => u8(((id + f + j) % 256).toInt))
-        u8(0) // sub-block terminator
-      }
-      u8(0x3b)
-      MediaRow(id, "image/gif", out.toByteArray)
-    }.toDF()
+  def syntheticGif(id: Long): MediaRow = {
+    val w = 10 + (id % 50).toInt
+    val h = 5 + (id % 30).toInt
+    val frames = 1 + (id % 5).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    def u8(v: Int): Unit = out.write(v & 0xff)
+    def u16(v: Int): Unit = { u8(v); u8(v >> 8) } // little-endian
+    out.write("GIF89a".getBytes("US-ASCII"))
+    u16(w); u16(h)
+    val gctBits = (id % 3).toInt // GCT size field when present
+    u8(if (id % 2 == 0) 0x80 | gctBits else 0x00)
+    u8(0); u8(0) // bg color, aspect
+    if (id % 2 == 0) (0 until 3 * (1 << (gctBits + 1)))
+      .foreach(j => u8(((id + j) % 256).toInt))
+    if (id % 3 == 0) { // comment extension, two sub-blocks
+      u8(0x21); u8(0xfe)
+      u8(3); u8('h'); u8('i'); u8('!')
+      u8(1); u8('.')
+      u8(0)
+    }
+    (0 until frames).foreach { f =>
+      u8(0x21); u8(0xf9); u8(4) // GCE
+      u8(0); u16(2 + ((id + f) % 10).toInt); u8(0); u8(0)
+      u8(0x2c) // image descriptor
+      u16(0); u16(0); u16(w); u16(h)
+      val lct = id % 5 == 0
+      u8(if (lct) 0x80 else 0x00) // LCT size field 0 -> 2 entries
+      if (lct) (0 until 6).foreach(j => u8(((id * 7 + j) % 256).toInt))
+      u8(2) // LZW min code size
+      val dlen = 1 + ((id + f) % 7).toInt
+      u8(dlen); (0 until dlen).foreach(j => u8(((id + f + j) % 256).toInt))
+      u8(0) // sub-block terminator
+    }
+    u8(0x3b)
+    MediaRow(id, "image/gif", out.toByteArray)
   }
 
   /** PNG full-decode stats: dimensions + raster aggregates + the
@@ -1877,13 +1689,6 @@ object Multimodal {
       fCount(0), fCount(1), fCount(2), fCount(3), fCount(4))
   }
 
-  /** PNG pipeline — same narrow mapPartitions seam. */
-  def extractPngStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodePng).toDF()
-  }
-
   /** Deterministic PNG fixture per id: 8-bit grayscale, w = 8 + id%9,
     * h = 6 + id%7, pixel k (row-major) = (id·31 + k) mod 256, scanline
     * y filtered with type y mod 5 — every filter path runs on every
@@ -1895,63 +1700,59 @@ object Multimodal {
     * census WITHOUT touching a byte — compressed bytes never need to be
     * bit-stable across JVMs because only decoded stats leave the engine.
     */
-  def syntheticPng(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val w = 8 + (id % 9).toInt
-      val h = 6 + (id % 7).toInt
-      def raw(x: Int, y: Int): Int = ((id * 31 + y * w + x) % 256).toInt
-      def paeth(a: Int, up: Int, c: Int): Int = {
-        val p = a + up - c
-        val (pa, pb, pc) = (math.abs(p - a), math.abs(p - up), math.abs(p - c))
-        if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
-      }
-      val filt = new Array[Byte](h * (w + 1))
-      (0 until h).foreach { y =>
-        val f = y % 5
-        filt(y * (w + 1)) = f.toByte
-        (0 until w).foreach { x =>
-          val left = if (x > 0) raw(x - 1, y) else 0
-          val up = if (y > 0) raw(x, y - 1) else 0
-          val ul = if (x > 0 && y > 0) raw(x - 1, y - 1) else 0
-          val pred = f match {
-            case 0 => 0
-            case 1 => left
-            case 2 => up
-            case 3 => (left + up) / 2
-            case 4 => paeth(left, up, ul)
-          }
-          filt(y * (w + 1) + 1 + x) = ((raw(x, y) - pred) & 0xff).toByte
+  def syntheticPng(id: Long): MediaRow = {
+    val w = 8 + (id % 9).toInt
+    val h = 6 + (id % 7).toInt
+    def raw(x: Int, y: Int): Int = ((id * 31 + y * w + x) % 256).toInt
+    def paeth(a: Int, up: Int, c: Int): Int = {
+      val p = a + up - c
+      val (pa, pb, pc) = (math.abs(p - a), math.abs(p - up), math.abs(p - c))
+      if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
+    }
+    val filt = new Array[Byte](h * (w + 1))
+    (0 until h).foreach { y =>
+      val f = y % 5
+      filt(y * (w + 1)) = f.toByte
+      (0 until w).foreach { x =>
+        val left = if (x > 0) raw(x - 1, y) else 0
+        val up = if (y > 0) raw(x, y - 1) else 0
+        val ul = if (x > 0 && y > 0) raw(x - 1, y - 1) else 0
+        val pred = f match {
+          case 0 => 0
+          case 1 => left
+          case 2 => up
+          case 3 => (left + up) / 2
+          case 4 => paeth(left, up, ul)
         }
+        filt(y * (w + 1) + 1 + x) = ((raw(x, y) - pred) & 0xff).toByte
       }
-      val defl = new java.util.zip.Deflater()
-      defl.setInput(filt); defl.finish()
-      val zbuf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](256)
-      while (!defl.finished()) zbuf.write(tmp, 0, defl.deflate(tmp))
-      defl.end()
-      val z = zbuf.toByteArray
-      val out = new java.io.ByteArrayOutputStream()
-      def u32(v: Long): Unit = (3 to 0 by -1)
-        .foreach(s => out.write(((v >> (8 * s)) & 0xff).toInt))
-      def chunk(typ: String, data: Array[Byte]): Unit = {
-        val tb = typ.getBytes("US-ASCII")
-        u32(data.length.toLong)
-        val crc = new java.util.zip.CRC32()
-        crc.update(tb); crc.update(data)
-        out.write(tb); out.write(data); u32(crc.getValue)
-      }
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).foreach(out.write)
-      val ihdr = new java.io.ByteArrayOutputStream()
-      (3 to 0 by -1).foreach(s => ihdr.write((w >> (8 * s)) & 0xff))
-      (3 to 0 by -1).foreach(s => ihdr.write((h >> (8 * s)) & 0xff))
-      ihdr.write(8); ihdr.write(0); ihdr.write(0); ihdr.write(0); ihdr.write(0)
-      chunk("IHDR", ihdr.toByteArray)
-      z.grouped(64).foreach(part => chunk("IDAT", part))
-      chunk("IEND", Array.emptyByteArray)
-      MediaRow(id, "image/png", out.toByteArray)
-    }.toDF()
+    }
+    val defl = new java.util.zip.Deflater()
+    defl.setInput(filt); defl.finish()
+    val zbuf = new java.io.ByteArrayOutputStream()
+    val tmp = new Array[Byte](256)
+    while (!defl.finished()) zbuf.write(tmp, 0, defl.deflate(tmp))
+    defl.end()
+    val z = zbuf.toByteArray
+    val out = new java.io.ByteArrayOutputStream()
+    def u32(v: Long): Unit = (3 to 0 by -1)
+      .foreach(s => out.write(((v >> (8 * s)) & 0xff).toInt))
+    def chunk(typ: String, data: Array[Byte]): Unit = {
+      val tb = typ.getBytes("US-ASCII")
+      u32(data.length.toLong)
+      val crc = new java.util.zip.CRC32()
+      crc.update(tb); crc.update(data)
+      out.write(tb); out.write(data); u32(crc.getValue)
+    }
+    Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).foreach(out.write)
+    val ihdr = new java.io.ByteArrayOutputStream()
+    (3 to 0 by -1).foreach(s => ihdr.write((w >> (8 * s)) & 0xff))
+    (3 to 0 by -1).foreach(s => ihdr.write((h >> (8 * s)) & 0xff))
+    ihdr.write(8); ihdr.write(0); ihdr.write(0); ihdr.write(0); ihdr.write(0)
+    chunk("IHDR", ihdr.toByteArray)
+    z.grouped(64).foreach(part => chunk("IDAT", part))
+    chunk("IEND", Array.emptyByteArray)
+    MediaRow(id, "image/png", out.toByteArray)
   }
 
   /** Tar-archive member census: the WebDataset-shard audit. */
@@ -1970,6 +1771,27 @@ object Multimodal {
     * fail loudly like the other six decoders.
     */
   def decodeTar(rows: Iterator[MediaRow]): Iterator[TarStats] = rows.map { r =>
+    val entries = tarEntries(r)
+    val files = entries.filter(_.typeflag != '5')
+    var contentSum = 0L
+    files.foreach { e =>
+      (e.body until e.body + e.size.toInt).foreach(j => contentSum += r.payload(j) & 0xff)
+    }
+    val sizes = files.map(_.size)
+    TarStats(r.media_id, files.size, entries.size - files.size, sizes.sum,
+      (0L +: sizes).max, contentSum, r.payload.length.toLong)
+  }
+
+  /** One verified USTAR header: name, octal size, typeflag and the
+    * offset of the member's first body byte.
+    */
+  private final case class TarEntry(name: String, size: Long, typeflag: Char, body: Int)
+
+  /** The one validated tar walk behind [[decodeTar]] and
+    * [[decodeTarMembers]]: every header in archive order, with magic,
+    * checksum, member bounds and the two-zero-block trailer checked.
+    */
+  private def tarEntries(r: MediaRow): Seq[TarEntry] = {
     val b = r.payload
     require(b.length % 512 == 0, s"tar not 512-aligned: media ${r.media_id}")
     def octal(off: Int, len: Int): Long = {
@@ -1977,9 +1799,8 @@ object Multimodal {
         .takeWhile(c => c != 0 && c != ' ')
       if (s.isEmpty) 0L else java.lang.Long.parseLong(s, 8)
     }
+    val out = Vector.newBuilder[TarEntry]
     var i = 0
-    var (nFiles, nDirs) = (0, 0)
-    var (totalBytes, maxBytes, contentSum) = (0L, 0L, 0L)
     var done = false
     while (!done) {
       require(i + 512 <= b.length, s"ran past archive: media ${r.media_id}")
@@ -1999,81 +1820,33 @@ object Multimodal {
         require(stored == actual,
           s"header checksum $actual != $stored: media ${r.media_id}")
         val size = octal(i + 124, 12)
-        val typeflag = b(i + 156).toChar
-        val blocks = ((size + 511) / 512).toInt
-        require(i + 512 + blocks * 512 <= b.length,
-          s"member overruns archive: media ${r.media_id}")
-        if (typeflag == '5') nDirs += 1
-        else {
-          nFiles += 1
-          totalBytes += size
-          maxBytes = math.max(maxBytes, size)
-          (0 until size.toInt).foreach(j => contentSum += b(i + 512 + j) & 0xff)
-        }
-        i += 512 + blocks * 512
+        // a signed size moves the cursor back, or in [-1534, -1023] not at all
+        require(size >= 0, s"negative member size $size: media ${r.media_id}")
+        val end = i + 512 + (size + 511) / 512 * 512
+        require(end <= b.length, s"member overruns archive: media ${r.media_id}")
+        out += TarEntry(new String(b, i, 100, "US-ASCII").takeWhile(_ != 0), size,
+          b(i + 156).toChar, i + 512)
+        i = end.toInt
       }
     }
-    TarStats(r.media_id, nFiles, nDirs, totalBytes, maxBytes, contentSum,
-      b.length.toLong)
-  }
-
-  /** Tar pipeline — same narrow mapPartitions seam. */
-  def extractTarStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeTar).toDF()
+    out.result()
   }
 
   /** One tar member (file entries only). */
   final case class TarMember(media_id: Long, name: String, size: Long)
 
-  /** The member RELATION variant of [[decodeTar]]: same verified walk
-    * (magic, checksum, padding, trailer — enforced by delegating the
-    * full-archive validation to decodeTar first), emitting one row per
-    * file member so WebDataset SAMPLE ASSEMBLY — grouping `dir/key.ext`
-    * members into training samples — runs as a plain Spark groupBy
-    * downstream, not inside the decoder.
+  /** The member RELATION variant of [[decodeTar]]: the same verified
+    * walk, emitting one row per file member so WebDataset SAMPLE
+    * ASSEMBLY — grouping `dir/key.ext` members into training samples —
+    * runs as a plain Spark groupBy downstream, not inside the decoder.
     */
   def decodeTarMembers(rows: Iterator[MediaRow]): Iterator[TarMember] =
     rows.flatMap { r =>
-      decodeTar(Iterator(r)).foreach(_ => ()) // full validation pass
-      val b = r.payload
-      def octal(off: Int, len: Int): Long = {
-        val s = new String(b, off, len, "US-ASCII")
-          .takeWhile(c => c != 0 && c != ' ')
-        if (s.isEmpty) 0L else java.lang.Long.parseLong(s, 8)
+      tarEntries(r).collect {
+        case e if e.typeflag != '5' => TarMember(r.media_id, e.name, e.size)
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[TarMember]
-      var i = 0
-      var done = false
-      while (!done) {
-        if (b(i) == 0) done = true
-        else {
-          val size = octal(i + 124, 12)
-          if (b(i + 156).toChar != '5') {
-            val name = new String(b, i, 100, "US-ASCII").takeWhile(_ != 0)
-            out += TarMember(r.media_id, name, size)
-          }
-          i += 512 + ((size + 511) / 512).toInt * 512
-        }
-      }
-      out.iterator
     }
 
-  /** Tar member-relation pipeline. */
-  def extractTarMembers(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeTarMembers).toDF()
-  }
-
-  /** Deterministic USTAR fixture per id (a WebDataset-style shard): one
-    * directory entry "<id>/" then m = 2 + id%5 members
-    * "<id>/sample<i>.txt" of size 10 + (id + 13i)%300 with byte j =
-    * (id + i + j)%256. Headers carry true checksums; the archive ends
-    * with the required two zero blocks, so archive_bytes =
-    * 512·(1 + Σ(1 + ⌈size_i/512⌉)) + 1024 — analytic, like every stat.
-    */
   /** Build one checksummed 512-byte USTAR header block. */
   private def ustarHeader(name: String, size: Long, typeflag: Char): Array[Byte] = {
     val h = new Array[Byte](512)
@@ -2090,23 +1863,26 @@ object Multimodal {
     h
   }
 
-  def syntheticTar(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 2 + (id % 5).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(ustarHeader(s"$id/", 0L, '5'))
-      (0 until m).foreach { i =>
-        val size = 10 + ((id + 13 * i) % 300).toInt
-        out.write(ustarHeader(s"$id/sample$i.txt", size.toLong, '0'))
-        val data = new Array[Byte]((size + 511) / 512 * 512)
-        (0 until size).foreach(j => data(j) = ((id + i + j) % 256).toByte)
-        out.write(data)
-      }
-      out.write(new Array[Byte](1024))
-      MediaRow(id, "application/x-tar", out.toByteArray)
-    }.toDF()
+  /** Deterministic USTAR fixture per id (a WebDataset-style shard): one
+    * directory entry "<id>/" then m = 2 + id%5 members
+    * "<id>/sample<i>.txt" of size 10 + (id + 13i)%300 with byte j =
+    * (id + i + j)%256. Headers carry true checksums; the archive ends
+    * with the required two zero blocks, so archive_bytes =
+    * 512·(1 + Σ(1 + ⌈size_i/512⌉)) + 1024 — analytic, like every stat.
+    */
+  def syntheticTar(id: Long): MediaRow = {
+    val m = 2 + (id % 5).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(ustarHeader(s"$id/", 0L, '5'))
+    (0 until m).foreach { i =>
+      val size = 10 + ((id + 13 * i) % 300).toInt
+      out.write(ustarHeader(s"$id/sample$i.txt", size.toLong, '0'))
+      val data = new Array[Byte]((size + 511) / 512 * 512)
+      (0 until size).foreach(j => data(j) = ((id + i + j) % 256).toByte)
+      out.write(data)
+    }
+    out.write(new Array[Byte](1024))
+    MediaRow(id, "application/x-tar", out.toByteArray)
   }
 
   /** WebDataset-style fixture: m = 2 + id%5 samples, each a
@@ -2115,26 +1891,22 @@ object Multimodal {
     * assembly audit exists to catch). txt size = 10 + (id + 13i)%300,
     * cls size = 1 + (id + i)%9.
     */
-  def syntheticWds(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 2 + (id % 5).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(ustarHeader(s"$id/", 0L, '5'))
-      def member(name: String, size: Int): Unit = {
-        out.write(ustarHeader(name, size.toLong, '0'))
-        val data = new Array[Byte]((size + 511) / 512 * 512)
-        (0 until size).foreach(j => data(j) = ((id + j) % 256).toByte)
-        out.write(data)
-      }
-      (0 until m).foreach { i =>
-        member(s"$id/sample$i.txt", 10 + ((id + 13 * i) % 300).toInt)
-        if (i < m - 1) member(s"$id/sample$i.cls", 1 + ((id + i) % 9).toInt)
-      }
-      out.write(new Array[Byte](1024))
-      MediaRow(id, "application/x-tar", out.toByteArray)
-    }.toDF()
+  def syntheticWds(id: Long): MediaRow = {
+    val m = 2 + (id % 5).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(ustarHeader(s"$id/", 0L, '5'))
+    def member(name: String, size: Int): Unit = {
+      out.write(ustarHeader(name, size.toLong, '0'))
+      val data = new Array[Byte]((size + 511) / 512 * 512)
+      (0 until size).foreach(j => data(j) = ((id + j) % 256).toByte)
+      out.write(data)
+    }
+    (0 until m).foreach { i =>
+      member(s"$id/sample$i.txt", 10 + ((id + 13 * i) % 300).toInt)
+      if (i < m - 1) member(s"$id/sample$i.cls", 1 + ((id + i) % 9).toInt)
+    }
+    out.write(new Array[Byte](1024))
+    MediaRow(id, "application/x-tar", out.toByteArray)
   }
 
   /** SRT caption-track stats: cue census + duration/gap audit — the
@@ -2186,36 +1958,25 @@ object Multimodal {
       firstStart, lastEnd)
   }
 
-  /** SRT pipeline — same narrow mapPartitions seam. */
-  def extractSrtStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeSrt).toDF()
-  }
-
   /** Deterministic SRT fixture per id: n = 2 + id%6 cues; cue i starts
     * at i·3000 + id%700 ms and lasts 800 + (id + 37i)%1500 ms (max
     * 2299 < 3000 ⇒ never overlaps), text = "cue <id>-<i> word<(id+i)%20>".
     * Analytic, so the oracle recomputes every stat — including text
     * lengths via decimal-digit-count arithmetic — WITHOUT parsing.
     */
-  def syntheticSrt(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val n = 2 + (id % 6).toInt
-      def fmt(ms: Long): String = "%02d:%02d:%02d,%03d".format(
-        ms / 3600000, ms / 60000 % 60, ms / 1000 % 60, ms % 1000)
-      val sb = new StringBuilder
-      (0 until n).foreach { i =>
-        val st = i * 3000L + id % 700
-        val en = st + 800L + (id + 37L * i) % 1500
-        sb.append(i + 1).append('\n')
-          .append(fmt(st)).append(" --> ").append(fmt(en)).append('\n')
-          .append(s"cue $id-$i word${(id + i) % 20}").append("\n\n")
-      }
-      MediaRow(id, "application/x-subrip", sb.toString.getBytes("UTF-8"))
-    }.toDF()
+  def syntheticSrt(id: Long): MediaRow = {
+    val n = 2 + (id % 6).toInt
+    def fmt(ms: Long): String = "%02d:%02d:%02d,%03d".format(
+      ms / 3600000, ms / 60000 % 60, ms / 1000 % 60, ms % 1000)
+    val sb = new StringBuilder
+    (0 until n).foreach { i =>
+      val st = i * 3000L + id % 700
+      val en = st + 800L + (id + 37L * i) % 1500
+      sb.append(i + 1).append('\n')
+        .append(fmt(st)).append(" --> ").append(fmt(en)).append('\n')
+        .append(s"cue $id-$i word${(id + i) % 20}").append("\n\n")
+    }
+    MediaRow(id, "application/x-subrip", sb.toString.getBytes("UTF-8"))
   }
 
   /** STUB "resize": deterministic byte-level downsample — keep every
@@ -2376,13 +2137,6 @@ object Multimodal {
     }
   }
 
-  /** MP4 pipeline — same narrow mapPartitions seam as the other decoders. */
-  def extractMp4Tracks(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeMp4).toDF()
-  }
-
   /** Deterministic ISO-BMFF fixture per id, every stat analytic so the
     * oracle recomputes the whole track relation WITHOUT parsing a byte:
     * brand isom/mp42 by id parity; movie timescale 600·(1 + id%3),
@@ -2397,78 +2151,74 @@ object Multimodal {
     * size==0 runs-to-EOF escape when id%5 = 0 (so n_top_boxes =
     * 3 + [id%5=0]).
     */
-  def syntheticMp4(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      def be32(v: Long): Array[Byte] = Array(
-        ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-      def be64(v: Long): Array[Byte] = be32(v >>> 32) ++ be32(v & 0xffffffffL)
-      def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-      def box(typ: String, body: Array[Byte]*): Array[Byte] = {
-        val b = body.flatten.toArray
-        be32(b.length + 8L) ++ typ.getBytes("US-ASCII") ++ b
-      }
-      val nTracks = 1 + (id % 3).toInt
-      val mvTs = 600L * (1 + id % 3)
-      val mvDur = 500L + id % 100000
-      val mvhd =
-        if (id % 2 == 1) box("mvhd", Array(1.toByte, 0, 0, 0),
-          be64(0), be64(0), be32(mvTs), be64(mvDur), Array.fill[Byte](80)(0))
-        else box("mvhd", Array[Byte](0, 0, 0, 0),
-          be32(0), be32(0), be32(mvTs), be32(mvDur), Array.fill[Byte](80)(0))
-      val traks = (0 until nTracks).map { t =>
-        val vide = t % 2 == 0
-        val tkDur = 200L + (3 * id + 7 * t) % 40000
-        val mdTs = 1000L * (1 + (id + t) % 4)
-        val mdDur = 100L + (7 * id + 11 * t) % 500000
-        val c1 = 1 + ((id + t) % 26).toInt // 5-bit code of 'a'+…
-        val langPacked = (c1 << 10) | (('n' - 0x60) << 5) | ('d' - 0x60)
-        val tkhd =
-          if ((id + t) % 2 == 1) box("tkhd", Array(1.toByte, 0, 0, 7),
-            be64(0), be64(0), be32(t + 1L), be32(0), be64(tkDur),
-            Array.fill[Byte](60)(0))
-          else box("tkhd", Array[Byte](0, 0, 0, 7),
-            be32(0), be32(0), be32(t + 1L), be32(0), be32(tkDur),
-            Array.fill[Byte](60)(0))
-        val mdhd =
-          if ((id + t + 1) % 2 == 1) box("mdhd", Array(1.toByte, 0, 0, 0),
-            be64(0), be64(0), be32(mdTs), be64(mdDur), be16(langPacked), be16(0))
-          else box("mdhd", Array[Byte](0, 0, 0, 0),
-            be32(0), be32(0), be32(mdTs), be32(mdDur), be16(langPacked), be16(0))
-        val hdlr = box("hdlr", Array[Byte](0, 0, 0, 0), be32(0),
-          (if (vide) "vide" else "soun").getBytes("US-ASCII"),
-          be32(0), be32(0), be32(0), Array[Byte](0))
-        val entry = be32(16L) ++
-          (if (vide) "avc1" else "mp4a").getBytes("US-ASCII") ++
-          Array.fill[Byte](8)(0)
-        val stsd = box("stsd", Array[Byte](0, 0, 0, 0), be32(1), entry)
-        val mediaHdr = // vmhd/smhd leaf the walk must pass over inside minf
-          if (vide) box("vmhd", Array[Byte](0, 0, 0, 1), Array.fill[Byte](8)(0))
-          else box("smhd", Array[Byte](0, 0, 0, 0), be16(0), be16(0))
-        val minf = box("minf", mediaHdr, box("stbl", stsd))
-        box("trak", tkhd, box("mdia", mdhd, hdlr, minf))
-      }
-      val junkLen = 1 + (id % 7).toInt
-      val udta = box("udta",
-        (0 until junkLen).map(j => ((id + j) % 256).toByte).toArray)
-      val moov = box("moov", Seq(mvhd) ++ traks ++ Seq(udta): _*)
-      val ftyp = box("ftyp",
-        (if (id % 2 == 0) "isom" else "mp42").getBytes("US-ASCII"),
-        be32(0x200), "isom".getBytes("US-ASCII"), "avc1".getBytes("US-ASCII"))
-      val mdatBody = (0 until 3 + (id % 9).toInt).map(j => ((id * 5 + j) % 256).toByte).toArray
-      val mdat =
-        if (id % 4 == 0) // largesize escape: size==1, u64 follows fourcc
-          be32(1) ++ "mdat".getBytes("US-ASCII") ++ be64(mdatBody.length + 16L) ++ mdatBody
-        else box("mdat", mdatBody)
-      val free = // size==0 runs-to-EOF escape on the last top-level box
-        if (id % 5 == 0)
-          be32(0) ++ "free".getBytes("US-ASCII") ++
-            (0 until 2 + (id % 3).toInt).map(_ => 0.toByte).toArray
-        else Array.empty[Byte]
-      MediaRow(id, "video/mp4", ftyp ++ moov ++ mdat ++ free)
-    }.toDF()
+  def syntheticMp4(id: Long): MediaRow = {
+    def be32(v: Long): Array[Byte] = Array(
+      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
+      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    def be64(v: Long): Array[Byte] = be32(v >>> 32) ++ be32(v & 0xffffffffL)
+    def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    def box(typ: String, body: Array[Byte]*): Array[Byte] = {
+      val b = body.flatten.toArray
+      be32(b.length + 8L) ++ typ.getBytes("US-ASCII") ++ b
+    }
+    val nTracks = 1 + (id % 3).toInt
+    val mvTs = 600L * (1 + id % 3)
+    val mvDur = 500L + id % 100000
+    val mvhd =
+      if (id % 2 == 1) box("mvhd", Array(1.toByte, 0, 0, 0),
+        be64(0), be64(0), be32(mvTs), be64(mvDur), Array.fill[Byte](80)(0))
+      else box("mvhd", Array[Byte](0, 0, 0, 0),
+        be32(0), be32(0), be32(mvTs), be32(mvDur), Array.fill[Byte](80)(0))
+    val traks = (0 until nTracks).map { t =>
+      val vide = t % 2 == 0
+      val tkDur = 200L + (3 * id + 7 * t) % 40000
+      val mdTs = 1000L * (1 + (id + t) % 4)
+      val mdDur = 100L + (7 * id + 11 * t) % 500000
+      val c1 = 1 + ((id + t) % 26).toInt // 5-bit code of 'a'+…
+      val langPacked = (c1 << 10) | (('n' - 0x60) << 5) | ('d' - 0x60)
+      val tkhd =
+        if ((id + t) % 2 == 1) box("tkhd", Array(1.toByte, 0, 0, 7),
+          be64(0), be64(0), be32(t + 1L), be32(0), be64(tkDur),
+          Array.fill[Byte](60)(0))
+        else box("tkhd", Array[Byte](0, 0, 0, 7),
+          be32(0), be32(0), be32(t + 1L), be32(0), be32(tkDur),
+          Array.fill[Byte](60)(0))
+      val mdhd =
+        if ((id + t + 1) % 2 == 1) box("mdhd", Array(1.toByte, 0, 0, 0),
+          be64(0), be64(0), be32(mdTs), be64(mdDur), be16(langPacked), be16(0))
+        else box("mdhd", Array[Byte](0, 0, 0, 0),
+          be32(0), be32(0), be32(mdTs), be32(mdDur), be16(langPacked), be16(0))
+      val hdlr = box("hdlr", Array[Byte](0, 0, 0, 0), be32(0),
+        (if (vide) "vide" else "soun").getBytes("US-ASCII"),
+        be32(0), be32(0), be32(0), Array[Byte](0))
+      val entry = be32(16L) ++
+        (if (vide) "avc1" else "mp4a").getBytes("US-ASCII") ++
+        Array.fill[Byte](8)(0)
+      val stsd = box("stsd", Array[Byte](0, 0, 0, 0), be32(1), entry)
+      val mediaHdr = // vmhd/smhd leaf the walk must pass over inside minf
+        if (vide) box("vmhd", Array[Byte](0, 0, 0, 1), Array.fill[Byte](8)(0))
+        else box("smhd", Array[Byte](0, 0, 0, 0), be16(0), be16(0))
+      val minf = box("minf", mediaHdr, box("stbl", stsd))
+      box("trak", tkhd, box("mdia", mdhd, hdlr, minf))
+    }
+    val junkLen = 1 + (id % 7).toInt
+    val udta = box("udta",
+      (0 until junkLen).map(j => ((id + j) % 256).toByte).toArray)
+    val moov = box("moov", Seq(mvhd) ++ traks ++ Seq(udta): _*)
+    val ftyp = box("ftyp",
+      (if (id % 2 == 0) "isom" else "mp42").getBytes("US-ASCII"),
+      be32(0x200), "isom".getBytes("US-ASCII"), "avc1".getBytes("US-ASCII"))
+    val mdatBody = (0 until 3 + (id % 9).toInt).map(j => ((id * 5 + j) % 256).toByte).toArray
+    val mdat =
+      if (id % 4 == 0) // largesize escape: size==1, u64 follows fourcc
+        be32(1) ++ "mdat".getBytes("US-ASCII") ++ be64(mdatBody.length + 16L) ++ mdatBody
+      else box("mdat", mdatBody)
+    val free = // size==0 runs-to-EOF escape on the last top-level box
+      if (id % 5 == 0)
+        be32(0) ++ "free".getBytes("US-ASCII") ++
+          (0 until 2 + (id % 3).toInt).map(_ => 0.toByte).toArray
+      else Array.empty[Byte]
+    MediaRow(id, "video/mp4", ftyp ++ moov ++ mdat ++ free)
   }
 
   // ------------------------------------------------------------------ ZIP
@@ -2491,6 +2241,26 @@ object Multimodal {
     * size overrun, CRC mismatch, inflate underrun (`ZipSpec`).
     */
   def decodeZip(rows: Iterator[MediaRow]): Iterator[ZipStats] = rows.map { r =>
+    val entries = zipEntries(r)
+    val sizes = entries.map(_.usize)
+    ZipStats(r.media_id, entries.size, entries.count(_.method == 0),
+      entries.count(_.method == 8), sizes.sum, (0L +: sizes).max,
+      entries.map(_.content.foldLeft(0L)((acc, x) => acc + (x & 0xff))).sum)
+  }
+
+  /** One verified ZIP entry: name, declared uncompressed size, method
+    * and the decompressed, CRC-checked content.
+    */
+  private final case class ZipEntry(name: String, usize: Long, method: Int,
+                                    content: Array[Byte])
+
+  /** The one validated ZIP walk behind [[decodeZip]],
+    * [[decodeZipMembers]] and [[decodeZipPayloads]]: every central-
+    * directory entry in order, local header cross-checked, content
+    * decompressed and verified against the directory's CRC-32 and
+    * uncompressed size.
+    */
+  private def zipEntries(r: MediaRow): Seq[ZipEntry] = {
     val b = r.payload
     def u16(off: Int): Int =
       (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
@@ -2508,9 +2278,8 @@ object Multimodal {
     val cdOff = u32(e + 16)
     require(cdOff + cdSize <= e,
       s"central directory overruns EOCD: media ${r.media_id}")
+    val out = Vector.newBuilder[ZipEntry]
     var i = cdOff.toInt
-    var (nStored, nDeflate) = (0, 0)
-    var (totalBytes, maxBytes, contentSum) = (0L, 0L, 0L)
     var seen = 0
     while (seen < nEntries) {
       require(u32(i) == 0x02014b50L,
@@ -2538,34 +2307,29 @@ object Multimodal {
         case 0 =>
           require(csize == usize,
             s"stored entry $name with csize != usize: media ${r.media_id}")
-          nStored += 1
           java.util.Arrays.copyOfRange(b, dataOff, dataOff + usize.toInt)
         case 8 =>
-          nDeflate += 1
+          require(usize <= Int.MaxValue,
+            s"entry $name declares $usize uncompressed bytes: media ${r.media_id}")
+          // the buffer grows with what inflate PRODUCES, never with the
+          // declared (untrusted) usize, and the loop stops once output
+          // passes usize; inflate() is not contractually one-call-
+          // completes, and a stall is a corrupt entry (loud)
           val inf = new java.util.zip.Inflater(true) // raw deflate, no zlib wrap
-          inf.setInput(b, dataOff, csize.toInt)
-          val out = new Array[Byte](usize.toInt)
-          // inflate() is not contractually one-call-completes; loop until
-          // the stream finishes or stalls (stall = corrupt entry, loud)
-          var got = 0
-          while (!inf.finished() && got < out.length) {
-            val n0 = inf.inflate(out, got, out.length - got)
-            require(n0 > 0 || inf.finished(),
-              s"inflate stalled at $got of $usize bytes for $name: media ${r.media_id}")
-            got += n0
-          }
-          if (!inf.finished()) {
-            // zero-length deflated entries (directory rows some writers
-            // emit): finished() only flips on a drain call, which must
-            // yield no bytes beyond the declared usize
-            val scratch = new Array[Byte](1)
-            require(inf.inflate(scratch) == 0 && inf.finished(),
-              s"inflate produced more than $usize bytes for $name: media ${r.media_id}")
-          }
-          require(got == usize,
-            s"inflate produced $got of $usize bytes for $name: media ${r.media_id}")
-          inf.end()
-          out
+          val acc = new java.io.ByteArrayOutputStream()
+          try {
+            inf.setInput(b, dataOff, csize.toInt)
+            val buf = new Array[Byte](4096)
+            while (!inf.finished() && acc.size <= usize) {
+              val n0 = inf.inflate(buf)
+              require(n0 > 0 || inf.finished(),
+                s"inflate stalled at ${acc.size} of $usize bytes for $name: media ${r.media_id}")
+              acc.write(buf, 0, n0)
+            }
+          } finally inf.end()
+          require(acc.size == usize,
+            s"inflate produced ${acc.size} of $usize bytes for $name: media ${r.media_id}")
+          acc.toByteArray
         case m => throw new IllegalArgumentException(
           s"unsupported compression method $m for $name: media ${r.media_id}")
       }
@@ -2573,121 +2337,37 @@ object Multimodal {
       c32.update(content)
       require(c32.getValue == crc,
         s"CRC mismatch for $name: got ${c32.getValue} want $crc: media ${r.media_id}")
-      totalBytes += usize
-      maxBytes = math.max(maxBytes, usize)
-      content.foreach(x => contentSum += x & 0xff)
+      out += ZipEntry(name, usize, method, content)
       seen += 1
       i += 46 + nameLen + extraLen + commentLen
     }
     require(i == (cdOff + cdSize).toInt,
       s"central directory size mismatch: media ${r.media_id}")
-    ZipStats(r.media_id, nEntries, nStored, nDeflate, totalBytes, maxBytes,
-      contentSum)
-  }
-
-  /** ZIP pipeline — same narrow mapPartitions seam as the other 16. */
-  def extractZipStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeZip).toDF()
+    out.result()
   }
 
   /** One ZIP entry (name + uncompressed size). */
   final case class ZipMember(media_id: Long, name: String, size: Long)
 
   /** Member RELATION variant of [[decodeZip]] — the WebDataset-over-ZIP
-    * seam: the full validated walk runs first (signatures, CRCs,
-    * decompression — delegating to decodeZip), then the central
-    * directory is re-read to emit one row per entry so sample assembly
-    * is a plain Spark groupBy downstream, exactly like
+    * seam: the same validated walk, one row per entry, so sample
+    * assembly is a plain Spark groupBy downstream, exactly like
     * [[decodeTarMembers]]. */
   def decodeZipMembers(rows: Iterator[MediaRow]): Iterator[ZipMember] =
-    rows.flatMap { r =>
-      decodeZip(Iterator(r)).foreach(_ => ()) // full validation pass
-      val b = r.payload
-      def u16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-      def u32(off: Int): Long = u16(off).toLong | (u16(off + 2).toLong << 16)
-      var e = b.length - 22
-      while (!(b(e) == 'P' && b(e + 1) == 'K' && b(e + 2) == 5 && b(e + 3) == 6)) e -= 1
-      val n = u16(e + 10)
-      var i = u32(e + 16).toInt
-      (0 until n).map { _ =>
-        val usize = u32(i + 24)
-        val nameLen = u16(i + 28)
-        val m = ZipMember(r.media_id,
-          new String(b, i + 46, nameLen, "UTF-8"), usize)
-        i += 46 + nameLen + u16(i + 30) + u16(i + 32)
-        m
-      }
-    }
-
-  /** Member-relation pipeline. */
-  def extractZipMembers(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeZipMembers).toDF()
-  }
+    rows.flatMap(r => zipEntries(r).map(e => ZipMember(r.media_id, e.name, e.usize)))
 
   /** Payload RELATION variant of [[decodeZip]] — one MediaRow per
-    * archive entry with the DECOMPRESSED content (the member name rides
-    * in the mime field, the decodeWarcResponses convention): the full
-    * validated walk runs first (signatures, CRCs, inflate), then the
-    * central directory is re-read and each entry's content re-extracted
-    * so a downstream per-member decoder (NPY in NPZ, any file-in-zip
-    * format) composes as a plain mapPartitions chain.
+    * archive entry with the DECOMPRESSED content from the same
+    * validated walk (the member name rides in the mime field, the
+    * decodeWarcResponses convention), so a downstream per-member
+    * decoder (NPY in NPZ, any file-in-zip format) composes as a plain
+    * mapPartitions chain.
     */
   def decodeZipPayloads(rows: Iterator[MediaRow]): Iterator[MediaRow] =
-    rows.flatMap { r =>
-      decodeZip(Iterator(r)).foreach(_ => ()) // full validation pass
-      val b = r.payload
-      def u16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-      def u32(off: Int): Long = u16(off).toLong | (u16(off + 2).toLong << 16)
-      var e = b.length - 22
-      while (e >= 0 && !(b(e) == 'P' && b(e + 1) == 'K' && b(e + 2) == 5 && b(e + 3) == 6))
-        e -= 1
-      // loud-failure contract: without this, e = -1 makes u16(e + 10)
-      // read payload bytes 9–10 as the entry count (garbage or an opaque
-      // out-of-bounds) instead of naming the malformed archive
-      require(e >= 0, s"EOCD signature not found: media ${r.media_id}")
-      val nEntries = u16(e + 10)
-      var i = u32(e + 16).toInt
-      (0 until nEntries).map { _ =>
-        val method = u16(i + 10)
-        val csize = u32(i + 20)
-        val usize = u32(i + 24)
-        val nameLen = u16(i + 28)
-        val extraLen = u16(i + 30)
-        val commentLen = u16(i + 32)
-        val lho = u32(i + 42).toInt
-        val name = new String(b, i + 46, nameLen, "UTF-8")
-        val dataOff = lho + 30 + u16(lho + 26) + u16(lho + 28)
-        val content =
-          if (method == 0) java.util.Arrays.copyOfRange(b, dataOff, dataOff + usize.toInt)
-          else {
-            val inf = new java.util.zip.Inflater(true)
-            inf.setInput(b, dataOff, csize.toInt)
-            val out = new Array[Byte](usize.toInt)
-            var got = 0
-            while (!inf.finished() && got < out.length)
-              got += inf.inflate(out, got, out.length - got)
-            inf.end()
-            out
-          }
-        i += 46 + nameLen + extraLen + commentLen
-        MediaRow(r.media_id, name, content)
-      }
-    }
+    rows.flatMap(r => zipEntries(r).map(e => MediaRow(r.media_id, e.name, e.content)))
 
-  /** zip-payload pipeline — MediaRow per member, name in `mime`. */
-  def extractZipPayloads(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeZipPayloads).toDF()
-  }
-
-  /** Minimal ZIP writer for composite fixtures: local headers with
-    * real CRC-32s, stored or raw-deflate entries, central directory +
-    * EOCD — the same byte layout [[syntheticZip]] emits inline.
+  /** Minimal ZIP writer for the fixtures: local headers with real
+    * CRC-32s, stored or raw-deflate entries, central directory + EOCD.
     */
   private[ops] def zipArchive(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
@@ -2710,16 +2390,16 @@ object Multimodal {
       val name = nameStr.getBytes("UTF-8")
       val lho = out.size()
       w32(0x04034b50L); w16(20); w16(0); w16(if (stored) 0 else 8)
-      w16(0); w16(0)
+      w16(0); w16(0) // mod time/date
       w32(crc.getValue); w32(data.length.toLong); w32(content.length.toLong)
       w16(name.length); w16(0)
       out.write(name); out.write(data)
       cd32(0x02014b50L); cd16(20); cd16(20); cd16(0); cd16(if (stored) 0 else 8)
       cd16(0); cd16(0)
       cd32(crc.getValue); cd32(data.length.toLong); cd32(content.length.toLong)
-      cd16(name.length); cd16(0); cd16(0)
-      cd16(0); cd16(0)
-      cd32(0L)
+      cd16(name.length); cd16(0); cd16(0) // name/extra/comment len
+      cd16(0); cd16(0) // disk, internal attrs
+      cd32(0L) // external attrs
       cd32(lho.toLong)
       cd.write(name)
     }
@@ -2738,69 +2418,23 @@ object Multimodal {
     * catch. txt size = 20 + (id + 11i)%200, cls size = 1 + (id + 3i)%9,
     * byte j of entry e = (id + 7e + j)%256; entries alternate
     * stored/deflated by overall entry index. */
-  def syntheticZipWds(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 2 + (id % 4).toInt
-      val names = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
-      (0 until m).foreach { i =>
-        names += ((s"$id/sample$i.txt", 20 + ((id + 11 * i) % 200).toInt))
-        if (i < m - 1) names += ((s"$id/sample$i.cls", 1 + ((id + 3 * i) % 9).toInt))
-      }
-      MediaRow(id, "application/zip", buildZip(id, names.toSeq))
-    }.toDF()
+  def syntheticZipWds(id: Long): MediaRow = {
+    val m = 2 + (id % 4).toInt
+    val names = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
+    (0 until m).foreach { i =>
+      names += ((s"$id/sample$i.txt", 20 + ((id + 11 * i) % 200).toInt))
+      if (i < m - 1) names += ((s"$id/sample$i.cls", 1 + ((id + 3 * i) % 9).toInt))
+    }
+    MediaRow(id, "application/zip", buildZip(id, names.toSeq))
   }
 
   /** Assemble a ZIP archive from (name, size) entries with the shared
     * byte formula; entry e's bytes are (id + 7e + j)%256, even e stored,
     * odd e deflated. */
-  private def buildZip(id: Long, entries: Seq[(String, Int)]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w16(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-      o.write(v & 0xff); o.write((v >> 8) & 0xff)
-    }
-    def w32(o: java.io.ByteArrayOutputStream, v: Long): Unit = {
-      w16(o, (v & 0xffff).toInt); w16(o, ((v >> 16) & 0xffff).toInt)
-    }
-    val cd = new java.io.ByteArrayOutputStream()
-    entries.zipWithIndex.foreach { case ((nameStr, size), e) =>
-      val content = Array.tabulate[Byte](size)(j => ((id + 7 * e + j) % 256).toByte)
-      val crc = new java.util.zip.CRC32(); crc.update(content)
-      val stored = e % 2 == 0
-      val data = if (stored) content else {
-        val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-        d.setInput(content); d.finish()
-        val acc = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        while (!d.finished()) acc.write(buf, 0, d.deflate(buf))
-        d.end()
-        acc.toByteArray
-      }
-      val name = nameStr.getBytes("UTF-8")
-      val lho = out.size()
-      w32(out, 0x04034b50L); w16(out, 20); w16(out, 0); w16(out, if (stored) 0 else 8)
-      w16(out, 0); w16(out, 0)
-      w32(out, crc.getValue); w32(out, data.length.toLong); w32(out, size.toLong)
-      w16(out, name.length); w16(out, 0)
-      out.write(name); out.write(data)
-      w32(cd, 0x02014b50L); w16(cd, 20); w16(cd, 20); w16(cd, 0); w16(cd, if (stored) 0 else 8)
-      w16(cd, 0); w16(cd, 0)
-      w32(cd, crc.getValue); w32(cd, data.length.toLong); w32(cd, size.toLong)
-      w16(cd, name.length); w16(cd, 0); w16(cd, 0)
-      w16(cd, 0); w16(cd, 0)
-      w32(cd, 0L)
-      w32(cd, lho.toLong)
-      cd.write(name)
-    }
-    val cdOff = out.size()
-    val cdBytes = cd.toByteArray
-    out.write(cdBytes)
-    w32(out, 0x06054b50L); w16(out, 0); w16(out, 0)
-    w16(out, entries.size); w16(out, entries.size)
-    w32(out, cdBytes.length.toLong); w32(out, cdOff.toLong); w16(out, 0)
-    out.toByteArray
-  }
+  private def buildZip(id: Long, entries: Seq[(String, Int)]): Array[Byte] =
+    zipArchive(entries.zipWithIndex.map { case ((name, size), e) =>
+      (name, Array.tabulate[Byte](size)(j => ((id + 7 * e + j) % 256).toByte), e % 2 == 0)
+    })
 
   /** Deterministic ZIP fixture: m = 2 + id%4 entries, entry i named
     * `id/f<i>.txt` with size 20 + (id + 11i)%200 and byte j =
@@ -2810,54 +2444,10 @@ object Multimodal {
     * teeth. The byte/size formulas are what the DuckDB oracle replays;
     * deflate sizes never appear in the output (they depend on the
     * compressor, not the data model). */
-  def syntheticZip(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 2 + (id % 4).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      def w32(v: Long): Unit = { w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt) }
-      val cd = new java.io.ByteArrayOutputStream()
-      def cd16(v: Int): Unit = { cd.write(v & 0xff); cd.write((v >> 8) & 0xff) }
-      def cd32(v: Long): Unit = { cd16((v & 0xffff).toInt); cd16(((v >> 16) & 0xffff).toInt) }
-      (0 until m).foreach { i =>
-        val size = 20 + ((id + 11 * i) % 200).toInt
-        val content = Array.tabulate[Byte](size)(j => ((id + 7 * i + j) % 256).toByte)
-        val crc = new java.util.zip.CRC32(); crc.update(content)
-        val stored = i % 2 == 0
-        val data = if (stored) content else {
-          val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-          d.setInput(content); d.finish()
-          val acc = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](256)
-          while (!d.finished()) acc.write(buf, 0, d.deflate(buf))
-          d.end()
-          acc.toByteArray
-        }
-        val name = s"$id/f$i.txt".getBytes("UTF-8")
-        val lho = out.size()
-        w32(0x04034b50L); w16(20); w16(0); w16(if (stored) 0 else 8)
-        w16(0); w16(0) // mod time/date
-        w32(crc.getValue); w32(data.length.toLong); w32(size.toLong)
-        w16(name.length); w16(0)
-        out.write(name); out.write(data)
-        cd32(0x02014b50L); cd16(20); cd16(20); cd16(0); cd16(if (stored) 0 else 8)
-        cd16(0); cd16(0)
-        cd32(crc.getValue); cd32(data.length.toLong); cd32(size.toLong)
-        cd16(name.length); cd16(0); cd16(0) // name/extra/comment len
-        cd16(0); cd16(0) // disk, internal attrs
-        cd32(0L) // external attrs
-        cd32(lho.toLong)
-        cd.write(name)
-      }
-      val cdOff = out.size()
-      val cdBytes = cd.toByteArray
-      out.write(cdBytes)
-      w32(0x06054b50L); w16(0); w16(0); w16(m); w16(m)
-      w32(cdBytes.length.toLong); w32(cdOff.toLong); w16(0)
-      MediaRow(id, "application/zip", out.toByteArray)
-    }.toDF()
+  def syntheticZip(id: Long): MediaRow = {
+    val m = 2 + (id % 4).toInt
+    MediaRow(id, "application/zip",
+      buildZip(id, (0 until m).map(i => (s"$id/f$i.txt", 20 + ((id + 11 * i) % 200).toInt))))
   }
 
   /** WARC crawl-archive census: the record walk every Common-Crawl-
@@ -2894,14 +2484,47 @@ object Multimodal {
     * loudly like the other eighteen decoders (`WarcSpec`).
     */
   def decodeWarc(rows: Iterator[MediaRow]): Iterator[WarcStats] = rows.map { r =>
+    val recs = warcRecords(r)
+    val resp = recs.filter(_.typ == "response")
+    WarcStats(r.media_id, recs.size, resp.size, recs.count(_.typ == "request"),
+      recs.count(_.typ == "warcinfo"), resp.map(_.clen.toLong).sum,
+      resp.map(_.payload.length.toLong).sum,
+      resp.map(w => w.payload.foldLeft(0L)((acc, j) => acc + (w.rec(j) & 0xff))).sum,
+      resp.count(_.status == "200"))
+  }
+
+  /** One verified WARC record: WARC-Type, the decompressed record
+    * bytes, the block start, Content-Length and — for responses — the
+    * offset of the HTTP head/payload CRLFCRLF (-1 otherwise).
+    */
+  private final case class WarcRecord(typ: String, rec: Array[Byte], blockStart: Int,
+                                      clen: Int, split: Int) {
+    /** The response's HTTP status code ("200", "404", ...). */
+    def status: String = new String(rec, blockStart + 9, 3, "ISO-8859-1")
+    /** The response's HTTP payload offsets within `rec`. */
+    def payload: Range = split + 4 until blockStart + clen
+  }
+
+  /** The one validated WARC walk behind [[decodeWarc]] and
+    * [[decodeWarcResponses]]: every gzip member inflated once and its
+    * trailer verified, every record's framing checked, every response's
+    * HTTP status line and head/payload split located.
+    */
+  private def warcRecords(r: MediaRow): Seq[WarcRecord] = {
     val b = r.payload
     def le32(off: Int): Long =
       (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
         ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+    def crlf2(data: Array[Byte], from: Int): Int = {
+      var k = from
+      while (k + 3 < data.length &&
+        !(data(k) == '\r' && data(k + 1) == '\n' &&
+          data(k + 2) == '\r' && data(k + 3) == '\n')) k += 1
+      if (k + 3 < data.length) k else -1
+    }
+    val out = Vector.newBuilder[WarcRecord]
     var off = 0
     var nMembers = 0
-    var (nResp, nReq, nInfo, nOk) = (0, 0, 0, 0)
-    var (httpBytes, payloadBytes, payloadSum) = (0L, 0L, 0L)
     while (off < b.length) {
       require(b.length - off >= 20, s"truncated gzip member at $off: media ${r.media_id}")
       require((b(off) & 0xff) == 0x1f && (b(off + 1) & 0xff) == 0x8b,
@@ -2911,17 +2534,18 @@ object Multimodal {
         s"unexpected gzip flags ${b(off + 3)}: media ${r.media_id}")
       val dataStart = off + 10
       val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b, dataStart, b.length - dataStart)
       val acc = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        require(n > 0 || inf.finished(),
-          s"inflate stalled in member $nMembers: media ${r.media_id}")
-        acc.write(buf, 0, n)
-      }
-      val used = (b.length - dataStart) - inf.getRemaining
-      inf.end()
+      val used = try {
+        inf.setInput(b, dataStart, b.length - dataStart)
+        val buf = new Array[Byte](4096)
+        while (!inf.finished()) {
+          val n = inf.inflate(buf)
+          require(n > 0 || inf.finished(),
+            s"inflate stalled in member $nMembers: media ${r.media_id}")
+          acc.write(buf, 0, n)
+        }
+        (b.length - dataStart) - inf.getRemaining
+      } finally inf.end()
       val rec = acc.toByteArray
       val tOff = dataStart + used
       require(tOff + 8 <= b.length,
@@ -2934,13 +2558,6 @@ object Multimodal {
       off = tOff + 8
       nMembers += 1
       // --- WARC record framing over the decompressed member ---
-      def crlf2(data: Array[Byte], from: Int): Int = {
-        var k = from
-        while (k + 3 < data.length &&
-          !(data(k) == '\r' && data(k + 1) == '\n' &&
-            data(k + 2) == '\r' && data(k + 3) == '\n')) k += 1
-        if (k + 3 < data.length) k else -1
-      }
       val hdrEnd = crlf2(rec, 0)
       require(hdrEnd >= 0, s"no header terminator in member ${nMembers - 1}: media ${r.media_id}")
       val head = new String(rec, 0, hdrEnd, "ISO-8859-1")
@@ -2961,38 +2578,65 @@ object Multimodal {
       require(rec(rec.length - 4) == '\r' && rec(rec.length - 3) == '\n' &&
         rec(rec.length - 2) == '\r' && rec(rec.length - 1) == '\n',
         s"missing record terminator: media ${r.media_id}")
-      hmap.getOrElse("WARC-Type",
-          throw new IllegalArgumentException(s"missing WARC-Type: media ${r.media_id}")) match {
-        case "warcinfo" => nInfo += 1
-        case "request" => nReq += 1
+      val typ = hmap.getOrElse("WARC-Type",
+        throw new IllegalArgumentException(s"missing WARC-Type: media ${r.media_id}"))
+      val split = typ match {
+        case "warcinfo" | "request" => -1
         case "response" =>
-          nResp += 1
-          httpBytes += clen
           // HTTP head/payload split inside the block
           val split = crlf2(rec, blockStart)
-          require(split >= 0 && split < blockStart + clen,
+          require(split >= 0 && split + 4 <= blockStart + clen,
             s"no HTTP header terminator in response: media ${r.media_id}")
           val status = new String(rec, blockStart, 12, "ISO-8859-1")
           require(status.startsWith("HTTP/1.1 "),
             s"bad HTTP status line '$status': media ${r.media_id}")
-          if (status.substring(9, 12) == "200") nOk += 1
-          val pStart = split + 4
-          val pEnd = blockStart + clen
-          payloadBytes += pEnd - pStart
-          (pStart until pEnd).foreach(j => payloadSum += rec(j) & 0xff)
+          split
         case t => throw new IllegalArgumentException(
           s"unknown WARC-Type '$t': media ${r.media_id}")
       }
+      out += WarcRecord(typ, rec, blockStart, clen, split)
     }
-    WarcStats(r.media_id, nMembers, nResp, nReq, nInfo, httpBytes,
-      payloadBytes, payloadSum, nOk)
+    out.result()
   }
 
-  /** WARC pipeline — same narrow mapPartitions seam as the other 18. */
-  def extractWarcStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeWarc).toDF()
+  /** A .warc.gz of one warcinfo record then, per (status, body), a
+    * request/response pair, EACH RECORD ITS OWN GZIP MEMBER: fixed-width
+    * header fields (%08d id, %02d index) and a fixed-width HTTP head, so
+    * every record length is analytic. Record ids read
+    * `<urn:<urn>:<id>-<idx>>`, request paths `/<path><i>`.
+    */
+  private def warcArchive(id: Long, urn: String, path: String,
+                          responses: Seq[(String, Array[Byte])]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def gzMember(record: Array[Byte]): Unit = {
+      val gz = new java.util.zip.GZIPOutputStream(out)
+      gz.write(record)
+      gz.close() // finishes the member and ends the native Deflater
+                 // (ByteArrayOutputStream.close() is a no-op)
+    }
+    def warcRecord(typ: String, idx: Int, block: Array[Byte]): Array[Byte] = {
+      val h = new StringBuilder()
+      h.append("WARC/1.0\r\n")
+      h.append(s"WARC-Type: $typ\r\n")
+      h.append(f"WARC-Record-ID: <urn:$urn:$id%08d-$idx%02d>\r\n")
+      h.append("WARC-Date: 2026-01-01T00:00:00Z\r\n")
+      h.append(s"Content-Length: ${block.length}\r\n")
+      h.append("\r\n")
+      val o = new java.io.ByteArrayOutputStream()
+      o.write(h.toString.getBytes("US-ASCII"))
+      o.write(block)
+      o.write("\r\n\r\n".getBytes("US-ASCII"))
+      o.toByteArray
+    }
+    gzMember(warcRecord("warcinfo", 0, "software: graft/13\r\n".getBytes("US-ASCII")))
+    responses.zipWithIndex.foreach { case ((status, body), i) =>
+      val req = f"GET /$path$i%02d HTTP/1.1\r\nHost: h$id%08d.test\r\n\r\n"
+      gzMember(warcRecord("request", i + 1, req.getBytes("US-ASCII")))
+      val head = s"HTTP/1.1 $status\r\nContent-Type: text/html\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n"
+      gzMember(warcRecord("response", i + 1, head.getBytes("US-ASCII") ++ body))
+    }
+    out.toByteArray
   }
 
   /** Deterministic .warc.gz fixture per id — one warcinfo record, then
@@ -3006,47 +2650,13 @@ object Multimodal {
     * 200 OK), so n_ok = m − 1 — the oracle replays all of it without
     * parsing a byte.
     */
-  def syntheticWarc(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 1 + (id % 4).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      def gzMember(record: Array[Byte]): Unit = {
-        val gz = new java.util.zip.GZIPOutputStream(out)
-        gz.write(record)
-        gz.close() // finishes the member and ends the native Deflater
-                   // (ByteArrayOutputStream.close() is a no-op)
-      }
-      def warcRecord(typ: String, idx: Int, block: Array[Byte]): Array[Byte] = {
-        val h = new StringBuilder()
-        h.append("WARC/1.0\r\n")
-        h.append(s"WARC-Type: $typ\r\n")
-        h.append(f"WARC-Record-ID: <urn:rec:$id%08d-$idx%02d>\r\n")
-        h.append("WARC-Date: 2026-01-01T00:00:00Z\r\n")
-        h.append(s"Content-Length: ${block.length}\r\n")
-        h.append("\r\n")
-        val o = new java.io.ByteArrayOutputStream()
-        o.write(h.toString.getBytes("US-ASCII"))
-        o.write(block)
-        o.write("\r\n\r\n".getBytes("US-ASCII"))
-        o.toByteArray
-      }
-      gzMember(warcRecord("warcinfo", 0, "software: graft/13\r\n".getBytes("US-ASCII")))
-      (0 until m).foreach { i =>
-        val req = f"GET /p$i%02d HTTP/1.1\r\nHost: h$id%08d.test\r\n\r\n"
-        gzMember(warcRecord("request", i + 1, req.getBytes("US-ASCII")))
-        val bodyLen = 100 + ((id + 17 * i) % 300).toInt
-        val status = if (i == m - 1) "404 NF" else "200 OK"
-        val head = s"HTTP/1.1 $status\r\nContent-Type: text/html\r\n" +
-          s"Content-Length: $bodyLen\r\n\r\n"
-        val block = new java.io.ByteArrayOutputStream()
-        block.write(head.getBytes("US-ASCII"))
-        (0 until bodyLen).foreach(j => block.write(((id + 5 * i + j) % 256).toInt))
-        gzMember(warcRecord("response", i + 1, block.toByteArray))
-      }
-      MediaRow(id, "application/warc", out.toByteArray)
-    }.toDF()
+  def syntheticWarc(id: Long): MediaRow = {
+    val m = 1 + (id % 4).toInt
+    MediaRow(id, "application/warc", warcArchive(id, "rec", "p", (0 until m).map { i =>
+      val bodyLen = 100 + ((id + 17 * i) % 300).toInt
+      (if (i == m - 1) "404 NF" else "200 OK",
+        Array.tabulate[Byte](bodyLen)(j => ((id + 5 * i + j) % 256).toByte))
+    }))
   }
 
   /** PDF object census: the document-corpus ingest audit. */
@@ -3189,13 +2799,6 @@ object Multimodal {
       nTj, nTjArr, textChars, trailerSize)
   }
 
-  /** PDF pipeline — same narrow mapPartitions seam as the other 19. */
-  def extractPdfStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodePdf).toDF()
-  }
-
   /** Deterministic classic-xref PDF fixture per id: catalog + pages
     * tree + m = 1 + id%3 pages, each with an UNCOMPRESSED content
     * stream of k_i = 2 + (id+i)%4 fixed-width `(…) Tj` ops plus one
@@ -3205,46 +2808,42 @@ object Multimodal {
     * offsets in the xref table (tracked as the builder emits), real
     * 20-byte entries — the decoder's offset cross-check has teeth.
     */
-  def syntheticPdf(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 1 + (id % 3).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-      val offsets = new Array[Int](3 + 2 * m)
-      w("%PDF-1.4\n")
-      offsets(1) = out.size()
-      w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-      offsets(2) = out.size()
-      val kids = (0 until m).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-      w(s"2 0 obj\n<< /Type /Pages /Kids [$kids] /Count $m >>\nendobj\n")
-      (0 until m).foreach { i =>
-        val pageNum = 3 + 2 * i
-        val contNum = 4 + 2 * i
-        offsets(pageNum) = out.size()
-        w(s"$pageNum 0 obj\n<< /Type /Page /Parent 2 0 R /Contents $contNum 0 R >>\nendobj\n")
-        val kOps = 2 + ((id + i) % 4).toInt
-        val content = new StringBuilder()
-        content.append("BT /F1 12 Tf 72 720 Td ")
-        (0 until kOps).foreach { j =>
-          content.append(f"(t$id%08d_$i%02d_$j%02d) Tj ")
-        }
-        content.append(f"[(a$id%08d) -120 (b$i%02d)] TJ ")
-        content.append("ET")
-        offsets(contNum) = out.size()
-        w(s"$contNum 0 obj\n<< /Length ${content.length} >>\nstream\n")
-        w(content.toString)
-        w("\nendstream\nendobj\n")
+  def syntheticPdf(id: Long): MediaRow = {
+    val m = 1 + (id % 3).toInt
+    val out = new java.io.ByteArrayOutputStream()
+    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
+    val offsets = new Array[Int](3 + 2 * m)
+    w("%PDF-1.4\n")
+    offsets(1) = out.size()
+    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
+    offsets(2) = out.size()
+    val kids = (0 until m).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
+    w(s"2 0 obj\n<< /Type /Pages /Kids [$kids] /Count $m >>\nendobj\n")
+    (0 until m).foreach { i =>
+      val pageNum = 3 + 2 * i
+      val contNum = 4 + 2 * i
+      offsets(pageNum) = out.size()
+      w(s"$pageNum 0 obj\n<< /Type /Page /Parent 2 0 R /Contents $contNum 0 R >>\nendobj\n")
+      val kOps = 2 + ((id + i) % 4).toInt
+      val content = new StringBuilder()
+      content.append("BT /F1 12 Tf 72 720 Td ")
+      (0 until kOps).foreach { j =>
+        content.append(f"(t$id%08d_$i%02d_$j%02d) Tj ")
       }
-      val xrefOff = out.size()
-      val kEntries = 3 + 2 * m
-      w(s"xref\n0 $kEntries\n")
-      w("0000000000 65535 f\r\n")
-      (1 until kEntries).foreach(n => w(f"${offsets(n)}%010d 00000 n\r\n"))
-      w(s"trailer\n<< /Size $kEntries /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF")
-      MediaRow(id, "application/pdf", out.toByteArray)
-    }.toDF()
+      content.append(f"[(a$id%08d) -120 (b$i%02d)] TJ ")
+      content.append("ET")
+      offsets(contNum) = out.size()
+      w(s"$contNum 0 obj\n<< /Length ${content.length} >>\nstream\n")
+      w(content.toString)
+      w("\nendstream\nendobj\n")
+    }
+    val xrefOff = out.size()
+    val kEntries = 3 + 2 * m
+    w(s"xref\n0 $kEntries\n")
+    w("0000000000 65535 f\r\n")
+    (1 until kEntries).foreach(n => w(f"${offsets(n)}%010d 00000 n\r\n"))
+    w(s"trailer\n<< /Size $kEntries /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF")
+    MediaRow(id, "application/pdf", out.toByteArray)
   }
 
   /** HTML markup census: the extraction-volume audit between the WARC
@@ -3355,63 +2954,21 @@ object Multimodal {
       scriptBytes, nEnt, textChars, maxDepth)
   }
 
-  /** HTML pipeline — same narrow mapPartitions seam as the other 20. */
-  def extractHtmlStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeHtml).toDF()
-  }
-
   /** Payload RELATION variant of [[decodeWarc]] — the member-relation
-    * pattern on the crawl walker: the fully verified walk runs first
-    * (gzip CRC/ISIZE, record framing, HTTP splits — by delegating to
-    * decodeWarc), then the members are re-walked and each HTTP-200
-    * response's PAYLOAD is emitted as a MediaRow (mime text/html), so
-    * the downstream parse — [[decodeHtml]], the text tier — is plain
-    * Spark over a relation, exactly how a production WARC→text job is
+    * pattern on the crawl walker: over the same verified walk (gzip
+    * CRC/ISIZE, record framing, HTTP splits), each HTTP-200 response's
+    * PAYLOAD is emitted as a MediaRow (mime text/html), so the
+    * downstream parse — [[decodeHtml]], the text tier — is plain Spark
+    * over a relation, exactly how a production WARC→text job is
     * shaped. */
   def decodeWarcResponses(rows: Iterator[MediaRow]): Iterator[MediaRow] =
     rows.flatMap { r =>
-      decodeWarc(Iterator(r)).foreach(_ => ()) // full validation pass
-      val b = r.payload
-      val out = scala.collection.mutable.ArrayBuffer.empty[MediaRow]
-      var off = 0
-      while (off < b.length) {
-        val dataStart = off + 10
-        val inf = new java.util.zip.Inflater(true)
-        inf.setInput(b, dataStart, b.length - dataStart)
-        val acc = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        while (!inf.finished()) {
-          val n = inf.inflate(buf)
-          acc.write(buf, 0, n)
-        }
-        val used = (b.length - dataStart) - inf.getRemaining
-        inf.end()
-        val rec = acc.toByteArray
-        off = dataStart + used + 8
-        val recS = new String(rec, "ISO-8859-1")
-        val hdrEnd = recS.indexOf("\r\n\r\n")
-        val head = recS.substring(0, hdrEnd)
-        if (head.contains("WARC-Type: response")) {
-          val blockStart = hdrEnd + 4
-          val split = recS.indexOf("\r\n\r\n", blockStart)
-          if (recS.substring(blockStart, blockStart + 12).endsWith("200")) {
-            val pEnd = rec.length - 4 // strip the record terminator
-            out += MediaRow(r.media_id, "text/html",
-              java.util.Arrays.copyOfRange(rec, split + 4, pEnd))
-          }
-        }
+      warcRecords(r).collect {
+        case w if w.typ == "response" && w.status == "200" =>
+          MediaRow(r.media_id, "text/html",
+            java.util.Arrays.copyOfRange(w.rec, w.payload.start, w.payload.end))
       }
-      out.iterator
     }
-
-  /** Response-payload pipeline. */
-  def extractWarcResponses(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeWarcResponses).toDF()
-  }
 
   /** Crawl-shaped .warc.gz fixture: the [[syntheticWarc]] framing with
     * HTML response bodies — page j (j < m−1 gets status 200, the last
@@ -3419,48 +2976,14 @@ object Multimodal {
     * one paragraph, so the downstream parse volume is analytic
     * (13·k_j − 1 text chars per page).
     */
-  def syntheticCrawlWarc(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 1 + (id % 4).toInt
-      val out = new java.io.ByteArrayOutputStream()
-      def gzMember(record: Array[Byte]): Unit = {
-        val gz = new java.util.zip.GZIPOutputStream(out)
-        gz.write(record); gz.close()
-      }
-      def warcRecord(typ: String, idx: Int, block: Array[Byte]): Array[Byte] = {
-        val h = new StringBuilder()
-        h.append("WARC/1.0\r\n")
-        h.append(s"WARC-Type: $typ\r\n")
-        h.append(f"WARC-Record-ID: <urn:crawl:$id%08d-$idx%02d>\r\n")
-        h.append("WARC-Date: 2026-01-01T00:00:00Z\r\n")
-        h.append(s"Content-Length: ${block.length}\r\n")
-        h.append("\r\n")
-        val o = new java.io.ByteArrayOutputStream()
-        o.write(h.toString.getBytes("US-ASCII"))
-        o.write(block)
-        o.write("\r\n\r\n".getBytes("US-ASCII"))
-        o.toByteArray
-      }
-      gzMember(warcRecord("warcinfo", 0, "software: graft/13\r\n".getBytes("US-ASCII")))
-      (0 until m).foreach { i =>
-        val req = f"GET /c$i%02d HTTP/1.1\r\nHost: h$id%08d.test\r\n\r\n"
-        gzMember(warcRecord("request", i + 1, req.getBytes("US-ASCII")))
-        val k = 10 + ((id + 7 * i) % 30).toInt
-        val words = (0 until k).map(j => f"w$id%08d_$j%02d").mkString(" ")
-        val html = s"<html><body><p>$words</p></body></html>"
-        val body = html.getBytes("US-ASCII")
-        val status = if (i == m - 1) "404 NF" else "200 OK"
-        val head = s"HTTP/1.1 $status\r\nContent-Type: text/html\r\n" +
-          s"Content-Length: ${body.length}\r\n\r\n"
-        val block = new java.io.ByteArrayOutputStream()
-        block.write(head.getBytes("US-ASCII"))
-        block.write(body)
-        gzMember(warcRecord("response", i + 1, block.toByteArray))
-      }
-      MediaRow(id, "application/warc", out.toByteArray)
-    }.toDF()
+  def syntheticCrawlWarc(id: Long): MediaRow = {
+    val m = 1 + (id % 4).toInt
+    MediaRow(id, "application/warc", warcArchive(id, "crawl", "c", (0 until m).map { i =>
+      val k = 10 + ((id + 7 * i) % 30).toInt
+      val words = (0 until k).map(j => f"w$id%08d_$j%02d").mkString(" ")
+      (if (i == m - 1) "404 NF" else "200 OK",
+        s"<html><body><p>$words</p></body></html>".getBytes("US-ASCII"))
+    }))
   }
 
   /** One extracted anchor link (the crawl frontier / link-graph seam). */
@@ -3496,33 +3019,22 @@ object Multimodal {
       out.iterator
     }
 
-  /** Link-relation pipeline. */
-  def extractHtmlLinks(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeHtmlLinks).toDF()
-  }
-
   /** Deterministic linked-page fixture: page id carries m = 2 + id%5
     * anchors to `/doc/<(id + 31(j+1)) % 1000>` — 31 is coprime to 1000,
     * so no self-link arises at m ≤ 6 and the in-degree distribution
     * over the 1000-page namespace is formula-replayable.
     */
-  def syntheticHtmlLinks(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 2 + (id % 5).toInt
-      val sb = new StringBuilder()
-      sb.append("<html><body>")
-      (0 until m).foreach { j =>
-        val dst = (id + 31L * (j + 1)) % 1000L
-        sb.append(s"""<a href="/doc/$dst">t$j</a>""")
-      }
-      sb.append("</body></html>")
-      MediaRow(id, "text/html",
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }.toDF()
+  def syntheticHtmlLinks(id: Long): MediaRow = {
+    val m = 2 + (id % 5).toInt
+    val sb = new StringBuilder()
+    sb.append("<html><body>")
+    (0 until m).foreach { j =>
+      val dst = (id + 31L * (j + 1)) % 1000L
+      sb.append(s"""<a href="/doc/$dst">t$j</a>""")
+    }
+    sb.append("</body></html>")
+    MediaRow(id, "text/html",
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** robots.txt census + access decisions: the crawl-politeness gate. */
@@ -3603,13 +3115,6 @@ object Multimodal {
       nSitemaps, delayStar, nAllowed, probes.size - nAllowed)
   }
 
-  /** robots pipeline — same narrow mapPartitions seam as the other 21. */
-  def extractRobotsStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeRobots).toDF()
-  }
-
   /** Deterministic robots.txt fixture per id: a `*` group (2 rules +
     * crawl-delay id%5 + 1), a `graftbot` group with `Allow: /` plus
     * d + 1 = id%3 + 1 path disallows, 1 + id%2 sitemap lines, comments
@@ -3618,26 +3123,22 @@ object Multimodal {
     * `*`-group paths are allowed (RFC: no fallback merge once a
     * UA-specific group matches) — so n_blocked = 1 + (id%3 = 2).
     */
-  def syntheticRobots(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val d = (id % 3).toInt
-      val sb = new StringBuilder()
-      sb.append(s"# robots fixture $id\n\n")
-      sb.append("User-agent: *\n")
-      sb.append("Disallow: /private\n")
-      sb.append("Allow: /private/ok\n")
-      sb.append(s"Crawl-delay: ${id % 5 + 1}\n\n")
-      sb.append("User-agent: graftbot\n")
-      sb.append("Allow: /\n")
-      (0 to d).foreach(k => sb.append(s"Disallow: /p$k/secret\n"))
-      sb.append("\n")
-      (0 until (1 + (id % 2)).toInt).foreach(k =>
-        sb.append(s"Sitemap: https://example.test/s$k.xml\n"))
-      MediaRow(id, "text/plain",
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }.toDF()
+  def syntheticRobots(id: Long): MediaRow = {
+    val d = (id % 3).toInt
+    val sb = new StringBuilder()
+    sb.append(s"# robots fixture $id\n\n")
+    sb.append("User-agent: *\n")
+    sb.append("Disallow: /private\n")
+    sb.append("Allow: /private/ok\n")
+    sb.append(s"Crawl-delay: ${id % 5 + 1}\n\n")
+    sb.append("User-agent: graftbot\n")
+    sb.append("Allow: /\n")
+    (0 to d).foreach(k => sb.append(s"Disallow: /p$k/secret\n"))
+    sb.append("\n")
+    (0 until (1 + (id % 2)).toInt).foreach(k =>
+      sb.append(s"Sitemap: https://example.test/s$k.xml\n"))
+    MediaRow(id, "text/plain",
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Deterministic HTML fixture per id: doctype, title, style, one
@@ -3648,26 +3149,22 @@ object Multimodal {
     * chars = 9 (title) + Σ(13·k_i + 3), max depth 4
     * (html>body>div>p).
     */
-  def syntheticHtml(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val m = 2 + (id % 4).toInt
-      val sb = new StringBuilder()
-      sb.append("<!DOCTYPE html>")
-      sb.append(f"<html><head><title>T$id%08d</title>")
-      sb.append("<style>.c{margin:0}</style></head>")
-      sb.append(f"<body><!--n$id%08d--><div id=${'"'}d$id%08d${'"'}>")
-      (0 until m).foreach { i =>
-        val k = 3 + ((id + i) % 5).toInt
-        val words = (0 until k).map(_ => f"w$id%08d_$i%02d").mkString(" ")
-        sb.append(f"""<p class="k$i%02d">""")
-        sb.append(words).append(" &amp; x<br/></p>")
-      }
-      sb.append(f"</div><script>var v$id%08d=1;</script></body></html>")
-      MediaRow(id, "text/html",
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }.toDF()
+  def syntheticHtml(id: Long): MediaRow = {
+    val m = 2 + (id % 4).toInt
+    val sb = new StringBuilder()
+    sb.append("<!DOCTYPE html>")
+    sb.append(f"<html><head><title>T$id%08d</title>")
+    sb.append("<style>.c{margin:0}</style></head>")
+    sb.append(f"<body><!--n$id%08d--><div id=${'"'}d$id%08d${'"'}>")
+    (0 until m).foreach { i =>
+      val k = 3 + ((id + i) % 5).toInt
+      val words = (0 until k).map(_ => f"w$id%08d_$i%02d").mkString(" ")
+      sb.append(f"""<p class="k$i%02d">""")
+      sb.append(words).append(" &amp; x<br/></p>")
+    }
+    sb.append(f"</div><script>var v$id%08d=1;</script></body></html>")
+    MediaRow(id, "text/html",
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Parsed baseline TIFF: byte order, IFD entry census, dimensions,
@@ -3756,54 +3253,43 @@ object Multimodal {
       stripCnt, sum)
   }
 
-  /** TIFF pipeline — same narrow mapPartitions seam as the other 26. */
-  def extractTiffStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(decodeTiff).toDF()
-  }
-
   /** Deterministic baseline-TIFF fixture per id: 8-bit grayscale
     * w = 2 + id%6 by h = 1 + id%5, single strip at offset 8 with pixel
     * byte j = (id·17 + j) mod 256, one 8-entry IFD after the strip —
     * LITTLE-endian for even ids, BIG-endian for odd (both real decoder
     * paths run on every other row).
     */
-  def syntheticTiff(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id")).as[Long].map { id =>
-      val big = id % 2 == 1
-      val w = 2 + (id % 6)
-      val h = 1 + (id % 5)
-      val nPix = w * h
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit =
-        if (big) { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-        else { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      def w32(v: Long): Unit =
-        if (big) (3 to 0 by -1).foreach(k => out.write(((v >> (8 * k)) & 0xff).toInt))
-        else (0 until 4).foreach(k => out.write(((v >> (8 * k)) & 0xff).toInt))
-      out.write((if (big) "MM" else "II").getBytes("US-ASCII"))
-      w16(42)
-      w32(8 + nPix) // IFD sits after the strip
-      var j = 0L
-      while (j < nPix) { out.write(((id * 17 + j) % 256).toInt); j += 1 }
-      w16(8) // entry count
-      def entry(tag: Int, typ: Int, v: Long): Unit = {
-        w16(tag); w16(typ); w32(1L)
-        if (typ == 3) { w16(v.toInt); w16(0) } else w32(v)
-      }
-      entry(256, 4, w) // ImageWidth
-      entry(257, 4, h) // ImageLength
-      entry(258, 3, 8) // BitsPerSample
-      entry(259, 3, 1) // Compression: none
-      entry(262, 3, 1) // Photometric: BlackIsZero
-      entry(273, 4, 8) // StripOffsets
-      entry(278, 4, h) // RowsPerStrip
-      entry(279, 4, nPix) // StripByteCounts
-      w32(0L) // no next IFD
-      MediaRow(id, "image/tiff", out.toByteArray)
-    }.toDF()
+  def syntheticTiff(id: Long): MediaRow = {
+    val big = id % 2 == 1
+    val w = 2 + (id % 6)
+    val h = 1 + (id % 5)
+    val nPix = w * h
+    val out = new java.io.ByteArrayOutputStream()
+    def w16(v: Int): Unit =
+      if (big) { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
+      else { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
+    def w32(v: Long): Unit =
+      if (big) (3 to 0 by -1).foreach(k => out.write(((v >> (8 * k)) & 0xff).toInt))
+      else (0 until 4).foreach(k => out.write(((v >> (8 * k)) & 0xff).toInt))
+    out.write((if (big) "MM" else "II").getBytes("US-ASCII"))
+    w16(42)
+    w32(8 + nPix) // IFD sits after the strip
+    var j = 0L
+    while (j < nPix) { out.write(((id * 17 + j) % 256).toInt); j += 1 }
+    w16(8) // entry count
+    def entry(tag: Int, typ: Int, v: Long): Unit = {
+      w16(tag); w16(typ); w32(1L)
+      if (typ == 3) { w16(v.toInt); w16(0) } else w32(v)
+    }
+    entry(256, 4, w) // ImageWidth
+    entry(257, 4, h) // ImageLength
+    entry(258, 3, 8) // BitsPerSample
+    entry(259, 3, 1) // Compression: none
+    entry(262, 3, 1) // Photometric: BlackIsZero
+    entry(273, 4, 8) // StripOffsets
+    entry(278, 4, h) // RowsPerStrip
+    entry(279, 4, nPix) // StripByteCounts
+    w32(0L) // no next IFD
+    MediaRow(id, "image/tiff", out.toByteArray)
   }
 }

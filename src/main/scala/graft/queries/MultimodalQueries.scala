@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.QueryBuilder.scan
 import graft.ops.{ModelFormats, Multimodal}
+import graft.ops.Multimodal.MediaRow
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal plumbing queries: binary payload ingest, stub decode via a
   * typed mapPartitions pipeline, frame sampling. Payloads here are UTF-8
@@ -18,8 +20,8 @@ object MultimodalQueries {
     // projection only (the driver's pandas compare can't sort ndarray
     // cells); the typed Array[Double] pipeline runs intact upstream.
     "q_multimodal_features" -> ((s: SparkSession, d: String) => {
-      val feats = Multimodal.extractFeatures(
-        Multimodal.asMedia(scan(s, d, "documents"), "doc_id", "text"))
+      val feats = Multimodal.decode(
+        Multimodal.asMedia(scan(s, d, "documents"), "doc_id", "text"))(Multimodal.decodeStub)
       val embCols = (0 until 8).map(i => col("embedding")(i).as(s"e$i"))
       feats.select(col("media_id") +: col("mime") +: col("n_bytes") +:
           col("content_hash") +: embCols: _*)
@@ -65,11 +67,7 @@ object MultimodalQueries {
     // recomputes dimensions and exact channel sums from the same formula
     // WITHOUT parsing — so a parser bug (offset, comment handling,
     // channel order) can't be mirrored
-    "q_multimodal_ppm" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractImageStats(
-        Multimodal.syntheticPpm(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_ppm" -> decoded(Multimodal.syntheticPpm, Multimodal.decodePpm),
 
     // REAL image decode #2: deterministic 24-bit BI_RGB BMP fixtures
     // (bottom-up scanlines, nonzero stride padding, BGR order) parsed
@@ -78,11 +76,7 @@ object MultimodalQueries {
     // decoder cannot pass. The oracle recomputes dimensions, channel
     // sums and the top-row sum from the fixture formula WITHOUT
     // parsing a byte
-    "q_multimodal_bmp" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractBmpStats(
-        Multimodal.syntheticBmp(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_bmp" -> decoded(Multimodal.syntheticBmp, Multimodal.decodeBmp),
 
     // REAL image decode #3: QOI (qoiformat.org) — fixtures written by a
     // genuine greedy QOI ENCODER (run/index/diff/luma/rgb op selection
@@ -92,33 +86,21 @@ object MultimodalQueries {
     // wsum = Σ p·(r+g+b) witnesses pixel POSITIONS, which a mis-replayed
     // run/index stream shifts even when totals survive. Oracle is the
     // analytic formula — no byte is parsed there
-    "q_multimodal_qoi" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractQoiStats(
-        Multimodal.syntheticQoi(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_qoi" -> decoded(Multimodal.syntheticQoi, Multimodal.decodeQoi),
 
     // REAL image decode #4: binary PBM (netpbm P4) — the packed-BIT
     // format: MSB-first bit raster with don't-care row padding the
     // fixture poisons with 1s, so a decoder that reads past `w` bits
     // per row cannot pass. Oracle recomputes the black census from the
     // (id + 3x + 7y) mod 5 formula WITHOUT touching a byte
-    "q_multimodal_pbm" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractPbmStats(
-        Multimodal.syntheticPbm(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_pbm" -> decoded(Multimodal.syntheticPbm, Multimodal.decodePbm),
 
     // REAL music decode: Standard MIDI Files walked by the genuine
     // VLQ/event parser (multi-byte delta-times, note-on/off, meta
     // end-of-track, exact declared-length framing check). total_ticks
     // witnesses every VLQ continuation bit; the oracle sums the
     // fixture formulas WITHOUT parsing a byte
-    "q_multimodal_midi" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractMidiStats(
-        Multimodal.syntheticMidi(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_midi" -> decoded(Multimodal.syntheticMidi, Multimodal.decodeMidi),
 
     // REAL 3D decode: Wavefront OBJ triangle-fan meshes parsed by the
     // genuine line walker (comments, vn skip, index-suffix stripping,
@@ -126,11 +108,7 @@ object MultimodalQueries {
     // characteristic V−E+F = 1 is the topology witness; the oracle
     // computes counts and coordinate sums from the fan formula WITHOUT
     // parsing a line
-    "q_multimodal_obj" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractObjStats(
-        Multimodal.syntheticObj(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_obj" -> decoded(Multimodal.syntheticObj, Multimodal.decodeObj),
 
     // REAL audio codec #2: G.711 µ-law companding (ITU-T telephony) —
     // fixtures companded by the genuine encoder (clip → bias → MSB
@@ -138,11 +116,7 @@ object MultimodalQueries {
     // expander. The oracle reproduces expand(compress(s)) in closed-
     // form CASE/integer arithmetic from the analytic sample formula —
     // the companded bytes exist only in the binary
-    "q_multimodal_ulaw" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractUlawStats(
-        Multimodal.syntheticUlaw(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_ulaw" -> decoded(Multimodal.syntheticUlaw, Multimodal.decodeUlaw),
 
     // REAL container decode: TFRecord framing (the de-facto training-
     // shard format) — u64 length + masked-CRC32C of the length bytes +
@@ -151,11 +125,7 @@ object MultimodalQueries {
     // wsum witnesses record POSITIONS, so a mis-sized walk can't pass;
     // the oracle recomputes counts and sums from the fixture formula
     // WITHOUT parsing a byte (the CRCs exist only in the binary)
-    "q_multimodal_tfrecord" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractTfRecordStats(
-        Multimodal.syntheticTfRecord(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_tfrecord" -> decoded(Multimodal.syntheticTfRecord, Multimodal.decodeTfRecord),
 
     // REAL audio decode end-to-end: deterministic RIFF/WAV 16-bit PCM
     // fixtures (fmt + junk LIST chunk + data, analytic sample formula)
@@ -163,11 +133,7 @@ object MultimodalQueries {
     // the oracle recomputes format fields and exact per-channel sums
     // from the same formula WITHOUT parsing — a parser bug (endianness,
     // chunk skip, channel interleave) can't be mirrored
-    "q_multimodal_wav" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractWavStats(
-        Multimodal.syntheticWav(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_wav" -> decoded(Multimodal.syntheticWav, Multimodal.decodeWav),
 
     // REAL image-metadata decode: deterministic JPEG marker streams
     // (JFIF APP0 + 1–2 variable-length COM segments + SOF0/SOF2) parsed
@@ -176,11 +142,7 @@ object MultimodalQueries {
     // real ingest runs without decoding entropy data; the oracle
     // recomputes dimensions/flags from the fixture formula WITHOUT
     // parsing a byte
-    "q_multimodal_jpeg" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractJpegDims(
-        Multimodal.syntheticJpeg(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_jpeg" -> decoded(Multimodal.syntheticJpeg, Multimodal.decodeJpegHeader),
 
     // PERCEPTUAL HASH over decoded rasters: real byte-level P6 parse →
     // 60-bit dHash (11×6 nearest-neighbor grid, adjacent-brightness
@@ -190,8 +152,8 @@ object MultimodalQueries {
     // WITHOUT parsing a byte, so a parser/sampling/bit-order bug cannot
     // be mirrored
     "q_multimodal_phash" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractPpmPhash(
-        Multimodal.syntheticPpmPairs(scan(s, d, "documents"), "doc_id"))
+      Multimodal.decode(Multimodal.syntheticPpmPairs(scan(s, d, "documents"), "doc_id"))(
+        Multimodal.decodePpmPhash)
         .orderBy(col("media_id"))
     }),
 
@@ -201,10 +163,7 @@ object MultimodalQueries {
     // band) — candidates are Σ(N_block²)/2^15, output is linear in the
     // planted twins. The media twin of q_dedup_simhash_blocked
     "q_multimodal_neardup" -> ((s: SparkSession, d: String) => {
-      Multimodal.phashPairs(
-        Multimodal.extractPpmPhashBanded(
-          Multimodal.syntheticPpmPairs(scan(s, d, "documents"), "doc_id")))
-        .orderBy(col("media_a"), col("media_b"))
+      phashPairs(s, d).orderBy(col("media_a"), col("media_b"))
     }),
 
     // AUDIO PERCEPTUAL FINGERPRINT over decoded PCM: real RIFF walk →
@@ -213,8 +172,8 @@ object MultimodalQueries {
     // (Haitsma–Kalker shape). Oracle recomputes every bit from the
     // analytic sample formula WITHOUT parsing a byte
     "q_multimodal_afp" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractWavAfp(
-        Multimodal.syntheticWavPairs(scan(s, d, "documents"), "doc_id"))
+      Multimodal.decode(Multimodal.syntheticWavPairs(scan(s, d, "documents"), "doc_id"))(
+        Multimodal.decodeWavAfp)
         .orderBy(col("media_id"))
     }),
 
@@ -223,9 +182,10 @@ object MultimodalQueries {
     // pre-partitioned on (n_samples, low-band); planted twins keep the
     // output linear. The audio twin of q_multimodal_neardup
     "q_multimodal_afp_pairs" -> ((s: SparkSession, d: String) => {
-      Multimodal.afpPairs(
-        Multimodal.extractWavAfpBanded(
-          Multimodal.syntheticWavPairs(scan(s, d, "documents"), "doc_id")))
+      Multimodal.nearDupPairs(
+        Multimodal.decode(Multimodal.syntheticWavPairs(scan(s, d, "documents"), "doc_id"))(
+          Multimodal.decodeWavAfpBanded),
+        "afp", Seq("n_samples", "band"))
         .orderBy(col("media_a"), col("media_b"))
     }),
 
@@ -234,9 +194,7 @@ object MultimodalQueries {
     // the text tier runs in q_dedup_clusters) and censused per cluster.
     // Pairs → clusters → keep-one is the complete media-dedup loop
     "q_multimodal_dedup" -> ((s: SparkSession, d: String) => {
-      val pairs = Multimodal.phashPairs(
-        Multimodal.extractPpmPhashBanded(
-          Multimodal.syntheticPpmPairs(scan(s, d, "documents"), "doc_id")))
+      val pairs = phashPairs(s, d)
         .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
       graft.ops.Dedup.connectedComponents(pairs)
         .groupBy(col("cluster"))
@@ -250,11 +208,7 @@ object MultimodalQueries {
     // length-prefixed block parser (Multimodal.decodeGif) — the frame
     // census a video ingest runs WITHOUT decoding rasters; the oracle
     // recomputes frames/dims/delays from the fixture formula
-    "q_multimodal_gif" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractGifStats(
-        Multimodal.syntheticGif(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_gif" -> decoded(Multimodal.syntheticGif, Multimodal.decodeGif),
 
     // REAL compressed-raster decode: deterministic 8-bit grayscale PNGs
     // (multi-IDAT, per-chunk CRC-32, scanline filters cycling through
@@ -264,11 +218,7 @@ object MultimodalQueries {
     // dimensions, raster sum, brightness census, and the per-filter
     // scanline counts from the fixture formula WITHOUT touching a byte,
     // so a walk/inflate/unfilter bug cannot be mirrored
-    "q_multimodal_png" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractPngStats(
-        Multimodal.syntheticPng(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_png" -> decoded(Multimodal.syntheticPng, Multimodal.decodePng),
 
     // REAL archive-container decode: deterministic USTAR shards (the
     // WebDataset layout LLM multimodal pipelines actually use) walked
@@ -278,11 +228,7 @@ object MultimodalQueries {
     // required; the oracle recomputes every stat (member sizes, body
     // byte sums, the 512-padding archive length) from the fixture
     // formula WITHOUT touching a byte
-    "q_multimodal_tar" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractTarStats(
-        Multimodal.syntheticTar(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_tar" -> decoded(Multimodal.syntheticTar, Multimodal.decodeTar),
 
     // REAL MP3 FRAME WALK — 18th container format and the first
     // SYNC-WORD stream (every prior walker had a length-prefixed or
@@ -292,11 +238,7 @@ object MultimodalQueries {
     // syncsafe-size skip (7 bits per byte — a naive u32 read overshoots
     // whenever any size byte ≥ 0x80). Decoder reads the real ISO tables;
     // oracle replays the fixture formula
-    "q_multimodal_mp3" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractMp3Stats(
-        Multimodal.syntheticMp3(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_mp3" -> decoded(Multimodal.syntheticMp3, Multimodal.decodeMp3),
 
     // REAL ZIP DECODE — 17th container format, second archive walker:
     // EOCD backward scan, central directory walk with local-header
@@ -304,11 +246,7 @@ object MultimodalQueries {
     // Inflater) verified against the directory CRC-32s; output fields
     // are exactly the formula-replayable ones (deflate sizes depend on
     // the compressor, so they never appear)
-    "q_multimodal_zip" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractZipStats(
-        Multimodal.syntheticZip(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_zip" -> decoded(Multimodal.syntheticZip, Multimodal.decodeZip),
 
     // REAL WARC DECODE — 19th container format and the entry point of
     // every crawl-based LLM pipeline (Common Crawl is WARC): per-record
@@ -317,11 +255,7 @@ object MultimodalQueries {
     // response-record census with the HTTP head/payload split (the
     // payload byte sum proves the split point). Oracle replays the
     // fixture formula without parsing a byte
-    "q_multimodal_warc" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractWarcStats(
-        Multimodal.syntheticWarc(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_warc" -> decoded(Multimodal.syntheticWarc, Multimodal.decodeWarc),
 
     // END-TO-END CRAWL FUNNEL — the composition a Common-Crawl-shaped
     // ingest actually runs, in one registry entry: verified WARC walk →
@@ -333,11 +267,13 @@ object MultimodalQueries {
     // only response 404'd keep a zero row). Oracle replays the formulas
     "q_crawl_funnel" -> ((s: SparkSession, d: String) => {
       import graft.ops.CacheScope.ScopedPersist
-      val warc = Multimodal.syntheticCrawlWarc(scan(s, d, "documents"), "doc_id")
+      val warc = Multimodal.fixtures(scan(s, d, "documents"), "doc_id")(
+        Multimodal.syntheticCrawlWarc)
         .scopedPersist() // feeds the stats walk AND the payload walk
-      val stats = Multimodal.extractWarcStats(warc)
+      val stats = Multimodal.decode(warc)(Multimodal.decodeWarc)
         .select(col("media_id"), col("n_members").as("n_records"), col("n_ok"))
-      val pages = Multimodal.extractHtmlStats(Multimodal.extractWarcResponses(warc))
+      val pages = Multimodal.decode(Multimodal.decode(warc)(Multimodal.decodeWarcResponses))(
+        Multimodal.decodeHtml)
       val pcensus = pages.groupBy(col("media_id"))
         .agg(count(lit(1)).as("n_parsed"),
           sum(col("text_chars")).as("text_chars"),
@@ -357,8 +293,8 @@ object MultimodalQueries {
     // plain Spark groupBys — PageRank's input shape straight off the
     // markup walker. Oracle rebuilds the edge list from the formula
     "q_multimodal_links" -> ((s: SparkSession, d: String) => {
-      val links = Multimodal.extractHtmlLinks(
-        Multimodal.syntheticHtmlLinks(scan(s, d, "documents"), "doc_id"))
+      val links = Multimodal.decode(Multimodal.fixtures(scan(s, d, "documents"), "doc_id")(
+        Multimodal.syntheticHtmlLinks))(Multimodal.decodeHtmlLinks)
       val edges = links.select(col("media_id").as("src"),
         regexp_extract(col("href"), "/doc/([0-9]+)", 1).cast("long").as("dst"))
       edges.groupBy(col("dst"))
@@ -375,22 +311,14 @@ object MultimodalQueries {
     // access-decision semantics (most specific group, NO fallback
     // merge, longest-path match, Allow wins ties) evaluated on a fixed
     // probe set. Oracle replays the analytic decisions
-    "q_multimodal_robots" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractRobotsStats(
-        Multimodal.syntheticRobots(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_robots" -> decoded(Multimodal.syntheticRobots, Multimodal.decodeRobots),
 
     // REAL HTML TOKENIZE — 21st format, the step between the WARC
     // response payload and the text tier: character-level markup walk
     // with a real element stack (no regex), raw-text script/style skip
     // per the parsing spec, entity decode, visible-text volume, max
     // nesting depth. Oracle replays the fixture formula
-    "q_multimodal_html" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractHtmlStats(
-        Multimodal.syntheticHtml(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_html" -> decoded(Multimodal.syntheticHtml, Multimodal.decodeHtml),
 
     // REAL PDF DECODE — 20th container format, the dominant document-
     // corpus format: classic xref-table walk (20-byte entries, offsets
@@ -399,11 +327,7 @@ object MultimodalQueries {
     // boundary, Tj/TJ text-op census with literal byte counts — the
     // extraction-volume triage a text pipeline runs before committing
     // to full extraction. Oracle replays the fixture formula
-    "q_multimodal_pdf" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractPdfStats(
-        Multimodal.syntheticPdf(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_pdf" -> decoded(Multimodal.syntheticPdf, Multimodal.decodePdf),
 
     // REAL SAFETENSORS DECODE — 23rd format, the HuggingFace weight
     // container a model registry ingests: u64 header length, JSON
@@ -411,22 +335,14 @@ object MultimodalQueries {
     // must cover the data section exactly) VERIFIED per file; dtype
     // census + exact parameter/byte mass + raw-data byte sum. Oracle
     // replays the fixture formula without parsing a byte
-    "q_multimodal_safetensors" -> ((s: SparkSession, d: String) => {
-      ModelFormats.extractSafetensorsStats(
-        ModelFormats.syntheticSafetensors(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_safetensors" -> decoded(ModelFormats.syntheticSafetensors, ModelFormats.decodeSafetensors),
 
     // REAL NPY DECODE — 24th format, the NumPy array file embeddings
     // and labels ship in: magic/version/u16 header length, Python-dict
     // header parse (descr, fortran_order, shape tuple), 64-alignment
     // and total-length validation, exact little-endian i32 element sum
     // (the endianness witness). Oracle replays the fixture formula
-    "q_multimodal_npy" -> ((s: SparkSession, d: String) => {
-      ModelFormats.extractNpyStats(
-        ModelFormats.syntheticNpy(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_npy" -> decoded(ModelFormats.syntheticNpy, ModelFormats.decodeNpy),
 
     // REAL GGUF DECODE — 25th format, the llama.cpp model container:
     // typed metadata-KV walk (string/u32/u64/i32-array), tensor infos
@@ -434,11 +350,7 @@ object MultimodalQueries {
     // 32-aligned running offset, data byte sum over the real tensor
     // spans (padding excluded — the alignment witness). Oracle replays
     // the fixture formula including the alignment arithmetic
-    "q_multimodal_gguf" -> ((s: SparkSession, d: String) => {
-      ModelFormats.extractGgufStats(
-        ModelFormats.syntheticGguf(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_gguf" -> decoded(ModelFormats.syntheticGguf, ModelFormats.decodeGguf),
 
     // NPZ COMPOSITION — NumPy archives as they actually ship
     // (embeddings/labels as .npz = NPY members inside a ZIP): the
@@ -448,9 +360,9 @@ object MultimodalQueries {
     // is a plain groupBy — two real walkers composed through one
     // mapPartitions chain. Oracle replays both fixture formulas
     "q_multimodal_npz" -> ((s: SparkSession, d: String) => {
-      val payloads = Multimodal.extractZipPayloads(
-        ModelFormats.syntheticNpz(scan(s, d, "documents"), "doc_id"))
-      ModelFormats.extractNpyStats(payloads)
+      val payloads = Multimodal.decode(Multimodal.fixtures(scan(s, d, "documents"), "doc_id")(
+        ModelFormats.syntheticNpz))(Multimodal.decodeZipPayloads)
+      Multimodal.decode(payloads)(ModelFormats.decodeNpy)
         .groupBy(col("media_id"))
         .agg(count(lit(1)).cast("int").as("n_arrays"),
           sum(col("n_elems")).as("n_elems"),
@@ -465,11 +377,7 @@ object MultimodalQueries {
     // walk (SHORT/LONG value widths), baseline grayscale tags, strip
     // bounds verified, exact pixel-byte sum (the endianness witness).
     // Oracle replays the fixture formula
-    "q_multimodal_tiff" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractTiffStats(
-        Multimodal.syntheticTiff(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_tiff" -> decoded(Multimodal.syntheticTiff, Multimodal.decodeTiff),
 
     // REAL PROTOBUF tf.Example DECODE — 26th format, completing the
     // TFRecord story (q_multimodal_tfrecord walks the CRC32C framing;
@@ -478,11 +386,7 @@ object MultimodalQueries {
     // int64/float lists — census by value kind with exact sum
     // witnesses (floats are fixture half-integers, summed as 2v).
     // Oracle replays the fixture formula
-    "q_multimodal_tfexample" -> ((s: SparkSession, d: String) => {
-      ModelFormats.extractTfExampleStats(
-        ModelFormats.syntheticTfExample(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_tfexample" -> decoded(ModelFormats.syntheticTfExample, ModelFormats.decodeTfExample),
 
     // WEBDATASET-OVER-ZIP: the zip walker's member RELATION feeding the
     // same sample-assembly groupBy as the tar variant — shards come in
@@ -490,8 +394,8 @@ object MultimodalQueries {
     // deliberately missing from the fixture) must find the incomplete
     // sample regardless of which archive carried it
     "q_multimodal_zipwds" -> ((s: SparkSession, d: String) => {
-      val members = Multimodal.extractZipMembers(
-        Multimodal.syntheticZipWds(scan(s, d, "documents"), "doc_id"))
+      val members = Multimodal.decode(Multimodal.fixtures(scan(s, d, "documents"), "doc_id")(
+        Multimodal.syntheticZipWds))(Multimodal.decodeZipMembers)
         .withColumn("skey", regexp_extract(col("name"), "sample([0-9]+)\\.", 1))
         .withColumn("ext", regexp_extract(col("name"), "\\.([a-z]+)$", 1))
       members.groupBy(col("media_id"), col("skey"))
@@ -514,8 +418,8 @@ object MultimodalQueries {
     // job is to find it. Census per shard: samples, complete,
     // incomplete, per-extension byte mass
     "q_multimodal_wds" -> ((s: SparkSession, d: String) => {
-      val members = Multimodal.extractTarMembers(
-        Multimodal.syntheticWds(scan(s, d, "documents"), "doc_id"))
+      val members = Multimodal.decode(Multimodal.fixtures(scan(s, d, "documents"), "doc_id")(
+        Multimodal.syntheticWds))(Multimodal.decodeTarMembers)
         .withColumn("skey", regexp_extract(col("name"), "sample([0-9]+)\\.", 1))
         .withColumn("ext", regexp_extract(col("name"), "\\.([a-z]+)$", 1))
       members.groupBy(col("media_id"), col("skey"))
@@ -536,11 +440,7 @@ object MultimodalQueries {
     // speech duration, text mass, max silence gap); the oracle
     // recomputes everything from the fixture formula, text lengths
     // included, via decimal-digit-count arithmetic
-    "q_multimodal_srt" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractSrtStats(
-        Multimodal.syntheticSrt(scan(s, d, "documents"), "doc_id"))
-        .orderBy(col("media_id"))
-    }),
+    "q_multimodal_srt" -> decoded(Multimodal.syntheticSrt, Multimodal.decodeSrt),
 
     // frame sampling: 16-byte frames, every 4th
     "q_multimodal_frames" -> ((s: SparkSession, d: String) => {
@@ -564,12 +464,29 @@ object MultimodalQueries {
     // in-plan integer arithmetic. The oracle recomputes the whole
     // relation from the fixture formula WITHOUT parsing a byte
     "q_multimodal_mp4" -> ((s: SparkSession, d: String) => {
-      Multimodal.extractMp4Tracks(
-        Multimodal.syntheticMp4(scan(s, d, "documents"), "doc_id"))
+      Multimodal.decode(Multimodal.fixtures(scan(s, d, "documents"), "doc_id")(
+        Multimodal.syntheticMp4))(Multimodal.decodeMp4)
         .withColumn("dur_ms", expr("md_duration * 1000 div md_timescale"))
         .orderBy(col("media_id"), col("track_id"))
     })
   )
+
+  /** The fixture → decode → order-by-media_id shape most multimodal
+    * queries share: one fixture row per document id, one decoder.
+    */
+  private def decoded[T <: Product : TypeTag](fixture: Long => MediaRow,
+      decoder: Iterator[MediaRow] => Iterator[T]): (SparkSession, String) => DataFrame =
+    (s, d) => Multimodal.decode(Multimodal.fixtures(scan(s, d, "documents"), "doc_id")(fixture))(
+      decoder).orderBy(col("media_id"))
+
+  /** Image near-dup candidate pairs over the banded phash fixtures —
+    * shared by q_multimodal_neardup and q_multimodal_dedup.
+    */
+  private def phashPairs(s: SparkSession, d: String): DataFrame =
+    Multimodal.nearDupPairs(
+      Multimodal.decode(Multimodal.syntheticPpmPairs(scan(s, d, "documents"), "doc_id"))(
+        Multimodal.decodePpmPhashBanded),
+      "phash", Seq("width", "height", "band"))
 
   /** Fixture-formula byte value for the phash fixture at raster offset
     * `j` (SQL, over columns id/tw/w): row 0 encodes id bits as 0/255

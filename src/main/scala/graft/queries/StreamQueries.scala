@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamOps.StagedWrite
 import graft.ops.ExactAgg.sqlDsum
+import graft.ops.Multimodal
 import graft.streaming.StreamOps
 
 /** Streaming queries (run to completion over the bounded events table)
@@ -1129,13 +1130,13 @@ object StreamQueries {
       docs.repartition(3, col("doc_id")).stageTo(stage)
       val schema = docs.schema
       StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        val warc = graft.ops.Multimodal.syntheticCrawlWarc(batch, "doc_id")
+        val warc = Multimodal.fixtures(batch, "doc_id")(Multimodal.syntheticCrawlWarc)
           .persist()
         try {
-          val stats = graft.ops.Multimodal.extractWarcStats(warc)
+          val stats = Multimodal.decode(warc)(Multimodal.decodeWarc)
             .select(col("media_id"), col("n_members").as("n_records"), col("n_ok"))
-          val pages = graft.ops.Multimodal.extractHtmlStats(
-            graft.ops.Multimodal.extractWarcResponses(warc))
+          val pages = Multimodal.decode(Multimodal.decode(warc)(Multimodal.decodeWarcResponses))(
+            Multimodal.decodeHtml)
           val pcensus = pages.groupBy(col("media_id"))
             .agg(count(lit(1)).as("n_parsed"),
               sum(col("text_chars")).as("text_chars"),

@@ -23,8 +23,8 @@ class CrawlSpec extends SparkSpec {
 
   test("response relation carries exactly the 200 payloads, parseable as HTML") {
     val df = Seq(6L).toDF("doc_id") // m = 3 pairs -> 2 OK pages
-    val warc = Multimodal.syntheticCrawlWarc(df, "doc_id")
-    val resp = Multimodal.extractWarcResponses(warc).as[MediaRow].collect()
+    val warc = Multimodal.fixtures(df, "doc_id")(Multimodal.syntheticCrawlWarc)
+    val resp = Multimodal.decode(warc)(Multimodal.decodeWarcResponses).as[MediaRow].collect()
     assert(resp.length == 2, s"expected 2 OK payloads, got ${resp.length}")
     resp.foreach { r =>
       val st = Multimodal.decodeHtml(Iterator(r)).next()
@@ -33,9 +33,7 @@ class CrawlSpec extends SparkSpec {
   }
 
   test("a corrupted archive fails the payload walk via delegated validation") {
-    val df = Seq(3L).toDF("doc_id")
-    val payload = Multimodal.syntheticCrawlWarc(df, "doc_id")
-      .as[MediaRow].collect()(0).payload
+    val payload = Multimodal.syntheticCrawlWarc(3L).payload
     payload(0) = 0x00 // gzip magic
     val e = intercept[IllegalArgumentException](
       Multimodal.decodeWarcResponses(

@@ -9,12 +9,7 @@ import graft.ops.Multimodal.MediaRow
   * unterminated comment/raw-text, unknown entity.
   */
 class HtmlSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def fixture(id: Long): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    Multimodal.syntheticHtml(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticHtml(id).payload
 
   private def decode(html: String) =
     Multimodal.decodeHtml(Iterator(MediaRow(1L, "text/html",

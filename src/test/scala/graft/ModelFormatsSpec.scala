@@ -10,14 +10,9 @@ import graft.ops.Multimodal.MediaRow
   * flips, malformed protobuf.
   */
 class ModelFormatsSpec extends SparkSpec {
-  import spark.implicits._
-
   private val ids = Seq(0L, 1L, 2L, 3L, 7L, 42L, 117L, 1234L)
 
-  private def fixture(id: Long, make: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    make(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long, make: Long => MediaRow): Array[Byte] = make(id).payload
 
   // ---------------- safetensors ----------------
 

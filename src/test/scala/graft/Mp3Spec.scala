@@ -10,12 +10,7 @@ import graft.ops.Multimodal.MediaRow
   * reserved samplerate, truncated final frame, trailing garbage.
   */
 class Mp3Spec extends SparkSpec {
-  import spark.implicits._
-
-  private def fixture(id: Long): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    Multimodal.syntheticMp3(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticMp3(id).payload
 
   private def decode(payload: Array[Byte], id: Long = 1L) =
     Multimodal.decodeMp3(Iterator(MediaRow(id, "audio/mpeg", payload))).next()

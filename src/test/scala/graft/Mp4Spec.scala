@@ -12,11 +12,7 @@ import graft.ops.Multimodal.{MediaRow, Mp4Track}
   */
 class Mp4Spec extends SparkSpec {
 
-  private def fixture(id: Long): Array[Byte] = {
-    import spark.implicits._
-    Multimodal.syntheticMp4(
-      Seq(id).toDF("doc_id"), "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticMp4(id).payload
 
   private def decode1(payload: Array[Byte], id: Long = 99L): Seq[Mp4Track] =
     Multimodal.decodeMp4(Iterator(MediaRow(id, "video/mp4", payload))).toSeq

@@ -80,7 +80,8 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.Multimodal.WavStats
     val ids = Seq(0L, 1L, 2L, 7L, 31L).toDF("id")
-    val stats = Multimodal.extractWavStats(Multimodal.syntheticWav(ids, "id"))
+    val stats = Multimodal.decode(Multimodal.fixtures(ids, "id")(Multimodal.syntheticWav))(
+      Multimodal.decodeWav)
       .as[WavStats].collect().sortBy(_.media_id)
     stats.foreach { s =>
       val id = s.media_id
@@ -96,7 +97,8 @@ class MultimodalSpec extends SparkSpec {
   test("syntheticPpm fixtures round-trip through the real parser") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 12L, 39L).toDF("id")
-    val stats = Multimodal.extractImageStats(Multimodal.syntheticPpm(ids, "id"))
+    val stats = Multimodal.decode(Multimodal.fixtures(ids, "id")(Multimodal.syntheticPpm))(
+      Multimodal.decodePpm)
       .as[ImageStats].collect().sortBy(_.media_id)
     stats.foreach { s =>
       val id = s.media_id
@@ -135,7 +137,7 @@ class MultimodalSpec extends SparkSpec {
     val ids = (0L until 120L).toDF("id")
     val media = Multimodal.syntheticPpmPairs(ids, "id")
     import graft.ops.Multimodal.PpmPhashB
-    val hashes = Multimodal.extractPpmPhashBanded(media).as[PpmPhashB]
+    val hashes = Multimodal.decode(media)(Multimodal.decodePpmPhashBanded).as[PpmPhashB]
       .collect().map(p => p.media_id -> p).toMap
     // the content band is INJECTIVE on distinct sources here: row 0
     // encodes the id stripes, so only a base and its twin share a band
@@ -151,7 +153,8 @@ class MultimodalSpec extends SparkSpec {
       if a.band == b.band
       d = java.lang.Long.bitCount(a.phash ^ b.phash) if d <= 3
     } yield (a.media_id, b.media_id, d)).toSet
-    val got = Multimodal.phashPairs(Multimodal.extractPpmPhashBanded(media))
+    val got = Multimodal.nearDupPairs(Multimodal.decode(media)(Multimodal.decodePpmPhashBanded),
+        "phash", Seq("width", "height", "band"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == expected)
     // the construction plants recoverable twins: most (2id, 2id+1) pairs
@@ -167,7 +170,7 @@ class MultimodalSpec extends SparkSpec {
     val ids = (0L until 120L).toDF("id")
     val media = Multimodal.syntheticWavPairs(ids, "id")
     import graft.ops.Multimodal.WavAfpB
-    val hashes = Multimodal.extractWavAfpBanded(media).as[WavAfpB]
+    val hashes = Multimodal.decode(media)(Multimodal.decodeWavAfpBanded).as[WavAfpB]
       .collect().map(a => a.media_id -> a).toMap
     // prefix-energy band injectivity on distinct sources (twin shares it)
     hashes.values.groupBy(a => (a.n_samples, a.band)).foreach { case (_, g) =>
@@ -180,7 +183,8 @@ class MultimodalSpec extends SparkSpec {
       if a.band == b.band
       d = java.lang.Long.bitCount(a.afp ^ b.afp) if d <= 3
     } yield (a.media_id, b.media_id, d)).toSet
-    val got = Multimodal.afpPairs(Multimodal.extractWavAfpBanded(media))
+    val got = Multimodal.nearDupPairs(Multimodal.decode(media)(Multimodal.decodeWavAfpBanded),
+        "afp", Seq("n_samples", "band"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == expected)
     // the perturbation skips segments 0-10, so every twin shares its
@@ -309,8 +313,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeTfRecord: valid shard round-trips; corruption fails loudly") {
     import spark.implicits._
     // the synthetic encoder writes real masked CRC32C; decode must agree
-    val media = Multimodal.syntheticTfRecord(
-      Seq(5L, 6L).toDF("doc_id"), "doc_id").as[Multimodal.MediaRow].collect()
+    val media = Seq(5L, 6L).map(Multimodal.syntheticTfRecord)
     val ok = Multimodal.decodeTfRecord(media.iterator).toSeq
     // id=5: n=2, lens = 5+(5+0)%11=10, 5+(6)%11=11 → total 21
     assert(ok.head.media_id == 5L && ok.head.n_records == 2L && ok.head.total_len == 21L)
@@ -431,7 +434,8 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.Multimodal.JpegDims
     val ids = Seq(0L, 1L, 2L, 3L, 6L, 245L).toDF("id")
-    val dims = Multimodal.extractJpegDims(Multimodal.syntheticJpeg(ids, "id"))
+    val dims = Multimodal.decode(Multimodal.fixtures(ids, "id")(Multimodal.syntheticJpeg))(
+      Multimodal.decodeJpegHeader)
       .as[JpegDims].collect().sortBy(_.media_id)
     dims.foreach { j =>
       val id = j.media_id
@@ -446,7 +450,8 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.Multimodal.PngStats
     val ids = Seq(0L, 1L, 4L, 9L, 31L, 62L).toDF("id")
-    val stats = Multimodal.extractPngStats(Multimodal.syntheticPng(ids, "id"))
+    val stats = Multimodal.decode(Multimodal.fixtures(ids, "id")(Multimodal.syntheticPng))(
+      Multimodal.decodePng)
       .as[PngStats].collect().sortBy(_.media_id)
     stats.foreach { p =>
       val id = p.media_id
@@ -488,8 +493,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeTar: round-trip + malformed payloads fail loudly") {
     import spark.implicits._
     import graft.ops.Multimodal.TarStats
-    val good = Multimodal.syntheticTar(Seq(7L).toDF("id"), "id")
-      .as[MediaRow].collect().head.payload
+    val good = Multimodal.syntheticTar(7L).payload
     val st = Multimodal.decodeTar(Iterator(MediaRow(7L, "application/x-tar", good))).next()
     // id=7: m=4 members, sizes 10+(7+13i)%300 for i<4 => 17,30,43,56
     assert(st.n_files == 4 && st.n_dirs == 1)
@@ -506,13 +510,22 @@ class MultimodalSpec extends SparkSpec {
     intercept[IllegalArgumentException] { // bad magic
       val c = good.clone(); c(257) = 'X'.toByte; bad(c)
     }
+    intercept[IllegalArgumentException] { // signed size -1100: the cursor would not move
+      val c = good.clone()
+      val h = 512 // first file member's header (block 0 is the directory entry)
+      "-0000002114".getBytes("US-ASCII").copyToArray(c, h + 124)
+      (h + 148 until h + 156).foreach(c(_) = ' ')
+      "%06o".format((h until h + 512).map(c(_) & 0xff).sum).getBytes("US-ASCII")
+        .copyToArray(c, h + 148)
+      c(h + 154) = 0
+      bad(c)
+    }
   }
 
   test("decodePng: malformed payloads fail loudly") {
     import spark.implicits._
     def row(b: Array[Byte]) = MediaRow(1L, "image/png", b)
-    val good = Multimodal.syntheticPng(Seq(5L).toDF("id"), "id")
-      .as[MediaRow].collect().head.payload
+    val good = Multimodal.syntheticPng(5L).payload
     intercept[IllegalArgumentException] { // bad signature
       Multimodal.decodePng(Iterator(row("nope".getBytes ++ good.drop(4)))).toSeq
     }

@@ -10,12 +10,7 @@ import graft.ops.Multimodal.MediaRow
   * unterminated literal string.
   */
 class PdfSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def fixture(id: Long): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    Multimodal.syntheticPdf(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticPdf(id).payload
 
   private def decode(payload: Array[Byte], id: Long = 1L) =
     Multimodal.decodePdf(Iterator(MediaRow(id, "application/pdf", payload))).next()

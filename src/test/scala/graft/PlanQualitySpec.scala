@@ -276,10 +276,12 @@ class PlanQualitySpec extends SparkSpec {
       .select(col("doc_id"), col("sh").as("w")).distinct()
     val cases = Seq(
       "ppJoin" -> Dedup.ppJoin(ppToks, 1, 2),
-      "phashPairs" -> Multimodal.phashPairs(
-        Multimodal.extractPpmPhashBanded(Multimodal.syntheticPpmPairs(docs, "doc_id"))),
-      "afpPairs" -> Multimodal.afpPairs(
-        Multimodal.extractWavAfpBanded(Multimodal.syntheticWavPairs(docs, "doc_id"))),
+      "phashPairs" -> Multimodal.nearDupPairs(
+        Multimodal.decode(Multimodal.syntheticPpmPairs(docs, "doc_id"))(
+          Multimodal.decodePpmPhashBanded), "phash", Seq("width", "height", "band")),
+      "afpPairs" -> Multimodal.nearDupPairs(
+        Multimodal.decode(Multimodal.syntheticWavPairs(docs, "doc_id"))(
+          Multimodal.decodeWavAfpBanded), "afp", Seq("n_samples", "band")),
       "labelPropagation" -> Graph.labelPropagation(
         scan(spark, sf001, "lineitem")
           .select((col("l_partkey") % 50).as("s1"), (col("l_suppkey") + 1000).as("s2"))

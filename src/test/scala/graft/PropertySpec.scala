@@ -149,7 +149,8 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     val ids = Seq.fill(40)(rnd.nextInt(100000).toLong).distinct.toDF("id")
     import graft.ops.Multimodal
-    val dims = Multimodal.extractJpegDims(Multimodal.syntheticJpeg(ids, "id"))
+    val dims = Multimodal.decode(Multimodal.fixtures(ids, "id")(Multimodal.syntheticJpeg))(
+      Multimodal.decodeJpegHeader)
       .as[Multimodal.JpegDims].collect()
     dims.foreach { j =>
       val id = j.media_id

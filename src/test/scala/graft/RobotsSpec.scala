@@ -9,12 +9,7 @@ import graft.ops.Multimodal.MediaRow
   * the loud failures — orphan rule, unknown directive, malformed line.
   */
 class RobotsSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def fixture(id: Long): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    Multimodal.syntheticRobots(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticRobots(id).payload
 
   private def decode(text: String) =
     Multimodal.decodeRobots(Iterator(MediaRow(1L, "text/plain",

@@ -9,12 +9,7 @@ import graft.ops.Multimodal.MediaRow
   * strips, strip overrun.
   */
 class TiffSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def fixture(id: Long): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    Multimodal.syntheticTiff(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticTiff(id).payload
 
   private def decode(b: Array[Byte], id: Long = 1L) =
     Multimodal.decodeTiff(Iterator(MediaRow(id, "image/tiff", b))).next()

@@ -10,12 +10,7 @@ import graft.ops.Multimodal.MediaRow
   * Content-Length, off-by-one record framing, unknown record type.
   */
 class WarcSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def fixture(id: Long): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    Multimodal.syntheticWarc(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticWarc(id).payload
 
   private def decode(payload: Array[Byte], id: Long = 1L) =
     Multimodal.decodeWarc(Iterator(MediaRow(id, "application/warc", payload))).next()
@@ -96,6 +91,16 @@ class WarcSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       decode(gzip(rec.getBytes("US-ASCII"))))
     assert(e.getMessage.contains("unknown WARC-Type"))
+  }
+
+  test("loud failure: HTTP head terminator straddling the record terminator") {
+    // the block's only CRLFCRLF is its own trailing CRLF plus the record
+    // terminator, so the payload would start past the block's end
+    val block = "HTTP/1.1 200 OK\r\n"
+    val rec = s"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: ${block.length}\r\n\r\n" +
+      block + "\r\n\r\n"
+    val e = intercept[IllegalArgumentException](decode(gzip(rec.getBytes("US-ASCII"))))
+    assert(e.getMessage.contains("no HTTP header terminator"))
   }
 
   test("single well-formed hand-built record decodes") {

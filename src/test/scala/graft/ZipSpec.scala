@@ -7,15 +7,10 @@ import graft.ops.Multimodal.MediaRow
 /** ZIP walker spec: round-trip against the fixture formulas (both the
   * stored and deflate paths), and the loud failures — garbled EOCD,
   * CRC corruption, local/central name mismatch, unsupported method,
-  * truncated archive.
+  * truncated archive, forged central-directory uncompressed size.
   */
 class ZipSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def fixture(id: Long): Array[Byte] = {
-    val df = Seq(id).toDF("doc_id")
-    Multimodal.syntheticZip(df, "doc_id").as[MediaRow].collect()(0).payload
-  }
+  private def fixture(id: Long): Array[Byte] = Multimodal.syntheticZip(id).payload
 
   private def decode(payload: Array[Byte], id: Long = 1L) =
     Multimodal.decodeZip(Iterator(MediaRow(id, "application/zip", payload))).next()
@@ -85,6 +80,28 @@ class ZipSpec extends SparkSpec {
     b(cd + 10) = 99
     val e = intercept[IllegalArgumentException](decode(b))
     assert(e.getMessage.contains("unsupported compression method"))
+  }
+
+  /** Patch the central-directory usize of the fixture's first deflated
+    * (method 8) entry; returns the patched archive.
+    */
+  private def forgeDeflatedUsize(b: Array[Byte], usize: Long): Array[Byte] = {
+    def u16(o: Int) = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
+    val e0 = b.length - 22
+    var cd = u16(e0 + 16) | (u16(e0 + 18) << 16)
+    while (u16(cd + 10) != 8) cd += 46 + u16(cd + 28) + u16(cd + 30) + u16(cd + 32)
+    (0 until 4).foreach(k => b(cd + 24 + k) = ((usize >>> (8 * k)) & 0xff).toByte)
+    b
+  }
+
+  test("loud failure: a forged usize >= 2^31 is rejected, not allocated") {
+    val e = intercept[IllegalArgumentException](decode(forgeDeflatedUsize(fixture(5L), 0xFFFFFFF0L)))
+    assert(e.getMessage.contains("uncompressed bytes"), e.getMessage)
+  }
+
+  test("loud failure: a forged usize just under 2^31 fails on what inflate produced") {
+    val e = intercept[IllegalArgumentException](decode(forgeDeflatedUsize(fixture(5L), 0x7FFFFFF0L)))
+    assert(e.getMessage.contains("inflate produced"), e.getMessage)
   }
 
   test("loud failure: truncated archive") {
