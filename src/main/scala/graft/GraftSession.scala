@@ -10,6 +10,15 @@ import org.apache.spark.sql.SparkSession
   * optimizer rules and top-k strategy are installed
   * (GraftExtensions): every session has all of them from its first
   * query, so no plan depends on which query ran first.
+  *
+  * It also replaces Hadoop's `file:` file systems (the `FileSystem` and
+  * the `FileContext` front end) with the fork-free ones in
+  * graft.engine.LocalFs: without the native Hadoop library the stock
+  * ones fork `chmod` for every file and directory a write creates and
+  * `readlink` for every checkpoint rename. The mode bits, the `.crc` checksum files
+  * and the bytes written are unchanged. Hadoop caches one `file:`
+  * FileSystem per JVM at its first use, so nothing may call
+  * `FileSystem.get` on `file:` before this builds the first session.
   */
 object GraftSession {
   def build(cpus: String, adaptive: Boolean = true): SparkSession = {
@@ -33,6 +42,10 @@ object GraftSession {
       // relies on ANSI sum-overflow semantics as its backstop
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.adaptive.enabled", adaptive.toString)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.engine.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.engine.ForkFreeLocalFs].getName)
       .getOrCreate()
     graft.functions.GraftExtensions.install(spark)
     spark.sparkContext.setLogLevel("WARN")

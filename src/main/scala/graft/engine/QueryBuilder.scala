@@ -151,9 +151,60 @@ object QueryBuilder {
       case _ => df
     }
 
-  /** Scan a named testdata table: `$dir/$table.parquet`. */
+  /** Scan a named testdata table: `$dir/$table.parquet`, a parquet file
+    * or a flat directory of part files, through [[readParquet]] (no
+    * Spark job at build time).
+    */
   def scan(spark: SparkSession, dir: String, table: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$dir/$table.parquet"))
+    normalizeTs(readParquet(spark, s"$dir/$table.parquet"))
+
+  /** `spark.read.parquet(path)` with the schema read on the driver.
+    *
+    * A schemaless parquet read infers the schema with a Spark job over
+    * the footers; on a small table that job is most of the scan's cost.
+    * Spark without summary files takes the schema of one data file and
+    * assumes the others agree, so this reads the footer of the
+    * name-sorted first data file (names starting `_` or `.` skipped) and
+    * converts it with Spark's own converter under the session's conf
+    * (`nanosAsLong` included). A missing path, a directory without data
+    * files, one with subdirectories (a partitioned table) or with
+    * summary files takes the plain read, with Spark's own errors and
+    * partition discovery.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def dataFile(st: FileStatus): Option[FileStatus] =
+      if (!st.isDirectory) Some(st)
+      else {
+        val kids = fs.listStatus(root).map(k => (k.getPath.getName, k))
+        val summary = Set("_metadata", "_common_metadata")
+        if (kids.exists { case (n, k) => k.isDirectory || summary(n) }) None
+        else kids.filterNot { case (n, _) => n.startsWith("_") || n.startsWith(".") }
+          .sortBy(_._1).headOption.map(_._2)
+      }
+    val file =
+      try dataFile(fs.getFileStatus(root))
+      catch { case _: java.io.FileNotFoundException => None }
+    file match {
+      case None => spark.read.parquet(path)
+      case Some(f) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+          HadoopReadOptions.builder(conf, f.getPath).withMetadataFilter(SKIP_ROW_GROUPS).build())
+        val footer = try reader.getFooter finally reader.close()
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Endpoint-resolved build: empty Connector.fields takes the
     * endpoint's defaultFields (reference src/index.ts:96-109 getEndpoint

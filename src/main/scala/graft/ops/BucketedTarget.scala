@@ -113,7 +113,11 @@ final class BucketedTarget(spark: SparkSession, path: String, numBuckets: Int,
   }
 
   private case class Meta(numBuckets: Int, keys: Seq[String],
-                          versionCols: Seq[String], schemaJson: String)
+                          versionCols: Seq[String], schemaJson: String) {
+    def schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
 
   // hand-rolled JSON (flat strings + one int) — no jackson dependency in
   // the hot path and the schema field is already JSON via StructType.json
@@ -163,12 +167,14 @@ final class BucketedTarget(spark: SparkSession, path: String, numBuckets: Int,
     * count so callers (and specs) can assert delta-proportionality.
     */
   def upsert(delta: DataFrame): BucketUpsertStats = {
-    if (readMeta().isEmpty) writeMeta(delta.schema.json) // pin the layout at first write
     // the layout meta pins the schema, so the base read below never needs
     // a footer-inference job (the stream merge-read discipline)
-    val pinnedSchema = readMeta().map(m =>
-      org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val pinnedSchema = readMeta() match {
+      case Some(m) => m.schema
+      case None => // pin the layout at first write
+        writeMeta(delta.schema.json)
+        delta.schema
+    }
     val d = delta.withColumn("__b", bucketExpr)
     d.persist()
     try {
@@ -181,7 +187,7 @@ final class BucketedTarget(spark: SparkSession, path: String, numBuckets: Int,
       val existing = touched.map(bucketDir).filter(fs.exists).map(_.toString)
       val base =
         if (existing.nonEmpty)
-          pinnedSchema.fold(spark.read)(spark.read.schema(_))
+          spark.read.schema(pinnedSchema)
             .parquet(existing.toSeq: _*).withColumn("__b", bucketExpr)
         else d.limit(0)
       // __b is a pure function of the keys, so adding it to the grouping
@@ -242,9 +248,7 @@ final class BucketedTarget(spark: SparkSession, path: String, numBuckets: Int,
             st.getPath.toString
         }.sorted
       else Array.empty[String]
-    val metaSchema = readMeta().map(m =>
-      org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val metaSchema = readMeta().map(_.schema)
     if (dirs.nonEmpty)
       // the pinned layout schema skips the footer-inference job
       metaSchema.fold(spark.read)(spark.read.schema(_)).parquet(dirs.toSeq: _*)

@@ -2872,8 +2872,17 @@ object Multimodal {
     *  - visible text chars counted post-decode — the extraction-volume
     *    number that decides whether the document is worth keeping.
     */
-  def decodeHtml(rows: Iterator[MediaRow]): Iterator[HtmlStats] = rows.map { r =>
+  def decodeHtml(rows: Iterator[MediaRow]): Iterator[HtmlStats] =
+    rows.map(r => htmlWalk(r)._1)
+
+  /** The one validated markup walk behind [[decodeHtml]] and
+    * [[decodeHtmlLinks]]: the census row plus every `<a ` open tag with
+    * its offset, in document order. Anchors inside comments,
+    * declarations and raw-text elements are not tags and are not listed.
+    */
+  private def htmlWalk(r: MediaRow): (HtmlStats, Seq[(Int, String)]) = {
     val s = new String(r.payload, java.nio.charset.StandardCharsets.UTF_8)
+    val anchors = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
     var i = 0
     var (nOpen, nClose, nSelf, nComments, nDecl, nEnt) = (0, 0, 0, 0, 0, 0)
     var (scriptBytes, textChars) = (0L, 0L)
@@ -2907,6 +2916,7 @@ object Multimodal {
           val name = (if (self) inner.dropRight(1) else inner)
             .takeWhile(ch => ch.isLetterOrDigit)
           require(name.nonEmpty, s"empty tag name at $i: media ${r.media_id}")
+          if (inner.startsWith("a ")) anchors += ((i, s.substring(i, e)))
           if (self) { nSelf += 1; i = e + 1 }
           else if (rawText(name)) {
             // raw-text element: content runs to the LITERAL close tag
@@ -2950,8 +2960,8 @@ object Multimodal {
     }
     require(stack.isEmpty,
       s"unclosed tags at EOF: ${stack.mkString(",")}: media ${r.media_id}")
-    HtmlStats(r.media_id, nOpen, nClose, nSelf, nComments, nDecl,
-      scriptBytes, nEnt, textChars, maxDepth)
+    (HtmlStats(r.media_id, nOpen, nClose, nSelf, nComments, nDecl,
+      scriptBytes, nEnt, textChars, maxDepth), anchors.toSeq)
   }
 
   /** Payload RELATION variant of [[decodeWarc]] — the member-relation
@@ -2991,9 +3001,8 @@ object Multimodal {
 
   /** Link RELATION variant of [[decodeHtml]] — the member-relation
     * pattern (decodeTarMembers/decodeZipMembers) on the markup walker:
-    * the full validated tokenize runs first (stack balance, raw-text
-    * rule, entity checks — by delegating to decodeHtml), then anchors
-    * are re-scanned for their `href` attribute and emitted one row per
+    * over the same validated walk (stack balance, raw-text rule, entity
+    * checks), each anchor tag's `href` attribute is emitted one row per
     * link, so the LINK GRAPH — the crawl frontier, PageRank input,
     * in-degree census — is plain Spark aggregation downstream, not
     * decoder logic. Anchors without an href fail loudly (the fixture
@@ -3001,22 +3010,14 @@ object Multimodal {
     */
   def decodeHtmlLinks(rows: Iterator[MediaRow]): Iterator[HtmlLink] =
     rows.flatMap { r =>
-      decodeHtml(Iterator(r)).foreach(_ => ()) // full validation pass
-      val s = new String(r.payload, java.nio.charset.StandardCharsets.UTF_8)
-      val out = scala.collection.mutable.ArrayBuffer.empty[HtmlLink]
-      var i = s.indexOf("<a ")
-      while (i >= 0) {
-        val e = s.indexOf('>', i)
-        val tag = s.substring(i, e)
+      htmlWalk(r)._2.map { case (i, tag) =>
         val hi = tag.indexOf("href=\"")
         require(hi >= 0, s"anchor without href at $i: media ${r.media_id}")
         val vs = hi + 6
         val ve = tag.indexOf('"', vs)
         require(ve > vs, s"unterminated href at $i: media ${r.media_id}")
-        out += HtmlLink(r.media_id, tag.substring(vs, ve))
-        i = s.indexOf("<a ", e)
+        HtmlLink(r.media_id, tag.substring(vs, ve))
       }
-      out.iterator
     }
 
   /** Deterministic linked-page fixture: page id carries m = 2 + id%5

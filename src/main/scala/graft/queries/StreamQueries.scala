@@ -133,7 +133,7 @@ object StreamQueries {
           .start()
         q.awaitTermination()
       }
-      s.read.parquet(out)
+      graft.engine.QueryBuilder.readParquet(s, out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), graft.ops.ExactAgg.dsum(col("value")).as("sum_value"))
         .orderBy(col("event_type"))

@@ -69,7 +69,7 @@ object StreamOps {
       if (!Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
         Files.createSymbolicLink(link, p)
     }
-    val staticSchema = spark.read.parquet(src.toString).schema
+    val staticSchema = graft.engine.QueryBuilder.readParquet(spark, src.toString).schema
     graft.engine.QueryBuilder.normalizeTs(
       spark.readStream
         .schema(staticSchema)
