@@ -1782,6 +1782,17 @@ object Multimodal {
       (0L +: sizes).max, contentSum, r.payload.length.toLong)
   }
 
+  /** `inf.inflate(buf)`, with corrupt deflate data (zlib's
+    * DataFormatException) failing as a named IllegalArgumentException
+    * about `what` (the archive member and media id). */
+  private def inflateOrFail(inf: java.util.zip.Inflater, buf: Array[Byte], what: String): Int =
+    try inf.inflate(buf)
+    catch {
+      case e: java.util.zip.DataFormatException =>
+        throw new IllegalArgumentException(
+          s"inflate failed on corrupt data in $what: ${e.getMessage}", e)
+    }
+
   /** One verified USTAR header: name, octal size, typeflag and the
     * offset of the member's first body byte.
     */
@@ -1794,10 +1805,14 @@ object Multimodal {
   private def tarEntries(r: MediaRow): Seq[TarEntry] = {
     val b = r.payload
     require(b.length % 512 == 0, s"tar not 512-aligned: media ${r.media_id}")
-    def octal(off: Int, len: Int): Long = {
+    def octal(off: Int, len: Int, field: String, member: String): Long = {
       val s = new String(b, off, len, "US-ASCII")
         .takeWhile(c => c != 0 && c != ' ')
-      if (s.isEmpty) 0L else java.lang.Long.parseLong(s, 8)
+      try if (s.isEmpty) 0L else java.lang.Long.parseLong(s, 8)
+      catch {
+        case e: NumberFormatException => throw new IllegalArgumentException(
+          s"bad octal $field '$s' in member '$member': media ${r.media_id}", e)
+      }
     }
     val out = Vector.newBuilder[TarEntry]
     var i = 0
@@ -1813,19 +1828,19 @@ object Multimodal {
       } else {
         require(new String(b, i + 257, 5, "US-ASCII") == "ustar",
           s"bad ustar magic at block ${i / 512}: media ${r.media_id}")
-        val stored = octal(i + 148, 8)
+        val name = new String(b, i, 100, "US-ASCII").takeWhile(_ != 0)
+        val stored = octal(i + 148, 8, "checksum", name)
         val actual = (i until i + 512).map { j =>
           if (j >= i + 148 && j < i + 156) ' '.toLong else (b(j) & 0xff).toLong
         }.sum
         require(stored == actual,
           s"header checksum $actual != $stored: media ${r.media_id}")
-        val size = octal(i + 124, 12)
+        val size = octal(i + 124, 12, "size", name)
         // a signed size moves the cursor back, or in [-1534, -1023] not at all
         require(size >= 0, s"negative member size $size: media ${r.media_id}")
         val end = i + 512 + (size + 511) / 512 * 512
         require(end <= b.length, s"member overruns archive: media ${r.media_id}")
-        out += TarEntry(new String(b, i, 100, "US-ASCII").takeWhile(_ != 0), size,
-          b(i + 156).toChar, i + 512)
+        out += TarEntry(name, size, b(i + 156).toChar, i + 512)
         i = end.toInt
       }
     }
@@ -2278,10 +2293,13 @@ object Multimodal {
     val cdOff = u32(e + 16)
     require(cdOff + cdSize <= e,
       s"central directory overruns EOCD: media ${r.media_id}")
+    val cdEnd = (cdOff + cdSize).toInt
     val out = Vector.newBuilder[ZipEntry]
     var i = cdOff.toInt
     var seen = 0
     while (seen < nEntries) {
+      require(i + 46 <= cdEnd,
+        s"central-directory entry $seen overruns the directory: media ${r.media_id}")
       require(u32(i) == 0x02014b50L,
         s"bad central-directory signature at entry $seen: media ${r.media_id}")
       val method = u16(i + 10)
@@ -2291,13 +2309,20 @@ object Multimodal {
       val nameLen = u16(i + 28)
       val extraLen = u16(i + 30)
       val commentLen = u16(i + 32)
-      val lho = u32(i + 42).toInt
+      require(i + 46 + nameLen <= cdEnd,
+        s"name of central-directory entry $seen overruns the directory: media ${r.media_id}")
       val name = new String(b, i + 46, nameLen, "UTF-8")
-      // local header cross-check
+      // local header cross-check: header and name lie before the directory
+      val lhoL = u32(i + 42)
+      require(lhoL + 30 <= cdOff,
+        s"local header offset $lhoL for $name outside the archive: media ${r.media_id}")
+      val lho = lhoL.toInt
       require(u32(lho) == 0x04034b50L,
         s"bad local signature for $name: media ${r.media_id}")
       val lNameLen = u16(lho + 26)
       val lExtraLen = u16(lho + 28)
+      require(lho + 30 + lNameLen <= cdOff,
+        s"local name for $name overruns the archive: media ${r.media_id}")
       require(new String(b, lho + 30, lNameLen, "UTF-8") == name,
         s"local/central name mismatch for $name: media ${r.media_id}")
       val dataOff = lho + 30 + lNameLen + lExtraLen
@@ -2321,7 +2346,7 @@ object Multimodal {
             inf.setInput(b, dataOff, csize.toInt)
             val buf = new Array[Byte](4096)
             while (!inf.finished() && acc.size <= usize) {
-              val n0 = inf.inflate(buf)
+              val n0 = inflateOrFail(inf, buf, s"$name: media ${r.media_id}")
               require(n0 > 0 || inf.finished(),
                 s"inflate stalled at ${acc.size} of $usize bytes for $name: media ${r.media_id}")
               acc.write(buf, 0, n0)
@@ -2341,7 +2366,7 @@ object Multimodal {
       seen += 1
       i += 46 + nameLen + extraLen + commentLen
     }
-    require(i == (cdOff + cdSize).toInt,
+    require(i == cdEnd,
       s"central directory size mismatch: media ${r.media_id}")
     out.result()
   }
@@ -2539,7 +2564,7 @@ object Multimodal {
         inf.setInput(b, dataStart, b.length - dataStart)
         val buf = new Array[Byte](4096)
         while (!inf.finished()) {
-          val n = inf.inflate(buf)
+          val n = inflateOrFail(inf, buf, s"member $nMembers: media ${r.media_id}")
           require(n > 0 || inf.finished(),
             s"inflate stalled in member $nMembers: media ${r.media_id}")
           acc.write(buf, 0, n)
@@ -2571,7 +2596,9 @@ object Multimodal {
       }.toMap
       require(hmap.contains("Content-Length"),
         s"missing Content-Length in member ${nMembers - 1}: media ${r.media_id}")
-      val clen = hmap("Content-Length").toInt
+      val clen = hmap("Content-Length").toIntOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(s"bad Content-Length '${hmap("Content-Length")}' " +
+          s"in member ${nMembers - 1}: media ${r.media_id}"))
       val blockStart = hdrEnd + 4
       require(rec.length == blockStart + clen + 4,
         s"Content-Length framing mismatch (${rec.length} != $blockStart + $clen + 4): media ${r.media_id}")
@@ -2587,6 +2614,8 @@ object Multimodal {
           val split = crlf2(rec, blockStart)
           require(split >= 0 && split + 4 <= blockStart + clen,
             s"no HTTP header terminator in response: media ${r.media_id}")
+          require(split - blockStart >= 12,
+            s"HTTP head shorter than a status line: media ${r.media_id}")
           val status = new String(rec, blockStart, 12, "ISO-8859-1")
           require(status.startsWith("HTTP/1.1 "),
             s"bad HTTP status line '$status': media ${r.media_id}")

@@ -13,9 +13,11 @@ import graft.ops.{AnnIndex, SessionMemo}
   * wrong partition column type, float truncation, code column drift —
   * is a hash mismatch, not a silent recall loss.
   *
-  * Sums that aggregate scaled-integer longs over the corpus ride
-  * DECIMAL(38,0) (the q_graph_hits convention): Σ n2 ≈ 6.4e13 per
-  * vector crosses 2⁶³ past ~10⁵ vectors — second-decade safe.
+  * Sums that aggregate scaled-integer longs over the corpus add in
+  * DECIMAL(38,0) (Σ n2 ≈ 6.4e13 per vector crosses 2⁶³ past ~10⁵
+  * vectors) and are cast to BIGINT on output, like every other
+  * registry census: the ANSI cast fails loudly, never wraps, if a
+  * cell's sum ever leaves the long range.
   */
 object AnnQueries {
 
@@ -90,7 +92,7 @@ object AnnQueries {
       s.read.parquet(s"$dir/postings")
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"),
-          sum(col("n2").cast("decimal(38,0)")).as("sum_n2"),
+          sum(col("n2").cast("decimal(38,0)")).cast("long").as("sum_n2"),
           sum(aggregate(col("code"), lit(0L), (a, x) => a + x)).as("sum_codes"),
           min(col("vec_id")).as("min_vec"),
           max(col("vec_id")).as("max_vec"))
@@ -142,7 +144,7 @@ object AnnQueries {
         .groupBy(col("cell"))
         .agg(sum(when(col("vec_id") % 2 === 0, 1L).otherwise(0L)).as("n_base"),
           sum(when(col("vec_id") % 2 === 1, 1L).otherwise(0L)).as("n_delta"),
-          sum(col("n2").cast("decimal(38,0)")).as("sum_n2"))
+          sum(col("n2").cast("decimal(38,0)")).cast("long").as("sum_n2"))
         .orderBy(col("cell"))
     }),
 
@@ -156,7 +158,7 @@ object AnnQueries {
         .withColumn("dist", AnnIndex.distortion(col("embedding"), idx.codebook))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"),
-          sum(col("dist").cast("decimal(38,0)")).as("sum_distortion"),
+          sum(col("dist").cast("decimal(38,0)")).cast("long").as("sum_distortion"),
           max(col("dist")).as("max_distortion"))
         .orderBy(col("cell"))
     }),
@@ -420,7 +422,7 @@ object AnnQueries {
          |codesum AS (SELECT vec_id, CAST(SUM(kk) AS BIGINT) AS sc
          |            FROM cbest WHERE rn = 1 GROUP BY vec_id)
          |SELECT CAST(a.cell AS INT) AS cell, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-         |  CAST(SUM(CAST(n.n2 AS HUGEINT)) AS DECIMAL(38,0)) AS sum_n2,
+         |  CAST(SUM(CAST(n.n2 AS HUGEINT)) AS BIGINT) AS sum_n2,
          |  CAST(SUM(c.sc) AS BIGINT) AS sum_codes,
          |  MIN(a.vec_id) AS min_vec, MAX(a.vec_id) AS max_vec
          |FROM assign a
@@ -492,7 +494,7 @@ object AnnQueries {
          |SELECT CAST(a.cell AS INT) AS cell,
          |  CAST(SUM(CASE WHEN a.vec_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
          |  CAST(SUM(CASE WHEN a.vec_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_delta,
-         |  CAST(SUM(CAST(n.n2 AS HUGEINT)) AS DECIMAL(38,0)) AS sum_n2
+         |  CAST(SUM(CAST(n.n2 AS HUGEINT)) AS BIGINT) AS sum_n2
          |FROM allassign a JOIN norms n ON n.vec_id = a.vec_id
          |GROUP BY a.cell ORDER BY cell""".stripMargin,
 
@@ -501,7 +503,7 @@ object AnnQueries {
          |dist AS (SELECT vec_id, CAST(SUM(d) AS BIGINT) AS dist
          |         FROM cbest WHERE rn = 1 GROUP BY vec_id)
          |SELECT CAST(a.cell AS INT) AS cell, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-         |  CAST(SUM(CAST(t.dist AS HUGEINT)) AS DECIMAL(38,0)) AS sum_distortion,
+         |  CAST(SUM(CAST(t.dist AS HUGEINT)) AS BIGINT) AS sum_distortion,
          |  CAST(MAX(t.dist) AS BIGINT) AS max_distortion
          |FROM assign a JOIN dist t ON t.vec_id = a.vec_id
          |GROUP BY a.cell ORDER BY cell""".stripMargin,

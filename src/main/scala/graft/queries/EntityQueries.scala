@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamOps.StagedWrite
 import graft.engine.QueryBuilder.scan
 import graft.ops.{EntityResolution, SessionMemo}
 
@@ -190,36 +189,18 @@ object EntityQueries {
     // result (oracle recomputes in one batch query). The 100 TB shape:
     // per-batch cost ∝ batch × block density, never ∝ corpus
     "q_stream_er" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val (recs, len) = records(s, d)
       // static side persisted across micro-batches (cache-manager reuse,
       // bounded by the bench's family-boundary clear)
       val clean = recs.filter(col("rec_id") % 2 === 0).persist()
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_er_src_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_er_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      recs.filter(col("rec_id") % 2 === 1)
-        .repartition(2, col("rec_id")).stageTo(stage)
-      val schema = s.read.parquet(stage).schema
-      graft.streaming.StreamOps.withStreamParallelism(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val m = scoreAcross(clean, batch, len)
-              .filter(col("score") >= matchThreshold)
-              .select(col("clean_id"), col("arriving_id"), col("score"))
-            graft.sinks.Sinks.write(m,
-              graft.model.SinkSpec("parquet", out, mode = "append"))
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      val out = graft.streaming.StreamOps.landing(s, d, "q_stream_er")
+      graft.streaming.StreamOps.foreachSlice(
+          recs.filter(col("rec_id") % 2 === 1).repartition(2, col("rec_id"))) { batch =>
+        out.append(scoreAcross(clean, batch, len)
+          .filter(col("score") >= matchThreshold)
+          .select(col("clean_id"), col("arriving_id"), col("score")))
       }
-      s.read.parquet(out).orderBy(col("clean_id"), col("arriving_id"))
+      out.read().orderBy(col("clean_id"), col("arriving_id"))
     }),
 
     // EDIT-DISTANCE SIMILARITY JOIN (d=1) over customer names: every

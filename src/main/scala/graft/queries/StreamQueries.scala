@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamOps.StagedWrite
 import graft.ops.ExactAgg.sqlDsum
 import graft.ops.Multimodal
 import graft.streaming.StreamOps
@@ -113,27 +112,17 @@ object StreamQueries {
     // reference's declared-but-dead "sync" action made real: each
     // micro-batch lands through the same sink path batch pipelines use
     "q_stream_sink" -> ((s: SparkSession, d: String) => {
-      val out = s"${graft.engine.Staging.session}/graft_streamsink_${Integer.toHexString(d.hashCode)}"
-      // clean slate: append-mode landing must not accumulate across runs
-      val dir = new java.io.File(out)
-      if (dir.exists()) {
-        java.nio.file.Files.walk(dir.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.delete(p); () })
-      }
+      val out = StreamOps.landing(s, d, "q_stream_sink")
       StreamOps.withStreamParallelism(s) {
         val q = StreamOps.eventsStream(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
           .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            graft.sinks.Sinks.write(batch,
-              graft.model.SinkSpec("parquet", out, mode = "append"))
-          }
+          .foreachBatch((batch: DataFrame, _: Long) => out.append(batch))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
       }
-      graft.engine.QueryBuilder.readParquet(s, out)
+      out.read()
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), graft.ops.ExactAgg.dsum(col("value")).as("sum_value"))
         .orderBy(col("event_type"))
@@ -151,21 +140,10 @@ object StreamQueries {
     // restart/replay safe on a real sync. Final target ≡ latest order
     // per customer (same oracle as q_merge_upsert).
     "q_stream_upsert" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_orders3_$suffix"
-      val target = s"${graft.engine.Staging.session}/graft_upsert_tgt_$suffix"
-      val fs = new Path(target).getFileSystem(s.sparkContext.hadoopConfiguration)
       val orders = graft.engine.QueryBuilder.scan(s, d, "orders")
-      orders.repartition(3, col("o_orderkey"))
-        .stageTo(stage)
-      fs.delete(new Path(target), true)
-      val bt = new graft.ops.BucketedTarget(s, target, numBuckets = 8,
-        keys = Seq("o_custkey"), versionCols = Seq("o_orderdate", "o_orderkey"))
-      val schema = orders.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        bt.upsert(batch)
-      }
+      val bt = new graft.ops.BucketedTarget(s, StreamOps.landing(s, d, "q_stream_upsert").path,
+        numBuckets = 8, keys = Seq("o_custkey"), versionCols = Seq("o_orderdate", "o_orderkey"))
+      StreamOps.foreachSlice(orders.repartition(3, col("o_orderkey")))(bt.upsert)
       bt.read().orderBy(col("o_custkey"))
     }),
 
@@ -197,19 +175,12 @@ object StreamQueries {
     // restricted to (new, indexed) pairs — per-doc signatures don't
     // depend on the split, so the two computations must agree exactly.
     "q_stream_neardup" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import graft.ops.Dedup
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs5m2_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_neardup_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.filter(col("doc_id") % 5 === 0)
-        .repartition(2, col("doc_id")).stageTo(stage)
+      val out = StreamOps.landing(s, d, "q_stream_neardup")
       val (idxSh, idxBands, idxSizes) = staticNearDupIndex(s, d)
-      val schema = docs.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      StreamOps.foreachSlice(docs.filter(col("doc_id") % 5 === 0)
+          .repartition(2, col("doc_id"))) { batch =>
         val bSh = Dedup.hashedShingleTable(batch, "doc_id", "text").persist()
         try {
           val cand = Dedup.minhashBands(bSh)
@@ -223,11 +194,10 @@ object StreamQueries {
               precomputedSizes = Some(idxSizes.unionByName(Dedup.shingleSizes(bSh))))
             .filter(col("jaccard") >= 0.5)
             .select(col("doc_a"), col("doc_b"), col("jaccard"))
-          graft.sinks.Sinks.write(verified,
-            graft.model.SinkSpec("parquet", out, mode = "append"))
+          out.append(verified)
         } finally bSh.unpersist()
       }
-      s.read.parquet(out).orderBy(col("doc_a"), col("doc_b"))
+      out.read().orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // STREAMING CORPUS INGEST, end to end — the flagship incremental
@@ -242,19 +212,12 @@ object StreamQueries {
     // batch query over the full corpus. At 100 TB: per-batch cost ∝
     // batch × collision rate; the index is a bucketed static table
     "q_stream_corpus" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import graft.ops.{Dedup, TextAnalysis}
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs5m2_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_scorpus_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.filter(col("doc_id") % 5 === 0)
-        .repartition(2, col("doc_id")).stageTo(stage)
+      val out = StreamOps.landing(s, d, "q_stream_corpus")
       val (idxSh, idxBands, idxSizes) = staticNearDupIndex(s, d)
-      val schema = docs.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      StreamOps.foreachSlice(docs.filter(col("doc_id") % 5 === 0)
+          .repartition(2, col("doc_id"))) { batch =>
         val qual = batch
           .withColumn("n_words", TextAnalysis.tokenCountWs(col("text")))
           .withColumn("stop_ratio",
@@ -276,12 +239,11 @@ object StreamQueries {
             val survivors = qual.join(dupNew, Seq("doc_id"), "left_anti")
               .select(col("doc_id"), col("lang"), col("source"),
                 col("n_words").cast("long").as("n_words"))
-            graft.sinks.Sinks.write(survivors,
-              graft.model.SinkSpec("parquet", out, mode = "append"))
+            out.append(survivors)
           } finally bSh.unpersist()
         } finally qual.unpersist()
       }
-      s.read.parquet(out).orderBy(col("doc_id"))
+      out.read().orderBy(col("doc_id"))
     }),
 
     // STREAMING drift monitor — the incremental form of q_dq_drift:
@@ -294,27 +256,18 @@ object StreamQueries {
     // oracle is exactly q_dq_drift's query. At 100 TB: per-batch cost ∝
     // batch, census cost ∝ nBins × batches
     "q_stream_drift" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import graft.ops.Drift
       val o = graft.engine.QueryBuilder.scan(s, d, "orders")
       val cut = lit("1995-01-01").cast("date")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_sdrift_src_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sdrift_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      o.filter(col("o_orderdate") >= cut).select("o_orderkey", "o_totalprice")
-        .repartition(2, col("o_orderkey")).stageTo(stage)
+      val out = StreamOps.landing(s, d, "q_stream_drift")
       val baseHist = Drift.histogram(o.filter(col("o_orderdate") < cut),
         col("o_totalprice"), lo = 0.0, hi = 600000.0, nBins = 16)
-      val schema = o.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          Drift.histogram(batch, col("o_totalprice"),
-            lo = 0.0, hi = 600000.0, nBins = 16),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(o.filter(col("o_orderdate") >= cut)
+          .select("o_orderkey", "o_totalprice").repartition(2, col("o_orderkey"))) { batch =>
+        out.append(Drift.histogram(batch, col("o_totalprice"),
+          lo = 0.0, hi = 600000.0, nBins = 16))
       }
-      val curHist = s.read.parquet(out).groupBy(col("bin")).agg(sum(col("n")).as("n"))
+      val curHist = out.read().groupBy(col("bin")).agg(sum(col("n")).as("n"))
       Drift.censusOfHists(baseHist, curHist).orderBy(col("bin"))
     }),
 
@@ -326,26 +279,18 @@ object StreamQueries {
     // ingested. At 100 TB this is how a copy audit actually runs: no
     // re-scan of landed data, per-batch cost ∝ batch
     "q_stream_checksum" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_schksum_src_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_schksum_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(2, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val out = StreamOps.landing(s, d, "q_stream_checksum")
+      StreamOps.foreachSlice(docs.repartition(2, col("doc_id"))) { batch =>
         val part = batch.select(col("source"), col("n_chars"),
             graft.ops.Dedup.hex60(md5(concat(col("doc_id").cast("string"),
               lit(":"), col("text")).cast("binary"))).as("h"))
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x"),
             sum(col("n_chars")).as("b"))
-        graft.sinks.Sinks.write(part,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(part)
       }
-      s.read.parquet(out).groupBy(col("source"))
+      out.read().groupBy(col("source"))
         .agg(sum(col("n")).cast("long").as("n_rows"),
           expr("bit_xor(x)").as("xor60"),
           sum(col("b")).cast("long").as("n_bytes"))
@@ -361,23 +306,15 @@ object StreamQueries {
     // Oracle = the batch detector's oracle, so incremental ≡ batch is
     // gate-checked, the q_stream_checksum pattern
     "q_stream_cusum" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_scusum_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val out = StreamOps.landing(s, d, "q_stream_cusum")
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
         val part = batch.groupBy(date_trunc("day", col("ts")).as("day"))
           .agg(count(lit(1)).as("n"))
-        graft.sinks.Sinks.write(part,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(part)
       }
       import org.apache.spark.sql.expressions.Window
-      val daily = s.read.parquet(out)
+      val daily = out.read()
         .groupBy(col("day")).agg(sum(col("n")).cast("long").as("cnt"))
       val ref = daily.agg(expr("sum(cnt) div count(1)").as("k"))
         .withColumn("slack", greatest(expr("k div 20"), lit(1L)))
@@ -477,27 +414,19 @@ object StreamQueries {
     // additive-partial deploy shape as q_stream_checksum/cusum, with a
     // rank sketch instead of a sum
     "q_stream_topk" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_stopk_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
+      val out = StreamOps.landing(s, d, "q_stream_topk")
       def top3(df: DataFrame): DataFrame = {
         val w = Window.partitionBy(col("event_type"))
           .orderBy(col("value").desc, col("event_id").asc)
         df.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
           .select(col("event_type"), col("value"), col("event_id"))
       }
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(top3(batch),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
+        out.append(top3(batch))
       }
-      top3(s.read.parquet(out))
+      top3(out.read())
         .withColumn("rank", row_number().over(Window.partitionBy(col("event_type"))
           .orderBy(col("value").desc, col("event_id").asc)).cast("long"))
         .select(col("event_type"), col("rank"), col("value"), col("event_id"))
@@ -515,27 +444,19 @@ object StreamQueries {
     // bit-identical to the batch test — the oracle is the SAME KS SQL
     // over the full events table
     "q_stream_ks" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sks_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
+      val out = StreamOps.landing(s, d, "q_stream_ks")
       def census(df: DataFrame): DataFrame =
         df.select(floor(col("value") * 100).cast("long").as("v"),
             when(col("event_type") === "purchase", 1L).otherwise(0L).as("w1"),
             when(col("event_type") =!= "purchase", 1L).otherwise(0L).as("w2"))
           .groupBy(col("v"))
           .agg(sum(col("w1")).as("c1"), sum(col("w2")).as("c2"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(census(batch),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
+        out.append(census(batch))
       }
-      val vals = s.read.parquet(out).groupBy(col("v"))
+      val vals = out.read().groupBy(col("v"))
         .agg(sum(col("c1")).as("d1"), sum(col("c2")).as("d2"))
         .withColumn("b", expr("v div 16384"))
       val bt = vals.groupBy(col("b"))
@@ -575,29 +496,21 @@ object StreamQueries {
     // sketch's rank bound, so batch slicing can't break the verdict).
     // Estimates are graded by the same deterministic ±1.5 % rank-window
     // boolean as q_agg_kll, against the exact element at rank ⌈q·n⌉
-    // from the staged table's census (two-level prefix spine); oracle =
+    // from the source table's census (two-level prefix spine); oracle =
     // the census replay over events + literal true
     "q_stream_kll" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_skll_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val out = StreamOps.landing(s, d, "q_stream_kll")
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
         val partial = batch
           .select(floor(col("value") * 100).cast("long").as("v"))
           .agg(call_function("graft_kll_sketch", col("v"), lit(256)).as("sk"))
-        graft.sinks.Sinks.write(partial,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(partial)
       }
-      val sk = s.read.parquet(out)
+      val sk = out.read()
         .agg(call_function("graft_kll_merge", col("sk")).as("sk"))
-      val vals = s.read.schema(schema).parquet(stage)
+      val vals = ev
         .select(floor(col("value") * 100).cast("long").as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("c"))
         .withColumn("b", expr("v div 16384"))
@@ -640,28 +553,20 @@ object StreamQueries {
     // slicing can't break the theorem booleans, and the batch oracle
     // (q_agg_mg's census replay) is shared VERBATIM
     "q_stream_mg" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val K = 8
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_smg_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
+      val out = StreamOps.landing(s, d, "q_stream_mg")
       def toks(df: DataFrame) = df
         .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
         .where(col("w").rlike("^[a-z]+$"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
         val partial = toks(batch)
           .agg(call_function("graft_mg_sketch", col("w"), lit(K)).as("sk"))
-        graft.sinks.Sinks.write(partial,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(partial)
       }
-      val sk = s.read.parquet(out)
+      val sk = out.read()
         .agg(call_function("graft_mg_merge", col("sk")).as("sk"))
-      val census = toks(s.read.schema(schema).parquet(stage)).groupBy(col("w"))
+      val census = toks(docs).groupBy(col("w"))
         .agg(count(lit(1)).as("c"))
       val n = census.agg(sum(col("c")).as("n"))
       val top = census.orderBy(col("c").desc, col("w").asc).limit(10)
@@ -681,29 +586,21 @@ object StreamQueries {
     // per-group bound is the same theorem, so q_agg_mg_grouped's census
     // replay is the oracle VERBATIM
     "q_stream_mg_grouped" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val K = 8
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_smgg_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
+      val out = StreamOps.landing(s, d, "q_stream_mg_grouped")
       def toks(df: DataFrame) = df
         .select(col("lang"),
           explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
         .where(col("w").rlike("^[a-z]+$"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
         val partial = toks(batch).groupBy(col("lang"))
           .agg(call_function("graft_mg_sketch", col("w"), lit(K)).as("sk"))
-        graft.sinks.Sinks.write(partial,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(partial)
       }
-      val sk = s.read.parquet(out).groupBy(col("lang"))
+      val sk = out.read().groupBy(col("lang"))
         .agg(call_function("graft_mg_merge", col("sk")).as("sk"))
-      val census = toks(s.read.schema(schema).parquet(stage))
+      val census = toks(docs)
         .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c"))
       val n = census.groupBy(col("lang")).agg(sum(col("c")).as("n"))
       import org.apache.spark.sql.expressions.Window
@@ -728,27 +625,18 @@ object StreamQueries {
     // Sum-merge is exact under any batch slicing, so q_agg_cms's
     // cell-by-cell replay oracle is shared VERBATIM
     "q_stream_cms" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val D = 3; val W = 64
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_scms_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
+      val out = StreamOps.landing(s, d, "q_stream_cms")
       def toks(df: DataFrame) = df
         .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
         .where(col("w").rlike("^[a-z]+$"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          graft.ops.FreqSketches.cmsSketch(toks(batch), "w", D, W),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
+        out.append(graft.ops.FreqSketches.cmsSketch(toks(batch), "w", D, W))
       }
-      val sk = s.read.parquet(out).groupBy(col("r"), col("b"))
+      val sk = out.read().groupBy(col("r"), col("b"))
         .agg(sum(col("c")).as("c"))
-      val census = toks(s.read.schema(schema).parquet(stage)).groupBy(col("w"))
+      val census = toks(docs).groupBy(col("w"))
         .agg(count(lit(1)).as("c"))
       val n = census.agg(sum(col("c")).as("n"))
       val top = census.orderBy(col("c").desc, col("w").asc).limit(10)
@@ -768,27 +656,19 @@ object StreamQueries {
     // exact under any batch slicing, so q_dq_psi's oracle is shared
     // VERBATIM
     "q_stream_psi" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import graft.ops.Drift
       val o = graft.engine.QueryBuilder.scan(s, d, "orders")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_orders3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_spsi_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      o.repartition(3, col("o_orderkey")).stageTo(stage)
-      val schema = o.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val out = StreamOps.landing(s, d, "q_stream_psi")
+      StreamOps.foreachSlice(o.repartition(3, col("o_orderkey"))) { batch =>
         val part = batch.select(
             Drift.binOf(col("o_totalprice"), 0.0, 600000.0, 16).as("bin"),
             (col("o_orderdate") < lit("1995-01-01").cast("date")).as("is_base"))
           .groupBy(col("bin")).agg(
             sum(when(col("is_base"), 1L).otherwise(0L)).as("nb"),
             sum(when(!col("is_base"), 1L).otherwise(0L)).as("nc"))
-        graft.sinks.Sinks.write(part,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(part)
       }
-      val h = s.read.parquet(out).groupBy(col("bin"))
+      val h = out.read().groupBy(col("bin"))
         .agg(sum(col("nb")).as("nb"), sum(col("nc")).as("nc"))
       Drift.psiOfHists(
         h.select(col("bin"), col("nb").as("n")),
@@ -803,27 +683,19 @@ object StreamQueries {
     // The last-40-demand-events window the batch op bounds itself to
     // is exactly the state a per-key streaming smoother would keep
     "q_stream_croston" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_scro_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val out = StreamOps.landing(s, d, "q_stream_croston")
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
         val part = batch
           .filter(col("event_type") === "purchase" && col("user_id") < 8)
           .groupBy(col("user_id").as("store"),
             date_trunc("day", col("ts")).as("day"))
           .agg(count(lit(1)).as("dem"))
-        graft.sinks.Sinks.write(part,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(part)
       }
       val K = 40
-      val dd = s.read.parquet(out).groupBy(col("store"), col("day"))
+      val dd = out.read().groupBy(col("store"), col("day"))
         .agg(sum(col("dem")).as("dem"))
       val wAsc = Window.partitionBy(col("store")).orderBy(col("day"))
       val withGap = dd
@@ -863,32 +735,23 @@ object StreamQueries {
     // median-of-squares estimate runs on d=5 merged rows. q_agg_ams's
     // exact-replay oracle is shared VERBATIM
     "q_stream_ams" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val D = 5
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sams_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
+      val out = StreamOps.landing(s, d, "q_stream_ams")
       def toks(df: DataFrame) = df
         .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
         .where(col("w").rlike("^[a-z]+$"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          graft.ops.FreqSketches.amsSketch(toks(batch), "w", D),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
+        out.append(graft.ops.FreqSketches.amsSketch(toks(batch), "w", D))
       }
-      val z = s.read.parquet(out).groupBy(col("r"))
+      val z = out.read().groupBy(col("r"))
         .agg(sum(col("z")).as("z"))
         .withColumn("zz", col("z") * col("z"))
       val med = z.withColumn("rn",
           row_number().over(Window.orderBy(col("zz")))) // d=5 rows: tiny
         .where(col("rn") === (D + 1) / 2).select(col("zz").as("f2_est"))
-      val f2 = toks(s.read.schema(schema).parquet(stage)).groupBy(col("w"))
+      val f2 = toks(docs).groupBy(col("w"))
         .agg(count(lit(1)).as("c"))
         .agg(sum(col("c") * col("c")).as("f2_exact"))
       f2.crossJoin(broadcast(med))
@@ -903,23 +766,14 @@ object StreamQueries {
     // retention arithmetic is shared with the batch op — as is its
     // oracle, VERBATIM
     "q_stream_retention" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sret_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          graft.ops.BitmapIndex.bitmap(
-            batch.select(date_trunc("day", col("ts")).as("day"),
-              col("user_id")), "day", "user_id"),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      val out = StreamOps.landing(s, d, "q_stream_retention")
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
+        out.append(graft.ops.BitmapIndex.bitmap(
+          batch.select(date_trunc("day", col("ts")).as("day"), col("user_id")),
+          "day", "user_id"))
       }
-      val bm = s.read.parquet(out).groupBy(col("t"), col("w"))
+      val bm = out.read().groupBy(col("t"), col("w"))
         .agg(expr("bit_or(bits)").as("bits"))
       graft.ops.BitmapIndex.retention(bm)
     }),
@@ -931,25 +785,16 @@ object StreamQueries {
     // yields the identical 64-register sketch and q_agg_hll's
     // register-exact replay oracle is shared VERBATIM
     "q_stream_hll" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_shll_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          graft.ops.Hll.registers(
-            batch.select(col("user_id").cast("string").as("x")), "x"),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      val out = StreamOps.landing(s, d, "q_stream_hll")
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
+        out.append(graft.ops.Hll.registers(
+          batch.select(col("user_id").cast("string").as("x")), "x"))
       }
-      val regs = s.read.parquet(out).groupBy(col("reg"))
+      val regs = out.read().groupBy(col("reg"))
         .agg(max(col("mr")).as("mr"))
       val est = graft.ops.Hll.estimate(regs)
-      val ex = s.read.schema(schema).parquet(stage)
+      val ex = ev
         .agg(countDistinct(col("user_id")).cast("long").as("n_exact"))
       ex.crossJoin(broadcast(est))
         .select(col("n_exact"), col("hll_est"), col("est_raw"), col("est_lin"),
@@ -965,24 +810,13 @@ object StreamQueries {
     // batches, yields the identical bitmap — so q_agg_bitmap's word-
     // exact replay oracle is shared VERBATIM
     "q_stream_bitmap" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
         .filter(col("event_type").isin("view", "purchase"))
-      val suffix = Integer.toHexString(d.hashCode)
-      // filtered source: NOT the shared graft_src_events3 staging (those
-      // queries stage the unfiltered table — different bytes)
-      val stage = s"${graft.engine.Staging.session}/graft_sbmp_src_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sbmp_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          graft.ops.BitmapIndex.bitmap(batch, "event_type", "user_id"),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      val out = StreamOps.landing(s, d, "q_stream_bitmap")
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
+        out.append(graft.ops.BitmapIndex.bitmap(batch, "event_type", "user_id"))
       }
-      val bm = s.read.parquet(out).groupBy(col("t"), col("w"))
+      val bm = out.read().groupBy(col("t"), col("w"))
         .agg(expr("bit_or(bits)").as("bits"))
       graft.ops.BitmapIndex.census(bm)
     }),
@@ -995,26 +829,17 @@ object StreamQueries {
     // against the static read: the test side is a query over the
     // sketch, not stream state
     "q_stream_bloom" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import graft.ops.FreqSketches
       val K = 3; val M = 4096
       def toks(df: DataFrame): DataFrame = df
         .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
         .where(col("w").rlike("^[a-z]+$"))
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sbloom_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          FreqSketches.bloomSketch(toks(batch), "w", K, M),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      val out = StreamOps.landing(s, d, "q_stream_bloom")
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
+        out.append(FreqSketches.bloomSketch(toks(batch), "w", K, M))
       }
-      val sk = s.read.parquet(out).groupBy(col("w"))
+      val sk = out.read().groupBy(col("w"))
         .agg(expr("bit_or(bits)").as("bits"))
       FreqSketches.bloomCensus(sk, toks(docs).distinct(), "w", K, M)
     }),
@@ -1025,23 +850,14 @@ object StreamQueries {
     // q_pref_winrate verbatim (the oracle is shared). The arena-
     // leaderboard shape: at 100 TB only 10-row partials cross batches
     "q_stream_pref" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val orders = graft.engine.QueryBuilder.scan(s, d, "orders")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_orders3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_spref_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      orders.repartition(3, col("o_orderkey")).stageTo(stage)
-      val schema = orders.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(
-          PrefQueries.canonGamesOf(batch)
-            .groupBy(col("lo"), col("hi"))
-            .agg(count(lit(1)).as("n"), sum(col("win_lo")).as("wl")),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      val out = StreamOps.landing(s, d, "q_stream_pref")
+      StreamOps.foreachSlice(orders.repartition(3, col("o_orderkey"))) { batch =>
+        out.append(PrefQueries.canonGamesOf(batch)
+          .groupBy(col("lo"), col("hi"))
+          .agg(count(lit(1)).as("n"), sum(col("win_lo")).as("wl")))
       }
-      s.read.parquet(out)
+      out.read()
         .groupBy(col("lo").as("model_lo"), col("hi").as("model_hi"))
         .agg(sum(col("n")).as("n_games"), sum(col("wl")).as("n_wins_lo"))
         .withColumn("winrate_ppm", expr("n_wins_lo * 1000000 div n_games"))
@@ -1055,20 +871,9 @@ object StreamQueries {
     // final readout derives every metric from the rolled-up counts.
     // Oracle = the batch confusion query's SQL, verbatim
     "q_stream_eval" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
-      // full scan, not a 2-column projection: graft_src_orders3 is
-      // SHARED; a projected first-stager silently NULL-fills the other
-      // sharers' columns under their explicit-schema slice reads (the
-      // q_stream_cidr/kll collision class, r18)
       val o = graft.engine.QueryBuilder.scan(s, d, "orders")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_orders3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_seval_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      o.repartition(3, col("o_orderkey")).stageTo(stage)
-      val schema = o.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val out = StreamOps.landing(s, d, "q_stream_eval")
+      StreamOps.foreachSlice(o.repartition(3, col("o_orderkey"))) { batch =>
         val scored = batch.select(
           (graft.ops.Dedup.hex60(md5(concat(lit("sc:"),
             col("o_orderkey").cast("string")).cast("binary"))) % 800000L
@@ -1080,10 +885,9 @@ object StreamQueries {
           sum(when(col("y") === 0L && col("pred") === 1L, 1L).otherwise(0L)).as("fp"),
           sum(when(col("y") === 1L && col("pred") === 0L, 1L).otherwise(0L)).as("fn"),
           sum(when(col("y") === 0L && col("pred") === 0L, 1L).otherwise(0L)).as("tn"))
-        graft.sinks.Sinks.write(partial,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(partial)
       }
-      s.read.parquet(out)
+      out.read()
         .agg(sum(col("tp")).as("tp"), sum(col("fp")).as("fp"),
           sum(col("fn")).as("fn"), sum(col("tn")).as("tn"))
         .withColumn("n", expr("tp + fp + fn + tn"))
@@ -1117,19 +921,9 @@ object StreamQueries {
     // directly — the q_stream_er shape on the binary tier. Oracle = the
     // batch funnel's formula replay, verbatim
     "q_stream_crawl" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
-      // full scan, not a doc_id projection: the graft_src_docs3 dir is
-      // SHARED, and a projected first-stager would be served to sharers
-      // that need `text` (the q_stream_cidr/kll collision, r18)
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_scrawl_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val out = StreamOps.landing(s, d, "q_stream_crawl")
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
         val warc = Multimodal.fixtures(batch, "doc_id")(Multimodal.syntheticCrawlWarc)
           .persist()
         try {
@@ -1146,11 +940,10 @@ object StreamQueries {
               coalesce(col("n_parsed"), lit(0L)).as("n_parsed"),
               coalesce(col("text_chars"), lit(0L)).as("text_chars"),
               coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-          graft.sinks.Sinks.write(rows,
-            graft.model.SinkSpec("parquet", out, mode = "append"))
+          out.append(rows)
         } finally { warc.unpersist(); () }
       }
-      s.read.parquet(out).orderBy(col("media_id"))
+      out.read().orderBy(col("media_id"))
     }),
 
     // STREAMING CIDR ENRICHMENT — the LPM census as an incremental
@@ -1161,37 +954,19 @@ object StreamQueries {
     // relation from q_agg_bitmap) — and the final census rolls both up
     // with one groupBy each. Oracle = the batch query's SQL, verbatim
     "q_stream_cidr" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
-      // stages the FULL events scan like every other graft_src_events3
-      // sharer — stageOnce's fingerprint is the input FILES, so a
-      // projected slice in the shared dir would be served to the other
-      // sharers (first-stager-wins; q_stream_kll/kmv broke on `value`/
-      // `event_type` when this query staged only two columns — caught
-      // by the r18 mid-round full bench). The body projects per slice.
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val outCnt = s"${graft.engine.Staging.session}/graft_scidr_cnt_$suffix"
-      val outBm = s"${graft.engine.Staging.session}/graft_scidr_bm_$suffix"
-      val fs = new Path(outCnt).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(outCnt), true)
-      fs.delete(new Path(outBm), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      val outCnt = StreamOps.landing(s, d, "q_stream_cidr_cnt")
+      val outBm = StreamOps.landing(s, d, "q_stream_cidr_bm")
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
         val m = FunnelQueries.cidrMatched(s, batch).persist()
         try {
-          graft.sinks.Sinks.write(
-            m.groupBy(col("block"), col("plen")).agg(count(lit(1)).as("n")),
-            graft.model.SinkSpec("parquet", outCnt, mode = "append"))
-          graft.sinks.Sinks.write(
-            graft.ops.BitmapIndex.bitmap(m, "block", "user_id"),
-            graft.model.SinkSpec("parquet", outBm, mode = "append"))
+          outCnt.append(m.groupBy(col("block"), col("plen")).agg(count(lit(1)).as("n")))
+          outBm.append(graft.ops.BitmapIndex.bitmap(m, "block", "user_id"))
         } finally { m.unpersist(); () }
       }
-      val cnt = s.read.parquet(outCnt).groupBy(col("block"), col("plen"))
+      val cnt = outCnt.read().groupBy(col("block"), col("plen"))
         .agg(sum(col("n")).as("n_events"))
-      val users = s.read.parquet(outBm)
+      val users = outBm.read()
         .groupBy(col("t"), col("w")).agg(expr("bit_or(bits)").as("bits"))
         .groupBy(col("t"))
         .agg(sum(expr("bit_count(bits)")).cast("long").as("n_users"))
@@ -1214,27 +989,19 @@ object StreamQueries {
     // the identical sketch — the estimate is hash-matched against the
     // oracle's k-th-smallest replay, not tolerance-matched
     "q_stream_kmv" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_skmv_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
+      val out = StreamOps.landing(s, d, "q_stream_kmv")
       def hashed(df: DataFrame) = df.select(col("event_type"),
         graft.ops.Dedup.hex60(
           md5(concat(lit("kmv:"), col("user_id").cast("string")).cast("binary"))).as("hv"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
         val partial = hashed(batch).groupBy(col("event_type"))
           .agg(call_function("graft_kmv_sketch", col("hv"), lit(64)).as("sk"))
-        graft.sinks.Sinks.write(partial,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(partial)
       }
-      val exact = s.read.schema(schema).parquet(stage).groupBy(col("event_type"))
+      val exact = ev.groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("exact_distinct"))
-      s.read.parquet(out).groupBy(col("event_type"))
+      out.read().groupBy(col("event_type"))
         .agg(call_function("graft_kmv_merge", col("sk")).as("sk"))
         .withColumn("kmv_estimate", call_function("graft_kmv_estimate", col("sk")))
         .join(exact, Seq("event_type"))
@@ -1250,27 +1017,19 @@ object StreamQueries {
     // contract, so its oracle is shared VERBATIM (the sketch's rank
     // bound is layout-invariant, batch slicing included)
     "q_stream_kll_grouped" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_skllg_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
+      val out = StreamOps.landing(s, d, "q_stream_kll_grouped")
       def vals(df: DataFrame) = df.select(col("lang"), col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("v"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
         val partial = vals(batch).groupBy(col("lang"), col("source"))
           .agg(call_function("graft_kll_sketch", col("v"), lit(256)).as("sk"))
-        graft.sinks.Sinks.write(partial,
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+        out.append(partial)
       }
-      val sk = s.read.parquet(out).groupBy(col("lang"), col("source"))
+      val sk = out.read().groupBy(col("lang"), col("source"))
         .agg(call_function("graft_kll_merge", col("sk")).as("sk"))
-      val census = vals(s.read.schema(schema).parquet(stage))
+      val census = vals(docs)
         .groupBy(col("lang"), col("source"), col("v")).agg(count(lit(1)).as("c"))
       val wv = Window.partitionBy(col("lang"), col("source")).orderBy(col("v"))
       val cum = census.withColumn("cum", sum(col("c")).over(wv))
@@ -1308,27 +1067,19 @@ object StreamQueries {
     // bit-identical to the batch test — the oracle is the batch MW SQL
     // over the full events table
     "q_stream_mannwhitney" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_smw_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
+      val out = StreamOps.landing(s, d, "q_stream_mannwhitney")
       def census(df: DataFrame): DataFrame =
         df.select(floor(col("value") * 100).cast("long").as("v"),
             when(col("event_type") === "purchase", 1L).otherwise(0L).as("w1"),
             when(col("event_type") =!= "purchase", 1L).otherwise(0L).as("w2"))
           .groupBy(col("v"))
           .agg(sum(col("w1")).as("c1"), sum(col("w2")).as("c2"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(census(batch),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
+        out.append(census(batch))
       }
-      val vals = s.read.parquet(out).groupBy(col("v"))
+      val vals = out.read().groupBy(col("v"))
         .agg(sum(col("c1")).as("d1"), sum(col("c2")).as("d2"))
         .withColumn("b", expr("v div 16384"))
       val bt = vals.groupBy(col("b"))
@@ -1370,27 +1121,19 @@ object StreamQueries {
     // and is bit-identical to the batch computation: the oracle IS
     // q_ts_drawdown's SQL string verbatim
     "q_stream_drawdown" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.expressions.Window
       val ev = graft.engine.QueryBuilder.scan(s, d, "events")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_events3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sdd_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      ev.repartition(3, col("event_id")).stageTo(stage)
-      val schema = ev.schema
+      val out = StreamOps.landing(s, d, "q_stream_drawdown")
       def census(df: DataFrame): DataFrame =
         df.filter(col("event_type").isin("purchase", "error"))
           .groupBy(date_trunc("day", col("ts")).as("day"))
           .agg(sum(when(col("event_type") === "purchase",
               floor(col("value") * 100).cast("long"))
             .otherwise(-floor(col("value") * 100).cast("long"))).as("flow"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(census(batch),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(ev.repartition(3, col("event_id"))) { batch =>
+        out.append(census(batch))
       }
-      val daily = s.read.parquet(out).groupBy(col("day"))
+      val daily = out.read().groupBy(col("day"))
         .agg(sum(col("flow")).as("flow"))
       val w = Window.orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1415,15 +1158,8 @@ object StreamQueries {
     // iteration runs on the merged moments and is bit-identical to the
     // batch op: the oracle IS q_embed_pca's SQL string verbatim
     "q_stream_pca" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val emb = graft.engine.QueryBuilder.scan(s, d, "embeddings")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_spca_src_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_spca_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      emb.repartition(3, col("vec_id")).stageTo(stage)
-      val schema = emb.schema
+      val out = StreamOps.landing(s, d, "q_stream_pca")
       // per-batch partials = the SAME one-pass moment census as the
       // batch op (r17: pairs + margins + count ride one LongVecSumAgg
       // fold instead of a 2,080-structs-per-row explode — see
@@ -1435,15 +1171,14 @@ object StreamQueries {
           df.select(expr(
             "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))")
             .as("q")), dims = 64)
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(census(batch),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(emb.repartition(3, col("vec_id"))) { batch =>
+        out.append(census(batch))
       }
       // merge the additive partials, then run the dims²-sized power
       // iteration locally (Quantize.pcaPowerLocal — bit-identical to the
       // former in-plan iteration; the collect is the covariance summary,
       // corpus-size-independent)
-      val merged = s.read.parquet(out).groupBy(col("i"), col("j"))
+      val merged = out.read().groupBy(col("i"), col("j"))
         .agg(sum(col("p")).as("p"))
       graft.ops.Quantize.pcaPowerLocal(merged, dims = 64, iters = 3)
         .orderBy(col("dim"))
@@ -1456,24 +1191,16 @@ object StreamQueries {
     // vocab, hapax share) is bit-identical to the batch op: the oracle
     // IS q_text_hapax's SQL verbatim. State ∝ vocabulary, never stream
     "q_stream_hapax" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val docs = graft.engine.QueryBuilder.scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_shpx_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
+      val out = StreamOps.landing(s, d, "q_stream_hapax")
       def census(df: DataFrame): DataFrame =
         df.filter(length(trim(col("text"))) > 0)
           .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
           .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(census(batch),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
+        out.append(census(batch))
       }
-      s.read.parquet(out).groupBy(col("w")).agg(sum(col("c")).as("c"))
+      out.read().groupBy(col("w")).agg(sum(col("c")).as("c"))
         .agg(count(lit(1)).as("n_vocab"), sum(col("c")).as("n_tokens"),
           sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"),
           sum(when(col("c") === 2, 1L).otherwise(0L)).as("n_dis"),

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamOps.StagedWrite
 import graft.engine.QueryBuilder.scan
 import graft.ops.UlmTokenizer
 import graft.ops.UlmTokenizer.{Duck, Rounds, SeedMulti, PruneEach}
@@ -291,16 +290,9 @@ object UlmQueries {
     }),
 
     "q_stream_ulm" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
       val model = UlmTokenizer.trainedModel(scan(s, d, "documents"), d)
       val docs = scan(s, d, "documents")
-      val suffix = Integer.toHexString(d.hashCode)
-      val stage = s"${graft.engine.Staging.session}/graft_src_docs3_$suffix"
-      val out = s"${graft.engine.Staging.session}/graft_sulm_out_$suffix"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
-      docs.repartition(3, col("doc_id")).stageTo(stage)
-      val schema = docs.schema
+      val out = graft.streaming.StreamOps.landing(s, d, "q_stream_ulm")
       def census(batch: DataFrame): DataFrame = {
         val enc = UlmTokenizer.encode(batch, "doc_id", "text", model)
           .select(col("doc_id"), size(col("token_ids")).cast("long").as("n_tokens"))
@@ -314,14 +306,13 @@ object UlmQueries {
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
             sum(col("n_chars")).as("n_chars"))
       }
-      // r18: per-slice census partials via the bounded runner (see
-      // StreamOps.foreachBoundedSlice — identical slicing and partials,
-      // the per-invocation stream-machinery fixed cost dropped)
-      graft.streaming.StreamOps.foreachBoundedSlice(s, stage, schema) { batch =>
-        graft.sinks.Sinks.write(census(batch),
-          graft.model.SinkSpec("parquet", out, mode = "append"))
+      // per-slice census partials via the bounded runner (see
+      // StreamOps.foreachSlice — identical slicing and partials, the
+      // per-invocation stream-machinery fixed cost dropped)
+      graft.streaming.StreamOps.foreachSlice(docs.repartition(3, col("doc_id"))) { batch =>
+        out.append(census(batch))
       }
-      s.read.parquet(out).groupBy(col("lang"))
+      out.read().groupBy(col("lang"))
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
           sum(col("n_chars")).as("n_chars"))
         .withColumn("chars_per_token_ppm", expr("n_chars * 1000000 div n_tokens"))

@@ -39,10 +39,4 @@ final class SourceRegistry(vault: Vault = Vault.empty) {
     val reader = spark.read.format(d.format).options(d.options ++ creds)
     if (d.path != null) reader.load(d.path) else reader.load()
   }
-
-  /** Convenience: register every testdata table under a directory. */
-  def registerDir(dir: String, tables: Seq[String]): this.type = {
-    tables.foreach(t => register(t, SourceDef("parquet", s"$dir/$t.parquet")))
-    this
-  }
 }

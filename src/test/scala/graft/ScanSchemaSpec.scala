@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{Semaphore, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types.LongType
 
@@ -14,34 +10,6 @@ import graft.engine.QueryBuilder
   * footer-inference job would give.
   */
 class ScanSchemaSpec extends SparkSpec {
-
-  /** Spark jobs started by `body` on this thread. A marker job after it
-    * flushes the listener queue, which delivers events in order.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val marker = new Semaphore(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("graft.probe")).orNull match {
-          case "body"   => jobs.incrementAndGet()
-          case "marker" => marker.release()
-          case _        =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.probe", "body")
-      val out = try body finally sc.setLocalProperty("graft.probe", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.tryAcquire(30, TimeUnit.SECONDS), "listener queue did not drain")
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty("graft.probe", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private val tables = Seq("customer", "documents", "embeddings", "events", "lineitem",
     "nation", "orders", "part", "region", "supplier")
