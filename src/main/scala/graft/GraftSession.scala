@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   * `FileSystem.get` on `file:` before this builds the first session.
   */
 object GraftSession {
-  def build(cpus: String, adaptive: Boolean = true): SparkSession = {
+  def build(cpus: String): SparkSession = {
     // streaming temp checkpoints → tmpfs scratch (see Staging): the
     // fsync-heavy offset/commit/state metadata of every bounded
     // AvailableNow run stops touching the disk. spark.local.dir is
@@ -41,7 +41,7 @@ object GraftSession {
       // pinned: the simhash lane-packing overflow guard (Dedup.scala)
       // relies on ANSI sum-overflow semantics as its backstop
       .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.adaptive.enabled", adaptive.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.engine.ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",

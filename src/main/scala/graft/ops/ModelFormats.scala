@@ -1,6 +1,6 @@
 package graft.ops
 
-import Multimodal.MediaRow
+import Multimodal.{MediaRow, Payload}
 
 /** Model-artifact format walkers — the shipping formats of the ML side
   * of a training pipeline, joining [[Multimodal]]'s 22 container/codec
@@ -129,20 +129,6 @@ object ModelFormats {
 
   private def parseJson(s: String, what: String): JVal = new JsonParser(s, what).parse()
 
-  // little-endian integer readers shared by the walkers
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long = {
-    var v = 0L; var k = 3
-    while (k >= 0) { v = (v << 8) | (b(i + k) & 0xff).toLong; k -= 1 }
-    v
-  }
-  private def u64le(b: Array[Byte], i: Int): Long = {
-    var v = 0L; var k = 7
-    while (k >= 0) { v = (v << 8) | (b(i + k) & 0xff).toLong; k -= 1 }
-    v
-  }
-
   // =================================================================
   // 23. safetensors
   // =================================================================
@@ -170,9 +156,8 @@ object ModelFormats {
     */
   def decodeSafetensors(rows: Iterator[MediaRow]): Iterator[SafetensorsStats] = rows.map { r =>
     val b = r.payload
-    require(b.length >= 8, s"truncated header length: media ${r.media_id}")
-    val hlen = u64le(b, 0)
-    require(hlen > 0 && 8 + hlen <= b.length,
+    val hlen = Payload(r).u64le(0, "header length")
+    require(hlen > 0 && hlen <= b.length - 8,
       s"header length $hlen overruns payload (${b.length}): media ${r.media_id}")
     val header = new String(b, 8, hlen.toInt, java.nio.charset.StandardCharsets.UTF_8)
     val dataLen = b.length - 8 - hlen
@@ -297,19 +282,19 @@ object ModelFormats {
     * `Π shape × sizeof(descr)` and sums `<i4` elements exactly.
     */
   def decodeNpy(rows: Iterator[MediaRow]): Iterator[NpyStats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    require(b.length >= 10, s"truncated preamble: media ${r.media_id}")
-    require((b(0) & 0xff) == 0x93 && new String(b, 1, 5, "US-ASCII") == "NUMPY",
+    require(in.u8(0, "magic") == 0x93 && in.ascii(1, 5, "magic") == "NUMPY",
       s"bad NPY magic: media ${r.media_id}")
-    val major = b(6) & 0xff
-    val minor = b(7) & 0xff
+    val major = in.u8(6, "version")
+    val minor = in.u8(7, "version")
     require(major == 1 && minor == 0,
       s"unsupported NPY version $major.$minor: media ${r.media_id}")
-    val hlen = u16le(b, 8)
+    val hlen = in.u16le(8, "header length")
     require(10 + hlen <= b.length, s"header overruns payload: media ${r.media_id}")
     require((10 + hlen) % 64 == 0,
       s"header not 64-aligned (${10 + hlen}): media ${r.media_id}")
-    val header = new String(b, 10, hlen, "US-ASCII")
+    val header = in.ascii(10, hlen, "header")
     require(header.endsWith("\n"), s"header not newline-terminated: media ${r.media_id}")
     def dictField(key: String): String = {
       val m = s"'$key':".r.findFirstMatchIn(header).getOrElse(
@@ -336,7 +321,7 @@ object ModelFormats {
     val inner = shapeRest.drop(1).takeWhile(_ != ')')
     val dims = inner.split(",").map(_.trim).filter(_.nonEmpty).map { s =>
       require(s.forall(_.isDigit), s"non-integer dim '$s': media ${r.media_id}")
-      s.toLong
+      in.number(s, "shape dim")(_.toLong)
     }
     require(dims.length >= 1 && dims.length <= 2,
       s"unsupported rank ${dims.length}: media ${r.media_id}")
@@ -345,7 +330,7 @@ object ModelFormats {
       s"data length ${b.length - 10 - hlen} != $nElems x $esize: media ${r.media_id}")
     require(descr == "<i4", s"element sum needs <i4, got '$descr': media ${r.media_id}")
     var (sum, i) = (0L, 10 + hlen)
-    while (i < b.length) { sum += u32le(b, i).toInt; i += 4 } // toInt: sign-extend i32
+    while (i < b.length) { sum += in.u32le(i).toInt; i += 4 } // toInt: sign-extend i32
     NpyStats(r.media_id, major, minor, dims.length, dims(0),
       if (dims.length > 1) dims(1) else 1L, nElems, esize, fortran, hlen, sum)
   }
@@ -430,50 +415,43 @@ object ModelFormats {
     * file length against the data section's span.
     */
   def decodeGguf(rows: Iterator[MediaRow]): Iterator[GgufStats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    var i = 0
-    def need(n: Long, what: String): Unit =
-      require(i + n <= b.length, s"truncated $what at $i: media ${r.media_id}")
-    def rdU32(): Long = { need(4, "u32"); val v = u32le(b, i); i += 4; v }
-    def rdU64(): Long = { need(8, "u64"); val v = u64le(b, i); i += 8; v }
-    def rdI32(): Int = rdU32().toInt
-    def rdStr(): String = {
-      val n = rdU64()
-      need(n, "string")
-      val s = new String(b, i, n.toInt, java.nio.charset.StandardCharsets.UTF_8)
-      i += n.toInt
-      s
+    var i = 0L
+    // the walk reads at the cursor `i`, then moves it past the field
+    def adv[T](width: Long)(v: T): T = { i += width; v }
+    def rdStr(what: String): String = {
+      val n = adv(8)(in.u64le(i, s"$what length"))
+      in.need(i, n, what)
+      adv(n)(new String(b, i.toInt, n.toInt, java.nio.charset.StandardCharsets.UTF_8))
     }
-    need(4, "magic")
-    require(new String(b, 0, 4, "US-ASCII") == "GGUF",
-      s"bad GGUF magic: media ${r.media_id}")
-    i = 4
-    val version = rdU32().toInt
+    require(adv(4)(in.ascii(0, 4, "magic")) == "GGUF", s"bad GGUF magic: media ${r.media_id}")
+    val version = adv(4)(in.u32le(i, "version")).toInt
     require(version == 3, s"unsupported GGUF version $version: media ${r.media_id}")
-    val nTensors = rdU64()
-    val nKv = rdU64()
+    val nTensors = adv(8)(in.u64le(i, "tensor count"))
+    val nKv = adv(8)(in.u64le(i, "KV count"))
     var (layerCount, ctxLen, arrSum) = (0L, 0L, 0L)
     var k = 0L
     while (k < nKv) {
-      val key = rdStr()
-      val vtype = rdU32().toInt
+      val key = rdStr("KV key")
+      val vtype = adv(4)(in.u32le(i, "KV type")).toInt
       vtype match {
         case 8 => // string
-          val v = rdStr()
+          val v = rdStr("string value")
           require(key != "general.architecture" || v == "graft",
             s"unexpected architecture '$v': media ${r.media_id}")
         case 4 => // u32
-          val v = rdU32()
+          val v = adv(4)(in.u32le(i, "u32 value"))
           if (key == "graft.layer_count") layerCount = v
         case 10 => // u64
-          val v = rdU64()
+          val v = adv(8)(in.u64le(i, "u64 value"))
           if (key == "graft.context_length") ctxLen = v
         case 9 => // array
-          val etype = rdU32().toInt
+          val etype = adv(4)(in.u32le(i, "array element type")).toInt
           require(etype == 5, s"unsupported array elem type $etype: media ${r.media_id}")
-          val n = rdU64()
+          val n = adv(8)(in.u64le(i, "array length"))
           var j = 0L
-          while (j < n) { arrSum += rdI32(); j += 1 }
+          while (j < n) { arrSum += adv(4)(in.u32le(i, "i32 element")).toInt; j += 1 }
         case t => throw new IllegalArgumentException(
           s"unsupported KV type $t for '$key': media ${r.media_id}")
       }
@@ -485,20 +463,20 @@ object ModelFormats {
     val spanSizes = scala.collection.mutable.ArrayBuffer.empty[Long]
     var t = 0L
     while (t < nTensors) {
-      rdStr() // tensor name (length-framed; content not a census field)
-      val nDims = rdU32().toInt
+      rdStr("tensor name") // length-framed; content not a census field
+      val nDims = adv(4)(in.u32le(i, "n_dims")).toInt
       require(nDims >= 1 && nDims <= 4, s"bad n_dims $nDims: media ${r.media_id}")
       var ne = 1L
       var d = 0
-      while (d < nDims) { ne *= rdU64(); d += 1 }
-      val gtype = rdU32().toInt
+      while (d < nDims) { ne *= adv(8)(in.u64le(i, "dim")); d += 1 }
+      val gtype = adv(4)(in.u32le(i, "ggml type")).toInt
       val esize = gtype match {
         case 0 => nF32 += 1; 4L // GGML_TYPE_F32
         case 1 => nF16 += 1; 2L // GGML_TYPE_F16
         case g => throw new IllegalArgumentException(
           s"unsupported ggml type $g: media ${r.media_id}")
       }
-      val off = rdU64()
+      val off = adv(8)(in.u64le(i, "tensor offset"))
       require(off == expectOff,
         s"tensor $t offset $off != expected $expectOff: media ${r.media_id}")
       require(off % GgufAlign == 0,
@@ -513,7 +491,7 @@ object ModelFormats {
       expectOff = off + aligned
       t += 1
     }
-    val dataStart = align32(i.toLong)
+    val dataStart = align32(i)
     require(b.length.toLong == dataStart + lastEnd,
       s"file length ${b.length} != data end ${dataStart + lastEnd}: media ${r.media_id}")
     // sum ONLY real tensor bytes (walk the verified spans; padding
@@ -619,9 +597,8 @@ object ModelFormats {
     * census that lies).
     */
   def decodeTfExample(rows: Iterator[MediaRow]): Iterator[TfExampleStats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    def u32(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
     var nRec = 0
     var (nEnt, nBv, nIv, nFv, blSum, bSum, iSum, f2Sum) = (0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)
 
@@ -631,7 +608,7 @@ object ModelFormats {
       var done = false
       while (!done) {
         require(p < end, s"truncated varint at $p: media ${r.media_id}")
-        val byte = b(p) & 0xff
+        val byte = in.u8(p)
         v |= (byte & 0x7fL) << shift
         shift += 7
         require(shift <= 70, s"varint too long at $pos: media ${r.media_id}")
@@ -644,15 +621,20 @@ object ModelFormats {
       val (t, p) = varint(pos, end)
       ((t >>> 3).toInt, (t & 7).toInt, p)
     }
+    // a length-delimited field's (length, first byte), inside [pos, end)
+    def delimited(pos: Int, end: Int, what: String): (Int, Int) = {
+      val (n, p) = varint(pos, end)
+      require(n >= 0 && n <= end - p, s"$what (length $n) overruns at $p: media ${r.media_id}")
+      (n.toInt, p)
+    }
 
     def parseFeature(start: Int, end: Int): Unit = {
       var p = start
       require(p < end, s"empty Feature at $p: media ${r.media_id}")
       val (field, wt, p1) = tag(p, end)
       require(wt == 2, s"Feature field $field wire type $wt != 2: media ${r.media_id}")
-      val (len, p2) = varint(p1, end)
-      val lEnd = p2 + len.toInt
-      require(lEnd <= end, s"Feature list overruns at $p2: media ${r.media_id}")
+      val (len, p2) = delimited(p1, end, "Feature list")
+      val lEnd = p2 + len
       field match {
         case 1 => // BytesList: repeated bytes value = 1 (not packed)
           var q = p2
@@ -660,12 +642,11 @@ object ModelFormats {
             val (f2, w2, q1) = tag(q, lEnd)
             require(f2 == 1 && w2 == 2,
               s"BytesList field $f2/$w2: media ${r.media_id}")
-            val (bl, q2) = varint(q1, lEnd)
-            require(q2 + bl <= lEnd, s"bytes value overruns: media ${r.media_id}")
+            val (bl, q2) = delimited(q1, lEnd, "bytes value")
             nBv += 1; blSum += bl
             var j = 0
             while (j < bl) { bSum += b(q2 + j) & 0xff; j += 1 }
-            q = q2 + bl.toInt
+            q = q2 + bl
           }
         case 2 => // FloatList: packed float value = 1
           var q = p2
@@ -673,12 +654,11 @@ object ModelFormats {
             val (f2, w2, q1) = tag(q, lEnd)
             require(f2 == 1 && w2 == 2,
               s"FloatList field $f2/$w2: media ${r.media_id}")
-            val (pl, q2) = varint(q1, lEnd)
-            require(pl % 4 == 0 && q2 + pl <= lEnd,
-              s"packed float block bad length $pl: media ${r.media_id}")
+            val (pl, q2) = delimited(q1, lEnd, "packed float block")
+            require(pl % 4 == 0, s"packed float block bad length $pl: media ${r.media_id}")
             var j = 0
             while (j < pl) {
-              val bits = u32(q2 + j)
+              val bits = in.u32le(q2 + j).toInt
               val v = java.lang.Float.intBitsToFloat(bits)
               val dbl = 2.0f * v
               require(dbl == math.rint(dbl.toDouble).toFloat,
@@ -687,7 +667,7 @@ object ModelFormats {
               nFv += 1
               j += 4
             }
-            q = q2 + pl.toInt
+            q = q2 + pl
           }
         case 3 => // Int64List: packed varint value = 1
           var q = p2
@@ -695,9 +675,8 @@ object ModelFormats {
             val (f2, w2, q1) = tag(q, lEnd)
             require(f2 == 1 && w2 == 2,
               s"Int64List field $f2/$w2: media ${r.media_id}")
-            val (pl, q2) = varint(q1, lEnd)
-            val pEnd = q2 + pl.toInt
-            require(pEnd <= lEnd, s"packed int block overruns: media ${r.media_id}")
+            val (pl, q2) = delimited(q1, lEnd, "packed int block")
+            val pEnd = q2 + pl
             var q3 = q2
             while (q3 < pEnd) {
               val (v, q4) = varint(q3, pEnd)
@@ -717,18 +696,16 @@ object ModelFormats {
         val (field, wt, p1) = tag(p, end)
         require(field == 1 && wt == 2,
           s"Features field $field/$wt: media ${r.media_id}")
-        val (len, p2) = varint(p1, end)
-        val eEnd = p2 + len.toInt
-        require(eEnd <= end, s"map entry overruns: media ${r.media_id}")
+        val (len, p2) = delimited(p1, end, "map entry")
+        val eEnd = p2 + len
         // map entry: 1 = key string, 2 = value Feature
         var q = p2
         var (sawKey, sawVal) = (false, false)
         while (q < eEnd) {
           val (f2, w2, q1) = tag(q, eEnd)
           require(w2 == 2, s"map entry field $f2 wire $w2: media ${r.media_id}")
-          val (len2, q2) = varint(q1, eEnd)
-          val vEnd = q2 + len2.toInt
-          require(vEnd <= eEnd, s"map entry value overruns: media ${r.media_id}")
+          val (len2, q2) = delimited(q1, eEnd, "map entry value")
+          val vEnd = q2 + len2
           f2 match {
             case 1 => sawKey = true
             case 2 => sawVal = true; parseFeature(q2, vEnd)
@@ -749,31 +726,17 @@ object ModelFormats {
         val (field, wt, p1) = tag(p, end)
         require(field == 1 && wt == 2,
           s"Example field $field/$wt: media ${r.media_id}")
-        val (len, p2) = varint(p1, end)
-        require(p2 + len <= end, s"Features overruns: media ${r.media_id}")
-        parseFeatures(p2, p2 + len.toInt)
-        p = p2 + len.toInt
+        val (len, p2) = delimited(p1, end, "Features")
+        parseFeatures(p2, p2 + len)
+        p = p2 + len
       }
     }
 
-    // TFRecord framing walk with CRC verification (same contract as
-    // decodeTfRecord), each payload parsed as an Example
-    var i = 0
-    while (i < b.length) {
-      require(i + 12 <= b.length, s"truncated record header at $i: media ${r.media_id}")
-      var len = 0L
-      var k = 7
-      while (k >= 0) { len = (len << 8) | (b(i + k) & 0xff).toLong; k -= 1 }
-      require(u32(i + 8) == Multimodal.maskedCrc(b, i, 8),
-        s"length CRC mismatch at $i: media ${r.media_id}")
-      val body = i + 12
-      require(len <= b.length - body - 4,
-        s"record overruns payload at $i: media ${r.media_id}")
-      require(u32(body + len.toInt) == Multimodal.maskedCrc(b, body, len.toInt),
-        s"payload CRC mismatch at $i: media ${r.media_id}")
-      parseExample(body, body + len.toInt)
+    // the TFRecord framing walk of decodeTfRecord (both CRCs verified),
+    // each payload parsed as an Example
+    Multimodal.tfRecordFrames(in).foreach { case (body, len) =>
+      parseExample(body, body + len)
       nRec += 1
-      i = body + len.toInt + 4
     }
     TfExampleStats(r.media_id, nRec, nEnt, nBv, nIv, nFv, blSum, bSum, iSum, f2Sum)
   }

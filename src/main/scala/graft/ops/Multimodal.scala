@@ -33,6 +33,55 @@ object Multimodal {
     */
   final case class MediaRow(media_id: Long, mime: String, payload: Array[Byte])
 
+  /** Bounds-checked reads over one untrusted payload. Every decoder in
+    * this package reads its header and structure fields through a
+    * `Payload`: each read checks `0 ≤ i` and `i + n ≤ length` in Long
+    * arithmetic (a huge declared size cannot wrap past the check) and
+    * otherwise throws an IllegalArgumentException naming the field, the
+    * offset and the media id — a corrupt input never reaches a raw JVM
+    * index error. Bulk pixel/sample loops check their range once with
+    * [[need]] and then index `bytes` directly. Text decoders parse their
+    * numeric fields through [[number]].
+    */
+  private[ops] final class Payload(val bytes: Array[Byte], val mediaId: Long) {
+    def length: Int = bytes.length
+
+    def need(i: Long, n: Long, what: String): Unit =
+      if (i < 0 || n < 0 || n > bytes.length - i)
+        throw new IllegalArgumentException(
+          s"$what at offset $i (+$n) overruns the ${bytes.length}-byte payload: media $mediaId")
+
+    /** The `n`-byte unsigned integer at `i`, little- or big-endian. */
+    private def uint(i: Long, n: Int, big: Boolean, what: String): Long = {
+      need(i, n, what)
+      var v = 0L
+      var k = 0
+      while (k < n) { v = (v << 8) | (bytes(i.toInt + (if (big) k else n - 1 - k)) & 0xffL); k += 1 }
+      v
+    }
+    def u8(i: Long, what: String = "u8"): Int = uint(i, 1, big = true, what).toInt
+    def u16le(i: Long, what: String = "u16le"): Int = uint(i, 2, big = false, what).toInt
+    def u16be(i: Long, what: String = "u16be"): Int = uint(i, 2, big = true, what).toInt
+    def u32le(i: Long, what: String = "u32le"): Long = uint(i, 4, big = false, what)
+    def u32be(i: Long, what: String = "u32be"): Long = uint(i, 4, big = true, what)
+    def u64le(i: Long, what: String = "u64le"): Long = uint(i, 8, big = false, what)
+    def u64be(i: Long, what: String = "u64be"): Long = uint(i, 8, big = true, what)
+    def ascii(i: Long, n: Int, what: String = "ascii"): String = {
+      need(i, n, what); new String(bytes, i.toInt, n, java.nio.charset.StandardCharsets.US_ASCII)
+    }
+
+    /** Parse one numeric text field; a malformed number is a named failure. */
+    def number[T](s: String, what: String)(parse: String => T): T =
+      try parse(s) catch {
+        case _: NumberFormatException =>
+          throw new IllegalArgumentException(s"$what '$s' is not a number: media $mediaId")
+      }
+  }
+
+  private[ops] object Payload {
+    def apply(r: MediaRow): Payload = new Payload(r.payload, r.media_id)
+  }
+
   /** The decode seam: DataFrame of [[MediaRow]]s → typed partition-wise
     * decode → DataFrame. One narrow stage, no shuffle.
     */
@@ -100,7 +149,7 @@ object Multimodal {
     */
   def decodePpm(rows: Iterator[MediaRow]): Iterator[ImageStats] = rows.map { r =>
     val b = r.payload
-    val (w, h, mv, off) = parsePpmHeader(b, r.media_id)
+    val (w, h, mv, off) = parsePpmHeader(Payload(r))
     val n = w.toLong * h
     var i = off
     var (rs, gs, bs) = (0L, 0L, 0L)
@@ -143,51 +192,58 @@ object Multimodal {
     * [[decodePpm]].
     */
   def decodeWav(rows: Iterator[MediaRow]): Iterator[WavStats] = rows.map { r =>
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int): Long = u16(i).toLong | (u16(i + 2).toLong << 16)
-    def id4(i: Int): String = new String(b, i, 4, "US-ASCII")
-    require(b.length >= 12 && id4(0) == "RIFF" && id4(8) == "WAVE",
-      s"not a RIFF/WAVE payload: media ${r.media_id}")
-    var i = 12
+    val in = Payload(r)
     var (nCh, rate, bits, align) = (0, 0, 0, 0)
     var nFrames = 0L
     var (s0, s1) = (0L, 0L)
     var seenFmt = false
-    while (i + 8 <= b.length) {
-      val cid = id4(i); val szL = u32(i + 4)
-      val body = i + 8
-      // a size field >= 2^31 would wrap negative under .toInt and stall
-      // the cursor — malformed payloads must FAIL, not spin
-      require(szL <= b.length - body,
-        s"chunk '$cid' size $szL overruns payload: media ${r.media_id}")
-      val sz = szL.toInt
-      cid match {
-        case "fmt " =>
-          require(sz >= 16, s"fmt chunk too short ($sz < 16): media ${r.media_id}")
-          require(u16(body) == 1, s"not PCM (fmt ${u16(body)}): media ${r.media_id}")
-          nCh = u16(body + 2); rate = u32(body + 4).toInt
-          align = u16(body + 12); bits = u16(body + 14)
-          require(bits == 16, s"only 16-bit PCM supported: media ${r.media_id}")
-          require(nCh == 1 || nCh == 2,
-            s"per-channel sums are defined for mono/stereo only, got $nCh channels: media ${r.media_id}")
-          seenFmt = true
-        case "data" =>
-          require(seenFmt, s"data chunk before fmt: media ${r.media_id}")
-          nFrames = sz.toLong / align
-          var j = 0
-          while (j < sz / 2) {
-            val v = u16(body + 2 * j).toShort.toLong // LE signed 16-bit
-            if (j % nCh == 0) s0 += v else s1 += v
-            j += 1
-          }
-        case _ => // unknown chunk (LIST, JUNK, ...): skip body + pad
-      }
-      i = body + sz + (sz & 1) // RIFF chunks pad to even length
+    riffChunks(in).foreach {
+      case ("fmt ", body, sz) =>
+        require(sz >= 16, s"fmt chunk too short ($sz < 16): media ${r.media_id}")
+        require(in.u16le(body) == 1, s"not PCM (fmt ${in.u16le(body)}): media ${r.media_id}")
+        nCh = in.u16le(body + 2); rate = in.u32le(body + 4).toInt
+        align = in.u16le(body + 12); bits = in.u16le(body + 14)
+        require(bits == 16, s"only 16-bit PCM supported: media ${r.media_id}")
+        require(nCh == 1 || nCh == 2,
+          s"per-channel sums are defined for mono/stereo only, got $nCh channels: media ${r.media_id}")
+        require(align > 0, s"fmt block align is 0: media ${r.media_id}")
+        seenFmt = true
+      case ("data", body, sz) =>
+        require(seenFmt, s"data chunk before fmt: media ${r.media_id}")
+        nFrames = sz.toLong / align
+        var j = 0
+        while (j < sz / 2) {
+          val v = in.u16le(body + 2 * j).toShort.toLong // LE signed 16-bit
+          if (j % nCh == 0) s0 += v else s1 += v
+          j += 1
+        }
+      case _ => // unknown chunk (LIST, JUNK, ...): skipped
     }
     require(seenFmt, s"no fmt chunk: media ${r.media_id}")
     WavStats(r.media_id, nCh, rate, bits, nFrames, s0, s1)
+  }
+
+  /** The RIFF/WAVE chunk walk shared by [[decodeWav]] and the audio
+    * fingerprints: (id, body offset, size) per chunk, each declared size
+    * checked against the payload, bodies padded to even length per spec.
+    */
+  private def riffChunks(in: Payload): Seq[(String, Int, Int)] = {
+    require(in.ascii(0, 4, "RIFF id") == "RIFF" && in.ascii(8, 4, "WAVE id") == "WAVE",
+      s"not a RIFF/WAVE payload: media ${in.mediaId}")
+    val out = Vector.newBuilder[(String, Int, Int)]
+    var i = 12
+    while (i + 8 <= in.length) {
+      val cid = in.ascii(i, 4); val szL = in.u32le(i + 4)
+      val body = i + 8
+      // a size field >= 2^31 would wrap negative under .toInt and stall
+      // the cursor — malformed payloads must FAIL, not spin
+      require(szL <= in.length - body,
+        s"chunk '$cid' size $szL overruns payload: media ${in.mediaId}")
+      val sz = szL.toInt
+      out += ((cid, body, sz))
+      i = body + sz + (sz & 1)
+    }
+    out.result()
   }
 
   /** Deterministic WAV fixture per id: channels = 1 + id%2, rate =
@@ -242,22 +298,21 @@ object Multimodal {
     * fail loudly, like [[decodePpm]].
     */
   def decodeBmp(rows: Iterator[MediaRow]): Iterator[BmpStats] = rows.map { r =>
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int): Long = u16(i).toLong | (u16(i + 2).toLong << 16)
-    require(b.length >= 54 && b(0) == 'B' && b(1) == 'M',
-      s"not a BMP payload: media ${r.media_id}")
-    val offBits = u32(10)
-    require(u32(14) == 40, s"not BITMAPINFOHEADER (biSize ${u32(14)}): media ${r.media_id}")
-    val w = u32(18).toInt
-    val h = u32(22).toInt // positive = bottom-up per spec
+    val in = Payload(r)
+    in.need(0, 54, "BMP headers")
+    require(in.ascii(0, 2) == "BM", s"not a BMP payload: media ${r.media_id}")
+    val offBits = in.u32le(10)
+    val biSize = in.u32le(14)
+    require(biSize == 40, s"not BITMAPINFOHEADER (biSize $biSize): media ${r.media_id}")
+    val w = in.u32le(18).toInt
+    val h = in.u32le(22).toInt // positive = bottom-up per spec
     require(h > 0, s"top-down (negative-height) BMP unsupported: media ${r.media_id}")
-    require(u16(26) == 1, s"biPlanes must be 1: media ${r.media_id}")
-    require(u16(28) == 24, s"only 24-bit BMP supported (got ${u16(28)}): media ${r.media_id}")
-    require(u32(30) == 0, s"only BI_RGB (uncompressed) supported: media ${r.media_id}")
+    require(in.u16le(26) == 1, s"biPlanes must be 1: media ${r.media_id}")
+    val bpp = in.u16le(28)
+    require(bpp == 24, s"only 24-bit BMP supported (got $bpp): media ${r.media_id}")
+    require(in.u32le(30) == 0, s"only BI_RGB (uncompressed) supported: media ${r.media_id}")
     val rowSize = (3 * w + 3) & ~3
-    require(offBits + rowSize.toLong * h <= b.length,
+    require(offBits + rowSize.toLong * h <= in.length,
       s"pixel array overruns payload: media ${r.media_id}")
     var (rs, gs, bs) = (0L, 0L, 0L)
     var row0 = 0L
@@ -267,8 +322,8 @@ object Multimodal {
       val base = offBits.toInt + fr * rowSize
       var x = 0
       while (x < w) {
-        val bl = u8(base + 3 * x); val gr = u8(base + 3 * x + 1)
-        val rd = u8(base + 3 * x + 2)
+        val bl = in.u8(base + 3 * x); val gr = in.u8(base + 3 * x + 1)
+        val rd = in.u8(base + 3 * x + 2)
         bs += bl; gs += gr; rs += rd
         if (y == 0) row0 += bl + gr + rd
         x += 1
@@ -299,14 +354,10 @@ object Multimodal {
     * marker. Malformed payloads fail loudly, like [[decodePpm]].
     */
   def decodeQoi(rows: Iterator[MediaRow]): Iterator[QoiStats] = rows.map { r =>
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    require(b.length >= 14 + 8 && b(0) == 'q' && b(1) == 'o' && b(2) == 'i' && b(3) == 'f',
-      s"not a QOI payload: media ${r.media_id}")
-    def be32(i: Int): Long =
-      (u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    val w = be32(4).toInt; val h = be32(8).toInt
-    val channels = u8(12); val colorspace = u8(13)
+    val in = Payload(r)
+    require(in.ascii(0, 4, "qoif magic") == "qoif", s"not a QOI payload: media ${r.media_id}")
+    val w = in.u32be(4).toInt; val h = in.u32be(8).toInt
+    val channels = in.u8(12); val colorspace = in.u8(13)
     require(w > 0 && h > 0, s"bad dimensions ${w}x$h: media ${r.media_id}")
     require(channels == 3 || channels == 4,
       s"bad channel count $channels: media ${r.media_id}")
@@ -325,12 +376,12 @@ object Multimodal {
       }
     }
     while (p < n) {
-      require(i < b.length - 8, s"op stream truncated at pixel $p: media ${r.media_id}")
-      val op = u8(i)
+      require(i < in.length - 8, s"op stream truncated at pixel $p: media ${r.media_id}")
+      val op = in.u8(i)
       if (op == 0xfe) { // RGB
-        pr = u8(i + 1); pg = u8(i + 2); pb = u8(i + 3); i += 4; emit(1)
+        pr = in.u8(i + 1); pg = in.u8(i + 2); pb = in.u8(i + 3); i += 4; emit(1)
       } else if (op == 0xff) { // RGBA
-        pr = u8(i + 1); pg = u8(i + 2); pb = u8(i + 3); pa = u8(i + 4); i += 5; emit(1)
+        pr = in.u8(i + 1); pg = in.u8(i + 2); pb = in.u8(i + 3); pa = in.u8(i + 4); i += 5; emit(1)
       } else (op >> 6) match {
         case 0 => // INDEX
           val v = index(op & 0x3f)
@@ -343,7 +394,7 @@ object Multimodal {
           i += 1; emit(1)
         case 2 => // LUMA
           val dg = (op & 0x3f) - 32
-          val b2 = u8(i + 1)
+          val b2 = in.u8(i + 1)
           pr = (pr + dg + ((b2 >> 4) & 0xf) - 8) & 0xff
           pg = (pg + dg) & 0xff
           pb = (pb + dg + (b2 & 0xf) - 8) & 0xff
@@ -356,7 +407,7 @@ object Multimodal {
       index((3 * pr + 5 * pg + 7 * pb + 11 * pa) % 64) =
         (pa << 24) | (pr << 16) | (pg << 8) | pb
     }
-    require(i + 8 <= b.length && (0 until 7).forall(k => u8(i + k) == 0) && u8(i + 7) == 1,
+    require((0 until 7).forall(k => in.u8(i + k) == 0) && in.u8(i + 7) == 1,
       s"missing QOI end marker: media ${r.media_id}")
     QoiStats(r.media_id, w, h, rs, gs, bs, ws)
   }
@@ -474,29 +525,37 @@ object Multimodal {
     */
   def decodeTfRecord(rows: Iterator[MediaRow]): Iterator[TfRecordStats] = rows.map { r =>
     val b = r.payload
-    def u32(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    var i = 0
     var (nRec, totLen, pSum, wSum) = (0L, 0L, 0L, 0L)
-    while (i < b.length) {
-      require(i + 12 <= b.length, s"truncated record header at $i: media ${r.media_id}")
-      var len = 0L
-      var k = 7
-      while (k >= 0) { len = (len << 8) | (b(i + k) & 0xff).toLong; k -= 1 }
-      require(u32(i + 8) == maskedCrc(b, i, 8),
-        s"length CRC mismatch at $i: media ${r.media_id}")
-      val body = i + 12
-      require(len <= b.length - body - 4,
-        s"record overruns payload at $i (len $len): media ${r.media_id}")
-      require(u32(body + len.toInt) == maskedCrc(b, body, len.toInt),
-        s"payload CRC mismatch at $i: media ${r.media_id}")
+    tfRecordFrames(Payload(r)).foreach { case (body, len) =>
       var s = 0L
       var j = 0
       while (j < len) { s += b(body + j) & 0xff; j += 1 }
       pSum += s; wSum += nRec * s; totLen += len; nRec += 1
-      i = body + len.toInt + 4
     }
     TfRecordStats(r.media_id, nRec, totLen, pSum, wSum)
+  }
+
+  /** The verified TFRecord framing walk behind [[decodeTfRecord]] and
+    * `ModelFormats.decodeTfExample`: (body offset, length) per record,
+    * both masked CRCs checked.
+    */
+  private[ops] def tfRecordFrames(in: Payload): Seq[(Int, Int)] = {
+    val (b, id) = (in.bytes, in.mediaId)
+    val out = Vector.newBuilder[(Int, Int)]
+    var i = 0
+    while (i < b.length) {
+      val len = in.u64le(i, "record length")
+      require(in.u32le(i + 8, "length CRC").toInt == maskedCrc(b, i, 8),
+        s"length CRC mismatch at $i: media $id")
+      val body = i + 12
+      require(len >= 0 && len <= b.length - body - 4,
+        s"record overruns payload at $i (len $len): media $id")
+      require(in.u32le(body + len, "payload CRC").toInt == maskedCrc(b, body, len.toInt),
+        s"payload CRC mismatch at $i: media $id")
+      out += ((body, len.toInt))
+      i = body + len.toInt + 4
+    }
+    out.result()
   }
 
   /** Deterministic TFRecord fixture per id: n = 1 + id%4 records,
@@ -545,7 +604,7 @@ object Multimodal {
     */
   def decodePbm(rows: Iterator[MediaRow]): Iterator[PbmStats] = rows.map { r =>
     val b = r.payload
-    val (w, h, off) = parsePbmHeader(b, r.media_id)
+    val (w, h, off) = parsePbmHeader(Payload(r))
     val rowBytes = (w + 7) / 8
     require(off + rowBytes.toLong * h <= b.length,
       s"bit raster overruns payload: media ${r.media_id}")
@@ -566,7 +625,8 @@ object Multimodal {
     PbmStats(r.media_id, w, h, nb, r0, ws)
   }
 
-  private def parsePbmHeader(b: Array[Byte], id: Long): (Int, Int, Int) = {
+  private def parsePbmHeader(in: Payload): (Int, Int, Int) = {
+    val (b, id) = (in.bytes, in.mediaId)
     var i = 0
     def skipWsAndComments(): Unit = {
       var go = true
@@ -582,10 +642,9 @@ object Multimodal {
       val st = i
       while (i < b.length && (b(i) & 0xff) >= '0' && (b(i) & 0xff) <= '9') i += 1
       require(i > st, s"expected integer in PBM header: media $id")
-      new String(b, st, i - st, "US-ASCII").toInt
+      in.number(in.ascii(st, i - st), "PBM dimension")(_.toInt)
     }
-    require(b.length >= 2 && b(0) == 'P' && b(1) == '4',
-      s"not a P4 PBM payload: media $id")
+    require(in.ascii(0, 2, "P4 magic") == "P4", s"not a P4 PBM payload: media $id")
     i = 2
     val w = int(); val h = int()
     require(w > 0 && h > 0, s"bad PBM dimensions ${w}x$h: media $id")
@@ -642,24 +701,20 @@ object Multimodal {
     * Malformed payloads fail loudly.
     */
   def decodeMidi(rows: Iterator[MediaRow]): Iterator[MidiStats] = rows.map { r =>
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Int): Long = (u16(i).toLong << 16) | u16(i + 2)
-    def id4(i: Int): String = new String(b, i, 4, "US-ASCII")
-    require(b.length >= 14 && id4(0) == "MThd" && u32(4) == 6,
+    val in = Payload(r)
+    in.need(0, 14, "MThd header")
+    require(in.ascii(0, 4) == "MThd" && in.u32be(4) == 6,
       s"not a MIDI payload: media ${r.media_id}")
-    val ntrks = u16(10)
+    val ntrks = in.u16be(10)
     var i = 14
     var (nNotes, ticks, keySum, velSum) = (0L, 0L, 0L, 0L)
     var tracksSeen = 0
     while (tracksSeen < ntrks) {
-      require(i + 8 <= b.length && id4(i) == "MTrk",
-        s"missing MTrk chunk at $i: media ${r.media_id}")
-      val len = u32(i + 4)
+      require(in.ascii(i, 4, "MTrk id") == "MTrk", s"missing MTrk chunk at $i: media ${r.media_id}")
+      val len = in.u32be(i + 4, "track length")
       val body = i + 8
+      require(len <= in.length - body, s"track overruns payload: media ${r.media_id}")
       val end = body + len.toInt
-      require(len <= b.length - body, s"track overruns payload: media ${r.media_id}")
       var p = body
       var status = -1
       var done = false
@@ -668,25 +723,26 @@ object Multimodal {
         var dt = 0L // delta-time VLQ
         var more = true
         while (more) {
-          val v = u8(p); p += 1
+          val v = in.u8(p); p += 1
           dt = (dt << 7) | (v & 0x7f)
           more = (v & 0x80) != 0
         }
         ticks += dt
-        var st = u8(p)
+        var st = in.u8(p)
         if (st >= 0x80) { status = st; p += 1 } else {
           require(status >= 0, s"running status with no prior status: media ${r.media_id}")
           st = status // running status: reuse, don't consume
         }
         if (st == 0xff) { // meta event: type + VLQ length + data
-          val mt = u8(p); p += 1
+          val mt = in.u8(p); p += 1
           var mlen = 0L; var m2 = true
-          while (m2) { val v = u8(p); p += 1; mlen = (mlen << 7) | (v & 0x7f); m2 = (v & 0x80) != 0 }
+          while (m2) { val v = in.u8(p); p += 1; mlen = (mlen << 7) | (v & 0x7f); m2 = (v & 0x80) != 0 }
+          require(mlen >= 0 && mlen <= end - p, s"meta event length $mlen overruns track: media ${r.media_id}")
           p += mlen.toInt
           if (mt == 0x2f) done = true
         } else (st & 0xf0) match {
           case 0x90 =>
-            val k = u8(p); val v = u8(p + 1); p += 2
+            val k = in.u8(p); val v = in.u8(p + 1); p += 2
             if (v > 0) { nNotes += 1; keySum += k; velSum += v }
           case 0x80 => p += 2
           case 0xc0 | 0xd0 => p += 1 // program change / channel pressure
@@ -735,20 +791,20 @@ object Multimodal {
     * ISO/IEC 11172-3 (public standard values).
     */
   def decodeMp3(rows: Iterator[MediaRow]): Iterator[Mp3Stats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
     // full MPEG-1 Layer III standard tables — independent of the fixture
     val kbpsTab = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
       224, 256, 320, -1)
     val srTab = Array(44100, 48000, 32000, -1)
     var off = 0
     var id3Size = 0L
-    if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-      require(u8(3) == 3 || u8(3) == 4,
-        s"unsupported ID3v2 version ${u8(3)}: media ${r.media_id}")
-      require((u8(6) | u8(7) | u8(8) | u8(9)) < 0x80,
+    if (b.length >= 10 && in.ascii(0, 3) == "ID3") {
+      require(in.u8(3) == 3 || in.u8(3) == 4,
+        s"unsupported ID3v2 version ${in.u8(3)}: media ${r.media_id}")
+      require((in.u8(6) | in.u8(7) | in.u8(8) | in.u8(9)) < 0x80,
         s"non-syncsafe ID3 size byte: media ${r.media_id}")
-      val body = (u8(6) << 21) | (u8(7) << 14) | (u8(8) << 7) | u8(9)
+      val body = (in.u8(6) << 21) | (in.u8(7) << 14) | (in.u8(8) << 7) | in.u8(9)
       id3Size = 10L + body
       require(id3Size <= b.length,
         s"ID3 tag overruns payload: media ${r.media_id}")
@@ -760,12 +816,12 @@ object Multimodal {
     while (off < b.length) {
       require(off + 4 <= b.length,
         s"trailing garbage (${b.length - off} bytes, no frame header): media ${r.media_id}")
-      require(u8(off) == 0xff && (u8(off + 1) & 0xe0) == 0xe0,
+      require(in.u8(off) == 0xff && (in.u8(off + 1) & 0xe0) == 0xe0,
         s"lost sync at $off: media ${r.media_id}")
-      val h1 = u8(off + 1)
+      val h1 = in.u8(off + 1)
       require((h1 >> 3 & 0x3) == 3, s"not MPEG-1 at $off: media ${r.media_id}")
       require((h1 >> 1 & 0x3) == 1, s"not Layer III at $off: media ${r.media_id}")
-      val h2 = u8(off + 2)
+      val h2 = in.u8(off + 2)
       val bIdx = h2 >> 4
       val sIdx = h2 >> 2 & 0x3
       val pad = h2 >> 1 & 0x1
@@ -891,6 +947,7 @@ object Multimodal {
     * loudly.
     */
   def decodeObj(rows: Iterator[MediaRow]): Iterator[ObjStats] = rows.map { r =>
+    val in = Payload(r)
     val text = new String(r.payload, "US-ASCII")
     var (nv, nf) = (0L, 0L)
     var (sx, sy, sz) = (0L, 0L, 0L)
@@ -902,14 +959,14 @@ object Multimodal {
         parts(0) match {
           case "v" =>
             require(parts.length >= 4, s"short vertex line '$line': media ${r.media_id}")
-            sx += parts(1).toDouble.toLong
-            sy += parts(2).toDouble.toLong
-            sz += parts(3).toDouble.toLong
+            sx += in.number(parts(1), "vertex x")(_.toDouble).toLong
+            sy += in.number(parts(2), "vertex y")(_.toDouble).toLong
+            sz += in.number(parts(3), "vertex z")(_.toDouble).toLong
             nv += 1
           case "f" =>
             require(parts.length == 4, s"non-triangle face '$line': media ${r.media_id}")
             val idx = (1 to 3).map { k =>
-              val i = parts(k).split("/")(0).toLong // strip /texture/normal
+              val i = in.number(parts(k).takeWhile(_ != '/'), "face index")(_.toLong) // strip /texture/normal
               require(i >= 1 && i <= nv,
                 s"face index $i out of range (nv=$nv): media ${r.media_id}")
               i
@@ -991,19 +1048,18 @@ object Multimodal {
     * payloads fail loudly.
     */
   def decodeUlaw(rows: Iterator[MediaRow]): Iterator[UlawStats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    require(b.length >= 8 && b(0) == 'U' && b(1) == 'L' && b(2) == 'A' && b(3) == 'W',
-      s"not a ULAW payload: media ${r.media_id}")
-    val n = (b(4) & 0xff) | ((b(5) & 0xff) << 8) | ((b(6) & 0xff) << 16) | ((b(7) & 0xff) << 24)
-    require(n >= 0 && b.length == 8 + n,
-      s"sample count $n does not match payload: media ${r.media_id}")
+    require(in.ascii(0, 4, "ULAW magic") == "ULAW", s"not a ULAW payload: media ${r.media_id}")
+    val n = in.u32le(4, "sample count")
+    require(b.length == 8 + n, s"sample count $n does not match payload: media ${r.media_id}")
     var (ds, ws) = (0L, 0L)
     var j = 0
     while (j < n) {
       val d = ulawDecode(b(8 + j) & 0xff)
       ds += d; ws += j.toLong * d; j += 1
     }
-    UlawStats(r.media_id, n.toLong, ds, ws)
+    UlawStats(r.media_id, n, ds, ws)
   }
 
   /** Deterministic µ-law fixture per id: n = 6 + id%12 samples, sample
@@ -1088,41 +1144,26 @@ object Multimodal {
     * data ordering. Returns (nSamp, the 61 segment energies).
     */
   private def wavSegmentEnergies(r: MediaRow): (Long, Array[Long]) = {
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int): Long = u16(i).toLong | (u16(i + 2).toLong << 16)
-    def id4(i: Int): String = new String(b, i, 4, "US-ASCII")
-    require(b.length >= 12 && id4(0) == "RIFF" && id4(8) == "WAVE",
-      s"not a RIFF/WAVE payload: media ${r.media_id}")
-    var i = 12
+    val in = Payload(r)
     var seenFmt = false
     var nSamp = 0L
     val energies = new Array[Long](61)
-    while (i + 8 <= b.length) {
-      val cid = id4(i); val szL = u32(i + 4)
-      val body = i + 8
-      require(szL <= b.length - body,
-        s"chunk '$cid' size $szL overruns payload: media ${r.media_id}")
-      val sz = szL.toInt
-      cid match {
-        case "fmt " =>
-          require(sz >= 16 && u16(body) == 1 && u16(body + 2) == 1 && u16(body + 14) == 16,
-            s"audio fingerprint needs mono 16-bit PCM: media ${r.media_id}")
-          seenFmt = true
-        case "data" =>
-          require(seenFmt, s"data chunk before fmt: media ${r.media_id}")
-          nSamp = sz.toLong / 2
-          require(nSamp >= 61, s"need >= 61 samples for the 61-segment hash: media ${r.media_id}")
-          var j = 0L
-          while (j < nSamp) {
-            val v = u16(body + 2 * j.toInt).toShort.toLong
-            energies((j * 61 / nSamp).toInt) += v * v
-            j += 1
-          }
-        case _ => // unknown chunk: skip body + pad
-      }
-      i = body + sz + (sz & 1)
+    riffChunks(in).foreach {
+      case ("fmt ", body, sz) =>
+        require(sz >= 16 && in.u16le(body) == 1 && in.u16le(body + 2) == 1 && in.u16le(body + 14) == 16,
+          s"audio fingerprint needs mono 16-bit PCM: media ${r.media_id}")
+        seenFmt = true
+      case ("data", body, sz) =>
+        require(seenFmt, s"data chunk before fmt: media ${r.media_id}")
+        nSamp = sz.toLong / 2
+        require(nSamp >= 61, s"need >= 61 samples for the 61-segment hash: media ${r.media_id}")
+        var j = 0L
+        while (j < nSamp) {
+          val v = in.u16le(body + 2 * j).toShort.toLong
+          energies((j * 61 / nSamp).toInt) += v * v
+          j += 1
+        }
+      case _ => // unknown chunk: skipped
     }
     require(nSamp > 0, s"no data chunk: media ${r.media_id}")
     (nSamp, energies)
@@ -1238,22 +1279,19 @@ object Multimodal {
     * [[decodePpm]] and [[decodeWav]].
     */
   def decodeJpegHeader(rows: Iterator[MediaRow]): Iterator[JpegDims] = rows.map { r =>
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16be(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    require(b.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8,
-      s"not a JPEG (no SOI): media ${r.media_id}")
+    val in = Payload(r)
+    require(in.u16be(0, "SOI") == 0xffd8, s"not a JPEG (no SOI): media ${r.media_id}")
     @annotation.tailrec
     def walk(i: Int, skipped: Int): JpegDims = {
-      require(i + 4 <= b.length, s"ran past payload before SOF: media ${r.media_id}")
-      require(u8(i) == 0xff, s"marker alignment lost at byte $i: media ${r.media_id}")
-      val m = u8(i + 1)
-      val len = u16be(i + 2)
-      require(len >= 2 && i + 2 + len <= b.length,
+      require(i + 4 <= in.length, s"ran past payload before SOF: media ${r.media_id}")
+      require(in.u8(i) == 0xff, s"marker alignment lost at byte $i: media ${r.media_id}")
+      val m = in.u8(i + 1)
+      val len = in.u16be(i + 2, "segment length")
+      require(len >= 2 && i + 2 + len <= in.length,
         s"segment 0x${m.toHexString} length $len overruns payload: media ${r.media_id}")
       if (m >= 0xc0 && m <= 0xc3) {
-        require(u8(i + 4) == 8, s"only 8-bit precision supported: media ${r.media_id}")
-        val h = u16be(i + 5); val w = u16be(i + 7); val nc = u8(i + 9)
+        require(in.u8(i + 4) == 8, s"only 8-bit precision supported: media ${r.media_id}")
+        val h = in.u16be(i + 5); val w = in.u16be(i + 7); val nc = in.u8(i + 9)
         require(len == 8 + 3 * nc,
           s"SOF length $len inconsistent with $nc components: media ${r.media_id}")
         JpegDims(r.media_id, h, w, nc, is_progressive = m == 0xc2, n_skipped = skipped)
@@ -1314,9 +1352,9 @@ object Multimodal {
   /** Parse a P6 header: returns (width, height, maxval, raster offset).
     * Shared by [[decodePpm]] and [[decodePpmPhash]].
     */
-  private def parsePpmHeader(b: Array[Byte], mediaId: Long): (Int, Int, Int, Int) = {
-    require(b.length >= 2 && b(0) == 'P' && b(1) == '6',
-      s"not a P6 PPM: media $mediaId")
+  private def parsePpmHeader(in: Payload): (Int, Int, Int, Int) = {
+    val (b, mediaId) = (in.bytes, in.mediaId)
+    require(in.ascii(0, 2, "P6 magic") == "P6", s"not a P6 PPM: media $mediaId")
     var i = 2
     def skipWsAndComments(): Unit = {
       var more = true
@@ -1344,15 +1382,16 @@ object Multimodal {
     * contract and narrow mapPartitions seam as [[decodePpm]].
     */
   def decodePpmPhash(rows: Iterator[MediaRow]): Iterator[PpmPhash] = rows.map { r =>
-    val (w, h, _, off) = parsePpmHeader(r.payload, r.media_id)
-    PpmPhash(r.media_id, w, h, dHash(r.payload, w, h, off))
+    val in = Payload(r)
+    val (w, h, _, off) = parsePpmHeader(in)
+    PpmPhash(r.media_id, w, h, dHash(in, w, h, off))
   }
 
   /** The 60-bit dHash of the P6 raster at `off` (see [[PpmPhash]]). */
-  private def dHash(b: Array[Byte], w: Int, h: Int, off: Int): Long = {
+  private def dHash(in: Payload, w: Int, h: Int, off: Int): Long = {
     def gray(x: Int, y: Int): Int = {
-      val j = off + 3 * (y * w + x)
-      (b(j) & 0xff) + (b(j + 1) & 0xff) + (b(j + 2) & 0xff)
+      val j = off + 3L * (y.toLong * w + x)
+      in.u8(j) + in.u8(j + 1) + in.u8(j + 2)
     }
     var hash = 0L
     var rr = 0
@@ -1387,8 +1426,11 @@ object Multimodal {
     */
   def decodePpmPhashBanded(rows: Iterator[MediaRow]): Iterator[PpmPhashB] = rows.map { r =>
     val b = r.payload
-    val (w, h, _, off) = parsePpmHeader(b, r.media_id)
-    PpmPhashB(r.media_id, w, h, dHash(b, w, h, off), fnv1a(b, off, off + 3 * w))
+    val in = Payload(r)
+    val (w, h, _, off) = parsePpmHeader(in)
+    val phash = dHash(in, w, h, off)
+    in.need(off, 3L * w, "PPM row 0")
+    PpmPhashB(r.media_id, w, h, phash, fnv1a(b, off, off + 3 * w))
   }
 
   /** Deterministic P6 fixture WITH PLANTED NEAR-DUPS for the perceptual
@@ -1478,51 +1520,44 @@ object Multimodal {
     * payloads fail loudly like the other three decoders.
     */
   def decodeGif(rows: Iterator[MediaRow]): Iterator[GifStats] = rows.map { r =>
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    require(b.length >= 13 && new String(b, 0, 6, "US-ASCII") == "GIF89a",
-      s"not a GIF89a payload: media ${r.media_id}")
-    val w = u16(6); val h = u16(8)
-    val packed = u8(10)
+    val in = Payload(r)
+    in.need(0, 13, "GIF header")
+    require(in.ascii(0, 6) == "GIF89a", s"not a GIF89a payload: media ${r.media_id}")
+    val w = in.u16le(6); val h = in.u16le(8)
+    val packed = in.u8(10)
     var i = 13
     if ((packed & 0x80) != 0) i += 3 * (1 << ((packed & 0x07) + 1)) // GCT
     var (frames, delay, exts) = (0, 0L, 0)
     def skipSubBlocks(): Unit = {
       var more = true
       while (more) {
-        require(i < b.length, s"sub-block chain overruns payload: media ${r.media_id}")
-        val len = u8(i); i += 1
+        val len = in.u8(i, "sub-block length"); i += 1
         if (len == 0) more = false
         else {
-          require(i + len <= b.length, s"sub-block overruns payload: media ${r.media_id}")
+          require(i + len <= in.length, s"sub-block overruns payload: media ${r.media_id}")
           i += len
         }
       }
     }
     var done = false
     while (!done) {
-      require(i < b.length, s"ran past payload before trailer: media ${r.media_id}")
-      u8(i) match {
+      in.u8(i, "block introducer") match {
         case 0x3b => done = true
         case 0x21 => // extension: label + sub-blocks
-          require(i + 2 <= b.length, s"truncated extension: media ${r.media_id}")
-          val label = u8(i + 1); i += 2
+          val label = in.u8(i + 1, "extension label"); i += 2
           if (label == 0xf9) {
-            require(u8(i) == 4 && i + 6 <= b.length,
-              s"malformed GCE: media ${r.media_id}")
-            delay += u16(i + 2) // centiseconds, LE
+            require(in.u8(i) == 4, s"malformed GCE: media ${r.media_id}")
+            delay += in.u16le(i + 2, "GCE delay") // centiseconds, LE
             i += 5 // block size byte + 4 payload bytes
-            require(u8(i) == 0, s"GCE missing terminator: media ${r.media_id}")
+            require(in.u8(i) == 0, s"GCE missing terminator: media ${r.media_id}")
             i += 1
           } else skipSubBlocks()
           exts += 1
         case 0x2c => // image descriptor
-          require(i + 10 <= b.length, s"truncated image descriptor: media ${r.media_id}")
-          val ipacked = u8(i + 9); i += 10
+          val ipacked = in.u8(i + 9, "image descriptor"); i += 10
           if ((ipacked & 0x80) != 0) i += 3 * (1 << ((ipacked & 0x07) + 1)) // LCT
-          require(i < b.length, s"missing LZW min code size: media ${r.media_id}")
-          i += 1 // LZW minimum code size
+          in.need(i, 1, "LZW min code size")
+          i += 1
           skipSubBlocks()
           frames += 1
         case x => throw new IllegalArgumentException(
@@ -1601,33 +1636,31 @@ object Multimodal {
     * decode itself is public-spec PNG (RFC 2083).
     */
   def decodePng(rows: Iterator[MediaRow]): Iterator[PngStats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
     val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    require(b.length >= 8 && (0 until 8).forall(j => u8(j) == sig(j)),
+    require((0 until 8).forall(j => in.u8(j, "signature") == sig(j)),
       s"not a PNG (bad signature): media ${r.media_id}")
     var i = 8
     var (w, h, depth, ctype) = (0, 0, -1, -1)
     val idat = new java.io.ByteArrayOutputStream()
     var ended = false
     while (!ended) {
-      require(i + 12 <= b.length, s"truncated chunk header: media ${r.media_id}")
-      val len = u32(i).toInt
-      val typ = new String(b, i + 4, 4, "US-ASCII")
-      require(i + 12 + len <= b.length,
-        s"chunk $typ length $len overruns payload: media ${r.media_id}")
+      val lenL = in.u32be(i, "chunk length")
+      val typ = in.ascii(i + 4, 4, "chunk type")
+      require(lenL <= in.length - i - 12L,
+        s"chunk $typ length $lenL overruns payload: media ${r.media_id}")
+      val len = lenL.toInt
       val crc = new java.util.zip.CRC32()
       crc.update(b, i + 4, 4 + len)
-      require(crc.getValue == u32(i + 8 + len),
+      require(crc.getValue == in.u32be(i + 8 + len),
         s"CRC mismatch in $typ: media ${r.media_id}")
       typ match {
         case "IHDR" =>
           require(len == 13, s"IHDR length $len: media ${r.media_id}")
-          w = u32(i + 8).toInt; h = u32(i + 12).toInt
-          depth = u8(i + 16); ctype = u8(i + 17)
-          require(u8(i + 18) == 0 && u8(i + 19) == 0 && u8(i + 20) == 0,
+          w = in.u32be(i + 8).toInt; h = in.u32be(i + 12).toInt
+          depth = in.u8(i + 16); ctype = in.u8(i + 17)
+          require(in.u8(i + 18) == 0 && in.u8(i + 19) == 0 && in.u8(i + 20) == 0,
             s"unsupported compression/filter/interlace: media ${r.media_id}")
           require(depth == 8 && ctype == 0,
             s"only 8-bit grayscale supported: media ${r.media_id}")
@@ -1646,7 +1679,7 @@ object Multimodal {
     val inf = new java.util.zip.Inflater()
     inf.setInput(idat.toByteArray)
     val filt = new Array[Byte](h * (w + 1))
-    val got = inf.inflate(filt)
+    val got = inflateOrFail(inf, filt, s"IDAT: media ${r.media_id}")
     require(got == filt.length && inf.finished(),
       s"inflate produced $got of ${filt.length} bytes: media ${r.media_id}")
     inf.end()
@@ -1803,32 +1836,28 @@ object Multimodal {
     * checksum, member bounds and the two-zero-block trailer checked.
     */
   private def tarEntries(r: MediaRow): Seq[TarEntry] = {
+    val in = Payload(r)
     val b = r.payload
     require(b.length % 512 == 0, s"tar not 512-aligned: media ${r.media_id}")
     def octal(off: Int, len: Int, field: String, member: String): Long = {
-      val s = new String(b, off, len, "US-ASCII")
-        .takeWhile(c => c != 0 && c != ' ')
-      try if (s.isEmpty) 0L else java.lang.Long.parseLong(s, 8)
-      catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"bad octal $field '$s' in member '$member': media ${r.media_id}", e)
-      }
+      val s = in.ascii(off, len, field).takeWhile(c => c != 0 && c != ' ')
+      if (s.isEmpty) 0L
+      else in.number(s, s"octal $field in member '$member'")(java.lang.Long.parseLong(_, 8))
     }
     val out = Vector.newBuilder[TarEntry]
     var i = 0
     var done = false
     while (!done) {
-      require(i + 512 <= b.length, s"ran past archive: media ${r.media_id}")
+      in.need(i, 512, "tar header block")
       if (b(i) == 0) {
         // trailer: two zero blocks then end
-        require(i + 1024 <= b.length &&
-          (i until i + 1024).forall(j => b(j) == 0) && i + 1024 == b.length,
+        require(i + 1024 == b.length && (i until i + 1024).forall(j => b(j) == 0),
           s"malformed trailer at block ${i / 512}: media ${r.media_id}")
         done = true
       } else {
-        require(new String(b, i + 257, 5, "US-ASCII") == "ustar",
+        require(in.ascii(i + 257, 5) == "ustar",
           s"bad ustar magic at block ${i / 512}: media ${r.media_id}")
-        val name = new String(b, i, 100, "US-ASCII").takeWhile(_ != 0)
+        val name = in.ascii(i, 100).takeWhile(_ != 0)
         val stored = octal(i + 148, 8, "checksum", name)
         val actual = (i until i + 512).map { j =>
           if (j >= i + 148 && j < i + 156) ' '.toLong else (b(j) & 0xff).toLong
@@ -1943,6 +1972,7 @@ object Multimodal {
     * loudly like the other five decoders.
     */
   def decodeSrt(rows: Iterator[MediaRow]): Iterator[SrtStats] = rows.map { r =>
+    val in = Payload(r)
     val s = new String(r.payload, "UTF-8")
     val blocks = s.split("\r?\n\r?\n").filter(_.trim.nonEmpty)
     require(blocks.nonEmpty, s"empty SRT: media ${r.media_id}")
@@ -1951,12 +1981,14 @@ object Multimodal {
     blocks.zipWithIndex.foreach { case (blk, pos) =>
       val lines = blk.split("\r?\n")
       require(lines.length >= 3, s"cue ${pos + 1} too short: media ${r.media_id}")
-      require(lines(0).trim.toInt == pos + 1,
+      require(in.number(lines(0).trim, "cue index")(_.toInt) == pos + 1,
         s"cue index ${lines(0).trim} at position ${pos + 1}: media ${r.media_id}")
       val (st, en) = lines(1).trim match {
         case srtTime(h1, m1, s1, ms1, h2, m2, s2, ms2) =>
-          def ms(h: String, m: String, sec: String, milli: String): Long =
-            h.toLong * 3600000L + m.toLong * 60000L + sec.toLong * 1000L + milli.toLong
+          def ms(h: String, m: String, sec: String, milli: String): Long = {
+            def n(f: String): Long = in.number(f, "timecode field")(_.toLong)
+            n(h) * 3600000L + n(m) * 60000L + n(sec) * 1000L + n(milli)
+          }
           (ms(h1, m1, s1, ms1), ms(h2, m2, s2, ms2))
         case other => throw new IllegalArgumentException(
           s"bad timecode line '$other': media ${r.media_id}")
@@ -2056,19 +2088,14 @@ object Multimodal {
     * other decoder in this file. Spec: Mp4Spec.
     */
   def decodeMp4(rows: Iterator[MediaRow]): Iterator[Mp4Track] = rows.flatMap { r =>
-    val b = r.payload
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    def u64(i: Int): Long = (u32(i) << 32) | u32(i + 4)
-    def fourcc(i: Int): String = {
-      (0 until 4).foreach { j =>
-        val c = u8(i + j)
+    val in = Payload(r)
+    def printableFourcc(i: Int): String = {
+      (i until i + 4).foreach { j =>
+        val c = in.u8(j, "fourcc")
         require(c >= 0x20 && c <= 0x7e,
-          s"bad fourcc byte 0x${c.toHexString} at ${i + j}: media ${r.media_id}")
+          s"bad fourcc byte 0x${c.toHexString} at $j: media ${r.media_id}")
       }
-      new String(b, i, 4, "US-ASCII")
+      in.ascii(i, 4)
     }
     /** All child boxes of [start, end) as (type, bodyStart, bodyEnd). */
     def boxes(start: Int, end: Int): Seq[(String, Int, Int)] = {
@@ -2076,13 +2103,13 @@ object Multimodal {
       var i = start
       while (i < end) {
         require(i + 8 <= end, s"truncated box header at byte $i: media ${r.media_id}")
-        val sz = u32(i)
-        val typ = fourcc(i + 4)
+        val sz = in.u32be(i, "box size")
+        val typ = printableFourcc(i + 4)
         val (bodyStart, boxEnd) =
           if (sz == 0) (i + 8, end) // runs to the end of the container
           else if (sz == 1) {
             require(i + 16 <= end, s"truncated largesize for '$typ': media ${r.media_id}")
-            val lsz = u64(i + 8)
+            val lsz = in.u64be(i + 8, "box largesize")
             require(lsz >= 16, s"largesize $lsz < 16 for '$typ': media ${r.media_id}")
             require(i + lsz <= end, s"'$typ' largesize overruns container: media ${r.media_id}")
             (i + 16, (i + lsz).toInt)
@@ -2100,16 +2127,16 @@ object Multimodal {
       kids.collectFirst { case (`typ`, s, e) => (s, e) }.getOrElse(
         throw new IllegalArgumentException(s"no '$typ' box: media ${r.media_id}"))
 
-    val top = boxes(0, b.length)
+    val top = boxes(0, in.length)
     val (fs, fe) = find(top, "ftyp")
     require(fe - fs >= 8, s"ftyp too short: media ${r.media_id}")
-    val brand = fourcc(fs)
+    val brand = printableFourcc(fs)
     val (ms, me) = find(top, "moov")
     val moovKids = boxes(ms, me)
     val (mvS, _) = find(moovKids, "mvhd")
-    val (mvTs, mvDur) = u8(mvS) match {
-      case 1 => (u32(mvS + 20), u64(mvS + 24)) // v1: u64 times
-      case 0 => (u32(mvS + 12), u32(mvS + 16)) // v0: u32 times
+    val (mvTs, mvDur) = in.u8(mvS) match {
+      case 1 => (in.u32be(mvS + 20), in.u64be(mvS + 24)) // v1: u64 times
+      case 0 => (in.u32be(mvS + 12), in.u32be(mvS + 16)) // v0: u32 times
       case v => throw new IllegalArgumentException(
         s"unknown mvhd version $v: media ${r.media_id}")
     }
@@ -2118,35 +2145,35 @@ object Multimodal {
     traks.map { case (ts0, te0) =>
       val kids = boxes(ts0, te0)
       val (tkS, _) = find(kids, "tkhd")
-      val (tkId, tkDur) = u8(tkS) match {
-        case 1 => (u32(tkS + 20), u64(tkS + 28))
-        case 0 => (u32(tkS + 12), u32(tkS + 20))
+      val (tkId, tkDur) = in.u8(tkS) match {
+        case 1 => (in.u32be(tkS + 20), in.u64be(tkS + 28))
+        case 0 => (in.u32be(tkS + 12), in.u32be(tkS + 20))
         case v => throw new IllegalArgumentException(
           s"unknown tkhd version $v: media ${r.media_id}")
       }
       val (mdiaS, mdiaE) = find(kids, "mdia")
       val mdiaKids = boxes(mdiaS, mdiaE)
       val (mdS, _) = find(mdiaKids, "mdhd")
-      val (mdTs, mdDur, langOff) = u8(mdS) match {
-        case 1 => (u32(mdS + 20), u64(mdS + 24), mdS + 32)
-        case 0 => (u32(mdS + 12), u32(mdS + 16), mdS + 20)
+      val (mdTs, mdDur, langOff) = in.u8(mdS) match {
+        case 1 => (in.u32be(mdS + 20), in.u64be(mdS + 24), mdS + 32)
+        case 0 => (in.u32be(mdS + 12), in.u32be(mdS + 16), mdS + 20)
         case v => throw new IllegalArgumentException(
           s"unknown mdhd version $v: media ${r.media_id}")
       }
       require(mdTs != 0, s"mdhd timescale is zero: media ${r.media_id}")
-      val packed = u16(langOff)
+      val packed = in.u16be(langOff)
       val lang = new String(Array(
         (((packed >> 10) & 0x1f) + 0x60).toChar,
         (((packed >> 5) & 0x1f) + 0x60).toChar,
         ((packed & 0x1f) + 0x60).toChar))
       val (hdS, _) = find(mdiaKids, "hdlr")
-      val handler = fourcc(hdS + 8) // version/flags(4) + pre_defined(4)
+      val handler = printableFourcc(hdS + 8) // version/flags(4) + pre_defined(4)
       val (minfS, minfE) = find(mdiaKids, "minf")
       val (stblS, stblE) = find(boxes(minfS, minfE), "stbl")
       val (stsdS, stsdE) = find(boxes(stblS, stblE), "stsd")
-      require(u32(stsdS + 4) >= 1, s"stsd has no sample entry: media ${r.media_id}")
+      require(in.u32be(stsdS + 4) >= 1, s"stsd has no sample entry: media ${r.media_id}")
       require(stsdE - stsdS >= 16, s"stsd too short: media ${r.media_id}")
-      val codec = fourcc(stsdS + 12) // v/f(4) + entry_count(4) + entry size(4)
+      val codec = printableFourcc(stsdS + 12) // v/f(4) + entry_count(4) + entry size(4)
       Mp4Track(r.media_id, brand, mvTs, mvDur, top.length, tkId,
         handler, codec, tkDur, mdTs, mdDur, lang)
     }
@@ -2276,21 +2303,18 @@ object Multimodal {
     * uncompressed size.
     */
   private def zipEntries(r: MediaRow): Seq[ZipEntry] = {
+    val in = Payload(r)
     val b = r.payload
-    def u16(off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long =
-      (u16(off).toLong) | (u16(off + 2).toLong << 16)
     // EOCD: PK\5\6, scanned backward (a trailing comment may follow)
     var e = b.length - 22
     while (e >= 0 && !(b(e) == 'P' && b(e + 1) == 'K' && b(e + 2) == 5 && b(e + 3) == 6))
       e -= 1
     require(e >= 0, s"no end-of-central-directory: media ${r.media_id}")
-    val nEntries = u16(e + 10)
-    require(u16(e + 8) == nEntries,
+    val nEntries = in.u16le(e + 10)
+    require(in.u16le(e + 8) == nEntries,
       s"multi-disk archive not supported: media ${r.media_id}")
-    val cdSize = u32(e + 12)
-    val cdOff = u32(e + 16)
+    val cdSize = in.u32le(e + 12)
+    val cdOff = in.u32le(e + 16)
     require(cdOff + cdSize <= e,
       s"central directory overruns EOCD: media ${r.media_id}")
     val cdEnd = (cdOff + cdSize).toInt
@@ -2300,27 +2324,27 @@ object Multimodal {
     while (seen < nEntries) {
       require(i + 46 <= cdEnd,
         s"central-directory entry $seen overruns the directory: media ${r.media_id}")
-      require(u32(i) == 0x02014b50L,
+      require(in.u32le(i) == 0x02014b50L,
         s"bad central-directory signature at entry $seen: media ${r.media_id}")
-      val method = u16(i + 10)
-      val crc = u32(i + 16)
-      val csize = u32(i + 20)
-      val usize = u32(i + 24)
-      val nameLen = u16(i + 28)
-      val extraLen = u16(i + 30)
-      val commentLen = u16(i + 32)
+      val method = in.u16le(i + 10)
+      val crc = in.u32le(i + 16)
+      val csize = in.u32le(i + 20)
+      val usize = in.u32le(i + 24)
+      val nameLen = in.u16le(i + 28)
+      val extraLen = in.u16le(i + 30)
+      val commentLen = in.u16le(i + 32)
       require(i + 46 + nameLen <= cdEnd,
         s"name of central-directory entry $seen overruns the directory: media ${r.media_id}")
       val name = new String(b, i + 46, nameLen, "UTF-8")
       // local header cross-check: header and name lie before the directory
-      val lhoL = u32(i + 42)
+      val lhoL = in.u32le(i + 42)
       require(lhoL + 30 <= cdOff,
         s"local header offset $lhoL for $name outside the archive: media ${r.media_id}")
       val lho = lhoL.toInt
-      require(u32(lho) == 0x04034b50L,
+      require(in.u32le(lho) == 0x04034b50L,
         s"bad local signature for $name: media ${r.media_id}")
-      val lNameLen = u16(lho + 26)
-      val lExtraLen = u16(lho + 28)
+      val lNameLen = in.u16le(lho + 26)
+      val lExtraLen = in.u16le(lho + 28)
       require(lho + 30 + lNameLen <= cdOff,
         s"local name for $name overruns the archive: media ${r.media_id}")
       require(new String(b, lho + 30, lNameLen, "UTF-8") == name,
@@ -2536,10 +2560,8 @@ object Multimodal {
     * HTTP status line and head/payload split located.
     */
   private def warcRecords(r: MediaRow): Seq[WarcRecord] = {
+    val in = Payload(r)
     val b = r.payload
-    def le32(off: Int): Long =
-      (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-        ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
     def crlf2(data: Array[Byte], from: Int): Int = {
       var k = from
       while (k + 3 < data.length &&
@@ -2552,11 +2574,11 @@ object Multimodal {
     var nMembers = 0
     while (off < b.length) {
       require(b.length - off >= 20, s"truncated gzip member at $off: media ${r.media_id}")
-      require((b(off) & 0xff) == 0x1f && (b(off + 1) & 0xff) == 0x8b,
+      require(in.u8(off) == 0x1f && in.u8(off + 1) == 0x8b,
         s"bad gzip magic at $off: media ${r.media_id}")
-      require(b(off + 2) == 8, s"gzip method ${b(off + 2)} not deflate: media ${r.media_id}")
-      require(b(off + 3) == 0,
-        s"unexpected gzip flags ${b(off + 3)}: media ${r.media_id}")
+      val (method, flags) = (in.u8(off + 2), in.u8(off + 3))
+      require(method == 8, s"gzip method $method not deflate: media ${r.media_id}")
+      require(flags == 0, s"unexpected gzip flags $flags: media ${r.media_id}")
       val dataStart = off + 10
       val inf = new java.util.zip.Inflater(true)
       val acc = new java.io.ByteArrayOutputStream()
@@ -2573,12 +2595,10 @@ object Multimodal {
       } finally inf.end()
       val rec = acc.toByteArray
       val tOff = dataStart + used
-      require(tOff + 8 <= b.length,
-        s"missing gzip trailer in member $nMembers: media ${r.media_id}")
       val crc = new java.util.zip.CRC32(); crc.update(rec)
-      require(le32(tOff) == crc.getValue,
+      require(in.u32le(tOff, "gzip trailer CRC") == crc.getValue,
         s"gzip CRC mismatch in member $nMembers: media ${r.media_id}")
-      require(le32(tOff + 4) == (rec.length & 0xffffffffL),
+      require(in.u32le(tOff + 4, "gzip trailer ISIZE") == (rec.length & 0xffffffffL),
         s"gzip ISIZE mismatch in member $nMembers: media ${r.media_id}")
       off = tOff + 8
       nMembers += 1
@@ -2724,45 +2744,41 @@ object Multimodal {
     * mismatch — all fail loudly (`PdfSpec`).
     */
   def decodePdf(rows: Iterator[MediaRow]): Iterator[PdfStats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    def str(off: Int, len: Int): String = {
-      require(off >= 0 && off + len <= b.length,
-        s"read past PDF end ($off+$len of ${b.length}): media ${r.media_id}")
-      new String(b, off, len, "ISO-8859-1")
-    }
-    require(b.length > 40 && str(0, 5) == "%PDF-",
-      s"bad PDF header: media ${r.media_id}")
+    require(b.length > 40 && in.ascii(0, 5) == "%PDF-", s"bad PDF header: media ${r.media_id}")
     // startxref from the tail window
     val twLen = math.min(64, b.length)
-    val tail = str(b.length - twLen, twLen)
+    val tail = in.ascii(b.length - twLen, twLen)
     val sxi = tail.lastIndexOf("startxref")
     require(sxi >= 0, s"missing startxref: media ${r.media_id}")
-    val xrefOff = tail.substring(sxi + 9).trim.split("\\s+")(0).toInt
-    require(xrefOff + 4 <= b.length && str(xrefOff, 4) == "xref",
+    val xrefOff =
+      in.number(tail.substring(sxi + 9).trim.split("\\s+")(0), "startxref offset")(_.toInt)
+    require(in.ascii(xrefOff, 4, "xref table") == "xref",
       s"startxref ($xrefOff) does not point at an xref table: media ${r.media_id}")
     var p = xrefOff + 4
-    while (b(p) == '\n' || b(p) == '\r') p += 1
-    var le = p; while (b(le) != '\n') le += 1
-    val hdr = str(p, le - p).trim.split(" ")
+    while (in.u8(p, "xref subsection") == '\n' || in.u8(p) == '\r') p += 1
+    var le = p; while (in.u8(le, "xref subsection") != '\n') le += 1
+    val hdr = in.ascii(p, le - p).trim.split(" ")
     require(hdr.length == 2 && hdr(0) == "0",
       s"unsupported xref subsection '${hdr.mkString(" ")}': media ${r.media_id}")
-    val k = hdr(1).toInt
+    val k = in.number(hdr(1), "xref entry count")(_.toInt)
     p = le + 1
     // k fixed 20-byte entries
     val entries = (0 until k).map { n =>
-      val e = str(p + 20 * n, 20)
+      val e = in.ascii(p + 20L * n, 20, s"xref entry $n")
       require(e(10) == ' ' && e(16) == ' ' && (e(17) == 'n' || e(17) == 'f'),
         s"malformed xref entry $n '$e': media ${r.media_id}")
-      (e.substring(0, 10).toInt, e(17))
+      (in.number(e.substring(0, 10), s"xref entry $n offset")(_.toInt), e(17))
     }
     p += 20 * k
     // trailer: /Size must equal the entry count
-    val trailerStr = str(p, math.min(200, b.length - p))
+    val trailerStr = in.ascii(p, math.min(200, b.length - p), "trailer")
     require(trailerStr.startsWith("trailer"),
       s"xref table not followed by trailer: media ${r.media_id}")
     val sizeM = "/Size (\\d+)".r.findFirstMatchIn(trailerStr)
     require(sizeM.isDefined, s"trailer missing /Size: media ${r.media_id}")
-    val trailerSize = sizeM.get.group(1).toInt
+    val trailerSize = in.number(sizeM.get.group(1), "trailer /Size")(_.toInt)
     require(trailerSize == k,
       s"trailer /Size $trailerSize != xref count $k: media ${r.media_id}")
     var (nObj, nFree, nPages, nStreams) = (0, 0, 0, 0)
@@ -2773,10 +2789,10 @@ object Multimodal {
       else {
         nObj += 1
         val want = s"$num 0 obj"
-        require(str(off, want.length) == want,
-          s"xref offset $off for object $num finds '${str(off, math.min(12, b.length - off))}': media ${r.media_id}")
+        require(in.ascii(off, want.length, s"object $num header") == want,
+          s"xref offset $off for object $num finds '${in.ascii(off, math.min(12, b.length - off))}': media ${r.media_id}")
         // dict between << and >> (single-level in the walkable subset)
-        val window = str(off, math.min(300, b.length - off))
+        val window = in.ascii(off, math.min(300, b.length - off))
         val dOpen = window.indexOf("<<")
         val dClose = window.indexOf(">>")
         require(dOpen >= 0 && dClose > dOpen,
@@ -2786,15 +2802,17 @@ object Multimodal {
         if (dict.contains("/Type /Page ") || dict.contains("/Type /Page/")) nPages += 1
         if (dict.contains("/Length ")) {
           nStreams += 1
-          val len = "/Length (\\d+)".r.findFirstMatchIn(dict).get.group(1).toInt
+          val lenM = "/Length (\\d+)".r.findFirstMatchIn(dict)
+          require(lenM.isDefined, s"object $num has no numeric /Length: media ${r.media_id}")
+          val len = in.number(lenM.get.group(1), s"object $num /Length")(_.toInt)
           val sKey = window.indexOf("stream", dClose)
           require(sKey >= 0, s"stream object $num missing 'stream': media ${r.media_id}")
           var ds = off + sKey + 6
-          if (b(ds) == '\r') ds += 1
-          require(b(ds) == '\n', s"missing EOL after 'stream' in object $num: media ${r.media_id}")
+          if (in.u8(ds, "stream EOL") == '\r') ds += 1
+          require(in.u8(ds, "stream EOL") == '\n', s"missing EOL after 'stream' in object $num: media ${r.media_id}")
           ds += 1
           // length-skip, then endstream REQUIRED at exactly that boundary
-          require(str(ds + len, 10) == "\nendstream",
+          require(in.ascii(ds.toLong + len, 10, "endstream") == "\nendstream",
             s"/Length $len does not land on endstream in object $num: media ${r.media_id}")
           streamBytes += len
           // text-op census over the content bytes
@@ -2805,7 +2823,7 @@ object Multimodal {
             b(q).toChar match {
               case '[' => inArr = true; q += 1
               case ']' =>
-                if (inArr && q + 3 <= end && str(q, 4).startsWith("] TJ")) nTjArr += 1
+                if (inArr && q + 3 <= end && in.ascii(q, 4).startsWith("] TJ")) nTjArr += 1
                 inArr = false; q += 1
               case '(' =>
                 var c = q + 1
@@ -2816,7 +2834,7 @@ object Multimodal {
                 }
                 require(c < end, s"unterminated string in object $num: media ${r.media_id}")
                 textChars += c - q - 1
-                if (!inArr && c + 3 < end && str(c + 1, 3) == " Tj") nTj += 1
+                if (!inArr && c + 3 < end && in.ascii(c + 1, 3) == " Tj") nTj += 1
                 q = c + 1
               case _ => q += 1
             }
@@ -2910,6 +2928,7 @@ object Multimodal {
     * declarations and raw-text elements are not tags and are not listed.
     */
   private def htmlWalk(r: MediaRow): (HtmlStats, Seq[(Int, String)]) = {
+    val in = Payload(r)
     val s = new String(r.payload, java.nio.charset.StandardCharsets.UTF_8)
     val anchors = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
     var i = 0
@@ -2975,7 +2994,7 @@ object Multimodal {
           case "quot" => "\""
           case "apos" => "'"
           case num if num.startsWith("#") && num.length > 1 && num.drop(1).forall(_.isDigit) =>
-            new String(Character.toChars(num.drop(1).toInt))
+            new String(Character.toChars(in.number(num.drop(1), "character reference")(_.toInt)))
           case other => throw new IllegalArgumentException(
             s"unknown entity &$other;: media ${r.media_id}")
         }
@@ -3085,6 +3104,7 @@ object Multimodal {
     * length ties; no matching rule means allowed.
     */
   def decodeRobots(rows: Iterator[MediaRow]): Iterator[RobotsStats] = rows.map { r =>
+    val in = Payload(r)
     val text = new String(r.payload, java.nio.charset.StandardCharsets.UTF_8)
     // groups: (user agents, rules (allow?, path)); extensions censused
     val groups = scala.collection.mutable.ArrayBuffer[
@@ -3118,7 +3138,7 @@ object Multimodal {
             require(groups.nonEmpty,
               s"crawl-delay before any user-agent: media ${r.media_id}")
             openForAgents = false
-            if (groups.last._1.contains("*")) delayStar = value.toInt
+            if (groups.last._1.contains("*")) delayStar = in.number(value, "crawl-delay")(_.toInt)
           case "sitemap" => nSitemaps += 1 // group-independent per RFC
           case other => throw new IllegalArgumentException(
             s"unknown robots directive '$other': media ${r.media_id}")
@@ -3217,26 +3237,23 @@ object Multimodal {
     * LOUDLY — this walker censuses exactly what it verified.
     */
   def decodeTiff(rows: Iterator[MediaRow]): Iterator[TiffStats] = rows.map { r =>
+    val in = Payload(r)
     val b = r.payload
-    require(b.length >= 8, s"truncated header: media ${r.media_id}")
-    val bom = new String(b, 0, 2, "US-ASCII")
+    val bom = in.ascii(0, 2, "byte-order mark")
     val big = bom match {
       case "II" => false
       case "MM" => true
       case _ => throw new IllegalArgumentException(
         s"bad byte-order mark '$bom': media ${r.media_id}")
     }
-    def u16(i: Int): Int =
-      if (big) ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-      else (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def u32(i: Int): Long =
-      if (big) (0 until 4).map(k => (b(i + k) & 0xffL) << (8 * (3 - k))).sum
-      else (0 until 4).map(k => (b(i + k) & 0xffL) << (8 * k)).sum
-    require(u16(2) == 42, s"bad TIFF magic ${u16(2)}: media ${r.media_id}")
-    val ifd = u32(4)
-    require(ifd >= 8 && ifd + 2 <= b.length,
-      s"IFD offset $ifd out of range: media ${r.media_id}")
-    val n = u16(ifd.toInt)
+    // TIFF's SHORT and LONG in the file's byte order
+    def short(i: Long): Int = if (big) in.u16be(i) else in.u16le(i)
+    def long(i: Long): Long = if (big) in.u32be(i) else in.u32le(i)
+    val magic = short(2)
+    require(magic == 42, s"bad TIFF magic $magic: media ${r.media_id}")
+    val ifd = long(4)
+    require(ifd >= 8, s"IFD offset $ifd out of range: media ${r.media_id}")
+    val n = short(ifd)
     require(ifd + 2 + 12L * n + 4 <= b.length,
       s"IFD overruns payload: media ${r.media_id}")
     var (width, height, rowsPerStrip) = (0L, 0L, 0L)
@@ -3244,14 +3261,14 @@ object Multimodal {
     var (stripOff, stripCnt) = (-1L, -1L)
     (0 until n).foreach { e =>
       val p = ifd.toInt + 2 + 12 * e
-      val tag = u16(p)
-      val typ = u16(p + 2)
-      val cnt = u32(p + 4)
+      val tag = short(p)
+      val typ = short(p + 2)
+      val cnt = long(p + 4)
       require(cnt == 1, s"tag $tag count $cnt unsupported: media ${r.media_id}")
       // SHORT(3) inline in the first 2 value bytes, LONG(4) in all 4
       val v = typ match {
-        case 3 => u16(p + 8).toLong
-        case 4 => u32(p + 8)
+        case 3 => short(p + 8).toLong
+        case 4 => long(p + 8)
         case t => throw new IllegalArgumentException(
           s"tag $tag type $t unsupported: media ${r.media_id}")
       }
@@ -3268,7 +3285,7 @@ object Multimodal {
           s"unexpected tag $t: media ${r.media_id}")
       }
     }
-    val next = u32(ifd.toInt + 2 + 12 * n)
+    val next = long(ifd.toInt + 2 + 12 * n)
     require(next == 0, s"multi-page TIFF unsupported (next IFD $next): media ${r.media_id}")
     require(compression == 1, s"compressed strips unsupported: media ${r.media_id}")
     require(bits == 8 && photometric == 1,

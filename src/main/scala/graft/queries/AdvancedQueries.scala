@@ -43,7 +43,7 @@ object AdvancedQueries {
     // write partitioned by a column, read back with a partition filter —
     // the layout a 100 TB table would use for pruning
     "q_partitioned_scan" -> ((s: SparkSession, d: String) => {
-      val out = s"${graft.engine.Staging.session}/graft_part_${Integer.toHexString(d.hashCode)}"
+      val out = graft.streaming.StreamOps.landing(s, d, "q_partitioned_scan").path
       scan(s, d, "orders").write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(out)
       s.read.parquet(out)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.QueryBuilder.scan
 import graft.model.SinkSpec
 import graft.sinks.Sinks
+import graft.streaming.StreamOps.landing
 
 /** Format breadth: CSV and JSON(-lines) sinks + sources round-trip the
   * data losslessly with explicit schemas — the reference's adapter
@@ -16,7 +17,7 @@ object FormatQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_csv_roundtrip" -> ((s: SparkSession, d: String) => {
-      val out = s"${graft.engine.Staging.session}/graft_csv_${Integer.toHexString(d.hashCode)}"
+      val out = landing(s, d, "q_csv_roundtrip").path
       Sinks.write(scan(s, d, "nation"), SinkSpec("csv", out))
       s.read.option("header", "true")
         .schema("n_nationkey INT, n_name STRING, n_regionkey INT")
@@ -25,7 +26,7 @@ object FormatQueries {
     }),
 
     "q_json_roundtrip" -> ((s: SparkSession, d: String) => {
-      val out = s"${graft.engine.Staging.session}/graft_json_${Integer.toHexString(d.hashCode)}"
+      val out = landing(s, d, "q_json_roundtrip").path
       Sinks.write(scan(s, d, "supplier"), SinkSpec("json", out))
       s.read
         .schema("s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE")
@@ -36,7 +37,7 @@ object FormatQueries {
     // ORC: the columnar alternative — schema rides in the file footer,
     // so the read-back needs no DDL (parity check that types survive)
     "q_orc_roundtrip" -> ((s: SparkSession, d: String) => {
-      val out = s"${graft.engine.Staging.session}/graft_orc_${Integer.toHexString(d.hashCode)}"
+      val out = landing(s, d, "q_orc_roundtrip").path
       Sinks.write(scan(s, d, "part")
         .select("p_partkey", "p_name", "p_type", "p_retailprice"), SinkSpec("orc", out))
       s.read.orc(out).orderBy(col("p_partkey"))

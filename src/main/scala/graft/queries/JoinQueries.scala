@@ -167,11 +167,7 @@ object JoinQueries {
     // in the scan's PartitionFilters). A static filter cannot express
     // this: the qualifying years are an aggregate's output
     "q_join_dpp" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
-      val suffix = Integer.toHexString(d.hashCode)
-      val dir = s"${graft.engine.Staging.session}/graft_dpp_fact_$suffix"
-      val p = new Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val dir = graft.streaming.StreamOps.landing(s, d, "q_join_dpp").path
       scan(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year").parquet(dir)

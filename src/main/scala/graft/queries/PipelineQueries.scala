@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.PipelineRunner
 import graft.model._
+import graft.streaming.StreamOps.landing
 
 /** End-to-end pipeline query: the full E→T→L runner (extract + declarative
   * transforms + parquet sink with batch cap + read-back), mirroring the
@@ -14,7 +15,7 @@ object PipelineQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_pipeline_roundtrip" -> ((s: SparkSession, d: String) => {
-      val out = s"${graft.engine.Staging.session}/graft_pipe_${Integer.toHexString(d.hashCode)}"
+      val out = landing(s, d, "q_pipeline_roundtrip").path
       val runner = new PipelineRunner(s, d)
       val spec = PipelineSpec(
         source = Some(Connector(
@@ -42,10 +43,7 @@ object PipelineQueries {
     // regardless of how the runs sliced them — the reference's repeated
     // `action: "sync"` schedule, end to end through the runner.
     "q_pipeline_sync" -> ((s: SparkSession, d: String) => {
-      import org.apache.hadoop.fs.Path
-      val out = s"${graft.engine.Staging.session}/graft_pipesync_${Integer.toHexString(d.hashCode)}"
-      val fs = new Path(out).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(out), true)
+      val out = landing(s, d, "q_pipeline_sync").path
       val runner = new PipelineRunner(s, d)
       val sink = SinkSpec("upsert", out, options = Map(
         "keys" -> "o_custkey",

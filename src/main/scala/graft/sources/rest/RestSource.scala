@@ -171,16 +171,7 @@ final class RestScanBuilder(fullSchema: StructType, opts: Map[String, String])
         Array(RestPartition(opts, prunedSchema.toDDL, pushedLimit, filterQuery))
     }
 
-    override def createReaderFactory(): PartitionReaderFactory =
-      new PartitionReaderFactory {
-        override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-          val rp = p.asInstanceOf[RestPartition]
-          val schema = if (rp.schemaDdl.trim.isEmpty) new StructType() // count(): all columns pruned
-            else StructType.fromDDL(rp.schemaDdl)
-          new RestPartitionReader(rp.opts, schema, rp.limit, rp.filterQuery,
-            rp.startOffset, rp.endOffset)
-        }
-      }
+    override def createReaderFactory(): PartitionReaderFactory = RestReaderFactory
 
     /** STREAMING ingest facet (offset pagination only): the stream
       * offset IS the REST row offset. Each trigger's latestOffset() is
@@ -216,17 +207,21 @@ final class RestScanBuilder(fullSchema: StructType, opts: Map[String, String])
           else Array(RestPartition(opts, prunedSchema.toDDL, -1, filterQuery,
             startOffset = s, endOffset = e))
         }
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-              val rp = p.asInstanceOf[RestPartition]
-              val schema = if (rp.schemaDdl.trim.isEmpty) new StructType()
-                else StructType.fromDDL(rp.schemaDdl)
-              new RestPartitionReader(rp.opts, schema, rp.limit, rp.filterQuery,
-                rp.startOffset, rp.endOffset)
-            }
-          }
+        override def createReaderFactory(): PartitionReaderFactory = RestReaderFactory
       }
+  }
+}
+
+/** One reader per [[RestPartition]], for the batch scan and the
+  * micro-batch stream alike.
+  */
+private object RestReaderFactory extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val rp = p.asInstanceOf[RestPartition]
+    val schema = if (rp.schemaDdl.trim.isEmpty) new StructType() // count(): all columns pruned
+      else StructType.fromDDL(rp.schemaDdl)
+    new RestPartitionReader(rp.opts, schema, rp.limit, rp.filterQuery,
+      rp.startOffset, rp.endOffset)
   }
 }
 

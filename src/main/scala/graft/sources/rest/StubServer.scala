@@ -171,6 +171,10 @@ object StubServer {
 
   def start(nRows: Long = 250): Unit = synchronized {
     if (server != null) return
+    // the JDK server writes a page's headers and body separately; without
+    // TCP_NODELAY every page waits out the client's delayed ACK (the
+    // server reads this property once, when it first starts)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/rows", handler(nRows, cursorMode = false, flaky = false))
     server.createContext("/cursor-rows", handler(nRows, cursorMode = true, flaky = false))

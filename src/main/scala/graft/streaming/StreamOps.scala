@@ -212,7 +212,8 @@ object StreamOps {
 
   /** The [[Landing]] of query `name` over dataset `d`: a dir under
     * [[graft.engine.Staging.session]], cleared here so appends never
-    * accumulate across invocations. */
+    * accumulate across invocations. Its `path` is also the one scratch
+    * dir of the sink/format round-trip queries. */
   def landing(spark: SparkSession, d: String, name: String): Landing = {
     val path = s"${graft.engine.Staging.session}/graft_land_${name}_${md5Hex(Seq(d))}"
     val p = new Path(path)

@@ -15,8 +15,8 @@ import graft.ops.Multimodal.MediaRow
   * NonFatal exception — no VirtualMachineError, no hang. The census of
   * exceptions other than a `require`'s IllegalArgumentException is
   * printed: those are corrupt inputs that reach a raw JVM exception
-  * instead of a named error. The TAR, ZIP and WARC walks must have no
-  * census entry; the other decoders are only logged.
+  * instead of a named error, and it must be empty for every decoder
+  * use.
   */
 class DecoderCorruptionSpec extends SparkSpec {
   import spark.implicits._
@@ -121,10 +121,7 @@ class DecoderCorruptionSpec extends SparkSpec {
     }
     println(f"[corruption] $calls%d calls, slowest ${slowestNs / 1e6}%.1f ms ($slowest)")
     census.foreach { case ((name, cls), n) => println(s"[corruption] $name: $n x $cls") }
-    val archive = census.filter { case ((name, _), _) =>
-      Seq("decodeTar", "decodeZip", "decodeWarc").exists(name.startsWith)
-    }
-    assert(archive.isEmpty, s"archive walks reached raw JVM exceptions: $archive")
+    assert(census.isEmpty, s"decoders reached raw JVM exceptions: $census")
     assert(calls >= 39L * ids.size * 100) // at least the flips ran everywhere
   }
 }
