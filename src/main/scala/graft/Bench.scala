@@ -14,11 +14,7 @@ object Bench {
     // runs that could only be adjudicated by narrative; a fixed probe
     // in every artifact makes the flag mechanical (healthy boxes here
     // measure ~3.5–4.5 s; a probe ≫ that says discount the run).
-    val warmupSec = {
-      val t0 = System.nanoTime()
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      math.round((System.nanoTime() - t0) / 1e6) / 1000.0
-    }
+    val warmupSec = probeSec(spark)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => }
@@ -40,33 +36,9 @@ object Bench {
     // the headline queries (~30 s) walks every hot code path — parquet scan,
     // hash agg, sort-merge + broadcast join, window, the dedup/sim/graph
     // operators — before any timed number is taken. BENCH_WARMUP=0 skips.
-    // family = the cache-sharing unit (first two name segments); must
-    // stay in sync with tools/bench_diff.py's family(). BENCH_FAMILY_CLEAR
-    // governs BOTH the warmup and the timed runs.
-    def family(n: String): String = n.split("_").take(2).mkString("_")
+    // storage is cleared at every family boundary (see clearStorage);
+    // BENCH_FAMILY_CLEAR governs BOTH the warmup and the timed runs.
     val familyClear = sys.env.getOrElse("BENCH_FAMILY_CLEAR", "1") != "0"
-    // FULL storage clear at the family boundary (r14): catalog caches
-    // PLUS leftover persistent RDDs — localCheckpoint blocks from the
-    // iterated graph/dedup/ER ops are registered RDD persists the cache
-    // manager never sees, and they accumulate across the whole run
-    // until the lazy ContextCleaner gets to them. As the registry grew
-    // (r12→r13: +40 entries) the pressure by the time the later
-    // families ran grew with it — the r13 graph-family drift
-    // (q_graph_kcore 3.80→6.37 s with NO code change) is exactly this
-    // shape. Nothing outside a family legitimately holds an RDD persist
-    // across the boundary: cross-query model memos are driver-side
-    // collected Seqs, and CacheScope datasets live in the catalog cache.
-    def clearStorage(spark: org.apache.spark.sql.SparkSession): Unit = {
-      // memo invalidation FIRST: a memo holding a localCheckpoint'd
-      // DataFrame across the clear would fail its next use (blocks gone,
-      // lineage truncated) — see CacheScope.StorageMemos
-      graft.ops.StorageMemos.invalidateAll()
-      spark.catalog.clearCache()
-      // blocking: the release must not overlap the next family's first
-      // timed attempt (a non-blocking unpersist would)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // Under back-to-back attempts (below) each query's first attempt
     // absorbs its own codegen/cache ramp, so the untimed warmup only
     // needs to cover the SHARED paths (parquet scan, hash agg, the join
@@ -223,5 +195,42 @@ object Bench {
     graft.sources.rest.StubServer.stop() // don't let the REST stub pin the JVM
     spark.stop()
     System.exit(0) // insurance: never let a leaked non-daemon thread stall the driver's round
+  }
+
+  /** Box-health probe shared with ScaleCurve: the wall seconds of one
+    * fixed action (see warmup_sec above). */
+  def probeSec(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    math.round((System.nanoTime() - t0) / 1e6) / 1000.0
+  }
+
+  /** The cache-sharing unit of a query: its first two name segments.
+    * Must stay in sync with tools/bench_diff.py's family(). */
+  def family(n: String): String = n.split("_").take(2).mkString("_")
+
+  /** FULL storage clear at a family boundary, in Bench and ScaleCurve
+    * (r14): catalog caches PLUS leftover persistent RDDs —
+    * localCheckpoint blocks from the iterated graph/dedup/ER ops are
+    * registered RDD persists the cache manager never sees, and they
+    * accumulate across the whole run until the lazy ContextCleaner gets
+    * to them. As the registry grew (r12→r13: +40 entries) the pressure
+    * by the time the later families ran grew with it — the r13
+    * graph-family drift (q_graph_kcore 3.80→6.37 s with NO code change)
+    * and three rounds of ScaleCurve ER-family flags (r11–r13) are
+    * exactly this shape. Nothing outside a family legitimately holds an
+    * RDD persist across the boundary: cross-query model memos are
+    * driver-side collected Seqs, and CacheScope datasets live in the
+    * catalog cache.
+    */
+  def clearStorage(spark: SparkSession): Unit = {
+    // memo invalidation FIRST: a memo holding a localCheckpoint'd
+    // DataFrame across the clear would fail its next use (blocks gone,
+    // lineage truncated) — see CacheScope.StorageMemos
+    graft.ops.StorageMemos.invalidateAll()
+    spark.catalog.clearCache()
+    // blocking: the release must not overlap the next family's first
+    // timed attempt (a non-blocking unpersist would)
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session recipe, shared by every main (Verify, Bench,
-  * ScaleCurve, GenScale, PlanDump, CcBench, TimeOne), the benchmark
+  * ScaleCurve, GenScale, PlanDump, TimeOne), the benchmark
   * harness and the test harness (SparkSpec), so a config change — an
   * ANSI pin, the nanos normalization — can never skew one tool against
   * the others. It is also the only place graft's SQL functions,

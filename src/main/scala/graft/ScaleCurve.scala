@@ -29,12 +29,7 @@ object ScaleCurve {
     val nameFilter = args.lift(3).map(_.r)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.build(cpus)
-    // box-health probe, same fixed action as Bench (see warmup_sec there)
-    val warmupSec = {
-      val t0 = System.nanoTime()
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      math.round((System.nanoTime() - t0) / 1e6) / 1000.0
-    }
+    val warmupSec = Bench.probeSec(spark) // box-health probe, as in Bench
 
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Double = {
       val t0 = System.nanoTime()
@@ -79,33 +74,17 @@ object ScaleCurve {
     val picked = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => nameFilter.forall(_.findFirstIn(n).isDefined) }
     var errors = List.empty[String]
-    // Bench's family-boundary cache policy (family = first two name
-    // segments): within a family, identical persisted subplans are
-    // shared via the cache manager; once the run moves past a family its
-    // caches drop. Without this, op-internal persists (outside any
-    // CacheScope here) accumulate for the whole run and later queries
-    // measure under earlier families' storage pressure — observed as a
-    // 4× inflated q_profile_gini after q_graph_jaccard's sf1 persists
-    def family(n: String): String = n.split("_").take(2).mkString("_")
-    // FULL storage clear: the cache manager (persisted Datasets) plus
-    // every persistent RDD still registered — this is where
-    // localCheckpoint blocks live, and three rounds of ER-family flags
-    // (golden → clusters → editjoin, r11–r13) were exactly residual
-    // checkpoint blocks from EARLIER families inflating the large-side
-    // measurement; each flag adjudicated clean by a manual isolated
-    // re-run. Clearing both at the boundary removes the pressure at its
-    // source instead of adjudicating it after the fact.
-    def clearStorage(): Unit = {
-      // memo invalidation FIRST: unpersisting a localCheckpoint destroys
-      // its only copy, so any memo still holding the DataFrame would hand
-      // out CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on its next use
-      graft.ops.StorageMemos.invalidateAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
+    // Bench's family-boundary cache policy: within a family, identical
+    // persisted subplans are shared via the cache manager; once the run
+    // moves past a family its storage is cleared. Without this,
+    // op-internal persists (outside any CacheScope here) accumulate for
+    // the whole run and later queries measure under earlier families'
+    // storage pressure — observed as a 4× inflated q_profile_gini after
+    // q_graph_jaccard's sf1 persists
+    import Bench.{clearStorage, family}
     var lastFamily = ""
     val rows = picked.flatMap { case (name, fn) =>
-      if (lastFamily.nonEmpty && family(name) != lastFamily) clearStorage()
+      if (lastFamily.nonEmpty && family(name) != lastFamily) clearStorage(spark)
       lastFamily = family(name)
       try {
         // small first warms codegen/caches for the shared plan shape, so
@@ -136,7 +115,7 @@ object ScaleCurve {
     // sentinel ratio instead of killing the sweep after 25 minutes of
     // good measurements (r14: the pre-registry memo bug did exactly that)
     val adjudicated = flagged.map { case (name, _, _, _, _) =>
-      clearStorage()
+      clearStorage(spark)
       System.gc()
       name -> (try {
         val its = time(qmap(name), small)

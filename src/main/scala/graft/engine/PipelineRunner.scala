@@ -84,16 +84,9 @@ final class PipelineRunner(spark: SparkSession, sourceDir: String,
               // reference retries per-BATCH instead
               // (adapters/hubspot/src/index.ts:506-519); our per-batch
               // analogue is Sinks.foreachBatchSink's bounded retry.
-              var attempt = 0
-              var done = false
-              while (!done) {
-                try { Sinks.write(observed, sink); done = true }
-                catch {
-                  case e: Throwable if attempt < p.errorHandling.maxRetries =>
-                    attempt += 1
-                    emit("error", s"load attempt $attempt failed: ${e.getMessage} — retrying")
-                    Thread.sleep(p.errorHandling.retryIntervalMs)
-                }
+              Sinks.retrying(p.errorHandling.maxRetries, p.errorHandling.retryIntervalMs,
+                  (attempt, e) => emit("error", s"load attempt $attempt failed: ${e.getMessage} — retrying")) {
+                Sinks.write(observed, sink)
               }
               val n = obs.get("rows").asInstanceOf[Long]
               emit("load", s"written to ${sink.format}:${sink.path}", Some(n))

@@ -249,15 +249,23 @@ object Dedup {
 
   /** Connected components over an undirected pair list (doc_a, doc_b) —
     * the step that turns near-dup PAIRS into dedup CLUSTERS (keep one
-    * doc per component). Iterative min-label propagation: each node
-    * adopts the minimum label in its neighborhood until fixpoint. Every
-    * iteration is one groupBy over the (symmetrized) edge list — the
-    * standard scalable CC shape (≈ small-star/large-star without the
-    * restructuring); iterations ≤ graph diameter, and near-dup graphs
-    * are shallow. localCheckpoint truncates lineage per round.
+    * doc per component). Returns (doc_id, cluster) where cluster = min
+    * doc_id reachable, both in the ids' native type; a node whose only
+    * pair is a self-loop is its own singleton cluster.
     *
-    * Returns (doc_id, cluster) where cluster = min doc_id reachable.
+    * One engine on each side of [[smallGraphEdgeThreshold]]: at or below
+    * it the graph resolves driver-side by [[unionFindLocal]] (a few ms,
+    * no per-round jobs); above it by [[connectedComponentsStar]], whose
+    * round count is O(log n) whatever the graph's diameter.
     */
+  def connectedComponents(pairs0: DataFrame, maxIter: Int = 30): DataFrame = {
+    // the edge count and the engine both read pairs — materialize the
+    // (possibly very expensive) pair pipeline once
+    val pairs = pairs0.scopedPersist()
+    if (pairs.count() <= smallGraphEdgeThreshold) unionFindLocal(pairs)
+    else connectedComponentsStar(pairs, maxIter)
+  }
+
   /** Below this many edges the component graph resolves driver-side
     * with union-find (a few ms) instead of paying per-round job overhead
     * — the same threshold logic as a broadcast join; near-dup graphs are
@@ -265,52 +273,9 @@ object Dedup {
     */
   val smallGraphEdgeThreshold = 1000000L
 
-  def connectedComponents(pairs0: DataFrame, maxIter: Int = 20,
-                          forceDistributed: Boolean = false): DataFrame = {
-    // the union below reads pairs twice — materialize the (possibly very
-    // expensive) pair pipeline once before symmetrizing
-    val pairs = pairs0.scopedPersist()
-    val nPairs = pairs.count()
-    if (!forceDistributed && nPairs <= smallGraphEdgeThreshold) return unionFindLocal(pairs)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct().scopedPersist()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster", col("doc_id"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("cluster")).as("nmin"))
-      val next = labels.join(neighborMin, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
-        .localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("cluster", "old"), "doc_id")
-        .filter(col("cluster") =!= col("old")).count()
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    // exiting non-converged would silently return non-minimal labels on a
-    // graph with diameter > maxIter — fail loudly instead
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge after $maxIter iterations; " +
-        "raise maxIter (graph diameter exceeds it)")
-    labels
-  }
-
-  /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    * restructuring (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC 2014) — the O(log n)-round alternative to
-    * [[connectedComponents]]'s min-label propagation, whose round count
-    * is the graph DIAMETER. Near-dup cluster graphs are shallow, so
-    * min-label wins there; chain-shaped graphs (entity-resolution
-    * transitive closures, co-occurrence paths) have diameter ∝ n, where
-    * label propagation at 100 TB means thousands of shuffle rounds and
-    * star-contraction stays logarithmic.
+  /** The distributed engine of [[connectedComponents]]: ALTERNATING
+    * LARGE-STAR / SMALL-STAR restructuring (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014), O(log n) rounds.
     *
     * Round shape (each a pair of grouped joins over the edge list):
     *  - large-star: every node u connects its LARGER neighbors to
@@ -323,56 +288,29 @@ object Dedup {
     * symmetric-difference count — union → group → count==1 rows — one
     * job per round, not two excepts) leaves one star per component
     * centered at its minimum id, read off directly as (doc_id, cluster).
-    * localCheckpoint truncates lineage per round, as every iterated op
-    * here does, and each round FREES the previous round's checkpoint
-    * blocks once its successor is materialized — on a ~22-round large
-    * graph the storage footprint stays two edge sets, not twenty-two.
+    * Self-loops carry no edge; they rejoin the read-off as (u, u) rows,
+    * so a node with only a self-loop stays a singleton. localCheckpoint
+    * truncates lineage per round, as every iterated op here does, and
+    * each round frees its predecessor's checkpoint blocks
+    * ([[SessionMemo.releaseCheckpoints]] unpersists exactly the round's
+    * own anchor) — on a ~22-round graph the storage footprint stays two
+    * edge sets, not twenty-two.
     *
-    * ConnectedComponentsSpec pins equivalence with min-label propagation
-    * on chain / clique-bridge / reversed-id / self-loop graphs. CcBench
-    * A/B (round 11, local[32], after the single-count convergence test
-    * and per-round block frees): on the DENSE co-order supplier graph
-    * (343 725 edges, 1 000 nodes, one component) the engines tie —
-    * min-label 4.4–6.3 s vs star 3.1–3.9 s — so min-label stays
-    * q_graph_cc's engine (r10 measured the reverse ordering within the
-    * same noise band); on a 3 000 000-node CHAIN, star converges in
-    * 94 s (~22 alternations; 120 s in r10 with the two-except test and
-    * unreleased blocks — the round-cost fix bought 21 %) while
-    * min-label is DNF by construction (diameter rounds; its 25-round
-    * budget fails loudly at 48 s). This operator is the escape hatch
-    * for high-diameter pair graphs.
+    * Why star and not min-label propagation (each node adopts its
+    * neighborhood's minimum label, one groupBy per round, rounds = the
+    * graph DIAMETER), which this engine replaced: in a round-11 A/B
+    * (local[32]) on the DENSE co-order supplier graph (343 725 edges,
+    * 1 000 nodes, one component) star took 3.1–3.9 s against min-label's
+    * 4.4–6.3 s; on a 3 000 000-node CHAIN star converged in 94 s
+    * (~22 alternations) while min-label cannot finish (its round budget
+    * fails loudly at 48 s). ConnectedComponentsSpec pins this engine to
+    * [[unionFindLocal]]'s output across graph shapes and id types.
     */
-  def connectedComponentsStar(pairs0: DataFrame, maxIter: Int = 30): DataFrame = {
-    val sc = pairs0.sparkSession.sparkContext
-    // localCheckpoint persists an RDD the Dataset API gives no handle to
-    // free; diff the persistent-RDD registry around the (eager) call so
-    // each round can unpersist its predecessor's blocks.
-    def checkpointTracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val ck = df.localCheckpoint()
-      // Restrict the before/after registry diff to RDDs reachable from
-      // the checkpointed plan itself: an RDD persisted concurrently by
-      // another query on the shared context inside this window must not
-      // be claimed (unpersisting someone else's localCheckpoint blocks
-      // truncates their lineage unrecoverably).
-      val reachable = {
-        val seen = scala.collection.mutable.HashSet.empty[Int]
-        def walk(rdd: org.apache.spark.rdd.RDD[_]): Unit =
-          if (seen.add(rdd.id)) rdd.dependencies.foreach(d => walk(d.rdd))
-        walk(ck.queryExecution.toRdd)
-        seen
-      }
-      val added = sc.getPersistentRDDs.collect {
-        case (id, rdd) if !before(id) && reachable(id) => rdd
-      }.toSeq
-      (ck, added)
-    }
-    val pairs = pairs0
-      .select(col("doc_a").cast("long").as("u"), col("doc_b").cast("long").as("v"))
-      .where(col("u") =!= col("v"))
-    var (cur, curBlocks) = checkpointTracked(pairs
+  private[graft] def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+    val uv = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
+    var cur = uv.where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct())
+      .distinct().localCheckpoint()
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
@@ -380,27 +318,24 @@ object Dedup {
       val sym = cur.unionAll(cur.select(col("v").as("u"), col("u").as("v")))
       val nm = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val (large, largeBlocks) = checkpointTracked(
-        sym.join(nm, "u").where(col("v") > col("u"))
-          .select(col("v").as("u"), col("m").as("v")) // v > u ≥ m: canonical
-          .distinct())
+      val large = sym.join(nm, "u").where(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v")) // v > u ≥ m: canonical
+        .distinct().localCheckpoint()
       // small-star on canonical edges: u's smaller cohort is its lo-side
       val nm2 = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val (small, smallBlocks) = checkpointTracked(
-        large.join(nm2, "u")
-          .where(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v")) // lo > m: canonical
-          .unionAll(nm2.select(col("u"), col("m").as("v"))) // hi > m: canonical
-          .distinct())
-      largeBlocks.foreach(_.unpersist(blocking = false)) // small is materialized
+      val small = large.join(nm2, "u")
+        .where(col("v") =!= col("m"))
+        .select(col("v").as("u"), col("m").as("v")) // lo > m: canonical
+        .unionAll(nm2.select(col("u"), col("m").as("v"))) // hi > m: canonical
+        .distinct().localCheckpoint()
+      SessionMemo.releaseCheckpoints(large) // small is materialized
       // fixpoint test as ONE job: both sides are distinct sets, so a row
       // appearing exactly once in the union is in the symmetric difference
       val changed = small.unionAll(cur)
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cnt"))
         .where(col("cnt") === 1).count()
-      curBlocks.foreach(_.unpersist(blocking = false))
+      SessionMemo.releaseCheckpoints(cur)
       cur = small
-      curBlocks = smallBlocks
       done = changed == 0
       iter += 1
     }
@@ -408,9 +343,9 @@ object Dedup {
       s"connectedComponentsStar did not converge after $maxIter rounds " +
         "(alternation is O(log n) — this indicates a bug, not a deep graph)")
     cur.select(col("u").as("doc_id"), col("v").as("cluster"))
-      .unionAll(cur.select(col("v"), col("v")).distinct()
-        .toDF("doc_id", "cluster"))
-      .distinct()
+      .unionAll(cur.select(col("v"), col("v")))
+      .unionAll(uv.where(col("u") === col("v")))
+      .groupBy(col("doc_id")).agg(min(col("cluster")).as("cluster"))
   }
 
   /** Quality-aware survivor selection over a near-dup pair relation —
@@ -443,11 +378,11 @@ object Dedup {
 
   /** Driver-side min-label union-find for graphs under the threshold.
     * Union keeps the smaller root, so find() yields the component's min
-    * id directly — identical output to the distributed propagation.
+    * id directly — the reference [[connectedComponentsStar]] must match.
     * Operates on the ids' NATIVE type (no long cast), so string/int/long
-    * ids all work and the output schema matches the distributed path.
+    * ids all work.
     */
-  private def unionFindLocal(pairs: DataFrame): DataFrame = {
+  private[graft] def unionFindLocal(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StructField, StructType}
     val spark = pairs.sparkSession

@@ -26,6 +26,9 @@ object Graph {
   val Scale = 1000000000000L
   /** Teleport term: 0.15 * Scale. */
   val Teleport = 150000000000L
+  /** The (personalized) PageRank loops localCheckpoint their ranks every
+    * this many rounds. */
+  private val CheckpointInterval = 5
 
   /** Undirected co-occurrence edges: nodes that share at least `minShared`
     * distinct group keys, one row per pair with left < right. The
@@ -405,7 +408,7 @@ object Graph {
     * edge directions (then every node has out-degree ≥ 1 and no dangling
     * mass). Each round is one shuffle keyed by dst.
     */
-  def pageRank(edges: DataFrame, iters: Int, checkpointInterval: Int = 5): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
     // Static per-round join input cached ONCE with per-row degree: one
     // join per round against node-sized ranks. (A two-join-per-round
     // variant keeping degree in a node-sized side table benched ~25%
@@ -447,7 +450,7 @@ object Graph {
       // it the plan grows linearly with iters (planning time + recovery
       // lineage blow up past ~20 rounds). Every k rounds keeps the plan
       // depth O(k) while paying only iters/k materializations.
-      if (i % checkpointInterval == 0 && i < iters)
+      if (i % CheckpointInterval == 0 && i < iters)
         ranks = ranks.localCheckpoint()
     }
     ranks
@@ -521,8 +524,7 @@ object Graph {
     * at 100 TB is the entire point — mass never materializes on the
     * whole graph.
     */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-                           checkpointInterval: Int = 5): DataFrame = {
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     val withDeg = edges
       .select(col("src"), col("dst"),
         count(lit(1)).over(Window.partitionBy(col("src"))).as("d"))
@@ -538,7 +540,7 @@ object Graph {
         .select(col("dst").as("node"), expr("(85 * csum) div 100").as("x"))
         .unionAll(seedSet.select(col("node"), lit(Teleport).as("x")))
         .groupBy(col("node")).agg(sum(col("x")).as("r"))
-      if (i % checkpointInterval == 0 && i < iters)
+      if (i % CheckpointInterval == 0 && i < iters)
         ranks = ranks.localCheckpoint()
     }
     ranks

@@ -1368,9 +1368,9 @@ object Multimodal {
       skipWsAndComments()
       require(i < b.length && b(i) >= '0' && b(i) <= '9',
         s"bad PPM header at byte $i: media $mediaId")
-      var v = 0
-      while (i < b.length && b(i) >= '0' && b(i) <= '9') { v = v * 10 + (b(i) - '0'); i += 1 }
-      v
+      val from = i
+      while (i < b.length && b(i) >= '0' && b(i) <= '9') i += 1
+      in.number(new String(b, from, i - from, "US-ASCII"), s"PPM header field at byte $from")(_.toInt)
     }
     val w = readInt(); val h = readInt(); val mv = readInt()
     i += 1 // exactly ONE whitespace byte separates maxval from raster (spec)
@@ -1676,13 +1676,12 @@ object Multimodal {
     require(i == b.length, s"trailing bytes after IEND: media ${r.media_id}")
     require(w > 0 && h > 0, s"IHDR missing or empty image: media ${r.media_id}")
     // real zlib inflate of the concatenated IDAT stream
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    val filt = new Array[Byte](h * (w + 1))
-    val got = inflateOrFail(inf, filt, s"IDAT: media ${r.media_id}")
-    require(got == filt.length && inf.finished(),
-      s"inflate produced $got of ${filt.length} bytes: media ${r.media_id}")
-    inf.end()
+    val size = h.toLong * (w + 1)
+    require(size <= Int.MaxValue, s"IHDR ${w}x$h exceeds a 2 GiB raster: media ${r.media_id}")
+    val (filt, _) = inflateAll(new java.util.zip.Inflater(), idat.toByteArray, 0, idat.size,
+      size, s"IDAT: media ${r.media_id}")
+    require(filt.length == size,
+      s"inflate produced ${filt.length} of $size bytes: media ${r.media_id}")
     // scanline reconstruction, bpp = 1
     def paeth(a: Int, up: Int, c: Int): Int = {
       val p = a + up - c
@@ -1815,16 +1814,31 @@ object Multimodal {
       (0L +: sizes).max, contentSum, r.payload.length.toLong)
   }
 
-  /** `inf.inflate(buf)`, with corrupt deflate data (zlib's
-    * DataFormatException) failing as a named IllegalArgumentException
-    * about `what` (the archive member and media id). */
-  private def inflateOrFail(inf: java.util.zip.Inflater, buf: Array[Byte], what: String): Int =
-    try inf.inflate(buf)
-    catch {
-      case e: java.util.zip.DataFormatException =>
-        throw new IllegalArgumentException(
-          s"inflate failed on corrupt data in $what: ${e.getMessage}", e)
-    }
+  /** Inflate `b(off until off + len)` with `inf` (which this ends) and
+    * return the output and the input bytes consumed. The buffer grows
+    * with what inflate PRODUCES, never with a declared (untrusted) size,
+    * and the loop stops once output passes `limit` — the caller compares
+    * the length it expected. Corrupt deflate data (zlib's
+    * DataFormatException) and a stalled stream fail as a named
+    * IllegalArgumentException about `what` (the member and media id). */
+  private def inflateAll(inf: java.util.zip.Inflater, b: Array[Byte], off: Int, len: Int,
+                         limit: Long, what: String): (Array[Byte], Int) = {
+    val acc = new java.io.ByteArrayOutputStream()
+    try {
+      inf.setInput(b, off, len)
+      val buf = new Array[Byte](4096)
+      while (!inf.finished() && acc.size <= limit) {
+        val n = try inf.inflate(buf) catch {
+          case e: java.util.zip.DataFormatException =>
+            throw new IllegalArgumentException(
+              s"inflate failed on corrupt data in $what: ${e.getMessage}", e)
+        }
+        require(n > 0 || inf.finished(), s"inflate stalled at ${acc.size} bytes in $what")
+        acc.write(buf, 0, n)
+      }
+      (acc.toByteArray, len - inf.getRemaining)
+    } finally inf.end()
+  }
 
   /** One verified USTAR header: name, octal size, typeflag and the
     * offset of the member's first body byte.
@@ -2360,25 +2374,11 @@ object Multimodal {
         case 8 =>
           require(usize <= Int.MaxValue,
             s"entry $name declares $usize uncompressed bytes: media ${r.media_id}")
-          // the buffer grows with what inflate PRODUCES, never with the
-          // declared (untrusted) usize, and the loop stops once output
-          // passes usize; inflate() is not contractually one-call-
-          // completes, and a stall is a corrupt entry (loud)
-          val inf = new java.util.zip.Inflater(true) // raw deflate, no zlib wrap
-          val acc = new java.io.ByteArrayOutputStream()
-          try {
-            inf.setInput(b, dataOff, csize.toInt)
-            val buf = new Array[Byte](4096)
-            while (!inf.finished() && acc.size <= usize) {
-              val n0 = inflateOrFail(inf, buf, s"$name: media ${r.media_id}")
-              require(n0 > 0 || inf.finished(),
-                s"inflate stalled at ${acc.size} of $usize bytes for $name: media ${r.media_id}")
-              acc.write(buf, 0, n0)
-            }
-          } finally inf.end()
-          require(acc.size == usize,
-            s"inflate produced ${acc.size} of $usize bytes for $name: media ${r.media_id}")
-          acc.toByteArray
+          val (out, _) = inflateAll(new java.util.zip.Inflater(true), // raw deflate, no zlib wrap
+            b, dataOff, csize.toInt, usize, s"$name: media ${r.media_id}")
+          require(out.length == usize,
+            s"inflate produced ${out.length} of $usize bytes for $name: media ${r.media_id}")
+          out
         case m => throw new IllegalArgumentException(
           s"unsupported compression method $m for $name: media ${r.media_id}")
       }
@@ -2580,20 +2580,10 @@ object Multimodal {
       require(method == 8, s"gzip method $method not deflate: media ${r.media_id}")
       require(flags == 0, s"unexpected gzip flags $flags: media ${r.media_id}")
       val dataStart = off + 10
-      val inf = new java.util.zip.Inflater(true)
-      val acc = new java.io.ByteArrayOutputStream()
-      val used = try {
-        inf.setInput(b, dataStart, b.length - dataStart)
-        val buf = new Array[Byte](4096)
-        while (!inf.finished()) {
-          val n = inflateOrFail(inf, buf, s"member $nMembers: media ${r.media_id}")
-          require(n > 0 || inf.finished(),
-            s"inflate stalled in member $nMembers: media ${r.media_id}")
-          acc.write(buf, 0, n)
-        }
-        (b.length - dataStart) - inf.getRemaining
-      } finally inf.end()
-      val rec = acc.toByteArray
+      // no declared size ahead of the member (ISIZE trails it): the
+      // limit is the largest array the JVM can hold
+      val (rec, used) = inflateAll(new java.util.zip.Inflater(true), b, dataStart,
+        b.length - dataStart, Int.MaxValue - 8, s"member $nMembers: media ${r.media_id}")
       val tOff = dataStart + used
       val crc = new java.util.zip.CRC32(); crc.update(rec)
       require(in.u32le(tOff, "gzip trailer CRC") == crc.getValue,

@@ -190,8 +190,8 @@ object MultimodalQueries {
     }),
 
     // IMAGE DEDUP CLUSTERS: the near-dup pairs resolved into components
-    // (Dedup.connectedComponents — min-label propagation, the same step
-    // the text tier runs in q_dedup_clusters) and censused per cluster.
+    // (Dedup.connectedComponents, the same step the text tier runs in
+    // q_dedup_clusters) and censused per cluster.
     // Pairs → clusters → keep-one is the complete media-dedup loop
     "q_multimodal_dedup" -> ((s: SparkSession, d: String) => {
       val pairs = phashPairs(s, d)

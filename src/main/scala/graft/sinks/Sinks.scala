@@ -104,19 +104,29 @@ object Sinks {
           val wait = lastSendAt + minIntervalMs - System.currentTimeMillis()
           if (wait > 0) Thread.sleep(wait)
         }
-        var attempt = 0
-        var done = false
-        while (!done) {
+        retrying(maxRetries, retryIntervalMs) {
           lastSendAt = System.currentTimeMillis()
-          try { send(batch); done = true }
-          catch {
-            case e: Throwable if attempt < maxRetries =>
-              attempt += 1
-              Thread.sleep(retryIntervalMs)
-            case e: Throwable => throw e
-          }
+          send(batch)
         }
       }
     }
+  }
+
+  /** Run `body`, retrying a NonFatal failure up to `maxRetries` times,
+    * `intervalMs` apart; `onRetry(attempt, e)` runs before each wait. A
+    * fatal error or an InterruptedException (a cancelled task or job)
+    * propagates at once, as does the last attempt's failure. */
+  def retrying[T](maxRetries: Int, intervalMs: Long,
+                  onRetry: (Int, Throwable) => Unit = (_, _) => ())(body: => T): T = {
+    @annotation.tailrec
+    def attempt(n: Int): T = scala.util.Try(body) match {
+      case scala.util.Success(v) => v
+      case scala.util.Failure(e) if n <= maxRetries =>
+        onRetry(n, e)
+        Thread.sleep(intervalMs)
+        attempt(n + 1)
+      case scala.util.Failure(e) => throw e
+    }
+    attempt(1)
   }
 }

@@ -1,9 +1,15 @@
 package graft
 
-import graft.ops.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import graft.engine.QueryBuilder
+import graft.ops.{Dedup, Graph}
 
-/** Both CC paths (driver union-find under the edge threshold, distributed
-  * min-label propagation above it) must produce identical clusters.
+/** Connected components keeps one engine per side of the edge
+  * threshold: driver union-find at or below it, distributed
+  * large-star/small-star contraction above it. Union-find is the
+  * reference: the star engine must return exactly its rows — the same
+  * clusters in the same id type — on every graph shape.
   */
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -25,22 +31,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("distributed propagation path produces the identical clustering") {
-    val got = Dedup.connectedComponents(pairs, forceDistributed = true)
-      .as[(Long, Long)].collect().toMap
-    assert(got == expected)
-  }
-
-  test("long chain needs multiple propagation rounds and still converges") {
-    val chain = (1L to 12L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponents(chain, forceDistributed = true)
-      .as[(Long, Long)].collect().toMap
-    assert(got == (1L to 12L).map(_ -> 1L).toMap)
-  }
-
   // ---- large-star/small-star alternation (Kiveris 2014) --------------
 
-  test("star-contraction CC matches min-label on the mixed fixture") {
+  test("star-contraction CC matches union-find on the mixed fixture") {
     val got = Dedup.connectedComponentsStar(pairs)
       .as[(Long, Long)].collect().toMap
     assert(got == expected)
@@ -61,8 +54,8 @@ class ConnectedComponentsSpec extends SparkSpec {
     val chain = (1L to 64L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("doc_a", "doc_b")
     Dedup.connectedComponentsStar(chain).count()
     // only the FINAL round's checkpoint may survive (cur backs the
-    // returned frame); if the plan-reachability filter failed to claim
-    // the per-round blocks, ~2 RDDs per round (~12+) would leak here
+    // returned frame); if the per-round releases missed their blocks,
+    // ~2 RDDs per round (~12+) would leak here
     val leaked = (sc.getPersistentRDDs.keySet -- before).size
     assert(leaked <= 3, s"leaked $leaked persisted RDDs — per-round frees broken")
   }
@@ -92,22 +85,31 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  test("star-contraction equals min-label across shapes: reversed ids, cliques, bridges") {
+  test("star-contraction equals union-find across shapes and id types") {
+    def edges(ps: Seq[(Long, Long)]): DataFrame = ps.toDF("doc_a", "doc_b")
+    // q_graph_cc's input: the co-supply graph at sf0.001
+    val coSupply = Graph.topSharedPairs(QueryBuilder.scan(spark, sf001, "lineitem"),
+        "l_partkey", "l_suppkey", keepPermille = 100, maxGroupSize = 100000)
+      .select(col("s1").as("doc_a"), col("s2").as("doc_b"))
     val shapes = Seq(
+      "chain" -> edges((1L to 12L).sliding(2).map(s => (s.head, s.last)).toSeq),
       // descending-id chain: minima sit at the FAR end of every path
-      (100L to 110L).sliding(2).map(s => (s.last, s.head)).toSeq,
-      // two cliques joined by one bridge
-      (for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)) ++
-        (for { a <- 7L to 9L; b <- 7L to 9L if a < b } yield (a, b)) ++ Seq((4L, 7L)),
-      // self-loop + duplicate + reversed duplicate edges must not confuse either
-      Seq((5L, 5L), (5L, 6L), (6L, 5L), (5L, 6L)))
-    shapes.foreach { edges =>
-      val df = edges.toDF("doc_a", "doc_b")
-      val minLabel = Dedup.connectedComponents(df, forceDistributed = true)
-        .as[(Long, Long)].collect().toMap
+      "reversed ids" -> edges((100L to 110L).sliding(2).map(s => (s.last, s.head)).toSeq),
+      "cliques with a bridge" -> edges(
+        (for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)) ++
+          (for { a <- 7L to 9L; b <- 7L to 9L if a < b } yield (a, b)) ++ Seq((4L, 7L))),
+      "duplicate and reversed edges" -> edges(Seq((5L, 5L), (5L, 6L), (6L, 5L), (5L, 6L))),
+      // 7's only pair is a self-loop: it is still a (singleton) node
+      "self-loop-only pair" -> edges(Seq((7L, 7L), (1L, 2L))),
+      "string ids" -> Seq(("b", "a"), ("c", "b"), ("x", "y"), ("z", "z")).toDF("doc_a", "doc_b"),
+      "co-supply sf0.001" -> coSupply)
+    shapes.foreach { case (shape, df) =>
+      def labels(cc: DataFrame): Map[Any, Any] = cc.collect().map(r => r.get(0) -> r.get(1)).toMap
+      val uf = Dedup.unionFindLocal(df)
       val star = Dedup.connectedComponentsStar(df)
-        .as[(Long, Long)].collect().toMap
-      assert(star == minLabel, s"shape $edges")
+      assert(labels(uf).nonEmpty, shape)
+      assert(star.schema.map(_.dataType) == uf.schema.map(_.dataType), shape)
+      assert(labels(star) == labels(uf), shape)
     }
   }
 }

@@ -124,4 +124,43 @@ class DecoderCorruptionSpec extends SparkSpec {
     assert(census.isEmpty, s"decoders reached raw JVM exceptions: $census")
     assert(calls >= 39L * ids.size * 100) // at least the flips ran everywhere
   }
+
+  /** A PNG whose IHDR declares `w` x `h` 8-bit grayscale, with valid
+    * CRCs on every chunk and one IDAT holding a tiny zlib stream. */
+  private def pngDeclaring(w: Int, h: Int): MediaRow = {
+    val out = new java.io.ByteArrayOutputStream()
+    val data = new java.io.DataOutputStream(out)
+    def chunk(typ: String, body: Array[Byte]): Unit = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(typ.getBytes("US-ASCII")); crc.update(body)
+      data.writeInt(body.length); data.writeBytes(typ); data.write(body)
+      data.writeInt(crc.getValue.toInt)
+    }
+    data.write(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(w).putInt(h).put(8.toByte).array()
+    chunk("IHDR", ihdr)
+    val defl = new java.util.zip.Deflater()
+    defl.setInput(new Array[Byte](16)); defl.finish()
+    val z = new Array[Byte](64)
+    chunk("IDAT", z.take(defl.deflate(z)))
+    chunk("IEND", Array.emptyByteArray)
+    MediaRow(0L, "image/png", out.toByteArray)
+  }
+
+  test("a CRC-valid PNG IHDR declaring a huge raster fails named, allocating nothing up front") {
+    // 46341^2 overflows an Int size; 46000^2 would ask for 2.1 GB
+    for (side <- Seq(46341, 46000)) {
+      val e = intercept[IllegalArgumentException](
+        Multimodal.decodePng(Iterator(pngDeclaring(side, side))).foreach(_ => ()))
+      assert(e.getMessage.contains("media 0"), e.getMessage)
+    }
+  }
+
+  test("a PPM width past Int range fails named instead of wrapping") {
+    // 4294967297 = 2^32 + 1 wraps to a 1-pixel-wide image in Int arithmetic
+    val ppm = "P6\n4294967297 1\n255\n".getBytes("US-ASCII") ++ Array[Byte](1, 2, 3)
+    val e = intercept[IllegalArgumentException](
+      Multimodal.decodePpm(Iterator(MediaRow(0L, "image/x-portable-pixmap", ppm))).foreach(_ => ()))
+    assert(e.getMessage.contains("4294967297"), e.getMessage)
+  }
 }

@@ -126,6 +126,19 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(PipelineRunnerSpec.attempts.get() == 4) // 2 batches × (fail + success)
   }
 
+  test("foreachBatchSink does not retry an interrupted send: the job fails") {
+    import spark.implicits._
+    PipelineRunnerSpec.attempts.set(0)
+    val df = (1 to 5).toDF("v").repartition(1)
+    intercept[Exception] {
+      Sinks.foreachBatchSink(df, itemsPerBatch = 5, maxRetries = 2, retryIntervalMs = 1) { _ =>
+        if (PipelineRunnerSpec.attempts.incrementAndGet() == 1)
+          throw new InterruptedException("send cancelled")
+      }
+    }
+    assert(PipelineRunnerSpec.attempts.get() == 1)
+  }
+
   test("foreachBatchSink rate limiting spaces batches (src/index.ts:234-243)") {
     import spark.implicits._
     val df = (1 to 9).toDF("v").repartition(1)
